@@ -1059,7 +1059,7 @@ class GraftApi(val spark: SparkSession, root: String) {
     * fall-through to "no such value". */
   private def mountedValue(ref: String): Option[DataFrame] =
     mountedResolve(ref).map { case (dir, i) =>
-      spark.read.parquet(s"$dir/values/$i") }
+      ParquetMeta.read(spark, s"$dir/values/$i") }
 
   /** Manifest-only probe (no parquet read): the (mount dir, value id)
     * a ref resolves to, if any mount's manifest carries it. */
@@ -1151,9 +1151,10 @@ class GraftApi(val spark: SparkSession, root: String) {
     refs.map(r => r -> getValue(r)).toMap
 
   // --- info surfaces (kiara_api.py:944,590,529) ---------------------------
-  /** retrieve_values_info: schema from the catalog, rows + bytes from
-    * parquet footers/filesystem only — inspecting a value never scans
-    * its data pages, whatever its size. */
+  /** retrieve_values_info: schema, rows and bytes from parquet footers
+    * and the filesystem only — the schema is the one Spark wrote into the
+    * footer ([[DataRegistry.load]]), so inspecting a value runs no Spark
+    * job and never scans its data pages, whatever its size. */
   def valueInfo(ref: String): ValueInfo = {
     val id = aliases.resolve(ref).getOrElse(ref)
     require(data.exists(id), s"no such value: $ref")

@@ -82,7 +82,7 @@ object ProfileKey {
     SparkEntry.queries(name)(spark, dir).count()
     val warm = (System.nanoTime() - t1) / 1e9
     Caches.release(); spark.catalog.clearCache()
-    Thread.sleep(500) // let the listener bus drain the last stage events
+    org.apache.spark.graft.BusDrain.drain(spark.sparkContext) // last stage events
     println(f"$name warm: $warm%.2f s  (stages=${stages.size}, jobs=${jobs.size})")
     val totWall = stages.map(_.wallMs).sum
     println(f"sum-of-stage-wall: ${totWall / 1e3}%.2f s (gaps to warm = driver/plan/schedule time)")

@@ -65,12 +65,15 @@ object Tables {
   private val schemaCache =
     scala.collection.concurrent.TrieMap[(String, String), org.apache.spark.sql.types.StructType]()
 
+  /** The memoized inferred schema of a parquet file or dir. */
+  def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    val nanosConf = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    schemaCache.getOrElseUpdate((path, nanosConf), spark.read.parquet(path).schema)
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val nanosConf = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val schema = schemaCache.getOrElseUpdate((path, nanosConf),
-      spark.read.parquet(path).schema)
-    normalizeInts(normalizeTs(spark.read.schema(schema).parquet(path)))
+    normalizeInts(normalizeTs(spark.read.schema(schemaOf(spark, path)).parquet(path)))
   }
 
   /** The ts-encoding precedent generalized to integer widths: if a

@@ -245,7 +245,7 @@ object Archive {
                     lineage: LineageRegistry, sourceDir: String,
                     noAliases: Boolean = false): Seq[String] = {
     val (ids, als) = readManifest(sourceDir)
-    ids.foreach(id => data.store(id, spark.read.parquet(s"$sourceDir/values/$id")))
+    ids.foreach(id => data.store(id, ParquetMeta.read(spark, s"$sourceDir/values/$id")))
     if (!noAliases) als.foreach { case (a, v) => aliases.set(a, v) }
     val lin = Paths.get(sourceDir, "lineage.jsonl")
     if (Files.exists(lin))

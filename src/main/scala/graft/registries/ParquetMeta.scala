@@ -4,6 +4,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.util.control.NonFatal
 
 /** Footer-only parquet metadata reads for the info surfaces
   * (kiara_api.py:944 `retrieve_values_info`, :1237
@@ -19,9 +22,18 @@ object ParquetMeta {
     try r.getRecordCount finally r.close()
   }
 
-  /** Every part-file under `dir`, recursively — a hive-partitioned
+  /** Spark's hidden-path rule (`InMemoryFileIndex.shouldFilterOutPathName`):
+    * a name starting with `.` or with `_` (unless it is a `k=v` partition
+    * dir) is not part of the table — `_SUCCESS`, `.crc` files, and the
+    * `_temporary` tree a failed write leaves behind. */
+  private def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+
+  /** Every visible part-file under `dir`, recursively — a hive-partitioned
     * layout nests part-files inside `col=value` dirs, and a flat listing
-    * would silently report such a table as 0 rows / 0 files. */
+    * would silently report such a table as 0 rows / 0 files. Hidden path
+    * components are skipped, so the counters see exactly the files a
+    * scan reads. */
   private def partFiles[A](dir: String)(f: Iterator[java.nio.file.Path] => A): A = {
     val p = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.isDirectory(p)) return f(Iterator.empty)
@@ -30,9 +42,42 @@ object ParquetMeta {
       import scala.jdk.CollectionConverters._
       f(s.iterator.asScala.filter(q =>
         java.nio.file.Files.isRegularFile(q) &&
-          q.getFileName.toString.endsWith(".parquet")))
+          q.getFileName.toString.endsWith(".parquet") &&
+          !p.relativize(q).iterator.asScala.exists(c => hidden(c.toString))))
     } finally s.close()
   }
+
+  /** Footer key under which Spark's parquet writer stores the Catalyst
+    * schema of the written DataFrame (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema Spark wrote into the footer of the first visible
+    * part-file of a flat parquet dir — the file and key Spark's own
+    * inference (`ParquetFileFormat.readSchemaFromFooter`) reads first.
+    * None when the dir has partition subdirs, no part-file, or a first
+    * footer without a readable Spark key (e.g. a DuckDB-written file). */
+  def sparkSchema(dir: String): Option[StructType] = {
+    val d = new java.io.File(dir)
+    val visible = Option(d.listFiles).toSeq.flatten.filterNot(f => hidden(f.getName))
+    if (visible.exists(_.isDirectory)) return None
+    visible.filter(_.isFile).map(_.getPath).sorted.headOption.flatMap { f =>
+      try {
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+        try Option(r.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+        finally r.close()
+      } catch { case NonFatal(_) => None }
+    }
+  }
+
+  /** Read a parquet dir with the schema from its footer, so building the
+    * DataFrame runs no Spark job (an untyped `spark.read.parquet` runs a
+    * one-task schema-inference job on every call). Each call reads the
+    * footer of the files it scans, so an overwritten dir never gets a
+    * stale schema. Falls back to the untyped read wherever
+    * [[sparkSchema]] has no answer. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    sparkSchema(dir).fold(spark.read.parquet(dir))(s => spark.read.schema(s).parquet(dir))
 
   /** Sum of footer row counts over every part-file in a parquet dir. */
   def dirRowCount(dir: String): Long =

@@ -89,7 +89,9 @@ class DataRegistry(root: String, bus: EventBus = new EventBus) {
     bus.fire(RegistryEvents.ValueStored(id, d))
     id
   }
-  def load(spark: SparkSession, id: String): DataFrame = spark.read.parquet(dir(id))
+  /** The schema comes from the value's parquet footer
+    * ([[ParquetMeta.read]]), so loading runs no Spark job. */
+  def load(spark: SparkSession, id: String): DataFrame = ParquetMeta.read(spark, dir(id))
   def exists(id: String): Boolean = Files.exists(Paths.get(dir(id)))
   /** On-disk location of a stored value (validated id) — the info
     * surfaces read footers/sizes from here without loading the value. */
@@ -101,8 +103,9 @@ class DataRegistry(root: String, bus: EventBus = new EventBus) {
   }
 
   /** Matcher-filtered ids: the id filter is pure string work; the schema
-    * filter reads parquet footers only (spark.read.parquet(...).schema
-    * plans a scan but executes nothing — no data pages are touched). */
+    * filter reads one parquet footer per value, in-process ([[load]]
+    * takes the schema Spark wrote there), so it runs no Spark job and
+    * touches no data page. */
   def find(spark: SparkSession, m: DataRegistry.Matcher): Seq[String] = {
     val byId = m.idGlob.fold(list)(g => list.filter(DataRegistry.globMatch(g, _)))
     m.hasColumn.fold(byId)(c =>

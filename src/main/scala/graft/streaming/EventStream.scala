@@ -27,7 +27,7 @@ object EventStream {
   /** Streaming source over one parquet file/dir with the events-table ts
     * normalization applied (nanos-long → µs timestamp). */
   private def source(spark: SparkSession, path: String): DataFrame = {
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.Tables.schemaOf(spark, path)
     // a table may be a single FILE (the driver's testdata) or a parquet
     // DIRECTORY (anything Spark wrote, e.g. ScaleGen probe corpora). A
     // directory streams directly; a file needs the parent-dir + name
