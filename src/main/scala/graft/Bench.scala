@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Comparability (r8): 338 queries × 2 in ONE JVM accumulate enough
   * heap/GC pressure to inflate late-suite warm timings up to ~3×
-  * (r7's phantom "regressions" — BenchOne showed the same queries
-  * flat). Two fixes:
+  * (r7's phantom "regressions" — single-key runs showed the same
+  * queries flat). Two fixes:
   *   - the suite runs in CHUNKS of `SPARK_GRAFT_BENCH_CHUNK` queries
   *     (default 90), each in a FRESH child JVM with the same classpath
   *     and session shape (warmed exactly like the single-JVM bench, so
@@ -25,25 +25,6 @@ import org.apache.spark.sql.SparkSession
   *     visible in the artifact instead of masquerading as plan cost.
   */
 object Bench {
-
-  private def newSession(sfDirIgnored: String, cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // broadcast/shuffle state is reclaimed by the ContextCleaner only
-      // when a GC actually runs, and the default periodicGC interval
-      // (30 min) never fires inside a bench chunk — tighten it so
-      // late-chunk queries aren't taxed by the accumulated heap
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
@@ -89,9 +70,9 @@ object Bench {
 
   /** Child-JVM entry: bench the keys in SPARK_GRAFT_BENCH_KEYS, write
     * name/cold/warm/gc TSV to SPARK_GRAFT_BENCH_OUT. */
-  private def childMain(sfDir: String, cpus: String, keysCsv: String,
+  private def childMain(sfDir: String, cpus: Int, keysCsv: String,
       outPath: String): Unit = {
-    val spark = newSession(sfDir, cpus)
+    val spark = Sessions.create(cpus)
     val rs = runKeys(spark, sfDir, keysCsv.split(',').toSeq.filter(_.nonEmpty))
     val body = rs.map(r => s"${r._1}\t${r._2}\t${r._3}\t${r._4}").mkString("\n")
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
@@ -100,7 +81,7 @@ object Bench {
   }
 
   /** Spawn a fresh JVM for one chunk; None if the child failed. */
-  private def runChunkInChild(sfDir: String, cpus: String,
+  private def runChunkInChild(sfDir: String, cpus: Int,
       keys: Seq[String]): Option[Seq[(String, Double, Double, Double)]] = {
     try {
       val out = java.nio.file.Files.createTempFile("graft_bench_", ".tsv")
@@ -126,7 +107,7 @@ object Bench {
       val pb = new ProcessBuilder(cmd.asJava)
       val env = pb.environment()
       env.put("SPARK_GRAFT_SF_DIR", sfDir)
-      env.put("SPARK_GRAFT_CPUS", cpus)
+      env.put("SPARK_GRAFT_CPUS", cpus.toString)
       env.put("SPARK_GRAFT_BENCH_KEYS", keys.mkString(","))
       env.put("SPARK_GRAFT_BENCH_OUT", out.toString)
       pb.redirectOutput(log.toFile).redirectErrorStream(true)
@@ -154,7 +135,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus
     (sys.env.get("SPARK_GRAFT_BENCH_KEYS"), sys.env.get("SPARK_GRAFT_BENCH_OUT")) match {
       case (Some(keys), Some(out)) => childMain(sfDir, cpus, keys, out); return
       case _ =>
@@ -173,13 +154,13 @@ object Bench {
     }
     val results: Seq[(String, Double, Double, Double)] =
       if (chunkSize <= 0) {
-        val spark = newSession(sfDir, cpus)
+        val spark = Sessions.create(cpus)
         try runKeys(spark, sfDir, allKeys) finally spark.stop()
       } else {
         allKeys.grouped(chunkSize).toSeq.flatMap { chunk =>
           runChunkInChild(sfDir, cpus, chunk).getOrElse {
             // degraded but correct: run the chunk inline in this JVM
-            val spark = newSession(sfDir, cpus)
+            val spark = Sessions.create(cpus)
             try runKeys(spark, sfDir, chunk) finally spark.stop()
           }
         }
@@ -192,7 +173,8 @@ object Bench {
       s""""queries":${dict(_._2)},"warm":${dict(_._3)},"gc":${dict(_._4)},""" +
       s""""warm_total":$warmTotal,"sf":"$sfDir"}"""
     // The historical single-line contract, with every key — kept for
-    // tools (grep -o '{"metric".*' takes the FIRST match = this line).
+    // tools. grep -o '{"metric".*' prints BOTH metric lines, this one
+    // first; pipe it through `head -1` to keep just this line.
     println(fullLine)
     // r17: the driver artifact keeps only the LAST ~2000 chars of
     // stdout, so for 16 rounds the ~20 KB line above never reached the

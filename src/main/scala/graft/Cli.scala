@@ -610,16 +610,9 @@ object Cli {
     case "--service" :: infoFile :: rest =>
       println(proxy(infoFile, rest))
     case _ =>
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val cpus = Sessions.cpus
+      val spark = Sessions.create(cpus,
+        sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       println(run(spark, args))
       spark.stop()
   }

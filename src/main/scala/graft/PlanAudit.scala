@@ -1,11 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps formatted physical plans for the headline queries so the scale
   * properties (pushdown, broadcast, codegen spans, shuffle count) can be
-  * audited: runMain graft.PlanAudit <sfDir> <outFile>.
+  * audited: runMain graft.PlanAudit <sfDir> <outFile> [key ...]. Listed
+  * keys replace the built-in [[audited]] list (before/after plan
+  * evidence for an optimization). Iterative-loop operators materialize
+  * eagerly at construction, so their dump shows only the final readout
+  * plan.
   */
 object PlanAudit {
   val audited: Seq[String] = Seq(
@@ -356,18 +359,13 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/tmp/plans.txt"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val keys = if (args.length > 2) args.drop(2).toSeq else audited
+    val unknown = keys.toSet -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
+    // plan text depends on the partition count: audit at a fixed width
+    val spark = Sessions.create(8)
     val sb = new StringBuilder
-    audited.foreach { name =>
+    keys.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n================ $name ================\n")
       sb.append(df.queryExecution.explainString(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-probe main for the PERSISTED ANN index (r15): build the IVF-PQ
@@ -21,18 +20,7 @@ object ProbeAnnIndex {
     val dir = args(0)
     val k = if (args.length > 1) args(1).toInt else 5
     val nprobe = if (args.length > 2) args(2).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.create(Sessions.cpus)
     import graft.operators.Similarity
 
     val e = Tables.t(spark, dir, "embeddings")

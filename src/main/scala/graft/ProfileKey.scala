@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round instrument (guide §1/§7): run one query cold+warm
   * with a stage listener attached and print, for the WARM run, every
@@ -15,17 +14,7 @@ object ProfileKey {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(Sessions.cpus)
 
     case class St(stageId: Int, nameLine: String, wallMs: Long, taskMs: Long,
         cpuMs: Long, inRows: Long, inBytes: Long, shRdBytes: Long, shRdRows: Long,

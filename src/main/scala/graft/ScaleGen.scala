@@ -58,17 +58,7 @@ object ScaleGen {
       if (args.length == 4 && args(3).startsWith("only="))
         args(3).stripPrefix("only=").split(",").map(_.trim).toSet
       else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", Sessions.openCostInBytes)
-      .config("spark.sql.adaptive.enabled", Sessions.adaptiveEnabled)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(Sessions.cpus)
     generate(spark, src, out, reps,
       planted = args.length == 4 && args(3) == "planted", only = only)
     spark.stop()

@@ -4,14 +4,56 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, TimestampNTZType, TimestampType}
 
-/** Canonical table access over the driver-generated parquet testdata.
-  * Mirrors kiara's "onboarding" idea (values come from a store, not ad-hoc
-  * paths): every operator takes (spark, sfDir) and resolves tables here.
-  */
-/** Shared session-sizing knobs for every runner main (Bench/Verify/
-  * BenchOne/Debug/audit tools), so plans are identical across the
-  * harness. */
+/** The one session factory for every runner main, so Bench, Verify,
+  * Cli, Serve, PlanAudit, ProfileKey and the probes all time, verify,
+  * serve and explain the same engine. */
 object Sessions {
+  /** Harness session on `local[cpus]`. (An overload, not a default
+    * argument: a default `s"local[$cpus]"` would read the [[cpus]]
+    * method, not the parameter.) */
+  def create(cpus: Int): SparkSession = create(cpus, s"local[$cpus]")
+
+  /** Harness session: shuffle width from `SPARK_GRAFT_SHUFFLE` (scale
+    * probes size it with the data, like a real cluster), otherwise
+    * `cpus`. */
+  def create(cpus: Int, master: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions",
+        knob(sys.env, "SPARK_GRAFT_SHUFFLE", cpus.toLong, min = 1).toString)
+      .config("spark.sql.files.openCostInBytes", openCostInBytes)
+      .config("spark.sql.adaptive.enabled", adaptiveEnabled)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      // broadcast/shuffle state is reclaimed by the ContextCleaner only
+      // when a GC actually runs, and the default periodicGC interval
+      // (30 min) never fires inside a bench chunk — tighten it so
+      // late-chunk queries aren't taxed by the accumulated heap
+      .config("spark.cleaner.periodicGC.interval", "1min")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Local cores for a runner session: `SPARK_GRAFT_CPUS`, else every
+    * available processor. */
+  def cpus: Int = cpusFrom(sys.env)
+  def cpusFrom(env: Map[String, String]): Int = knob(env, "SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toLong, min = 1).toInt
+
+  /** Integer env knob: `default` when unset, otherwise the parsed value,
+    * failing with the variable's name on garbage or a value below `min`
+    * (a bare `.toLong` in an object initializer surfaces as an opaque
+    * `ExceptionInInitializerError`). */
+  def knob(env: Map[String, String], name: String, default: Long,
+      min: Long = Long.MinValue): Long = env.get(name) match {
+    case None => default
+    case Some(v) => v.trim.toLongOption.filter(_ >= min).getOrElse(
+      throw new IllegalArgumentException(s"$name must be an integer" +
+        (if (min > Long.MinValue) s" >= $min" else "") + s", got '$v'"))
+  }
+
   /** Parquet open-cost charged per file when packing scan splits
     * (`spark.sql.files.openCostInBytes`). Spark's 4 MB default floors
     * maxSplitBytes at 4 MB, so the sub-11 MB single-file gate tables
@@ -49,6 +91,10 @@ object Sessions {
       .getOrElse("false")
 }
 
+/** Canonical table access over the driver-generated parquet testdata.
+  * Mirrors kiara's "onboarding" idea (values come from a store, not ad-hoc
+  * paths): every operator takes (spark, sfDir) and resolves tables here.
+  */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

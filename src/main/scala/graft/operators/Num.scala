@@ -14,6 +14,12 @@ import org.apache.spark.sql.functions._
   * can be off by a constant factor, which moves file sizes — never
   * correctness. */
 object Sizing {
+  /** The size gate shared by [[Broadcasting]] and [[Fanout]]: does the
+    * optimizer's estimate fit `capBytes`? Compared in BigInt, because
+    * join/unknown-leaf estimates can exceed Long range. */
+  def fits(df: org.apache.spark.sql.DataFrame, capBytes: Long): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(capBytes)
+
   def byEstimate(df: org.apache.spark.sql.DataFrame,
       targetBytes: Long = 128L * 1024 * 1024): org.apache.spark.sql.DataFrame = {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -42,14 +48,12 @@ object Broadcasting {
     * every gate-scale model table, well below anything a 100 TB corpus
     * derives); otherwise leave the planner alone. A broadcast hint never
     * changes results, only the join strategy. */
-  val capBytes: Long =
-    sys.env.get("SPARK_GRAFT_BROADCAST_CAP").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
+  def capFrom(env: Map[String, String]): Long =
+    graft.Sessions.knob(env, "SPARK_GRAFT_BROADCAST_CAP", 64L * 1024 * 1024)
+  val capBytes: Long = capFrom(sys.env)
   def ifSmall(df: org.apache.spark.sql.DataFrame,
       cap: Long = capBytes): org.apache.spark.sql.DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(cap))
-      broadcast(df)
-    else df
+    if (Sizing.fits(df, cap)) broadcast(df) else df
 }
 
 object Fanout {
@@ -68,12 +72,12 @@ object Fanout {
     * many-row-group/many-file and parallel already, and the repartition
     * must not shuffle terabytes. Hash (not round-robin) partitioning:
     * no sort-before-repartition pass, deterministic row placement. */
-  val capBytes: Long =
-    sys.env.get("SPARK_GRAFT_FANOUT_CAP").map(_.toLong)
-      .getOrElse(1024L * 1024 * 1024)
+  def capFrom(env: Map[String, String]): Long =
+    graft.Sessions.knob(env, "SPARK_GRAFT_FANOUT_CAP", 1024L * 1024 * 1024)
+  val capBytes: Long = capFrom(sys.env)
   def bySmallInput(df: org.apache.spark.sql.DataFrame,
       key: Column): org.apache.spark.sql.DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(capBytes))
+    if (Sizing.fits(df, capBytes))
       df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
     else df
 }

@@ -49,16 +49,6 @@ object Archive {
     }
   }
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   /** Export values (all by default) + their aliases + the lineage log
     * into a fresh archive directory. Values are re-written through Spark
     * (not file-copied) so the archive is self-consistent parquet
@@ -94,7 +84,7 @@ object Archive {
     * by a brace inside a value (ADVICE r13 — a truncated read would make
     * the next read-modify-rewrite silently drop entries). Jsonl.unesc
     * decodes } back to '}' transparently. */
-  private def metaEsc(s: String): String = esc(s).replace("}", "\\u007d")
+  private def metaEsc(s: String): String = Jsonl.esc(s).replace("}", "\\u007d")
 
   /** (Re)write manifest.json — ids/aliases use the restricted registry
     * charset; metadata values are free text (JSON-escaped). */
@@ -106,8 +96,8 @@ object Archive {
       else s""","metadata":{${metadata.sortBy(_._1).map { case (k, v) =>
         "\"" + metaEsc(k) + "\":\"" + metaEsc(v) + "\"" }.mkString(",")}}"""
     val manifest =
-      s"""{"version":$Version,"values":[${ids.map(i => "\"" + esc(i) + "\"").mkString(",")}],""" +
-        s""""aliases":{${aliases.map { case (a, v) => "\"" + esc(a) + "\":\"" + esc(v) + "\"" }.mkString(",")}}$metaBlock}"""
+      s"""{"version":$Version,"values":[${ids.map(i => "\"" + Jsonl.esc(i) + "\"").mkString(",")}],""" +
+        s""""aliases":{${aliases.map { case (a, v) => "\"" + Jsonl.esc(a) + "\":\"" + Jsonl.esc(v) + "\"" }.mkString(",")}}$metaBlock}"""
     Files.createDirectories(Paths.get(dir))
     // temp-file + ATOMIC_MOVE (the Snapshots.commitManifest pattern):
     // the FileLock only serializes WRITERS — readers (readManifest via
