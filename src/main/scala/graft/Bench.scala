@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * stays the cold total — the number the driver tracks — with
   * `warm`/`warm_total` alongside so plan-compile constants are
   * separable from real data costs (they amortize to noise at cluster
-  * scale; warm is the 100 TB-relevant number).
+  * scale; warm is the 100 TB-relevant number). Each timing is the
+  * query's build plus a `noop`-sink write of its full result.
   *
   * Comparability (r8): 338 queries × 2 in ONE JVM accumulate enough
   * heap/GC pressure to inflate late-suite warm timings up to ~3×
@@ -43,9 +44,14 @@ object Bench {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
-      // a failed query must be visible, not a fast-looking timing:
-      // report -1 and log, instead of silently recording time-to-crash
-      val ok = try { fn(spark, sfDir).count(); true } catch {
+      // the FULL result: a noop-sink write evaluates every column and
+      // the final sort without collecting, where count() would let the
+      // optimizer prune both. A failed query must be visible, not a
+      // fast-looking timing: report -1 and log, instead of silently
+      // recording time-to-crash
+      val ok = try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
+      } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
       }

@@ -252,6 +252,8 @@ class GraftApi(val spark: SparkSession, root: String) {
   private val jobs = scala.collection.concurrent.TrieMap[String, Pipeline.StepRecord]()
 
   Builtins.ensureRegistered()
+  // the caller's session plans small global sorts in one partition
+  org.apache.spark.sql.graftext.SmallSort.install(spark)
 
   // fresh-JVM contract for registered pipelines: every persisted
   // definition re-registers into OpRegistry under its stored id, so

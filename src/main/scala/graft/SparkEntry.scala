@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftext.SmallSort
 import graft.queries.{Relational, Suite}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the component each
@@ -10,12 +11,17 @@ import graft.queries.{Relational, Suite}
   */
 object SparkEntry {
 
+  type Query = (SparkSession, String) => DataFrame
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q1Agg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2, built once.
+    * Each function first installs [[SmallSort]] on the session it is
+    * handed (idempotently), so a caller's own session plans small
+    * presentation sorts without the range exchange's sampling job. */
+  val queries: Map[String, Query] = Map[String, Query](
     // core relational (SURVEY §2 row 19, row 1, row 11)
     "q1_agg" -> (Relational.q1Agg _),
     "q2_filter" -> (Relational.q2Filter _),
@@ -376,7 +382,9 @@ object SparkEntry {
     "stream_sessionize_wm" -> (Suite.streamSessionizeWm _),
     "stream_dedup_replay" -> (Suite.streamDedupReplay _),
     "stream_enrich" -> (Suite.streamEnrich _)
-  )
+  ).map { case (key, fn) =>
+    key -> { (spark: SparkSession, dir: String) => SmallSort.install(spark); fn(spark, dir) }
+  }
 
   /** dHash oracle, generated: 72 strided hex-parsed "pixels", 64
     * adjacent comparisons — byte-for-byte the Spark expression tree. */

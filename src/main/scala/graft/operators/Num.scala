@@ -14,11 +14,16 @@ import org.apache.spark.sql.functions._
   * can be off by a constant factor, which moves file sizes — never
   * correctness. */
 object Sizing {
-  /** The size gate shared by [[Broadcasting]] and [[Fanout]]: does the
-    * optimizer's estimate fit `capBytes`? Compared in BigInt, because
-    * join/unknown-leaf estimates can exceed Long range. */
+  /** The size gate shared by [[Broadcasting]], [[Fanout]] and the
+    * `SmallSort` planner strategy: does the optimizer's estimate fit
+    * `capBytes`? Compared in BigInt, because join/unknown-leaf
+    * estimates can exceed Long range. */
+  def fits(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      capBytes: Long): Boolean =
+    plan.stats.sizeInBytes <= BigInt(capBytes)
+
   def fits(df: org.apache.spark.sql.DataFrame, capBytes: Long): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(capBytes)
+    fits(df.queryExecution.optimizedPlan, capBytes)
 
   def byEstimate(df: org.apache.spark.sql.DataFrame,
       targetBytes: Long = 128L * 1024 * 1024): org.apache.spark.sql.DataFrame = {
@@ -47,7 +52,13 @@ object Broadcasting {
     * (SPARK_GRAFT_BROADCAST_CAP overrides; default 64 MB — well above
     * every gate-scale model table, well below anything a 100 TB corpus
     * derives); otherwise leave the planner alone. A broadcast hint never
-    * changes results, only the join strategy. */
+    * changes results, only the join strategy.
+    *
+    * The same cap gates a second decision: `SmallSort` plans a global
+    * sort whose input estimate fits it in one partition, without the
+    * range exchange's sampling job. Both trust an estimate that
+    * `Generate`/`explode` does not grow; a miss costs speed (a
+    * sort-merge join, one spilling sort task), never correctness. */
   def capFrom(env: Map[String, String]): Long =
     graft.Sessions.knob(env, "SPARK_GRAFT_BROADCAST_CAP", 64L * 1024 * 1024)
   val capBytes: Long = capFrom(sys.env)

@@ -98,14 +98,19 @@ object EventStream {
   }
 
   /** Run a streaming DataFrame to a memory sink with AvailableNow and
-    * return the sink table. */
+    * return the sink table. The sink's temp view is dropped once the
+    * table has resolved: the analyzed plan holds the sink itself, so
+    * the returned DataFrame reads the same rows, and the session no
+    * longer pins every drained row for its whole lifetime. */
   private def runToMemory(spark: SparkSession, df: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_sink_${n.incrementAndGet()}"
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     printStateStats(q, name)
-    spark.table(name)
+    val sink = spark.table(name)
+    spark.catalog.dropTempView(name)
+    sink
   }
 
   /** Scale-probe observability (SPARK_GRAFT_STREAM_STATS=1): the

@@ -132,10 +132,7 @@ object GroupTopK {
     require(k > 0, s"k must be positive, got $k")
     require(group.nonEmpty && order.nonEmpty, "need group and order columns")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy)) {
-      spark.experimental.extraStrategies =
-        GroupTopKStrategy +: spark.experimental.extraStrategies
-    }
+    GraftExtensions.installStrategy(spark, GroupTopKStrategy)
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     val sortOrders = order.map { case (name, desc) =>
       SortOrder(UnresolvedAttribute.quoted(name),

@@ -302,7 +302,8 @@ object VectorFunctions {
   * `--conf spark.sql.extensions=org.apache.spark.sql.graftext.GraftExtensions`
   * exposes graft_dot to pure-SQL workloads on any cluster and installs
   * the [[RewriteHofDot]] optimizer rule (interpreted HOF dot-product
-  * idiom → native codegen'd expression).
+  * idiom → native codegen'd expression) and the [[GroupTopKStrategy]]
+  * and [[SmallSort]] planner strategies.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -318,5 +319,17 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     }
     ext.injectOptimizerRule(_ => RewriteHofDot)
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
+    ext.injectPlannerStrategy(_ => SmallSort)
   }
+}
+
+object GraftExtensions {
+  /** Put `strategy` on `spark`'s planner, once — the front door for
+    * sessions not built with [[GraftExtensions]] (the Pathling `setup`
+    * pattern: idempotent, so callers need no session configuration). */
+  def installStrategy(spark: org.apache.spark.sql.SparkSession,
+      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit =
+    if (!spark.experimental.extraStrategies.contains(strategy)) {
+      spark.experimental.extraStrategies = strategy +: spark.experimental.extraStrategies
+    }
 }

@@ -173,6 +173,28 @@ class EventsSpec extends SparkTestBase {
     assert(stream == batch)
   }
 
+  test("stream keys leave no memory-sink view behind and return the batch rows") {
+    def sinkViews(s: org.apache.spark.sql.SparkSession) =
+      s.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_stream_sink_"))
+    val events = Tables.t(spark, sfDir, "events")
+    val batch = Map(
+      "stream_window" -> Events.hourlyAgg(events).select("hour", "event_type", "n"),
+      "stream_drift" -> graft.operators.DataQuality.valueDrift(events),
+      "stream_dedup" -> Tables.t(spark, sfDir, "documents")
+        .select(col("lang"), org.apache.spark.sql.functions.md5(
+          graft.operators.Dedup.normalized(col("text"))).as("fp"))
+        .dropDuplicates("fp").groupBy("lang").agg(count(lit(1)).as("n_unique"))
+        .orderBy("lang"))
+      .map { case (k, df) => k -> df.collect().toSeq }
+    (1 to 2).foreach { _ =>
+      batch.keys.foreach { key =>
+        val df = SparkEntry.queries(key)(spark, sfDir)
+        assert(sinkViews(spark).isEmpty && sinkViews(df.sparkSession).isEmpty, key)
+        assert(df.collect().toSeq == batch(key), key)
+      }
+    }
+  }
+
   test("funnel counts users per stage in strict temporal order") {
     val ev = Seq(
       // user 1: full funnel in order

@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.graft.BusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import graft.registries.ParquetMeta
@@ -16,31 +13,6 @@ class FooterSchemaSpec extends SparkTestBase {
   import spark.implicits._
 
   private def newApi = new GraftApi(spark, Export.tempDir("graft_footer_").toString)
-
-  /** Spark jobs `body` starts from this thread, counted on the drained
-    * listener bus (a job group tags them, so jobs other threads run in
-    * the meantime do not count). */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"footer-spec-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    BusDrain.drain(sc)
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "footer schema spec")
-    try {
-      val a = body
-      BusDrain.drain(sc)
-      (a, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
 
   // collected, not exceptAll: set operations refuse map columns
   private def sameRows(a: DataFrame, b: DataFrame): Unit =

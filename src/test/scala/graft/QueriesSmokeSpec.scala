@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
+
 /** Every registered query key must execute end-to-end at sf0.001 and
   * produce a sane row count — the same surface the driver exercises.
+  * Each result is written in full to the `noop` sink, with its row count
+  * observed on the way through: `count()` would let the optimizer drop
+  * the final sort and every column the count does not need, so a
+  * runtime error in a pruned column would pass here unseen.
   */
 class QueriesSmokeSpec extends SparkTestBase {
 
@@ -19,7 +26,10 @@ class QueriesSmokeSpec extends SparkTestBase {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"query $name runs at sf0.001") {
-      val n = fn(spark, sfDir).count()
+      val obs = new Observation()
+      fn(spark, sfDir).observe(obs, count(lit(1)).as("n"))
+        .write.format("noop").mode("overwrite").save()
+      val n = obs.get("n").asInstanceOf[Long]
       if (!expectEmptyOk(name)) assert(n > 0, s"$name returned no rows")
       else assert(n >= 0)
     }

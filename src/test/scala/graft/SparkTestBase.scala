@@ -18,6 +18,9 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    // installed up front, as SparkEntry.queries and GraftApi do, so the
+    // order in which specs run cannot change the shared session's plans
+    org.apache.spark.sql.graftext.SmallSort.install(s)
     s
   }
 }
@@ -25,6 +28,34 @@ object TestSpark {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` starts from this thread, counted on the drained
+    * listener bus (a job group tags them, so jobs other threads run in
+    * the meantime do not count). */
+  protected def jobsDuring[A](body: => A): (A, Int) = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.graft.BusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime()}"
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    BusDrain.drain(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "jobs counted by a spec")
+    try {
+      val a = body
+      BusDrain.drain(sc)
+      (a, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
 
   /** Flatten a physical plan tree, traversing AQE query-stage boundaries
     * — the reliable way to assert on post-AQE plan structure (the
