@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import graft.plans.{Builtins, OpRegistry, Pipeline}
 import graft.registries.{AliasRegistry, Archive, CommentStore, DataRegistry, EnvironmentRegistry, LineageRegistry, MetadataRegistry, ParquetMeta, PipelineRegistry, WorkflowRegistry}
+import graft.registries.WorkflowRegistry.OpStep
 import graft.sources.{Convert, Export, TypeMap}
 
 object GraftApi {
@@ -366,9 +367,7 @@ class GraftApi(val spark: SparkSession, root: String) {
                         out: DataFrame): Unit = {
     val rec = Pipeline.StepRecord(operation, Seq(inputValue), out.schema.simpleString)
     jobs.put(jobId, rec)
-    // concurrent queued jobs append from worker threads; serialize so two
-    // single-line appends cannot interleave
-    lineage.synchronized { lineage.record(jobId, rec, Some(sessionEnvCid)) }
+    lineage.record(jobId, rec, Some(sessionEnvCid))
   }
 
   // job-prefixed runs in the persisted lineage log ARE the job records
@@ -464,7 +463,7 @@ class GraftApi(val spark: SparkSession, root: String) {
     val steps = workflowSessions.get(name).map(_.describe)
       .getOrElse(workflows.describe(name))
     val produced = steps.map(_.name).toSet
-    val inputFields = steps.flatMap(_.input.split('+')).filter(_.nonEmpty)
+    val inputFields = steps.flatMap(s => OpStep.inputs(s.input)).filter(_.nonEmpty)
       .distinct.filterNot(produced).sorted
     val saved = WorkflowSession.savedStatesFor(root, name)
     WorkflowInfo(name, workflows.aliasesFor(name), steps, inputFields,
@@ -488,7 +487,7 @@ class GraftApi(val spark: SparkSession, root: String) {
 
   private def pipelineFreeInputs(steps: Seq[WorkflowRegistry.OpStep]): Seq[String] = {
     val produced = steps.map(_.name).toSet
-    steps.flatMap(_.input.split("\\+", -1).toSeq).filter(_.nonEmpty)
+    steps.flatMap(s => OpStep.inputs(s.input)).filter(_.nonEmpty)
       .filterNot(produced).distinct
   }
 
@@ -501,11 +500,11 @@ class GraftApi(val spark: SparkSession, root: String) {
     var remaining = steps
     while (remaining.nonEmpty) {
       val (ready, blocked) = remaining.partition(st =>
-        st.input.split("\\+", -1).filter(produced).forall(lv.contains))
+        OpStep.inputs(st.input).filter(produced).forall(lv.contains))
       require(ready.nonEmpty, "pipeline has a cycle among steps: " +
         blocked.map(_.name).mkString(", "))
       ready.foreach { st =>
-        val deps = st.input.split("\\+", -1).filter(produced).map(lv)
+        val deps = OpStep.inputs(st.input).filter(produced).map(lv)
         lv += st.name -> (if (deps.isEmpty) 1 else deps.max + 1)
       }
       remaining = blocked
@@ -547,9 +546,7 @@ class GraftApi(val spark: SparkSession, root: String) {
       try {
         val ps = steps.map(st => OpRegistry.step(st.name, st.op, st.input))
         val res = Pipeline.run(ps, inputs)
-        lineage.synchronized {
-          lineage.recordRun(s"$opId-run-${pipelineRunSeq.incrementAndGet()}", res.lineage)
-        }
+        lineage.recordRun(s"$opId-run-${pipelineRunSeq.incrementAndGet()}", res.lineage)
         res.values(out)
       } finally GraftApi.activePipelines.set(active)
     }

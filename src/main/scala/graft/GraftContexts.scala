@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
+import graft.registries.RegistryFile
 
 /** Multi-context management — kiara's context switcher
   * (reference interfaces/python_api/kiara_api.py:538 `list_context_names`,
@@ -40,17 +41,13 @@ class GraftContexts(spark: SparkSession, baseRoot: String) {
   }
 
   /** Persistently switch the active context (creating it if needed).
-    * Write-temp + ATOMIC_MOVE so a crash or concurrent reader (the file
-    * is shared across JVMs by design) never observes a torn name — a
-    * torn prefix would still validate and silently select a brand-new
-    * empty context. Same pattern as AliasRegistry. */
-  def setActiveContext(name: String): GraftApi = synchronized {
+    * A Table rewrite (temp file + atomic move) so a crash or concurrent
+    * reader (the file is shared across JVMs by design) never observes a
+    * torn name — a torn prefix would still validate and silently select
+    * a brand-new empty context. */
+  def setActiveContext(name: String): GraftApi = {
     val api = context(name) // creates the root dir
-    val tmp = activeFile.resolveSibling(s"${activeFile.getFileName}.tmp")
-    Files.write(tmp, validate(name).getBytes("UTF-8"))
-    Files.move(tmp, activeFile,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    new RegistryFile.Table(activeFile).write(validate(name).getBytes("UTF-8"))
     api
   }
 

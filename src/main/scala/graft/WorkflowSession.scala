@@ -1,13 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 
 import graft.plans.{OpRegistry, Pipeline}
-import graft.registries.{Jsonl, Names, WorkflowRegistry}
+import graft.registries.{Jsonl, Names, RegistryFile, WorkflowRegistry}
 
 /** Interactive, stateful workflow session — the twin of kiara's
   * `Workflow` class (interfaces/python_api/workflow.py:144), the layer
@@ -32,27 +30,17 @@ import graft.registries.{Jsonl, Names, WorkflowRegistry}
   */
 object WorkflowSession {
   // workflow_states.jsonl is shared by EVERY session on the same context
-  // root — appends must serialize across sessions, not per instance
-  // (ADVICE r12). One lock object per normalized root path, JVM-wide.
-  private val rootLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-  private[graft] def stateLogLock(root: String): Object =
-    rootLocks.getOrElseUpdate(
-      Paths.get(root).toAbsolutePath.normalize.toString, new Object)
+  // root; its Log's per-path lock serializes their appends (ADVICE r12)
+  private def stateLog(root: String) =
+    new RegistryFile.Log(Paths.get(s"$root/workflow_states.jsonl"))
 
   /** Saved state ids of one workflow, in log order — the info surfaces'
     * snapshot census, readable WITHOUT constructing a session (a closure
     * workflow has no rebuildable session, but its history may exist). */
-  private[graft] def savedStatesFor(root: String, name: String): Seq[String] = {
-    val f = Paths.get(s"$root/workflow_states.jsonl")
-    if (!Files.exists(f)) Seq.empty
-    else Files.readAllLines(f).asScala.toSeq.flatMap { l =>
-      def field(k: String): Option[String] =
-        s""""$k":"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(l)
-          .map(m => Jsonl.unesc(m.group(1)))
-      for { wf <- field("workflow") if wf == name; id <- field("state_id") } yield id
+  private[graft] def savedStatesFor(root: String, name: String): Seq[String] =
+    stateLog(root).lines.flatMap { l =>
+      for (wf <- Jsonl.str(l, "workflow") if wf == name; id <- Jsonl.str(l, "state_id")) yield id
     }
-  }
 }
 
 final class WorkflowSession private[graft] (api: GraftApi, val name: String,
@@ -70,7 +58,7 @@ final class WorkflowSession private[graft] (api: GraftApi, val name: String,
   private val stateCache =
     scala.collection.mutable.LinkedHashMap[String, (Vector[OpStep], Map[String, String])]()
 
-  private def stateFile = Paths.get(s"$contextRoot/workflow_states.jsonl")
+  private val stateLog = WorkflowSession.stateLog(contextRoot)
 
   /** Add one step (workflow.py:939 add_step): `op` must already be a
     * registered operation; the step consumes pipeline input(s) or prior
@@ -85,7 +73,7 @@ final class WorkflowSession private[graft] (api: GraftApi, val name: String,
     require(OpRegistry.contains(op), s"unknown operation: $op")
     // -1: a trailing/leading/doubled '+' must be an empty part, not
     // silently dropped — "a+" is malformed, not a unary input
-    val parts = input.split("\\+", -1).toSeq
+    val parts = OpStep.inputs(input)
     require(parts.forall(_.nonEmpty), s"malformed step input: '$input'")
     parts.foreach(Names.validate("step input", _))
     require(parts.length == OpRegistry.arity(op),
@@ -108,7 +96,7 @@ final class WorkflowSession private[graft] (api: GraftApi, val name: String,
   /** The pipeline's FREE inputs: consumed by a step, produced by none. */
   def currentInputNames: Seq[String] = {
     val produced = steps.map(_.name).toSet
-    steps.flatMap(_.input.split('+')).filter(_.nonEmpty)
+    steps.flatMap(s => OpStep.inputs(s.input)).filter(_.nonEmpty)
       .distinct.filterNot(produced).sorted
   }
 
@@ -204,7 +192,7 @@ final class WorkflowSession private[graft] (api: GraftApi, val name: String,
     * configuration always hashes identically (the reference's
     * WorkflowState.instance_id is likewise a cid over its fields). */
   def stateId: String = {
-    val canon = steps.map(s => s"${s.name}:${s.op}:${s.input}").mkString(",") +
+    val canon = OpStep.encode(steps) +
       "|" + inputRefs.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
     java.security.MessageDigest.getInstance("MD5")
       .digest(canon.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
@@ -217,38 +205,30 @@ final class WorkflowSession private[graft] (api: GraftApi, val name: String,
     val id = stateId
     stateCache.put(id, (steps, inputRefs))
     if (save) {
-      val line = s"""{"workflow":"${Jsonl.esc(name)}","state_id":"$id",""" +
-        s""""steps":"${Jsonl.esc(steps.map(s => s"${s.name}:${s.op}:${s.input}").mkString(","))}",""" +
-        s""""inputs":"${Jsonl.esc(inputRefs.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(","))}"}"""
-      WorkflowSession.stateLogLock(contextRoot).synchronized {
-        Files.write(stateFile, (line + "\n").getBytes("UTF-8"),
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-      }
+      stateLog.append(s"""{"workflow":"${Jsonl.esc(name)}","state_id":"$id",""" +
+        s""""steps":"${Jsonl.esc(OpStep.encode(steps))}",""" +
+        s""""inputs":"${Jsonl.esc(inputRefs.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(","))}"}""")
     }
     id
   }
 
   private def persistedStates: Seq[(String, (Vector[OpStep], Map[String, String]))] =
-    if (!Files.exists(stateFile)) Seq.empty
-    else Files.readAllLines(stateFile).asScala.toSeq.flatMap { l =>
-      def field(k: String): Option[String] =
-        s""""$k":"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
+    stateLog.lines.flatMap { l =>
+      def field(k: String): Option[String] = Jsonl.str(l, k)
       // a line the writer above could never have produced means the log
       // is corrupted (interleaved append, manual edit): FAIL, don't
       // silently drop history (ADVICE r12)
       if (field("workflow").isEmpty || field("state_id").isEmpty ||
           field("steps").isEmpty || field("inputs").isEmpty)
         throw new IllegalStateException(
-          s"corrupt workflow state log $stateFile: unparseable line: $l")
+          s"corrupt workflow state log $contextRoot/workflow_states.jsonl: unparseable line: $l")
       for {
         wf <- field("workflow") if wf == name
         id <- field("state_id")
         st <- field("steps")
         in <- field("inputs")
       } yield id -> ((
-        st.split(',').toVector.filter(_.nonEmpty).map { s =>
-          val p = s.split(':'); OpStep(p(0), p(1), p(2))
-        },
+        OpStep.decode(st),
         in.split(',').filter(_.nonEmpty).map { kv =>
           val i = kv.indexOf('='); kv.substring(0, i) -> kv.substring(i + 1)
         }.toMap))

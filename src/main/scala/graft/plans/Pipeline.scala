@@ -253,8 +253,8 @@ object OpRegistry {
     * binary operation (kiara connect_steps wiring, encoded with the
     * convention `WorkflowRegistry.describe` always printed). */
   def step(stepName: String, op: String, input: String): Pipeline.Step = {
-    // -1 + nonEmpty check: "a+" must fail as malformed, not parse unary
-    val parts = input.split("\\+", -1).toSeq
+    // empty parts kept: "a+" must fail as malformed, not parse unary
+    val parts = graft.registries.WorkflowRegistry.OpStep.inputs(input)
     require(parts.forall(_.nonEmpty), s"malformed step input: '$input'")
     arity(op) match {
       case 1 =>

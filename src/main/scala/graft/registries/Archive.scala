@@ -73,9 +73,7 @@ object Archive {
       if (noAliases) Seq.empty
       else aliases.list.filter { case (_, vid) => ids.contains(vid) }
     writeManifest(targetDir, ids, kept, Seq.empty)
-    val lin = lineage.lines
-    if (lin.nonEmpty)
-      Files.write(target.resolve("lineage.jsonl"), (lin.mkString("\n") + "\n").getBytes("UTF-8"))
+    lineageLog(targetDir).appendAll(lineage.lines)
     ids
   }
 
@@ -99,22 +97,12 @@ object Archive {
       s"""{"version":$Version,"values":[${ids.map(i => "\"" + Jsonl.esc(i) + "\"").mkString(",")}],""" +
         s""""aliases":{${aliases.map { case (a, v) => "\"" + Jsonl.esc(a) + "\":\"" + Jsonl.esc(v) + "\"" }.mkString(",")}}$metaBlock}"""
     Files.createDirectories(Paths.get(dir))
-    // temp-file + ATOMIC_MOVE (the Snapshots.commitManifest pattern):
-    // the FileLock only serializes WRITERS — readers (readManifest via
-    // mountedResolve, which swallows exceptions) take no lock, so an
-    // in-place truncate-write could expose an empty/torn manifest and
-    // silently resolve "no such value"
-    val tmp = Files.createTempFile(Paths.get(dir), ".manifest-", ".tmp")
-    try {
-      Files.write(tmp, (manifest + "\n").getBytes("UTF-8"))
-      Files.move(tmp, Paths.get(dir, "manifest.json"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } catch {
-      // r17 (ADVICE): don't leave orphaned .manifest-*.tmp files behind
-      // when the write or move fails — delete the temp and rethrow
-      case e: Throwable => Files.deleteIfExists(tmp); throw e
-    }
+    // a Table rewrite (temp file + atomic move): the FileLock only
+    // serializes WRITERS — readers (readManifest via mountedResolve, which
+    // swallows exceptions) take no lock, so an in-place truncate-write
+    // could expose an empty/torn manifest and silently resolve "no such
+    // value"
+    new RegistryFile.Table(Paths.get(dir, "manifest.json")).rewrite(Seq(manifest))
   }
 
   /** Archive-level metadata (kiara base_api.py:2337
@@ -206,19 +194,13 @@ object Archive {
       }
     val meta = if (fresh) readArchiveMetadata(sourceDir) else readArchiveMetadata(targetDir)
     writeManifest(targetDir, mergedIds, mergedAls.sorted, meta)
-    val srcLin = Paths.get(sourceDir, "lineage.jsonl")
-    if (Files.exists(srcLin)) {
-      val tgtLin = Paths.get(targetDir, "lineage.jsonl")
-      val existing = if (Files.exists(tgtLin)) Files.readAllLines(tgtLin).asScala.toSet
-        else Set.empty[String]
-      val add = Files.readAllLines(srcLin).asScala.filterNot(existing)
-      if (add.nonEmpty)
-        Files.write(tgtLin, (add.mkString("\n") + "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-    }
+    val tgtLin = lineageLog(targetDir)
+    val existing = tgtLin.lines.toSet
+    tgtLin.appendAll(lineageLog(sourceDir).lines.filterNot(existing))
     copied
   }
+
+  private def lineageLog(dir: String) = new RegistryFile.Log(Paths.get(dir, "lineage.jsonl"))
 
   private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
     val s = Files.walk(src)
@@ -237,9 +219,7 @@ object Archive {
     val (ids, als) = readManifest(sourceDir)
     ids.foreach(id => data.store(id, ParquetMeta.read(spark, s"$sourceDir/values/$id")))
     if (!noAliases) als.foreach { case (a, v) => aliases.set(a, v) }
-    val lin = Paths.get(sourceDir, "lineage.jsonl")
-    if (Files.exists(lin))
-      Files.readAllLines(lin).asScala.foreach(lineage.appendRaw)
+    lineageLog(sourceDir).lines.foreach(lineage.appendRaw)
     ids
   }
 
@@ -270,9 +250,8 @@ object Archive {
       val rows = parts.map(p => ParquetMeta.rowCount(p.toString)).sum
       ValueEntry(id, parts.size, parts.map(Files.size).sum, rows)
     }
-    val lin = Paths.get(sourceDir, "lineage.jsonl")
-    val nLin = if (Files.exists(lin)) Files.readAllLines(lin).size else 0
-    ArchiveInfo(version, entries, als, nLin, readArchiveMetadata(sourceDir))
+    ArchiveInfo(version, entries, als, lineageLog(sourceDir).lines.size,
+      readArchiveMetadata(sourceDir))
   }
 
   /** Parse manifest.json — fields are the restricted value-id/alias

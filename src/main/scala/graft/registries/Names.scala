@@ -5,11 +5,15 @@ package graft.registries
   * names: `[A-Za-z0-9_.-]+`.
   *
   * Several persisted encodings are exact ONLY under this rule: the
-  * archive manifest's regex scan (Archive.readManifest), the workflow
-  * store's ':'-delimited step records, and the flat properties files of
-  * AliasRegistry/GraftContexts. If the charset ever needs to grow, widen
-  * it HERE and fix those readers in the same change — a per-site edit
-  * silently corrupts the others.
+  * archive manifest's regex scan (Archive.readManifest), the one step
+  * codec `WorkflowRegistry.OpStep.encode`/`decode` (the `name:op:input`
+  * records of workflows, pipelines and saved workflow states), and the
+  * `key=value` tables read by `RegistryFile.Table.entries`. Free text
+  * (lineage step names, comments, mount paths, metadata values) is
+  * JSON-escaped instead and read back by the one field reader,
+  * `Jsonl.str`. If the charset ever needs to grow, widen it HERE and fix
+  * those readers in the same change — a per-site edit silently corrupts
+  * the others.
   */
 object Names {
   /** The allowed charset, as a full-match regex (no anchors needed for

@@ -1,6 +1,6 @@
 package graft.registries
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.plans.{OpRegistry, Pipeline}
@@ -116,31 +116,21 @@ class DataRegistry(root: String, bus: EventBus = new EventBus) {
 /** Alias registry (kiara registries/aliases/): human names → value ids,
   * persisted as a flat properties file. */
 class AliasRegistry(root: String, bus: EventBus = new EventBus) {
-  private val file = Paths.get(s"$root/aliases.properties")
+  private val table = new RegistryFile.Table(Paths.get(s"$root/aliases.properties"))
   Files.createDirectories(Paths.get(root))
 
-  private def readAll(): Map[String, String] =
-    if (!Files.exists(file)) Map.empty
-    else Files.readAllLines(file).asScala.filter(_.contains("=")).map { l =>
-      val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
-
   /** Validated + atomic: alias names share the value-id charset (an '='
-    * or newline would corrupt the flat file), and the rewrite goes
-    * through a temp file + atomic move so concurrent readers never see a
-    * torn file. Same-JVM writers serialize on the instance lock. */
+    * or newline would corrupt the flat file), and the rewrite is the
+    * file layer's temp file + atomic move, so concurrent readers never
+    * see a torn file. */
   def set(alias: String, valueId: String): Unit = synchronized {
     Names.validate("alias name", alias)
     Names.validate("value id", valueId)
-    val all = readAll() + (alias -> valueId)
-    val tmp = Files.createTempFile(Paths.get(root), ".aliases", ".tmp")
-    Files.write(tmp, all.toSeq.sorted.map { case (k, v) => s"$k=$v" }.asJava)
-    Files.move(tmp, file, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    table.updateEntries(_ + (alias -> valueId))
     bus.fire(RegistryEvents.AliasStored(alias, valueId))
   }
-  def resolve(alias: String): Option[String] = readAll().get(alias)
-  def list: Seq[(String, String)] = readAll().toSeq.sorted
+  def resolve(alias: String): Option[String] = table.entries.get(alias)
+  def list: Seq[(String, String)] = table.entries.toSeq.sorted
 
   /** Matcher-filtered aliases (kiara_api.py:875 `list_aliases` analogue):
     * glob over alias name and/or target value id — flat-file lookup,
@@ -160,90 +150,50 @@ object LineageRegistry {
                             schema: String, env: Option[String] = None)
 }
 
-/** Shared JSONL string escape/unescape — full JSON escape incl. control
-  * chars, so an unrestricted step name or free-text comment with a
-  * tab/newline cannot corrupt an append-only log (same hardening as
-  * Verify's oracle_sql.json writer). */
-private[graft] object Jsonl {
-  def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => b += '"';  i += 2
-          case '\\' => b += '\\'; i += 2
-          case 'n'  => b += '\n'; i += 2
-          case 'r'  => b += '\r'; i += 2
-          case 't'  => b += '\t'; i += 2
-          case 'u'  => b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case o    => b += o;    i += 2
-        }
-      } else { b += c; i += 1 }
-    }
-    b.toString
-  }
-}
-
 /** Job/lineage registry (kiara registries/jobs/, models/module/jobs.py):
   * append-only JSONL of executed steps with inputs and output schemas. */
 class LineageRegistry(root: String, bus: EventBus = new EventBus) {
   import LineageRegistry.StepNode
-  private val file = Paths.get(s"$root/lineage.jsonl")
+  private val log = new RegistryFile.Log(Paths.get(s"$root/lineage.jsonl"))
   Files.createDirectories(Paths.get(root))
 
-  private def esc(s: String): String = Jsonl.esc(s)
+  private def line(runId: String, rec: Pipeline.StepRecord, envCid: Option[String]): String = {
+    import Jsonl.esc
+    val envField = envCid.map(c => s""","env":"${esc(c)}"""").getOrElse("")
+    s"""{"run":"${esc(runId)}","step":"${esc(rec.step)}","inputs":[${
+      rec.inputs.map(i => "\"" + esc(i) + "\"").mkString(",")}],"schema":"${esc(rec.outputSchema)}"$envField}"""
+  }
 
   def record(runId: String, rec: Pipeline.StepRecord,
              envCid: Option[String] = None): Unit = {
-    val envField = envCid.map(c => s""","env":"${esc(c)}"""").getOrElse("")
-    val line = s"""{"run":"${esc(runId)}","step":"${esc(rec.step)}","inputs":[${
-      rec.inputs.map(i => "\"" + esc(i) + "\"").mkString(",")}],"schema":"${esc(rec.outputSchema)}"$envField}"""
-    Files.write(file, (line + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    log.append(line(runId, rec, envCid))
     bus.fire(RegistryEvents.JobRecordStored(runId, rec.step, rec.inputs))
   }
-  def recordRun(runId: String, recs: Seq[Pipeline.StepRecord]): Unit = recs.foreach(record(runId, _))
-  def lines: Seq[String] =
-    if (!Files.exists(file)) Seq.empty else Files.readAllLines(file).asScala.toSeq
+  /** One run's records, appended as one write (they stay contiguous in
+    * the log), then one event per record. */
+  def recordRun(runId: String, recs: Seq[Pipeline.StepRecord]): Unit = {
+    log.appendAll(recs.map(line(runId, _, None)))
+    recs.foreach(r => bus.fire(RegistryEvents.JobRecordStored(runId, r.step, r.inputs)))
+  }
+  def lines: Seq[String] = log.lines
   /** Append an already-serialized record line (archive import path). */
-  def appendRaw(line: String): Unit =
-    Files.write(file, (line + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+  def appendRaw(line: String): Unit = log.append(line)
 
   // --- provenance graph traversal (kiara_api.py:243
   //     retrieve_augmented_value_lineage) ---------------------------------
 
-  private def unesc(s: String): String = Jsonl.unesc(s)
-
-  private val FieldStr = (name: String) => (s""""$name":"((?:[^"\\\\]|\\\\.)*)"""").r
-  private val RunRe = FieldStr("run"); private val StepRe = FieldStr("step")
-  private val SchemaRe = FieldStr("schema"); private val EnvRe = FieldStr("env")
   private val InputsRe = """"inputs":\[((?:[^\]"]|"(?:[^"\\]|\\.)*")*)\]""".r
   private val QuotedRe = """"((?:[^"\\]|\\.)*)"""".r
 
-  /** All records, parsed. The writer is `record` above (restricted,
-    * self-escaped JSON), so a regex field scan is exact. */
+  /** All records, parsed (the writer is `line` above). */
   def records: Seq[StepNode] = lines.flatMap { l =>
     for {
-      r <- RunRe.findFirstMatchIn(l).map(m => unesc(m.group(1)))
-      s <- StepRe.findFirstMatchIn(l).map(m => unesc(m.group(1)))
-      sch = SchemaRe.findFirstMatchIn(l).map(m => unesc(m.group(1))).getOrElse("")
+      r <- Jsonl.str(l, "run")
+      s <- Jsonl.str(l, "step")
       ins = InputsRe.findFirstMatchIn(l).map(m =>
-        QuotedRe.findAllMatchIn(m.group(1)).map(q => unesc(q.group(1))).toSeq).getOrElse(Seq.empty)
-      env = EnvRe.findFirstMatchIn(l).map(m => unesc(m.group(1)))
-    } yield StepNode(r, s, ins, sch, env)
+        QuotedRe.findAllMatchIn(m.group(1)).map(q => Jsonl.unesc(q.group(1))).toSeq)
+        .getOrElse(Seq.empty)
+    } yield StepNode(r, s, ins, Jsonl.str(l, "schema").getOrElse(""), Jsonl.str(l, "env"))
   }
 
   /** Upstream provenance closure of a value: its producing step, the
@@ -278,6 +228,32 @@ object WorkflowRegistry {
   /** One persistable step: apply registered op `op` to the named value
     * `input`, producing value `name`. */
   final case class OpStep(name: String, op: String, input: String)
+
+  /** The one step-record codec: `name:op:input` records joined by ','.
+    * It is exact because every part is a [[Names]] identifier and that
+    * charset excludes the separators. A binary step's input is two
+    * '+'-joined names (the convention `describe` prints). */
+  object OpStep {
+    private[graft] def encode(steps: Seq[OpStep]): String =
+      steps.map(s => s"${s.name}:${s.op}:${s.input}").mkString(",")
+
+    private[graft] def decode(s: String): Vector[OpStep] =
+      s.split(',').toVector.filter(_.nonEmpty).map { r =>
+        val p = r.split(':'); OpStep(p(0), p(1), p(2))
+      }
+
+    /** A step input's parts. -1 keeps empty parts, so "a+", "+a" and
+      * "a++b" each show an empty one instead of parsing as valid. */
+    private[graft] def inputs(input: String): Seq[String] = input.split("\\+", -1).toSeq
+
+    /** Name, op and one or two input parts all in the charset — checked
+      * at registration, not later inside OpRegistry.step. */
+    private[graft] def valid(st: OpStep): Boolean = {
+      val parts = inputs(st.input)
+      Names.isValid(st.name) && Names.isValid(st.op) &&
+        parts.length <= 2 && parts.forall(Names.isValid)
+    }
+  }
 }
 
 class WorkflowRegistry(root: String, lineage: LineageRegistry,
@@ -285,7 +261,8 @@ class WorkflowRegistry(root: String, lineage: LineageRegistry,
   import WorkflowRegistry.OpStep
 
   private val flows = scala.collection.concurrent.TrieMap[String, Seq[Pipeline.Step]]()
-  private val file = Paths.get(s"$root/workflows.properties")
+  // flat `wf=step:op:input,step:op:input` lines (the OpStep codec)
+  private val table = new RegistryFile.Table(Paths.get(s"$root/workflows.properties"))
   Files.createDirectories(Paths.get(root))
 
   /** In-memory registration for arbitrary-closure steps (not persisted). */
@@ -296,45 +273,17 @@ class WorkflowRegistry(root: String, lineage: LineageRegistry,
     bus.fire(RegistryEvents.WorkflowStored(name, persisted = false))
   }
 
-  // flat `wf=step:op:input,step:op:input` lines — names share the
-  // registry charset, which excludes the separators, so the encoding is
-  // unambiguous; rewrite is temp-file + atomic move like AliasRegistry
   private def readAll(): Map[String, Seq[OpStep]] =
-    if (!Files.exists(file)) Map.empty
-    else Files.readAllLines(file).asScala.filter(_.contains("=")).map { l =>
-      val i = l.indexOf('=')
-      val steps = l.substring(i + 1).split(',').toSeq.filter(_.nonEmpty).map { s =>
-        val p = s.split(':')
-        OpStep(p(0), p(1), p(2))
-      }
-      l.substring(0, i) -> steps
-    }.toMap
+    table.entries.map { case (n, v) => n -> OpStep.decode(v) }
 
   /** Register a persistable workflow: each part is validated against the
     * registry charset, then the whole table is atomically rewritten. */
   def registerOps(name: String, steps: Seq[OpStep]): Unit = synchronized {
-    def ok(s: String): Boolean = Names.isValid(s)
-    // a binary step's input is two '+'-joined names (the describe
-    // convention); each part must satisfy the shared charset
-    def okInput(s: String): Boolean = {
-      // -1 keeps empty parts so "a+", "+a" and "a++b" are all rejected
-      // HERE, at registration, not later inside OpRegistry.step
-      val parts = s.split("\\+", -1)
-      parts.nonEmpty && parts.length <= 2 && parts.forall(p => p.nonEmpty && ok(p))
-    }
-    require(ok(name), s"bad workflow name: $name")
+    require(Names.isValid(name), s"bad workflow name: $name")
     require(resolveAlias(name).isEmpty,
       s"'$name' is already a workflow alias (over '${resolveAlias(name).get}')")
-    steps.foreach { st =>
-      require(ok(st.name) && ok(st.op) && okInput(st.input), s"bad step part in: $st")
-    }
-    val all = readAll() + (name -> steps)
-    val tmp = Files.createTempFile(Paths.get(root), ".workflows", ".tmp")
-    Files.write(tmp, all.toSeq.sortBy(_._1).map { case (n, ss) =>
-      s"$n=${ss.map(s => s"${s.name}:${s.op}:${s.input}").mkString(",")}"
-    }.asJava)
-    Files.move(tmp, file, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    steps.foreach(st => require(OpStep.valid(st), s"bad step part in: $st"))
+    table.updateEntries(_ + (name -> OpStep.encode(steps)))
     bus.fire(RegistryEvents.WorkflowStored(name, persisted = true))
   }
 
@@ -342,17 +291,14 @@ class WorkflowRegistry(root: String, lineage: LineageRegistry,
 
   // --- workflow aliases (kiara base_api.py:3366 list_workflow_alias_names;
   //     registries/workflows/__init__.py workflow_aliases: alias -> id) ---
-  // Same flat-properties + atomic-rewrite pattern as AliasRegistry; an
-  // alias is a second durable name over a PERSISTED workflow. Aliases may
-  // not collide with workflow names (resolution would shadow — the same
-  // lesson as ADVICE r12's createWorkflow fix).
-  private val aliasFile = Paths.get(s"$root/workflow_aliases.properties")
+  // A flat properties table like AliasRegistry's; an alias is a second
+  // durable name over a PERSISTED workflow. Aliases may not collide with
+  // workflow names (resolution would shadow — the same lesson as ADVICE
+  // r12's createWorkflow fix).
+  private val aliasTable =
+    new RegistryFile.Table(Paths.get(s"$root/workflow_aliases.properties"))
 
-  private def readAliases(): Map[String, String] =
-    if (!Files.exists(aliasFile)) Map.empty
-    else Files.readAllLines(aliasFile).asScala.filter(_.contains("=")).map { l =>
-      val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
+  private def readAliases(): Map[String, String] = aliasTable.entries
 
   /** Register `alias` over persisted workflow `workflow` (latest wins,
     * like value aliases). Refused for in-memory-only workflows: the
@@ -363,11 +309,7 @@ class WorkflowRegistry(root: String, lineage: LineageRegistry,
       s"workflow is not persisted (save it first): $workflow")
     require(!readAll().contains(alias) && !flows.contains(alias),
       s"alias '$alias' collides with an existing workflow name")
-    val all = readAliases() + (alias -> workflow)
-    val tmp = Files.createTempFile(Paths.get(root), ".wfaliases", ".tmp")
-    Files.write(tmp, all.toSeq.sorted.map { case (k, v) => s"$k=$v" }.asJava)
-    Files.move(tmp, aliasFile, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    aliasTable.updateEntries(_ + (alias -> workflow))
     bus.fire(RegistryEvents.WorkflowStored(alias, persisted = true))
   }
 
@@ -424,42 +366,20 @@ class WorkflowRegistry(root: String, lineage: LineageRegistry,
 class PipelineRegistry(root: String, bus: EventBus = new EventBus) {
   import WorkflowRegistry.OpStep
 
-  private val file = Paths.get(s"$root/pipelines.properties")
+  private val table = new RegistryFile.Table(Paths.get(s"$root/pipelines.properties"))
   Files.createDirectories(Paths.get(root))
 
   private def readAll(): Map[String, Seq[OpStep]] =
-    if (!Files.exists(file)) Map.empty
-    else Files.readAllLines(file).asScala.filter(_.contains("=")).map { l =>
-      val i = l.indexOf('=')
-      val steps = l.substring(i + 1).split(',').toSeq.filter(_.nonEmpty).map { s =>
-        val p = s.split(':')
-        OpStep(p(0), p(1), p(2))
-      }
-      l.substring(0, i) -> steps
-    }.toMap
+    table.entries.map { case (n, v) => n -> OpStep.decode(v) }
 
   /** Persist a pipeline definition under its operation id (validated
     * charset, atomic rewrite). Latest registration wins, like kiara's
     * operation registry. */
   def put(opId: String, steps: Seq[OpStep]): Unit = synchronized {
     Names.validate("pipeline operation id", opId)
-    def okInput(s: String): Boolean = {
-      val parts = s.split("\\+", -1)
-      parts.nonEmpty && parts.length <= 2 &&
-        parts.forall(p => p.nonEmpty && Names.isValid(p))
-    }
     require(steps.nonEmpty, s"pipeline '$opId' has no steps")
-    steps.foreach { st =>
-      require(Names.isValid(st.name) && Names.isValid(st.op) && okInput(st.input),
-        s"bad step part in: $st")
-    }
-    val all = readAll() + (opId -> steps)
-    val tmp = Files.createTempFile(Paths.get(root), ".pipelines", ".tmp")
-    Files.write(tmp, all.toSeq.sortBy(_._1).map { case (n, ss) =>
-      s"$n=${ss.map(s => s"${s.name}:${s.op}:${s.input}").mkString(",")}"
-    }.asJava)
-    Files.move(tmp, file, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    steps.foreach(st => require(OpStep.valid(st), s"bad step part in: $st"))
+    table.updateEntries(_ + (opId -> OpStep.encode(steps)))
     bus.fire(RegistryEvents.WorkflowStored(opId, persisted = true))
   }
 
@@ -470,15 +390,7 @@ class PipelineRegistry(root: String, bus: EventBus = new EventBus) {
       throw new NoSuchElementException(s"unknown pipeline operation: $opId"))
 
   /** Drop a definition (registration-rollback path). */
-  def remove(opId: String): Unit = synchronized {
-    val all = readAll() - opId
-    val tmp = Files.createTempFile(Paths.get(root), ".pipelines", ".tmp")
-    Files.write(tmp, all.toSeq.sortBy(_._1).map { case (n, ss) =>
-      s"$n=${ss.map(s => s"${s.name}:${s.op}:${s.input}").mkString(",")}"
-    }.asJava)
-    Files.move(tmp, file, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def remove(opId: String): Unit = table.updateEntries(_ - opId)
 }
 
 /** Mounted-archive registry (kiara base_api.py:2220 `register_archive`):
@@ -488,31 +400,25 @@ class PipelineRegistry(root: String, bus: EventBus = new EventBus) {
   * rewrite). Paths are free text (JSON-escaped) — only the NAME uses the
   * restricted registry charset. */
 class MountRegistry(root: String) {
-  private val file = Paths.get(s"$root/mounts.jsonl")
+  private val log = new RegistryFile.Log(Paths.get(s"$root/mounts.jsonl"))
   Files.createDirectories(Paths.get(root))
 
-  def set(name: String, dir: String, writable: Boolean): Unit = synchronized {
+  def set(name: String, dir: String, writable: Boolean): Unit = {
     Names.validate("archive name", name)
-    val line = s"""{"name":"${Jsonl.esc(name)}","dir":"${Jsonl.esc(dir)}","writable":$writable}"""
-    Files.write(file, (line + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    log.append(s"""{"name":"${Jsonl.esc(name)}","dir":"${Jsonl.esc(dir)}","writable":$writable}""")
   }
 
-  private val NameRe = """"name":"((?:[^"\\]|\\.)*)"""".r
-  private val DirRe = """"dir":"((?:[^"\\]|\\.)*)"""".r
   private val WritableRe = """"writable":(true|false)""".r
 
   /** Latest mount per name, sorted by name. */
   def list: Seq[(String, String, Boolean)] = {
-    val all =
-      if (!Files.exists(file)) Seq.empty
-      else Files.readAllLines(file).asScala.toSeq.flatMap { l =>
-        for {
-          n <- NameRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-          d <- DirRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-          w <- WritableRe.findFirstMatchIn(l).map(_.group(1).toBoolean)
-        } yield (n, d, w)
-      }
+    val all = log.lines.flatMap { l =>
+      for {
+        n <- Jsonl.str(l, "name")
+        d <- Jsonl.str(l, "dir")
+        w <- WritableRe.findFirstMatchIn(l).map(_.group(1).toBoolean)
+      } yield (n, d, w)
+    }
     all.groupBy(_._1).map(_._2.last).toSeq.sortBy(_._1)
   }
 
@@ -526,47 +432,29 @@ class MountRegistry(root: String) {
   * text (fully JSON-escaped); the latest write for a job wins, so
   * updating a comment is an append, never a rewrite. */
 class CommentStore(root: String, bus: EventBus = new EventBus) {
-  private val file = Paths.get(s"$root/job_comments.jsonl")
+  private val log = new RegistryFile.Log(Paths.get(s"$root/job_comments.jsonl"))
   Files.createDirectories(Paths.get(root))
 
   def set(jobId: String, comment: String): Unit = synchronized {
     Names.validate("job id", jobId)
-    val line = s"""{"job":"${Jsonl.esc(jobId)}","comment":"${Jsonl.esc(comment)}"}"""
-    Files.write(file, (line + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    log.append(s"""{"job":"${Jsonl.esc(jobId)}","comment":"${Jsonl.esc(comment)}"}""")
     bus.fire(RegistryEvents.CommentStored(jobId))
   }
 
-  private val JobRe = """"job":"((?:[^"\\]|\\.)*)"""".r
-  private val CommentRe = """"comment":"((?:[^"\\]|\\.)*)"""".r
-
   /** Latest comment per job, sorted by job id. */
   def list: Seq[(String, String)] = {
-    val all =
-      if (!Files.exists(file)) Seq.empty
-      else Files.readAllLines(file).asScala.toSeq.flatMap { l =>
-        for {
-          j <- JobRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-          c <- CommentRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-        } yield j -> c
-      }
+    val all = log.lines.flatMap { l =>
+      for (j <- Jsonl.str(l, "job"); c <- Jsonl.str(l, "comment")) yield j -> c
+    }
     all.groupBy(_._1).map { case (j, cs) => j -> cs.last._2 }.toSeq.sortBy(_._1)
   }
 
   /** Latest-wins single-key lookup: scan the log backwards and stop at
     * the first match instead of parsing and grouping the whole file. */
-  def get(jobId: String): Option[String] = {
-    if (!Files.exists(file)) return None
-    Files.readAllLines(file).asScala.reverseIterator
-      .flatMap { l =>
-        for {
-          j <- JobRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-          if j == jobId
-          c <- CommentRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-        } yield c
-      }
-      .nextOption()
-  }
+  def get(jobId: String): Option[String] =
+    log.lines.reverseIterator.flatMap { l =>
+      for (j <- Jsonl.str(l, "job") if j == jobId; c <- Jsonl.str(l, "comment")) yield c
+    }.nextOption()
 }
 
 object MetadataRegistry {
@@ -597,7 +485,7 @@ object MetadataRegistry {
   * hash (:233 retrieve_metadata_item_with_hash). */
 class MetadataRegistry(root: String, bus: EventBus = new EventBus) {
   import MetadataRegistry._
-  private val file = Paths.get(s"$root/metadata.jsonl")
+  private val log = new RegistryFile.Log(Paths.get(s"$root/metadata.jsonl"))
   Files.createDirectories(Paths.get(root))
 
   /** Attach `key` = `value` to `refId`; returns the item's content
@@ -608,32 +496,19 @@ class MetadataRegistry(root: String, bus: EventBus = new EventBus) {
     require(refType == "value" || refType == "job",
       s"refType must be 'value' or 'job', got: $refType")
     val h = itemHash(key, value)
-    val line = s"""{"hash":"$h","key":"${Jsonl.esc(key)}","value":"${
-      Jsonl.esc(value)}","refType":"${Jsonl.esc(refType)}","refId":"${Jsonl.esc(refId)}"}"""
-    Files.write(file, (line + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    log.append(s"""{"hash":"$h","key":"${Jsonl.esc(key)}","value":"${
+      Jsonl.esc(value)}","refType":"${Jsonl.esc(refType)}","refId":"${Jsonl.esc(refId)}"}""")
     bus.fire(RegistryEvents.MetadataStored(key, refType, refId, h))
     h
   }
 
-  private val F = (n: String) => (s""""$n":"((?:[^"\\\\]|\\\\.)*)"""").r
-  private val HashRe = F("hash"); private val KeyRe = F("key")
-  private val ValueRe = F("value"); private val TypeRe = F("refType")
-  private val IdRe = F("refId")
-
   /** All items, latest-wins per (key, refType, refId), sorted. */
   def items: Seq[MetadataItem] = {
-    val all =
-      if (!Files.exists(file)) Seq.empty
-      else Files.readAllLines(file).asScala.toSeq.flatMap { l =>
-        for {
-          h <- HashRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-          k <- KeyRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-          v <- ValueRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-          t <- TypeRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-          i <- IdRe.findFirstMatchIn(l).map(m => Jsonl.unesc(m.group(1)))
-        } yield MetadataItem(h, k, v, t, i)
-      }
+    val all = log.lines.flatMap { l =>
+      def f(k: String) = Jsonl.str(l, k)
+      for (h <- f("hash"); k <- f("key"); v <- f("value"); t <- f("refType"); i <- f("refId"))
+        yield MetadataItem(h, k, v, t, i)
+    }
     all.groupBy(m => (m.key, m.refType, m.refId)).map(_._2.last).toSeq
       .sortBy(m => (m.refType, m.refId, m.key))
   }
@@ -692,7 +567,7 @@ object EnvironmentRegistry {
   * that RAN it. Append-only JSONL, idempotent per cid. */
 class EnvironmentRegistry(root: String) {
   import EnvironmentRegistry._
-  private val file = Paths.get(s"$root/environments.jsonl")
+  private val log = new RegistryFile.Log(Paths.get(s"$root/environments.jsonl"))
   Files.createDirectories(Paths.get(root))
 
   /** Store a snapshot (no-op if its cid is already recorded); returns
@@ -701,31 +576,21 @@ class EnvironmentRegistry(root: String) {
     if (get(env.cid).isEmpty) {
       val fields = env.fields.map { case (k, v) =>
         s""""${Jsonl.esc(k)}":"${Jsonl.esc(v)}"""" }.mkString(",")
-      val line = s"""{"cid":"${env.cid}","env":{$fields}}"""
-      Files.write(file, (line + "\n").getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      log.append(s"""{"cid":"${env.cid}","env":{$fields}}""")
     }
     env.cid
   }
 
-  private val CidRe = """"cid":"((?:[^"\\]|\\.)*)"""".r
   private val PairRe = """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r
 
-  def list: Seq[String] =
-    if (!Files.exists(file)) Seq.empty
-    else Files.readAllLines(file).asScala.toSeq
-      .flatMap(l => CidRe.findFirstMatchIn(l).map(m => m.group(1))).distinct
+  def list: Seq[String] = log.lines.flatMap(Jsonl.str(_, "cid")).distinct
 
   /** Snapshot by cid (kiara get_environment_for_cid, :41). */
-  def get(cid: String): Option[EnvSnapshot] = {
-    if (!Files.exists(file)) return None
-    Files.readAllLines(file).asScala.iterator.flatMap { l =>
-      for {
-        c <- CidRe.findFirstMatchIn(l).map(m => m.group(1)) if c == cid
-      } yield EnvSnapshot(c,
+  def get(cid: String): Option[EnvSnapshot] =
+    log.lines.iterator.flatMap { l =>
+      for (c <- Jsonl.str(l, "cid") if c == cid) yield EnvSnapshot(c,
         PairRe.findAllMatchIn(l.substring(l.indexOf("\"env\":{")))
           .map(m => Jsonl.unesc(m.group(1)) -> Jsonl.unesc(m.group(2))).toSeq
           .filterNot(_._1 == "env"))
     }.nextOption()
-  }
 }

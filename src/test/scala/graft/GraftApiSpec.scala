@@ -745,9 +745,10 @@ class GraftApiSpec extends SparkTestBase {
     val e = intercept[IllegalStateException](wf.allStateIds)
     assert(e.getMessage.contains("corrupt workflow state log"), e.getMessage)
     // a parallel session on the same root serializes through the shared
-    // per-root lock object (same instance for both sessions)
-    assert(graft.WorkflowSession.stateLogLock(root) eq
-      graft.WorkflowSession.stateLogLock(root + "/."))
+    // per-file lock object (same instance for both sessions)
+    import graft.registries.RegistryFile.lockFor
+    assert(lockFor(java.nio.file.Paths.get(s"$root/workflow_states.jsonl")) eq
+      lockFor(java.nio.file.Paths.get(s"$root/./workflow_states.jsonl")))
     assert(sid.nonEmpty)
   }
 
