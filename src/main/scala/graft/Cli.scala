@@ -564,43 +564,21 @@ object Cli {
     require(args.nonEmpty, "usage: Cli --service <info-file> <subcommand...>")
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(infoFile)), "UTF-8")
-    val host = """"host"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
+    val info = Jsonl.readObject(txt)
+    val host = info.flatMap(Jsonl.text(_, "host"))
       .getOrElse(throw new IllegalArgumentException(
         s"no host in service info file $infoFile: ${txt.trim}"))
-    val port = """"port"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+    val port = info.flatMap(i => Option(i.get("port"))).filter(_.canConvertToInt).map(_.intValue)
       .getOrElse(throw new IllegalArgumentException(
         s"no port in service info file $infoFile: ${txt.trim}"))
-    val line = args.map(a => "\"" + Jsonl.esc(a) + "\"")
-      .mkString("""{"endpoint":"cli","args":[""", ",", "]}")
-    val resp = Serve.request(host, port, line)
-    // linear scan, not a regex: a query response's stdout can be many
-    // KB of escaped table text, and java.util.regex recurses one stack
-    // frame per character on (x|y)* alternations — a large payload
-    // overflows the stack. The field layout is fixed by Serve's ok().
-    def field(k: String): Option[String] = {
-      val tag = "\"" + k + "\":\""
-      val i = resp.indexOf(tag)
-      if (i < 0) None
-      else {
-        val sb = new StringBuilder
-        var j = i + tag.length
-        var done = false
-        while (!done && j < resp.length) {
-          resp.charAt(j) match {
-            case '\\' if j + 1 < resp.length =>
-              sb.append(resp.charAt(j)).append(resp.charAt(j + 1)); j += 2
-            case '"' => done = true
-            case c   => sb.append(c); j += 1
-          }
-        }
-        Some(Jsonl.unesc(sb.toString))
-      }
-    }
-    field("error").foreach(e =>
+    val resp = Serve.request(host, port, Jsonl.line("endpoint" -> "cli", "args" -> args))
+    val obj = Jsonl.readObject(resp).getOrElse(
+      throw new IllegalStateException(s"malformed service response: $resp"))
+    Jsonl.text(obj, "error").foreach(e =>
       throw new IllegalStateException(s"service error: $e"))
-    field("stderr").filter(_.nonEmpty).foreach(e =>
+    Jsonl.text(obj, "stderr").filter(_.nonEmpty).foreach(e =>
       throw new IllegalStateException(e))
-    field("stdout").getOrElse(throw new IllegalStateException(
+    Jsonl.text(obj, "stdout").getOrElse(throw new IllegalStateException(
       s"malformed service response: $resp"))
   }
 

@@ -201,6 +201,57 @@ object GraftApi {
   private val activePipelines = new ThreadLocal[Vector[String]] {
     override def initialValue(): Vector[String] = Vector.empty
   }
+
+  /** A pipeline spec file, read on the driver (no Spark job): `steps`
+    * define the pipeline; `inputs` (step input -> value ref) and `save`
+    * (step -> alias) are what [[GraftApi.runBatch]] binds. */
+  final case class PipelineSpec(name: String, steps: Seq[OpStep],
+                                inputs: Seq[(String, String)], save: Seq[(String, String)])
+
+  /** Read and validate one spec file: a malformed file is an
+    * `IllegalArgumentException` naming the file and the offending field,
+    * never a ClassCastException (ADVICE r12). `pipeline_name` defaults to
+    * the file basename without its extension, like the reference. */
+  private[graft] def readPipelineSpec(specPath: String): PipelineSpec = {
+    import scala.jdk.CollectionConverters._
+    import com.fasterxml.jackson.databind.JsonNode
+    def specErr(msg: String): Nothing =
+      throw new IllegalArgumentException(s"bad pipeline spec $specPath: $msg")
+    def kind(n: JsonNode): String = n.getNodeType.toString.toLowerCase
+    def str(n: JsonNode, what: String): String =
+      if (n.isTextual) n.textValue
+      else if (n.isNull) specErr(s"'$what' must not be null")
+      else specErr(s"'$what' must be a string, got ${kind(n)}")
+    val spec =
+      try graft.registries.Jsonl.read(java.nio.file.Files.readString(java.nio.file.Paths.get(specPath)))
+      catch { case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        specErr(s"not valid JSON: ${e.getOriginalMessage}") }
+    if (!spec.isObject) specErr(s"must be ONE json object, got ${kind(spec)}")
+    // path(): an absent field reads as a MissingNode, never null
+    def absent(n: JsonNode): Boolean = n.isMissingNode || n.isNull
+    val steps = spec.path("steps") match {
+      case a if absent(a) => specErr("no steps")
+      case a if a.isArray && a.asScala.forall(_.isObject) => a.asScala.toSeq.map { st =>
+        def field(f: String): String =
+          if (absent(st.path(f))) specErr(s"every step needs name/op/input ('$f' missing)")
+          else str(st.path(f), s"steps.$f")
+        OpStep(field("name"), field("op"), field("input"))
+      }
+      case other => specErr(s"'steps' must be a list of step objects, got ${kind(other)}")
+    }
+    if (steps.isEmpty) specErr("empty steps list")
+    def kvMap(field: String): Seq[(String, String)] = spec.path(field) match {
+      case o if absent(o) => Seq.empty
+      case o if o.isObject => o.properties.asScala.toSeq.map { e =>
+        e.getKey -> str(e.getValue, s"$field.${e.getKey}") }
+      case other => specErr(s"'$field' must be an object of string values, got ${kind(other)}")
+    }
+    val name = Some(spec.path("pipeline_name")).filterNot(absent)
+      .map(str(_, "pipeline_name"))
+      .getOrElse(new java.io.File(specPath).getName.replaceAll("\\.(json|yaml|yml)$", ""))
+      .replaceAll("[^A-Za-z0-9._-]", "_")
+    PipelineSpec(name, steps, kvMap("inputs"), kvMap("save"))
+  }
 }
 
 /** Top-level facade mirroring kiara's python API
@@ -610,57 +661,19 @@ class GraftApi(val spark: SparkSession, root: String) {
   }
 
   /** register_pipeline from a JSON spec FILE — the `runBatch` spec shape;
-    * only `pipeline_name` and `steps` are read (inputs/save are a batch-
+    * only `pipeline_name` and `steps` are used (inputs/save are a batch-
     * run concern, not part of the definition). The id auto-derives from
     * the pipeline name (file basename if unnamed), like the reference. */
   def registerPipelineFile(specPath: String,
                            operationId: Option[String] = None): String = {
-    val (name, steps) = parsePipelineSpec(specPath)
-    registerPipeline(name, steps, operationId)
+    val spec = readPipelineSpec(specPath)
+    registerPipeline(spec.name, spec.steps, operationId)
   }
 
   /** register_pipelines (base_api.py:1298): register every spec file;
     * returns path -> operation id in input order. */
   def registerPipelines(specPaths: Seq[String]): Seq[(String, String)] =
     specPaths.map(p => p -> registerPipelineFile(p))
-
-  private def parsePipelineSpec(specPath: String): (String, Seq[WorkflowRegistry.OpStep]) = {
-    val sdf = spark.read.option("multiLine", "true").json(specPath)
-    require(sdf.count() == 1, s"pipeline spec must be ONE json document: $specPath")
-    val row = sdf.head()
-    val fields = sdf.schema.fieldNames.toSet
-    require(fields.contains("steps"), s"pipeline spec has no steps: $specPath")
-    import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
-    def specErr(msg: String): Nothing =
-      throw new IllegalArgumentException(s"bad pipeline spec $specPath: $msg")
-    sdf.schema("steps").dataType match {
-      case ArrayType(st: StructType, _) =>
-        Seq("name", "op", "input").foreach { f =>
-          st.fields.find(_.name == f) match {
-            case Some(sf) if sf.dataType == StringType => ()
-            case Some(sf) => specErr(
-              s"step field '$f' must be a string, got ${sf.dataType.simpleString}")
-            case None => specErr(s"every step needs name/op/input ('$f' missing)")
-          }
-        }
-      case other => specErr(s"'steps' must be a list of step objects, got ${other.simpleString}")
-    }
-    val name = (if (fields.contains("pipeline_name") &&
-        !row.isNullAt(row.fieldIndex("pipeline_name")))
-        row.getString(row.fieldIndex("pipeline_name"))
-      else new java.io.File(specPath).getName.replaceAll("\\.(json|yaml|yml)$", ""))
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val stepRows = row.getSeq[org.apache.spark.sql.Row](row.fieldIndex("steps"))
-    require(stepRows.nonEmpty, "pipeline spec has an empty steps list")
-    val steps = stepRows.map { r =>
-      val (sn, op, in) = (r.getAs[String]("name"), r.getAs[String]("op"),
-        r.getAs[String]("input"))
-      require(sn != null && op != null && in != null,
-        s"every step needs name/op/input: $r")
-      WorkflowRegistry.OpStep(sn, op, in)
-    }
-    (name, steps)
-  }
 
   /** list_pipeline_ids (base_api.py:1085): pipeline operations of THIS
     * context (kiara's operation registry is per-context; graft's
@@ -793,8 +806,8 @@ class GraftApi(val spark: SparkSession, root: String) {
     * (alias or value id), and steps named in `save` store under their
     * aliases afterwards. `pipeline_name` defaults from the file
     * basename with the extension stripped, exactly like the reference.
-    * The spec is honest JSON parsed by Spark's own reader (multiLine,
-    * one document — no new dependency):
+    * The spec is one JSON object, read on the driver by
+    * [[GraftApi.readPipelineSpec]] (no Spark job):
     * {{{
     * {"pipeline_name": "curate",
     *  "steps": [{"name": "clean", "op": "tables.dropNulls", "input": "docs"}],
@@ -806,68 +819,15 @@ class GraftApi(val spark: SparkSession, root: String) {
     * contract), so provenance traversal works for batch outputs too. */
   def runBatch(specPath: String): (String, Seq[(String, String, String)]) = {
     graft.plans.Builtins.ensureRegistered()
-    val sdf = spark.read.option("multiLine", "true").json(specPath)
-    require(sdf.count() == 1, s"batch spec must be ONE json document: $specPath")
-    val row = sdf.head()
-    val fields = sdf.schema.fieldNames.toSet
-    require(fields.contains("steps"), s"batch spec has no steps: $specPath")
-    // validate the INFERRED schema before any row access: a numeric or
-    // nested value where a string belongs, or steps that all omit a key,
-    // must surface as a spec-shaped error, not a ClassCastException or
-    // Spark field-not-found (ADVICE r12)
-    import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
-    def specErr(msg: String): Nothing =
-      throw new IllegalArgumentException(s"bad batch spec $specPath: $msg")
-    sdf.schema("steps").dataType match {
-      case ArrayType(st: StructType, _) =>
-        Seq("name", "op", "input").foreach { f =>
-          st.fields.find(_.name == f) match {
-            case Some(sf) if sf.dataType == StringType => ()
-            case Some(sf) => specErr(
-              s"step field '$f' must be a string, got ${sf.dataType.simpleString}")
-            case None => specErr(s"every step needs name/op/input ('$f' missing)")
-          }
-        }
-      case other => specErr(s"'steps' must be a list of step objects, got ${other.simpleString}")
-    }
-    def kvMap(field: String): Seq[(String, String)] =
-      if (!fields.contains(field) || row.isNullAt(row.fieldIndex(field))) Seq.empty
-      else sdf.schema(field).dataType match {
-        case stTy: StructType =>
-          stTy.fields.foreach { f =>
-            if (f.dataType != StringType) specErr(
-              s"'$field.${f.name}' must be a string, got ${f.dataType.simpleString}")
-          }
-          val st = row.getStruct(row.fieldIndex(field))
-          st.schema.fieldNames.toSeq.map { f =>
-            val v = st.getAs[String](f)
-            if (v == null) specErr(s"'$field.$f' must not be null")
-            f -> v
-          }
-        case other => specErr(
-          s"'$field' must be an object of string values, got ${other.simpleString}")
-      }
-    val name = (if (fields.contains("pipeline_name") &&
-        !row.isNullAt(row.fieldIndex("pipeline_name")))
-        row.getString(row.fieldIndex("pipeline_name"))
-      else new java.io.File(specPath).getName.replaceAll("\\.(json|yaml|yml)$", ""))
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val stepRows = row.getSeq[org.apache.spark.sql.Row](row.fieldIndex("steps"))
-    require(stepRows.nonEmpty, "batch spec has an empty steps list")
-    val opSteps = stepRows.map { r =>
-      val (sn, op, in) = (r.getAs[String]("name"), r.getAs[String]("op"),
-        r.getAs[String]("input"))
-      require(sn != null && op != null && in != null,
-        s"every step needs name/op/input: $r")
-      require(OpRegistry.contains(op), s"unknown operation in batch spec: $op")
-      graft.registries.WorkflowRegistry.OpStep(sn, op, in)
-    }
-    val inputs = kvMap("inputs").map { case (n, ref) => n -> getValue(ref) }.toMap
-    val steps = opSteps.map(st => OpRegistry.step(st.name, st.op, st.input))
-    val runId = s"batch-$name-${jobSeq.incrementAndGet()}"
+    val spec = readPipelineSpec(specPath)
+    spec.steps.foreach(st =>
+      require(OpRegistry.contains(st.op), s"unknown operation in batch spec: ${st.op}"))
+    val inputs = spec.inputs.map { case (n, ref) => n -> getValue(ref) }.toMap
+    val steps = spec.steps.map(st => OpRegistry.step(st.name, st.op, st.input))
+    val runId = s"batch-${spec.name}-${jobSeq.incrementAndGet()}"
     val res = Pipeline.run(steps, inputs)
     lineage.recordRun(runId, res.lineage)
-    val saved = kvMap("save").sortBy(_._1).map { case (step, alias) =>
+    val saved = spec.save.sortBy(_._1).map { case (step, alias) =>
       require(res.values.contains(step),
         s"save target '$step' is not a step or input of this batch")
       val vid = storeValue(s"$runId-$step", res.values(step), Some(alias))

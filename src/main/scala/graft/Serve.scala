@@ -4,6 +4,9 @@ import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream, Pr
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.util.RawValue
 import org.apache.spark.sql.SparkSession
 import graft.registries.Jsonl
 
@@ -28,7 +31,11 @@ import graft.registries.Jsonl
   * (service/__init__.py:151-181: ping -> "pong", shutdown/stop ends the
   * loop, service_status reports state + config, cli dispatches a CLI
   * invocation and returns its captured stdout/stderr, unknown endpoints
-  * return an error object instead of crashing the service). The `cli`
+  * return an error object instead of crashing the service). The
+  * containment covers parsing too: requests are read with the one JSON
+  * codec ([[graft.registries.Jsonl]]), so a line that is not JSON, a
+  * non-array `args` or an argument of any length gets an error object,
+  * and the session keeps serving. The `cli`
   * endpoint exposes the WHOLE registry/value/render surface ([[Cli]]),
   * so a client can run queries, fetch value slices, and drive registry
   * verbs over one live session — kiara's proxy_cli path (:171).
@@ -51,75 +58,71 @@ object Serve {
     def isStopped: Boolean = stopped
     def requestsServed: Long = served.get()
 
-    private val EndpointRe = """"endpoint"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-    private val ArgsRe = """"args"\s*:\s*\[((?:[^\]"]|"(?:[^"\\]|\\.)*")*)\]""".r
-    // array elements: quoted strings OR bare JSON scalars (numbers,
-    // booleans, null) — a bare row limit in {"args":["q1","dir",3]} must
-    // not be silently dropped (it used to fall back to the default 20)
-    private val TokenRe =
-      """"((?:[^"\\]|\\.)*)"|(-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|true|false|null)""".r
-
-    private def ok(endpoint: String, fields: (String, String)*): String =
-      (s""""endpoint":"${Jsonl.esc(endpoint)}"""" +: fields.map { case (k, v) => s""""$k":$v""" })
-        .mkString("{", ",", "}")
-    private def str(s: String): String = "\"" + Jsonl.esc(s) + "\""
+    private def ok(endpoint: String, fields: (String, Any)*): String =
+      Jsonl.line(("endpoint" -> endpoint) +: fields: _*)
 
     /** Handle one request line; returns the response line. Malformed or
       * failing requests return an error object — the service never dies
-      * on a bad request (zmq loop's per-request error containment). */
+      * on a bad request (zmq loop's per-request error containment): a
+      * line that is not one JSON object with a string `endpoint` gets
+      * an `error` object, and every endpoint runs inside [[run]],
+      * argument parsing included. */
     def handle(line: String): String = {
       served.incrementAndGet()
-      val endpoint = EndpointRe.findFirstMatchIn(line).map(m => Jsonl.unesc(m.group(1)))
-      val args: Seq[String] = ArgsRe.findFirstMatchIn(line).map(m =>
-        TokenRe.findAllMatchIn(m.group(1)).map(q =>
-          if (q.group(1) != null) Jsonl.unesc(q.group(1)) else q.group(2)).toSeq)
-        .getOrElse(Seq.empty)
-      endpoint match {
-        case None =>
-          ok("error", "error" -> str(s"malformed request (no endpoint): $line"))
-        case Some("ping") => ok("ping", "result" -> str("pong"))
-        case Some(e @ ("shutdown" | "stop")) =>
-          stopped = true
-          ok(e, "result" -> str("ok"))
-        case Some("service_status") =>
-          ok("service_status",
-            "state" -> str("running"),
-            "requests" -> served.get().toString,
-            "spark" -> str(spark.version),
-            "master" -> str(spark.sparkContext.master),
-            "shuffle_partitions" -> str(spark.conf.get("spark.sql.shuffle.partitions")))
-        case Some("query") =>
-          run("query") {
-            require(args.size >= 2, "query needs args [name, sfDir, rows?]")
-            val rows = if (args.size >= 3) args(2).toInt else 20
-            val fn = SparkEntry.queries.getOrElse(args.head,
-              throw new IllegalArgumentException(s"unknown query: ${args.head}"))
-            // bounded slice as JSON rows — never more than `rows` rows
-            // materialize, whatever the query's result size
-            val body = fn(spark, args(1)).limit(rows).toJSON.collect().mkString(",")
-            ok("query", "rows" -> s"[$body]")
-          }
-        case Some("cli") =>
-          run("cli") {
-            val out = Cli.run(spark, args.toArray)
-            ok("cli", "stdout" -> str(out), "stderr" -> str(""))
-          }
-        case Some(other) =>
-          ok(other, "error" -> str(s"unknown endpoint: $other " +
-            "(available: ping, service_status, query, cli, shutdown, stop)"))
+      val req = Jsonl.readObject(line)
+      req.flatMap(Jsonl.text(_, "endpoint")) match {
+        case None => ok("error", "error" -> s"malformed request (no endpoint): $line")
+        case Some(e) => run(e)(dispatch(e, req.get))
       }
+    }
+
+    /** The `args` array; strings arrive as their value, other scalars
+      * (a bare row limit `3`, `true`, `null`) as their JSON text. */
+    private def args(req: JsonNode): Seq[String] = req.get("args") match {
+      case null => Seq.empty
+      case a if a.isArray => a.asScala.map(n => if (n.isTextual) n.textValue else n.toString).toSeq
+      case other => throw new IllegalArgumentException(
+        s"'args' must be a JSON array, got ${other.getNodeType.toString.toLowerCase}")
+    }
+
+    private def dispatch(endpoint: String, req: JsonNode): String = endpoint match {
+      case "ping" => ok("ping", "result" -> "pong")
+      case "shutdown" | "stop" =>
+        stopped = true
+        ok(endpoint, "result" -> "ok")
+      case "service_status" =>
+        ok("service_status",
+          "state" -> "running",
+          "requests" -> served.get(),
+          "spark" -> spark.version,
+          "master" -> spark.sparkContext.master,
+          "shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions"))
+      case "query" =>
+        val a = args(req)
+        require(a.size >= 2, "query needs args [name, sfDir, rows?]")
+        val rows = if (a.size >= 3) a(2).toInt else 20
+        val fn = SparkEntry.queries.getOrElse(a.head,
+          throw new IllegalArgumentException(s"unknown query: ${a.head}"))
+        // bounded slice as JSON rows — never more than `rows` rows
+        // materialize, whatever the query's result size; Spark's own row
+        // JSON is embedded verbatim, not re-parsed
+        val body = fn(spark, a(1)).limit(rows).toJSON.collect().mkString("[", ",", "]")
+        ok("query", "rows" -> new RawValue(body))
+      case "cli" =>
+        ok("cli", "stdout" -> Cli.run(spark, args(req).toArray), "stderr" -> "")
+      case other =>
+        ok(other, "error" -> (s"unknown endpoint: $other " +
+          "(available: ping, service_status, query, cli, shutdown, stop)"))
     }
 
     private def run(endpoint: String)(body: => String): String =
       try body catch {
         case e: Throwable =>
-          // getMessage is null for bare NPEs etc.; esc(null) would throw
-          // FROM the catch and kill the stream despite the containment
-          // contract — fall back to the exception's class name
+          // getMessage is null for bare NPEs etc. — fall back to the
+          // exception's class name
           val msg = if (e.getMessage != null) e.getMessage else e.toString
-          if (endpoint == "cli")
-            ok("cli", "stdout" -> str(""), "stderr" -> str(msg))
-          else ok(endpoint, "error" -> str(msg))
+          if (endpoint == "cli") ok("cli", "stdout" -> "", "stderr" -> msg)
+          else ok(endpoint, "error" -> msg)
       }
   }
 
@@ -159,8 +162,8 @@ object Serve {
         require(!Files.exists(p), s"service info file already present: $f " +
           "(another service running on this context?)")
         if (p.getParent != null) Files.createDirectories(p.getParent)
-        Files.write(p, (s"""{"process_id":${ProcessHandle.current().pid()},""" +
-          s""""host":"127.0.0.1","port":$bound}""" + "\n").getBytes("UTF-8"))
+        Files.write(p, (Jsonl.line("process_id" -> ProcessHandle.current().pid(),
+          "host" -> "127.0.0.1", "port" -> bound) + "\n").getBytes("UTF-8"))
         registered = true
       }
       val session = new Session(spark)

@@ -27,13 +27,11 @@ object Verify {
       Caches.release()
       spark.catalog.clearCache()
     }
-    // Jsonl.esc escapes ALL control chars (<0x20) — a tab or CR in
-    // builder-authored SQL would otherwise make the driver's json.load
-    // fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + Jsonl.esc(s) + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // the one JSON codec escapes every control char — a tab or CR in
+    // builder-authored SQL must not make the driver's json.load fail
+    // and silently zero the round's correctness
+    val json = Jsonl.line(SparkEntry.oracleSql
+      .filter { case (k, _) => only.isEmpty || only(k) }.toSeq: _*)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -38,8 +38,25 @@ object WorkflowSession {
     * snapshot census, readable WITHOUT constructing a session (a closure
     * workflow has no rebuildable session, but its history may exist). */
   private[graft] def savedStatesFor(root: String, name: String): Seq[String] =
+    savedStates(root, name).map(_._1)
+
+  /** Saved (state id, steps, inputs) of one workflow, in log order. A
+    * line the writer in `snapshot` could never have produced — torn,
+    * interleaved, hand-edited — means the log is corrupted: FAIL, don't
+    * silently drop history (ADVICE r12). */
+  private def savedStates(root: String, name: String)
+      : Seq[(String, (Vector[WorkflowRegistry.OpStep], Map[String, String]))] =
     stateLog(root).lines.flatMap { l =>
-      for (wf <- Jsonl.str(l, "workflow") if wf == name; id <- Jsonl.str(l, "state_id")) yield id
+      val o = Jsonl.readObject(l)
+      def field(k: String): String = o.flatMap(Jsonl.text(_, k)).getOrElse(
+        throw new IllegalStateException(
+          s"corrupt workflow state log $root/workflow_states.jsonl: unparseable line: $l"))
+      val (wf, id, st, in) = (field("workflow"), field("state_id"), field("steps"), field("inputs"))
+      if (wf != name) None
+      else Some(id -> ((WorkflowRegistry.OpStep.decode(st),
+        in.split(',').filter(_.nonEmpty).map { kv =>
+          val i = kv.indexOf('='); kv.substring(0, i) -> kv.substring(i + 1)
+        }.toMap)))
     }
 }
 
@@ -204,35 +221,15 @@ final class WorkflowSession private[graft] (api: GraftApi, val name: String,
   def snapshot(save: Boolean = false): String = {
     val id = stateId
     stateCache.put(id, (steps, inputRefs))
-    if (save) {
-      stateLog.append(s"""{"workflow":"${Jsonl.esc(name)}","state_id":"$id",""" +
-        s""""steps":"${Jsonl.esc(OpStep.encode(steps))}",""" +
-        s""""inputs":"${Jsonl.esc(inputRefs.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(","))}"}""")
-    }
+    if (save)
+      stateLog.append(Jsonl.line("workflow" -> name, "state_id" -> id,
+        "steps" -> OpStep.encode(steps),
+        "inputs" -> inputRefs.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")))
     id
   }
 
   private def persistedStates: Seq[(String, (Vector[OpStep], Map[String, String]))] =
-    stateLog.lines.flatMap { l =>
-      def field(k: String): Option[String] = Jsonl.str(l, k)
-      // a line the writer above could never have produced means the log
-      // is corrupted (interleaved append, manual edit): FAIL, don't
-      // silently drop history (ADVICE r12)
-      if (field("workflow").isEmpty || field("state_id").isEmpty ||
-          field("steps").isEmpty || field("inputs").isEmpty)
-        throw new IllegalStateException(
-          s"corrupt workflow state log $contextRoot/workflow_states.jsonl: unparseable line: $l")
-      for {
-        wf <- field("workflow") if wf == name
-        id <- field("state_id")
-        st <- field("steps")
-        in <- field("inputs")
-      } yield id -> ((
-        OpStep.decode(st),
-        in.split(',').filter(_.nonEmpty).map { kv =>
-          val i = kv.indexOf('='); kv.substring(0, i) -> kv.substring(i + 1)
-        }.toMap))
-    }
+    WorkflowSession.savedStates(contextRoot, name)
 
   /** All known state ids — session cache plus the persisted log, sorted
     * (workflow.py:1227 all_state_ids). */

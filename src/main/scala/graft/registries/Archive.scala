@@ -77,25 +77,15 @@ object Archive {
     ids
   }
 
-  /** Metadata-value escape: full JSON escape PLUS '}' as }, so the
-    * reader's `"metadata":\{([^}]*)\}` block regex can never be truncated
-    * by a brace inside a value (ADVICE r13 — a truncated read would make
-    * the next read-modify-rewrite silently drop entries). Jsonl.unesc
-    * decodes } back to '}' transparently. */
-  private def metaEsc(s: String): String = Jsonl.esc(s).replace("}", "\\u007d")
-
   /** (Re)write manifest.json — ids/aliases use the restricted registry
-    * charset; metadata values are free text (JSON-escaped). */
+    * charset; metadata values are free text. The `metadata` object is
+    * omitted while empty. */
   private def writeManifest(dir: String, ids: Seq[String],
                             aliases: Seq[(String, String)],
                             metadata: Seq[(String, String)]): Unit = {
-    val metaBlock =
-      if (metadata.isEmpty) ""
-      else s""","metadata":{${metadata.sortBy(_._1).map { case (k, v) =>
-        "\"" + metaEsc(k) + "\":\"" + metaEsc(v) + "\"" }.mkString(",")}}"""
-    val manifest =
-      s"""{"version":$Version,"values":[${ids.map(i => "\"" + Jsonl.esc(i) + "\"").mkString(",")}],""" +
-        s""""aliases":{${aliases.map { case (a, v) => "\"" + Jsonl.esc(a) + "\":\"" + Jsonl.esc(v) + "\"" }.mkString(",")}}$metaBlock}"""
+    val manifest = Jsonl.line("version" -> Version, "values" -> ids,
+      "aliases" -> Jsonl.obj(aliases: _*),
+      "metadata" -> Option.when(metadata.nonEmpty)(Jsonl.obj(metadata.sortBy(_._1): _*)))
     Files.createDirectories(Paths.get(dir))
     // a Table rewrite (temp file + atomic move): the FileLock only
     // serializes WRITERS — readers (readManifest via mountedResolve, which
@@ -113,23 +103,14 @@ object Archive {
   def setArchiveMetadata(dir: String, key: String, value: String): Unit = {
     Names.validate("archive metadata key", key)
     withArchiveLock(dir) {
-      val (ids, als) = readManifest(dir)
-      val meta = readArchiveMetadata(dir).filterNot(_._1 == key) :+ (key -> value)
-      writeManifest(dir, ids, als, meta)
+      val m = readManifest(dir)
+      writeManifest(dir, m.values, m.aliases,
+        m.metadata.filterNot(_._1 == key) :+ (key -> value))
     }
   }
 
   /** The archive's own metadata entries, sorted by key. */
-  def readArchiveMetadata(dir: String): Seq[(String, String)] = {
-    val p = Paths.get(dir, "manifest.json")
-    require(Files.exists(p), s"not an archive (no manifest.json): $dir")
-    val txt = Files.readString(p)
-    """"metadata":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-      .map { block =>
-        """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(block)
-          .map(m => Jsonl.unesc(m.group(1)) -> Jsonl.unesc(m.group(2))).toSeq
-      }.getOrElse(Seq.empty).sortBy(_._1)
-  }
+  def readArchiveMetadata(dir: String): Seq[(String, String)] = readManifest(dir).metadata
 
   /** Create an EMPTY archive (the register_archive
     * create_if_not_exists path, base_api.py:2220): a manifest with no
@@ -143,8 +124,10 @@ object Archive {
   /** The archive's manifest (value ids, aliases) — the mount-resolution
     * surface (register_archive reads resolve through this without any
     * import). */
-  def manifest(dir: String): (Seq[String], Seq[(String, String)]) =
-    readManifest(dir)
+  def manifest(dir: String): (Seq[String], Seq[(String, String)]) = {
+    val m = readManifest(dir)
+    (m.values, m.aliases)
+  }
 
   /** Store ONE value into an existing archive in place — the mounted
     * WRITE path (register_archive with allow_write_access; kiara's
@@ -156,11 +139,11 @@ object Archive {
     Names.validate("value id", id)
     alias.foreach(Names.validate("alias name", _))
     withArchiveLock(dir) {
-      val (ids, als) = readManifest(dir)
-      require(!ids.contains(id), s"archive already has value: $id")
+      val m = readManifest(dir)
+      require(!m.values.contains(id), s"archive already has value: $id")
       df.write.mode("errorifexists").parquet(s"$dir/values/$id")
-      val newAls = alias.fold(als)(a => als.filterNot(_._1 == a) :+ (a -> id))
-      writeManifest(dir, ids :+ id, newAls, readArchiveMetadata(dir))
+      val newAls = alias.fold(m.aliases)(a => m.aliases.filterNot(_._1 == a) :+ (a -> id))
+      writeManifest(dir, m.values :+ id, newAls, m.metadata)
     }
   }
 
@@ -176,24 +159,24 @@ object Archive {
     * rows). */
   def copyArchive(sourceDir: String, targetDir: String,
                   noAliases: Boolean = false): Seq[String] = {
-    val (srcIds, srcAls) = readManifest(sourceDir)
+    val src = readManifest(sourceDir)
     val fresh = !Files.exists(Paths.get(targetDir, "manifest.json"))
-    val (tgtIds, tgtAls) = if (fresh) (Seq.empty[String], Seq.empty[(String, String)])
+    // a fresh target inherits the source's archive metadata
+    val tgt = if (fresh) src.copy(values = Seq.empty, aliases = Seq.empty)
       else readManifest(targetDir)
-    val copied = srcIds.filterNot(tgtIds.contains)
+    val copied = src.values.filterNot(tgt.values.contains)
     copied.foreach { id =>
       copyTree(Paths.get(sourceDir, "values", id), Paths.get(targetDir, "values", id))
     }
-    val mergedIds = (tgtIds ++ copied).distinct
+    val mergedIds = (tgt.values ++ copied).distinct
     val mergedAls =
-      if (noAliases) tgtAls
+      if (noAliases) tgt.aliases
       else {
-        val taken = tgtAls.map(_._1).toSet
-        tgtAls ++ srcAls.filter { case (a, v) =>
+        val taken = tgt.aliases.map(_._1).toSet
+        tgt.aliases ++ src.aliases.filter { case (a, v) =>
           !taken.contains(a) && mergedIds.contains(v) }
       }
-    val meta = if (fresh) readArchiveMetadata(sourceDir) else readArchiveMetadata(targetDir)
-    writeManifest(targetDir, mergedIds, mergedAls.sorted, meta)
+    writeManifest(targetDir, mergedIds, mergedAls.sorted, tgt.metadata)
     val tgtLin = lineageLog(targetDir)
     val existing = tgtLin.lines.toSet
     tgtLin.appendAll(lineageLog(sourceDir).lines.filterNot(existing))
@@ -216,7 +199,7 @@ object Archive {
   def importArchive(spark: SparkSession, data: DataRegistry, aliases: AliasRegistry,
                     lineage: LineageRegistry, sourceDir: String,
                     noAliases: Boolean = false): Seq[String] = {
-    val (ids, als) = readManifest(sourceDir)
+    val (ids, als) = manifest(sourceDir)
     ids.foreach(id => data.store(id, ParquetMeta.read(spark, s"$sourceDir/values/$id")))
     if (!noAliases) als.foreach { case (a, v) => aliases.set(a, v) }
     lineageLog(sourceDir).lines.foreach(lineage.appendRaw)
@@ -234,11 +217,8 @@ object Archive {
                                metadata: Seq[(String, String)] = Seq.empty)
 
   def archiveInfo(sourceDir: String): ArchiveInfo = {
-    val (ids, als) = readManifest(sourceDir)
-    val txt = Files.readString(Paths.get(sourceDir, "manifest.json"))
-    val version = """"version":(\d+)""".r.findFirstMatchIn(txt)
-      .map(_.group(1).toInt).getOrElse(0)
-    val entries = ids.map { id =>
+    val m = readManifest(sourceDir)
+    val entries = m.values.map { id =>
       val vdir = Paths.get(sourceDir, "values", id)
       val parts =
         if (!Files.exists(vdir)) Seq.empty[java.nio.file.Path]
@@ -250,24 +230,26 @@ object Archive {
       val rows = parts.map(p => ParquetMeta.rowCount(p.toString)).sum
       ValueEntry(id, parts.size, parts.map(Files.size).sum, rows)
     }
-    ArchiveInfo(version, entries, als, lineageLog(sourceDir).lines.size,
-      readArchiveMetadata(sourceDir))
+    ArchiveInfo(m.version, entries, m.aliases, lineageLog(sourceDir).lines.size, m.metadata)
   }
 
-  /** Parse manifest.json — fields are the restricted value-id/alias
-    * charset (enforced at store/set time), so a charset-bounded regex
-    * scan is exact; no general JSON parser needed. */
-  private[registries] def readManifest(sourceDir: String): (Seq[String], Seq[(String, String)]) = {
-    val p = Paths.get(sourceDir, "manifest.json")
-    require(Files.exists(p), s"not an archive (no manifest.json): $sourceDir")
-    val txt = Files.readString(p)
-    val values = """"values":\[([^\]]*)\]""".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse("")
-    val ids = ("\"(" + Names.Pattern + ")\"").r.findAllMatchIn(values).map(_.group(1)).toSeq
-    val aliasBlock = """"aliases":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse("")
-    val als = ("\"(" + Names.Pattern + ")\":\"(" + Names.Pattern + ")\"").r.findAllMatchIn(aliasBlock)
-      .map(m => m.group(1) -> m.group(2)).toSeq
-    (ids, als)
+  /** One parsed manifest.json; metadata sorted by key. */
+  private final case class Manifest(version: Int, values: Seq[String],
+                                    aliases: Seq[(String, String)],
+                                    metadata: Seq[(String, String)])
+
+  /** Parse manifest.json with the one JSON codec. Value ids and aliases
+    * are kept only when they are in the registry charset (enforced at
+    * store/set time): an id names a directory under `values/`, so a
+    * hand-edited `..` must not resolve outside the archive. */
+  private def readManifest(dir: String): Manifest = {
+    val p = Paths.get(dir, "manifest.json")
+    require(Files.exists(p), s"not an archive (no manifest.json): $dir")
+    val m = Jsonl.readObject(Files.readString(p)).getOrElse(
+      throw new IllegalArgumentException(s"corrupt archive manifest (not one JSON object): $p"))
+    Manifest(m.path("version").asInt(0),
+      Jsonl.texts(m, "values").filter(Names.isValid),
+      Jsonl.textFields(m, "aliases").filter { case (a, v) => Names.isValid(a) && Names.isValid(v) },
+      Jsonl.textFields(m, "metadata").sortBy(_._1))
   }
 }

@@ -4,20 +4,19 @@ package graft.registries
   * ids, aliases, context names, workflow and step names, profiled column
   * names: `[A-Za-z0-9_.-]+`.
   *
-  * Several persisted encodings are exact ONLY under this rule: the
-  * archive manifest's regex scan (Archive.readManifest), the one step
+  * Two persisted encodings are exact ONLY under this rule: the one step
   * codec `WorkflowRegistry.OpStep.encode`/`decode` (the `name:op:input`
-  * records of workflows, pipelines and saved workflow states), and the
-  * `key=value` tables read by `RegistryFile.Table.entries`. Free text
-  * (lineage step names, comments, mount paths, metadata values) is
-  * JSON-escaped instead and read back by the one field reader,
-  * `Jsonl.str`. If the charset ever needs to grow, widen it HERE and fix
-  * those readers in the same change — a per-site edit silently corrupts
-  * the others.
+  * records of workflows, pipelines and saved workflow states) and the
+  * `key=value` tables read by `RegistryFile.Table.entries`; an archive
+  * manifest's reader also drops ids and aliases outside it. Free text
+  * (lineage step names, comments, mount paths, metadata values) goes
+  * through the one JSON codec, `Jsonl`, instead. If the charset ever
+  * needs to grow, widen it HERE and fix those readers in the same change
+  * — a per-site edit silently corrupts the others.
   */
 object Names {
   /** The allowed charset, as a full-match regex (no anchors needed for
-    * String.matches) and embeddable in larger regexes. */
+    * String.matches). */
   val Pattern = "[A-Za-z0-9_.-]+"
 
   def isValid(s: String): Boolean =

@@ -157,12 +157,9 @@ class LineageRegistry(root: String, bus: EventBus = new EventBus) {
   private val log = new RegistryFile.Log(Paths.get(s"$root/lineage.jsonl"))
   Files.createDirectories(Paths.get(root))
 
-  private def line(runId: String, rec: Pipeline.StepRecord, envCid: Option[String]): String = {
-    import Jsonl.esc
-    val envField = envCid.map(c => s""","env":"${esc(c)}"""").getOrElse("")
-    s"""{"run":"${esc(runId)}","step":"${esc(rec.step)}","inputs":[${
-      rec.inputs.map(i => "\"" + esc(i) + "\"").mkString(",")}],"schema":"${esc(rec.outputSchema)}"$envField}"""
-  }
+  private def line(runId: String, rec: Pipeline.StepRecord, envCid: Option[String]): String =
+    Jsonl.line("run" -> runId, "step" -> rec.step, "inputs" -> rec.inputs,
+      "schema" -> rec.outputSchema, "env" -> envCid)
 
   def record(runId: String, rec: Pipeline.StepRecord,
              envCid: Option[String] = None): Unit = {
@@ -182,18 +179,10 @@ class LineageRegistry(root: String, bus: EventBus = new EventBus) {
   // --- provenance graph traversal (kiara_api.py:243
   //     retrieve_augmented_value_lineage) ---------------------------------
 
-  private val InputsRe = """"inputs":\[((?:[^\]"]|"(?:[^"\\]|\\.)*")*)\]""".r
-  private val QuotedRe = """"((?:[^"\\]|\\.)*)"""".r
-
   /** All records, parsed (the writer is `line` above). */
-  def records: Seq[StepNode] = lines.flatMap { l =>
-    for {
-      r <- Jsonl.str(l, "run")
-      s <- Jsonl.str(l, "step")
-      ins = InputsRe.findFirstMatchIn(l).map(m =>
-        QuotedRe.findAllMatchIn(m.group(1)).map(q => Jsonl.unesc(q.group(1))).toSeq)
-        .getOrElse(Seq.empty)
-    } yield StepNode(r, s, ins, Jsonl.str(l, "schema").getOrElse(""), Jsonl.str(l, "env"))
+  def records: Seq[StepNode] = log.objects.flatMap { o =>
+    for (r <- Jsonl.text(o, "run"); s <- Jsonl.text(o, "step")) yield StepNode(r, s,
+      Jsonl.texts(o, "inputs"), Jsonl.text(o, "schema").getOrElse(""), Jsonl.text(o, "env"))
   }
 
   /** Upstream provenance closure of a value: its producing step, the
@@ -405,18 +394,16 @@ class MountRegistry(root: String) {
 
   def set(name: String, dir: String, writable: Boolean): Unit = {
     Names.validate("archive name", name)
-    log.append(s"""{"name":"${Jsonl.esc(name)}","dir":"${Jsonl.esc(dir)}","writable":$writable}""")
+    log.append(Jsonl.line("name" -> name, "dir" -> dir, "writable" -> writable))
   }
-
-  private val WritableRe = """"writable":(true|false)""".r
 
   /** Latest mount per name, sorted by name. */
   def list: Seq[(String, String, Boolean)] = {
-    val all = log.lines.flatMap { l =>
+    val all = log.objects.flatMap { o =>
       for {
-        n <- Jsonl.str(l, "name")
-        d <- Jsonl.str(l, "dir")
-        w <- WritableRe.findFirstMatchIn(l).map(_.group(1).toBoolean)
+        n <- Jsonl.text(o, "name")
+        d <- Jsonl.text(o, "dir")
+        w <- Option(o.get("writable")).filter(_.isBoolean).map(_.booleanValue)
       } yield (n, d, w)
     }
     all.groupBy(_._1).map(_._2.last).toSeq.sortBy(_._1)
@@ -437,14 +424,14 @@ class CommentStore(root: String, bus: EventBus = new EventBus) {
 
   def set(jobId: String, comment: String): Unit = synchronized {
     Names.validate("job id", jobId)
-    log.append(s"""{"job":"${Jsonl.esc(jobId)}","comment":"${Jsonl.esc(comment)}"}""")
+    log.append(Jsonl.line("job" -> jobId, "comment" -> comment))
     bus.fire(RegistryEvents.CommentStored(jobId))
   }
 
   /** Latest comment per job, sorted by job id. */
   def list: Seq[(String, String)] = {
-    val all = log.lines.flatMap { l =>
-      for (j <- Jsonl.str(l, "job"); c <- Jsonl.str(l, "comment")) yield j -> c
+    val all = log.objects.flatMap { o =>
+      for (j <- Jsonl.text(o, "job"); c <- Jsonl.text(o, "comment")) yield j -> c
     }
     all.groupBy(_._1).map { case (j, cs) => j -> cs.last._2 }.toSeq.sortBy(_._1)
   }
@@ -452,8 +439,8 @@ class CommentStore(root: String, bus: EventBus = new EventBus) {
   /** Latest-wins single-key lookup: scan the log backwards and stop at
     * the first match instead of parsing and grouping the whole file. */
   def get(jobId: String): Option[String] =
-    log.lines.reverseIterator.flatMap { l =>
-      for (j <- Jsonl.str(l, "job") if j == jobId; c <- Jsonl.str(l, "comment")) yield c
+    log.lines.reverseIterator.flatMap(Jsonl.readObject).flatMap { o =>
+      for (j <- Jsonl.text(o, "job") if j == jobId; c <- Jsonl.text(o, "comment")) yield c
     }.nextOption()
 }
 
@@ -496,16 +483,16 @@ class MetadataRegistry(root: String, bus: EventBus = new EventBus) {
     require(refType == "value" || refType == "job",
       s"refType must be 'value' or 'job', got: $refType")
     val h = itemHash(key, value)
-    log.append(s"""{"hash":"$h","key":"${Jsonl.esc(key)}","value":"${
-      Jsonl.esc(value)}","refType":"${Jsonl.esc(refType)}","refId":"${Jsonl.esc(refId)}"}""")
+    log.append(Jsonl.line("hash" -> h, "key" -> key, "value" -> value,
+      "refType" -> refType, "refId" -> refId))
     bus.fire(RegistryEvents.MetadataStored(key, refType, refId, h))
     h
   }
 
   /** All items, latest-wins per (key, refType, refId), sorted. */
   def items: Seq[MetadataItem] = {
-    val all = log.lines.flatMap { l =>
-      def f(k: String) = Jsonl.str(l, k)
+    val all = log.objects.flatMap { o =>
+      def f(k: String) = Jsonl.text(o, k)
       for (h <- f("hash"); k <- f("key"); v <- f("value"); t <- f("refType"); i <- f("refId"))
         yield MetadataItem(h, k, v, t, i)
     }
@@ -573,24 +560,16 @@ class EnvironmentRegistry(root: String) {
   /** Store a snapshot (no-op if its cid is already recorded); returns
     * the cid. */
   def register(env: EnvSnapshot): String = synchronized {
-    if (get(env.cid).isEmpty) {
-      val fields = env.fields.map { case (k, v) =>
-        s""""${Jsonl.esc(k)}":"${Jsonl.esc(v)}"""" }.mkString(",")
-      log.append(s"""{"cid":"${env.cid}","env":{$fields}}""")
-    }
+    if (get(env.cid).isEmpty)
+      log.append(Jsonl.line("cid" -> env.cid, "env" -> Jsonl.obj(env.fields: _*)))
     env.cid
   }
 
-  private val PairRe = """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r
+  def list: Seq[String] = log.objects.flatMap(Jsonl.text(_, "cid")).distinct
 
-  def list: Seq[String] = log.lines.flatMap(Jsonl.str(_, "cid")).distinct
-
-  /** Snapshot by cid (kiara get_environment_for_cid, :41). */
+  /** Snapshot by cid (kiara get_environment_for_cid, :41); the `env`
+    * object's string fields, in file order. */
   def get(cid: String): Option[EnvSnapshot] =
-    log.lines.iterator.flatMap { l =>
-      for (c <- Jsonl.str(l, "cid") if c == cid) yield EnvSnapshot(c,
-        PairRe.findAllMatchIn(l.substring(l.indexOf("\"env\":{")))
-          .map(m => Jsonl.unesc(m.group(1)) -> Jsonl.unesc(m.group(2))).toSeq
-          .filterNot(_._1 == "env"))
-    }.nextOption()
+    log.objects.find(Jsonl.text(_, "cid").contains(cid))
+      .map(o => EnvSnapshot(cid, Jsonl.textFields(o, "env")))
 }

@@ -3,6 +3,9 @@ package graft.registries
 import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
+import com.fasterxml.jackson.databind.util.RawValue
 
 /** The one file layer under the kiara registries. Every registry file
   * under a context root is one of two shapes:
@@ -80,6 +83,11 @@ private[graft] object RegistryFile {
 
     def lines: Seq[String] = lock.synchronized(readLines(path))
 
+    /** The lines read as JSON objects; a line that is not one (a hand
+      * edit) is skipped. */
+    def objects: Seq[JsonNode] =
+      lines.flatMap(Jsonl.readObject)
+
     def append(line: String): Unit = appendAll(Seq(line))
 
     /** Append `lines` as one write: no other append lands between them. */
@@ -91,58 +99,75 @@ private[graft] object RegistryFile {
   }
 }
 
-/** The JSONL string codec shared by every log: full JSON escape incl.
-  * control chars, so an unrestricted step name or free-text comment with
-  * a tab/newline cannot corrupt an append-only log (same hardening as
-  * Verify's oracle_sql.json writer), and the one string-field reader. */
+/** The one JSON codec for everything graft reads or writes outside
+  * Spark: the registry logs, archive manifests, the service protocol and
+  * its info file, pipeline spec files and Verify's `oracle_sql.json`.
+  * One Jackson `ObjectMapper` (a Spark dependency, no new jar), tree
+  * model.
+  *
+  * Reading is strict: trailing tokens fail, so a torn or interleaved
+  * line is malformed instead of half-parsed. Each caller keeps its own
+  * policy for a malformed line — the free-text logs skip it
+  * ([[readObject]]), the workflow-state log throws.
+  *
+  * Writing emits fields in the order given and escapes `"`, `\` and
+  * every control char (`\n`, `\t`, `\b`, uppercase `\u00XX`, …), so an
+  * unrestricted step name, comment or path cannot break a line. Older
+  * builds wrote lowercase `\u00xx`, and archive manifests `\u007d`
+  * for `}`; both read back the same. */
 private[graft] object Jsonl {
-  def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+  private val mapper = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+  private val nodes = JsonNodeFactory.instance
+
+  /** One JSON document; malformed text throws a Jackson
+    * `JsonProcessingException`. */
+  def read(text: String): JsonNode = mapper.readTree(text)
+
+  /** One JSON object, or None when `text` is anything else — malformed,
+    * a scalar, an array. */
+  def readObject(text: String): Option[JsonNode] =
+    try Some(read(text)).filter(_.isObject)
+    catch { case _: com.fasterxml.jackson.core.JsonProcessingException => None }
+
+  /** The string field `key` of an object. */
+  def text(obj: JsonNode, key: String): Option[String] =
+    Option(obj.get(key)).filter(_.isTextual).map(_.textValue)
+
+  /** The string elements of the array `key` of an object. */
+  def texts(obj: JsonNode, key: String): Seq[String] =
+    obj.path(key).asScala.toSeq.filter(_.isTextual).map(_.textValue)
+
+  /** The string fields of the object `key` of an object, in order. */
+  def textFields(obj: JsonNode, key: String): Seq[(String, String)] =
+    obj.path(key).properties.asScala.toSeq
+      .collect { case e if e.getValue.isTextual => e.getKey -> e.getValue.textValue }
+
+  /** An object of `fields` in the order given. Values: String, Boolean,
+    * Int, Long, a Seq (an array of its elements), a JsonNode (nested
+    * as is), a RawValue (JSON text embedded verbatim), or an Option
+    * (None omits the field). */
+  def obj(fields: (String, Any)*): ObjectNode = {
+    val o = nodes.objectNode()
+    fields.foreach {
+      case (_, None)    => ()
+      case (k, Some(v)) => o.replace(k, node(v))
+      case (k, v)       => o.replace(k, node(v))
+    }
+    o
   }
 
-  def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => b += '"';  i += 2
-          case '\\' => b += '\\'; i += 2
-          case 'n'  => b += '\n'; i += 2
-          case 'r'  => b += '\r'; i += 2
-          case 't'  => b += '\t'; i += 2
-          case 'u'  => b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case o    => b += o;    i += 2
-        }
-      } else { b += c; i += 1 }
-    }
-    b.toString
+  private def node(v: Any): JsonNode = v match {
+    case n: JsonNode  => n
+    case s: String    => nodes.textNode(s)
+    case b: Boolean   => nodes.booleanNode(b)
+    case i: Int       => nodes.numberNode(i)
+    case l: Long      => nodes.numberNode(l)
+    case r: RawValue  => nodes.rawValueNode(r)
+    case xs: Seq[_]   => val a = nodes.arrayNode(); xs.foreach(x => a.add(node(x))); a
+    case other => throw new IllegalArgumentException(s"no JSON form for ${other.getClass}")
   }
 
-  /** The first `"key":"…"` string field of a line, unescaped. The lines
-    * come from this codec's writers (restricted, self-escaped JSON), so
-    * a scan to the first unescaped quote is exact. It is a linear scan,
-    * not a regex: Java matches a `(?:[^"\\]|\\.)*` group by recursing
-    * once per character, so a field of some thousand characters (a wide
-    * value's schema) would overflow the stack. */
-  def str(line: String, key: String): Option[String] = {
-    val open = "\"" + key + "\":\""
-    var at = line.indexOf(open)
-    while (at >= 0) {
-      val start = at + open.length
-      var i = start
-      while (i < line.length && line.charAt(i) != '"')
-        i += (if (line.charAt(i) == '\\') 2 else 1)
-      if (i < line.length) return Some(unesc(line.substring(start, i)))
-      at = line.indexOf(open, at + 1)
-    }
-    None
-  }
+  /** [[obj]] as one line of JSON text. */
+  def line(fields: (String, Any)*): String = mapper.writeValueAsString(obj(fields: _*))
 }

@@ -737,13 +737,23 @@ class GraftApiSpec extends SparkTestBase {
     wf.addStep("s", "wfc_id", "in")
     wf.setInput("in", "wfc_raw")
     val sid = wf.snapshot(save = true)
-    // an interleaved/hand-edited line the writer could never produce
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/workflow_states.jsonl"),
-      "{\"workflow\":\"audit\",\"state_id\":\"deadbeef\"  GARBAGE\n".getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.APPEND)
-    val e = intercept[IllegalStateException](wf.allStateIds)
-    assert(e.getMessage.contains("corrupt workflow state log"), e.getMessage)
+    val log = java.nio.file.Paths.get(s"$root/workflow_states.jsonl")
+    val saved = java.nio.file.Files.readAllBytes(log)
+    Seq(
+      // an interleaved/hand-edited line the writer could never produce
+      "{\"workflow\":\"audit\",\"state_id\":\"deadbeef\"  GARBAGE",
+      // a torn line: every field present, no closing brace
+      "{\"workflow\":\"audit\",\"state_id\":\"deadbeef\",\"steps\":\"s:wfc_id:in\"," +
+        "\"inputs\":\"in=wfc_raw\"",
+      // two whole appends interleaved onto one line
+      new String(saved, "UTF-8").trim * 2
+    ).foreach { bad =>
+      java.nio.file.Files.write(log, saved)
+      java.nio.file.Files.write(log, (bad + "\n").getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.APPEND)
+      val e = intercept[IllegalStateException](wf.allStateIds)
+      assert(e.getMessage.contains("corrupt workflow state log"), e.getMessage)
+    }
     // a parallel session on the same root serializes through the shared
     // per-file lock object (same instance for both sessions)
     import graft.registries.RegistryFile.lockFor
@@ -799,6 +809,31 @@ class GraftApiSpec extends SparkTestBase {
         | "inputs": {"docs": "rb_raw"}, "save": {"s": null}}""".stripMargin)))
     assert(e4.getMessage.contains("not be null") ||
       e4.getMessage.contains("must be a string"), e4.getMessage)
+  }
+
+  test("spec files are read on the driver: no Spark job, malformed files named") {
+    val api = newApi
+    graft.plans.OpRegistry.register("psj_id", df => df)
+    val dir = Export.tempDir("graft_specjobs_")
+    def spec(name: String, body: String): String = {
+      val p = dir.resolve(name)
+      java.nio.file.Files.write(p, body.getBytes("UTF-8"))
+      p.toString
+    }
+    val ok = spec("psj.json",
+      """{"steps": [{"name": "s", "op": "psj_id", "input": "docs"}]}""")
+    val (opId, jobs) = jobsDuring(api.registerPipelineFile(ok))
+    assert(opId == "pipeline.psj")
+    assert(jobs == 0, s"registerPipelineFile ran $jobs Spark job(s)")
+    // not JSON, and a top-level array: spec-shaped errors naming the file
+    Seq(spec("torn.json", """{"steps": [{"name": "s", "op": "psj_id""""),
+        spec("array.json", """[{"steps": [{"name": "s", "op": "psj_id", "input": "d"}]}]""")
+    ).foreach { bad =>
+      val e1 = intercept[IllegalArgumentException](api.registerPipelineFile(bad))
+      assert(e1.getMessage.contains(bad), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](api.runBatch(bad))
+      assert(e2.getMessage.contains(bad), e2.getMessage)
+    }
   }
 
   test("manifests: createOperation instantiates, run/queueManifest record config") {
@@ -891,6 +926,45 @@ class GraftApiSpec extends SparkTestBase {
     val ids = api2.importArchive(archB)
     assert(ids.sorted == Seq("ca1", "ca2", "ca3"))
     assert(api2.getValue("three").count() == 1L)
+  }
+
+  test("archive metadata of any length and content round-trips; older manifests load") {
+    val api = newApi
+    api.storeValue("am1", Seq((1L, "a")).toDF("id", "s"), Some("am_one"))
+    val arch = Export.tempDir("graft_archmeta_").resolve("a").toString
+    api.exportArchive(arch)
+    val values = Seq(
+      "long" -> "x" * 5000,
+      "brace" -> "a } b {c}",
+      "quote" -> "say \"hi\"",
+      "tab" -> "a\tb",
+      "ctl" -> "ctl\u0001x",
+      "mixed" -> ("}\"\t\u0001\\" * 1000))
+    values.foreach { case (k, v) => api.setArchiveMetadata(arch, k, v) }
+    assert(api.archiveInfo(arch).metadata == values.sortBy(_._1))
+    // the archive stays usable: store into it, then inspect it
+    graft.registries.Archive.storeValueInArchive(Seq((2L, "b")).toDF("id", "s"), arch,
+      "am2", Some("am_two"))
+    val info = api.archiveInfo(arch)
+    assert(info.values.map(_.id).sorted == Seq("am1", "am2"))
+    assert(info.aliases.toMap.get("am_two").contains("am2"))
+    assert(info.metadata == values.sortBy(_._1))
+
+    // a manifest as earlier builds wrote it: '}' in metadata as the
+    // escape u007d, control chars as lowercase u00xx escapes
+    val u = "\\u"
+    val old = Export.tempDir("graft_archold_").resolve("o")
+    java.nio.file.Files.createDirectories(old)
+    java.nio.file.Files.writeString(old.resolve("manifest.json"),
+      """{"version":1,"values":[],"aliases":{},""" +
+        s""""metadata":{"note":"json-ish {\\"k\\": \\"v\\"${u}007d trailer",""" +
+        s""""raw":"c${u}001fd\\tx"}}""" + "\n")
+    val oldInfo = api.archiveInfo(old.toString)
+    assert(oldInfo.version == 1)
+    assert(oldInfo.metadata == Seq(
+      "note" -> "json-ish {\"k\": \"v\"} trailer", "raw" -> "c\u001fd\tx"))
+    api.setArchiveMetadata(old.toString, "title", "t")
+    assert(api.archiveInfo(old.toString).metadata.map(_._1) == Seq("note", "raw", "title"))
   }
 
   test("queryValue walks ::-paths into data columns and properties") {

@@ -121,6 +121,22 @@ class RegistryFileSpec extends SparkTestBase {
     assert(hits.isEmpty, s"append and rewrite registry files through RegistryFile.Log/Table: $hits")
   }
 
+  test("JSON outside Spark is read through Jsonl only: no string regex, no Spark-job spec reader") {
+    val main = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(main), s"run from the repo root (cwd: ${Paths.get("").toAbsolutePath})")
+    val files = {
+      val s = Files.walk(main)
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq finally s.close()
+    }
+    assert(files.size > 10)
+    val hits = for {
+      f <- files
+      token <- Seq("""[^"\\]|\\.""", """option("multiLine"""")
+      if Files.readString(f).contains(token)
+    } yield s"${main.relativize(f)}: $token"
+    assert(hits.isEmpty, s"read JSON with graft.registries.Jsonl: $hits")
+  }
+
   /** A context root holding the committed fixture files. */
   private def fixtureRoot(): String = {
     val root = tempRoot("graft_regfx_")

@@ -106,6 +106,32 @@ class ServeSpec extends SparkTestBase {
     assert(cli.contains("usage")) // reached Cli.run with arg "true"
   }
 
+  test("a malformed or oversized request gets an error object; the session keeps serving") {
+    val s = session
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def response(line: String) = {
+      val resp = s.handle(line)
+      val o = json.readTree(resp)
+      assert(o.isObject, s"not one JSON object: ${resp.take(200)}")
+      o
+    }
+    def field(o: com.fasterxml.jackson.databind.JsonNode, k: String) = o.path(k).asText("")
+    val big = "x" * 10000
+    // a 10,000-char argument: the cli verb is unknown, the query too
+    val cli = response(s"""{"endpoint":"cli","args":["$big"]}""")
+    assert(field(cli, "stderr").contains("usage"))
+    val query = response(s"""{"endpoint":"query","args":["$big","$sfDir"]}""")
+    assert(field(query, "error").contains("unknown query"))
+    // not JSON at all
+    val garbage = response("""{"endpoint":"ping" this is not json""")
+    assert(field(garbage, "error").contains("malformed request"))
+    // args that are not an array
+    val notArray = response("""{"endpoint":"cli","args":"x"}""")
+    assert(field(notArray, "stderr").contains("'args' must be a JSON array"))
+    assert(!s.isStopped)
+    assert(s.handle("""{"endpoint":"ping"}""") == """{"endpoint":"ping","result":"pong"}""")
+  }
+
   test("tcp transport: one misbehaving connection does not kill the service") {
     @volatile var port = 0
     val latch = new java.util.concurrent.CountDownLatch(1)
