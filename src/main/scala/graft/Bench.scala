@@ -1,5 +1,7 @@
 package graft
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
+import graft.registries.Jsonl
 
 /** Per-round benchmark: runs every registered query twice and reports
   * cold (first run: includes the one-time plan/codegen compile) and warm
@@ -18,9 +20,9 @@ import org.apache.spark.sql.SparkSession
   *     (default 90), each in a FRESH child JVM with the same classpath
   *     and session shape (warmed exactly like the single-JVM bench, so
   *     cold/warm semantics are unchanged); the parent merges the
-  *     per-chunk results into the same single JSON line. Chunk size 0
-  *     restores the old inline single-JVM mode, and any child failure
-  *     falls back to running that chunk inline.
+  *     per-chunk results. Chunk size 0 restores the old inline
+  *     single-JVM mode, and any child failure falls back to running
+  *     that chunk inline.
   *   - a per-query `gc` dict (seconds of JVM GC time during the warm
   *     run, from the collector MXBeans) so any residual inflation is
   *     visible in the artifact instead of masquerading as plan cost.
@@ -28,14 +30,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime.max(0L)).sum
   }
 
   /** (name, cold, warm, warmGcSec) for each key, on a warmed session. */
   private def runKeys(spark: SparkSession, sfDir: String,
-      keys: Seq[String]): Seq[(String, Double, Double, Double)] = {
+      keys: Seq[String]): Seq[Result] = {
     // warm the JVM/codegen/FS once so the first timed query doesn't
     // carry the whole session bootstrap cost
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -88,7 +89,7 @@ object Bench {
 
   /** Spawn a fresh JVM for one chunk; None if the child failed. */
   private def runChunkInChild(sfDir: String, cpus: Int,
-      keys: Seq[String]): Option[Seq[(String, Double, Double, Double)]] = {
+      keys: Seq[String]): Option[Seq[Result]] = {
     try {
       val out = java.nio.file.Files.createTempFile("graft_bench_", ".tsv")
       val log = java.nio.file.Files.createTempFile("graft_bench_", ".log")
@@ -109,7 +110,6 @@ object Bench {
           "-Dspark.ui.enabled=false",
           "-Dspark.sql.session.timeZone=UTC",
           "graft.Bench")
-      import scala.jdk.CollectionConverters._
       val pb = new ProcessBuilder(cmd.asJava)
       val env = pb.environment()
       env.put("SPARK_GRAFT_SF_DIR", sfDir)
@@ -123,7 +123,6 @@ object Bench {
         return None
       }
       val lines = java.nio.file.Files.readAllLines(out)
-      import scala.jdk.CollectionConverters._
       val parsed = lines.asScala.toSeq.filter(_.nonEmpty).map { l =>
         val f = l.split('\t')
         (f(0), f(1).toDouble, f(2).toDouble, f(3).toDouble)
@@ -146,7 +145,7 @@ object Bench {
       case (Some(keys), Some(out)) => childMain(sfDir, cpus, keys, out); return
       case _ =>
     }
-    val chunkSize = sys.env.getOrElse("SPARK_GRAFT_BENCH_CHUNK", "90").toInt
+    val chunkSize = chunkFrom(sys.env)
     // optional args = key filter (targeted benching, like Verify's)
     val allKeys = {
       val keys = SparkEntry.queries.keys.toSeq.sorted
@@ -158,8 +157,8 @@ object Bench {
         keys.filter(want)
       }
     }
-    val results: Seq[(String, Double, Double, Double)] =
-      if (chunkSize <= 0) {
+    val results: Seq[Result] =
+      if (chunkSize == 0) {
         val spark = Sessions.create(cpus)
         try runKeys(spark, sfDir, allKeys) finally spark.stop()
       } else {
@@ -171,63 +170,59 @@ object Bench {
           }
         }
       }
-    def dict(f: ((String, Double, Double, Double)) => Double): String =
-      results.map(r => s"\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val warmTotal = results.map(_._3).sum
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":${dict(_._2)},"warm":${dict(_._3)},"gc":${dict(_._4)},""" +
-      s""""warm_total":$warmTotal,"sf":"$sfDir"}"""
-    // The historical single-line contract, with every key — kept for
-    // tools. grep -o '{"metric".*' prints BOTH metric lines, this one
-    // first; pipe it through `head -1` to keep just this line.
-    println(fullLine)
-    // r17: the driver artifact keeps only the LAST ~2000 chars of
-    // stdout, so for 16 rounds the ~20 KB line above never reached the
-    // driver's parser (BENCH_r01..r16 all have parsed:null). 351 key
-    // names alone are ~4.7 KB — no encoding of the full dict fits the
-    // window. Fix: persist the full JSON to a file, and end stdout with
-    // a COMPACT parseable {"metric"...} line — exact totals plus the
-    // top-N slowest-warm keys' cold/warm dicts, sized to stay inside
-    // the capture window. Same semantics, same keys, same numbers; the
-    // full line above is unchanged.
+    // a reader may keep only the last ~2000 chars of stdout, and 351 key
+    // names alone are ~4.7 KB: the full dicts go to the detail file, and
+    // stdout ends with the one compact metric line
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON",
       s"bench_out/bench_full_${cpus}cpu.json")
+    val detail = (detailLine(results, sfDir) + "\n").getBytes("UTF-8")
     val wrote = try {
       val p = java.nio.file.Paths.get(detailPath)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(p, detail)
       detailPath
     } catch { case _: Throwable =>
       try {
         val p = java.nio.file.Paths.get(s"/tmp/graft_bench_full_${cpus}cpu.json")
-        java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
+        java.nio.file.Files.write(p, detail)
         p.toString
       } catch { case _: Throwable => "unwritable" }
     }
-    def fmt2(v: Double): String = {
-      val r = math.rint(v * 100) / 100
-      if (r == math.rint(r)) r.toLong.toString
-      else {
-        val s = String.format(java.util.Locale.ROOT, "%.2f", Double.box(r))
-        if (s.endsWith("0")) s.dropRight(1) else s
-      }
-    }
+    println(metricLine(results, sfDir, wrote))
+  }
+
+  /** (key, cold, warm, warm GC) seconds of one benched key. */
+  type Result = (String, Double, Double, Double)
+
+  /** Chunk size (`SPARK_GRAFT_BENCH_CHUNK`, default 90); 0 runs every
+    * key inline in this JVM. */
+  def chunkFrom(env: Map[String, String]): Int =
+    Sessions.knob(env, "SPARK_GRAFT_BENCH_CHUNK", 90, min = 0).min(Int.MaxValue).toInt
+
+  /** The detail file's line: totals plus every key's cold, warm and GC
+    * seconds. */
+  private[graft] def detailLine(results: Seq[Result], sfDir: String): String = {
+    def dict(f: Result => Double) = Jsonl.obj(results.map(r => r._1 -> f(r)): _*)
+    Jsonl.line("metric" -> "total", "value" -> results.map(_._2).sum, "unit" -> "sec",
+      "queries" -> dict(_._2), "warm" -> dict(_._3), "gc" -> dict(_._4),
+      "warm_total" -> results.map(_._3).sum, "sf" -> sfDir)
+  }
+
+  /** The stdout metric line: exact totals plus the cold and warm seconds
+    * (to 0.01 s) of the most keys, slowest warm first, that keep the line
+    * within 1800 chars. */
+  private[graft] def metricLine(results: Seq[Result], sfDir: String, detail: String): String = {
     val byWarm = results.sortBy(r => (-r._3, r._1))
-    def compactLine(n: Int): String = {
-      val top = byWarm.take(n)
-      val qd = top.sortBy(_._1).map(r => "\"" + r._1 + "\":" + fmt2(r._2))
-        .mkString("{", ",", "}")
-      val wd = top.sortBy(_._1).map(r => "\"" + r._1 + "\":" + fmt2(r._3))
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qd,""" +
-        s""""warm":$wd,"warm_total":$warmTotal,"n_queries":${results.size},""" +
-        s""""n_shown":${top.size},"note":"top-$n by warm; full dicts in detail file",""" +
-        s""""detail":"$wrote","sf":"$sfDir"}"""
+    def line(n: Int): String = {
+      val top = byWarm.take(n).sortBy(_._1)
+      def dict(f: Result => Double) =
+        Jsonl.obj(top.map(r => r._1 -> math.rint(f(r) * 100) / 100): _*)
+      Jsonl.line("metric" -> "total", "value" -> results.map(_._2).sum, "unit" -> "sec",
+        "queries" -> dict(_._2), "warm" -> dict(_._3),
+        "warm_total" -> results.map(_._3).sum, "n_queries" -> results.size,
+        "n_shown" -> top.size, "note" -> s"top-$n by warm; full dicts in detail file",
+        "detail" -> detail, "sf" -> sfDir)
     }
-    // largest top-N whose rendered line stays under the capture budget
-    val line = (results.size to 0 by -1).iterator.map(compactLine)
-      .find(_.length <= 1800).getOrElse(compactLine(0))
-    println(line)
+    (results.size to 0 by -1).iterator.map(line).find(_.length <= 1800).getOrElse(line(0))
   }
 }

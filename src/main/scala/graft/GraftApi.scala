@@ -1,8 +1,7 @@
 package graft
 
 import java.util.concurrent.Executors
-import java.util.concurrent.atomic.AtomicLong
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -115,7 +114,7 @@ object GraftApi {
     "runManifest" -> "instantiate + run a manifest; config recorded as job metadata",
     "queueManifest" -> "async run_manifest: returns the job id immediately",
     "getJobRecord" -> "the persisted step record of one job",
-    "listJobRecordIds" -> "ids of all recorded jobs (live + persisted)",
+    "listJobRecordIds" -> "ids of all recorded jobs on this root",
     "listJobRecords" -> "all recorded jobs' step records",
     "queueJob" -> "enqueue an operation asynchronously, returns the job id",
     "getJob" -> "queued-job status (running/success/failed)",
@@ -195,6 +194,13 @@ object GraftApi {
   /** Endpoint names with a curated doc line — exposed for the CI
     * cross-check (every key must name a real public method). */
   def documentedEndpointNames: Set[String] = endpointDocs.keySet
+
+  // the one pool behind every instance's queueJob: four daemon threads
+  // for the whole JVM, however many contexts queue jobs
+  private val jobEc: ExecutionContext = ExecutionContext.fromExecutor(
+    Executors.newFixedThreadPool(4, r => {
+      val t = new Thread(r, "graft-job"); t.setDaemon(true); t
+    }))
 
   // the pipeline-operation invocation stack of the CURRENT thread —
   // the run-time recursion guard for nested pipeline operations
@@ -291,18 +297,6 @@ class GraftApi(val spark: SparkSession, root: String) {
   // job record references it (kiara registries/environment provenance)
   private lazy val sessionEnvCid: String =
     environments.register(EnvironmentRegistry.snapshot(spark))
-  // job ids continue where a previous JVM on the same root left off —
-  // job records persist in the lineage JSONL (kiara registries/jobs/),
-  // so a restart must not re-issue an existing id. Failed queued jobs
-  // leave no lineage record, but they CAN leave a persisted comment, so
-  // the comment store's ids count toward the resume point too —
-  // otherwise a re-issued id would inherit the dead job's comment.
-  private val jobSeq = new AtomicLong(
-    (persistedJobIds ++ comments.list.map(_._1))
-      .flatMap(id => id.stripPrefix("job-").toLongOption)
-      .maxOption.getOrElse(0L))
-  private val jobs = scala.collection.concurrent.TrieMap[String, Pipeline.StepRecord]()
-
   Builtins.ensureRegistered()
   // the caller's session plans small global sorts in one partition
   org.apache.spark.sql.graftext.SmallSort.install(spark)
@@ -409,42 +403,30 @@ class GraftApi(val spark: SparkSession, root: String) {
     val op = OpRegistry.get(operation)
     val in = getValue(inputValue)
     val out = op(in)
-    val jobId = s"job-${jobSeq.incrementAndGet()}"
+    val jobId = s"job-${lineage.nextRun()}"
     recordJob(jobId, operation, inputValue, out)
     (jobId, out)
   }
 
   private def recordJob(jobId: String, operation: String, inputValue: String,
-                        out: DataFrame): Unit = {
-    val rec = Pipeline.StepRecord(operation, Seq(inputValue), out.schema.simpleString)
-    jobs.put(jobId, rec)
-    lineage.record(jobId, rec, Some(sessionEnvCid))
-  }
+                        out: DataFrame): Unit =
+    lineage.record(jobId, Pipeline.StepRecord(operation, Seq(inputValue),
+      out.schema.simpleString), Some(sessionEnvCid))
 
-  // job-prefixed runs in the persisted lineage log ARE the job records
-  // (kiara's store-backed job registry): a fresh GraftApi on the same
-  // root sees every prior JVM's jobs without any extra bookkeeping file
-  private def persistedJobIds: Seq[String] =
-    lineage.records.map(_.run).filter(_.startsWith("job-")).distinct
+  private def stepRecord(n: LineageRegistry.StepNode) =
+    Pipeline.StepRecord(n.step, n.inputs, n.schema)
 
-  /** get_job_record (kiara_api.py:1410) — in-memory first, then the
-    * persisted lineage log, so records survive a JVM restart. */
+  /** get_job_record (kiara_api.py:1410): job-prefixed runs in the
+    * lineage log ARE the job records (kiara's store-backed job registry),
+    * so every instance on the root, in this JVM or a later one, sees
+    * every job. */
   def getJobRecord(jobId: String): Option[Pipeline.StepRecord] =
-    jobs.get(jobId).orElse(
-      lineage.records.filter(_.run == jobId).lastOption
-        .map(n => Pipeline.StepRecord(n.step, n.inputs, n.schema)))
-  def listJobRecordIds: Seq[String] = (jobs.keys.toSeq ++ persistedJobIds).distinct.sorted
+    lineage.lastOfRun(jobId).map(stepRecord)
+  def listJobRecordIds: Seq[String] = lineage.jobs.map(_._1)
 
-  /** All job records in ONE lineage pass (the per-id getJobRecord loop
-    * would re-parse the log once per job) — in-memory records win over
-    * persisted ones for the same id. */
-  def listJobRecords: Seq[(String, Pipeline.StepRecord)] = {
-    val persisted = lineage.records.filter(_.run.startsWith("job-"))
-      .groupBy(_.run).map { case (r, ns) =>
-        r -> Pipeline.StepRecord(ns.last.step, ns.last.inputs, ns.last.schema)
-      }
-    (persisted ++ jobs).toSeq.sortBy(_._1)
-  }
+  /** All job records, sorted by id. */
+  def listJobRecords: Seq[(String, Pipeline.StepRecord)] =
+    lineage.jobs.map { case (id, n) => id -> stepRecord(n) }
 
   // --- async job queue (kiara_api.py:149 queue_job, :1342 get_job,
   //     :1348 get_job_result) ----------------------------------------------
@@ -563,15 +545,6 @@ class GraftApi(val spark: SparkSession, root: String) {
     lv.groupBy(_._2).toSeq.sortBy(_._1).map(_._2.keys.toSeq.sorted)
   }
 
-  // nested-run ids resume past any prior JVM's ("<opId>-run-<n>" lines in
-  // the persisted lineage log), so re-running a stored pipeline never
-  // reuses a run id
-  private val pipelineRunSeq = new AtomicLong(
-    lineage.records.map(_.run).flatMap { r =>
-      val i = r.lastIndexOf("-run-")
-      if (i < 0) None else r.substring(i + 5).toLongOption
-    }.maxOption.getOrElse(0L))
-
   /** Build + register the executable operation for a pipeline definition.
     * Step operations resolve BY NAME at run time (the stored-pipeline
     * contract); the closure records the inner steps as their own lineage
@@ -597,7 +570,7 @@ class GraftApi(val spark: SparkSession, root: String) {
       try {
         val ps = steps.map(st => OpRegistry.step(st.name, st.op, st.input))
         val res = Pipeline.run(ps, inputs)
-        lineage.recordRun(s"$opId-run-${pipelineRunSeq.incrementAndGet()}", res.lineage)
+        lineage.recordRun(s"$opId-run-${lineage.nextRun()}", res.lineage)
         res.values(out)
       } finally GraftApi.activePipelines.set(active)
     }
@@ -824,7 +797,7 @@ class GraftApi(val spark: SparkSession, root: String) {
       require(OpRegistry.contains(st.op), s"unknown operation in batch spec: ${st.op}"))
     val inputs = spec.inputs.map { case (n, ref) => n -> getValue(ref) }.toMap
     val steps = spec.steps.map(st => OpRegistry.step(st.name, st.op, st.input))
-    val runId = s"batch-${spec.name}-${jobSeq.incrementAndGet()}"
+    val runId = s"batch-${spec.name}-${lineage.nextRun()}"
     val res = Pipeline.run(steps, inputs)
     lineage.recordRun(runId, res.lineage)
     val saved = spec.save.sortBy(_._1).map { case (step, alias) =>
@@ -836,48 +809,49 @@ class GraftApi(val spark: SparkSession, root: String) {
     (runId, saved)
   }
 
-  private val jobPool = Executors.newFixedThreadPool(4, r => {
-    val t = new Thread(r, "graft-job"); t.setDaemon(true); t
-  })
-  private implicit val jobEc: ExecutionContext = ExecutionContext.fromExecutor(jobPool)
-  private val asyncJobs = scala.collection.concurrent.TrieMap[String, Future[DataFrame]]()
-  private val jobStates = scala.collection.concurrent.TrieMap[String, JobStatus]()
-  // operation + input of not-yet-recorded queued jobs, so jobsInfo can
-  // render in-flight and failed jobs (they leave no lineage record)
-  private val liveJobMeta = scala.collection.concurrent.TrieMap[String, (String, String)]()
+  // jobs queued in this session — the one job map: recorded jobs are
+  // answered from the lineage log, and only a queued job has a state
+  // other than success (a failed one leaves no record)
+  private final class Queued(jobId: String, val operation: String, val input: String) {
+    @volatile var status = JobStatus(jobId, "queued", None)
+    val result = Promise[DataFrame]()
+  }
+  private val queued = scala.collection.concurrent.TrieMap[String, Queued]()
 
   /** queue_job: submit a registered operation asynchronously; returns the
     * job id immediately. Spark plan construction and actions are
     * session-thread-safe, so queued jobs genuinely overlap. */
   def queueJob(operation: String, inputValue: String): String = {
-    val jobId = s"job-${jobSeq.incrementAndGet()}"
-    liveJobMeta.put(jobId, (operation, inputValue))
-    jobStates.put(jobId, JobStatus(jobId, "queued", None))
-    val fut = Future {
-      jobStates.put(jobId, JobStatus(jobId, "running", None))
+    val jobId = s"job-${lineage.nextRun()}"
+    val q = new Queued(jobId, operation, inputValue)
+    queued.put(jobId, q)
+    q.result.completeWith(Future {
+      q.status = JobStatus(jobId, "running", None)
       // state transitions happen INSIDE the body so they are visible
       // before the future completes — a post-completion callback would
       // race with a caller that saw getJobResult return/throw
       try {
         val out = OpRegistry.get(operation)(getValue(inputValue))
         recordJob(jobId, operation, inputValue, out)
-        jobStates.put(jobId, JobStatus(jobId, "success", None))
+        q.status = JobStatus(jobId, "success", None)
         out
       } catch {
         case e: Throwable =>
-          jobStates.put(jobId, JobStatus(jobId, "failed", Some(e.toString)))
+          q.status = JobStatus(jobId, "failed", Some(e.toString))
           throw e
       }
-    }
-    asyncJobs.put(jobId, fut)
+    }(GraftApi.jobEc))
     jobId
   }
 
   /** get_job: current state of a queued (or already-recorded) job. */
   def getJob(jobId: String): JobStatus =
-    jobStates.get(jobId)
+    queued.get(jobId).map(_.status)
       .orElse(getJobRecord(jobId).map(_ => JobStatus(jobId, "success", None)))
       .getOrElse(throw new NoSuchElementException(s"no such job: $jobId"))
+
+  private def jobExists(jobId: String): Boolean =
+    queued.contains(jobId) || lineage.lastOfRun(jobId).isDefined
 
   /** get_job_result: block until the queued job finishes; rethrows the
     * job's failure if it failed. runJob-issued ids and jobs persisted by
@@ -885,8 +859,8 @@ class GraftApi(val spark: SparkSession, root: String) {
     * recorded operation on its recorded input (kiara's store-backed
     * job-result lookup: results are re-derivable from lineage). */
   def getJobResult(jobId: String): DataFrame =
-    asyncJobs.get(jobId) match {
-      case Some(fut) => Await.result(fut, Duration.Inf)
+    queued.get(jobId) match {
+      case Some(q) => Await.result(q.result.future, Duration.Inf)
       case None =>
         getJobRecord(jobId) match {
           case Some(rec) => OpRegistry.get(rec.step)(getValue(rec.inputs.head))
@@ -897,34 +871,28 @@ class GraftApi(val spark: SparkSession, root: String) {
 
   // --- job comments (kiara_api.py:186,209) --------------------------------
   def setJobComment(jobId: String, comment: String): Unit = {
-    require(getJobRecord(jobId).isDefined || jobStates.contains(jobId),
-      s"no such job: $jobId")
+    require(jobExists(jobId), s"no such job: $jobId")
     comments.set(jobId, comment)
   }
   def getJobComment(jobId: String): Option[String] = comments.get(jobId)
   def listJobComments: Seq[(String, String)] = comments.list
 
   // --- rendered job info (kiara_api.py:379,1419,1428) ----------------------
-  /** retrieve_jobs_info: StepRecord + runtime state + comment joined in
-    * ONE pass over the lineage log and the comment store (no per-job
-    * re-parse). Jobs recorded by a previous JVM on the same root render
-    * as `success` — only a success leaves a lineage record — and jobs
-    * that are still queued/running or that FAILED (no lineage record)
-    * surface from the live state table, so the list never hides a
+  /** retrieve_jobs_info: StepRecord + runtime state + comment, joined
+    * over one lineage parse and one comment-store read. Recorded jobs
+    * render as `success` — only a success leaves a lineage record — and
+    * jobs queued here that are still queued/running or that FAILED (no
+    * lineage record) render from the queue, so the list never hides a
     * failure. */
   def jobsInfo: Seq[JobInfo] = {
     val cs = comments.list.toMap
-    val recorded = listJobRecords.map { case (id, rec) =>
-      val state = jobStates.get(id).map(_.state).getOrElse("success")
-      JobInfo(id, rec.step, rec.inputs, rec.outputSchema, state, cs.get(id))
+    val recorded = lineage.jobs.map { case (id, n) =>
+      id -> JobInfo(id, n.step, n.inputs, n.schema, "success", cs.get(id))
+    }.toMap
+    val live = queued.collect { case (id, q) if !recorded.contains(id) =>
+      id -> JobInfo(id, q.operation, Seq(q.input), "", q.status.state, cs.get(id))
     }
-    val recordedIds = recorded.map(_.jobId).toSet
-    val live = jobStates.toSeq.collect {
-      case (id, s) if !recordedIds.contains(id) =>
-        val (op, in) = liveJobMeta.getOrElse(id, ("", ""))
-        JobInfo(id, op, if (in.isEmpty) Seq.empty else Seq(in), "", s.state, cs.get(id))
-    }
-    (recorded ++ live).sortBy(_.jobId)
+    (recorded ++ live).values.toSeq.sortBy(_.jobId)
   }
 
   /** retrieve_job_info: one job's rendered record. */
@@ -947,8 +915,7 @@ class GraftApi(val spark: SparkSession, root: String) {
       require(data.exists(resolved), s"no such value: $ref")
       resolved
     } else {
-      require(getJobRecord(ref).isDefined || jobStates.contains(ref),
-        s"no such job: $ref")
+      require(jobExists(ref), s"no such job: $ref")
       ref
     }
     metadata.register(key, value, refType, id)
@@ -973,8 +940,7 @@ class GraftApi(val spark: SparkSession, root: String) {
     * record, so it survives a JVM restart (kiara's
     * retrieve_environment_item, registries/metadata/__init__.py:210). */
   def jobEnvironment(jobId: String): Option[EnvironmentRegistry.EnvSnapshot] =
-    lineage.records.filter(_.run == jobId).lastOption
-      .flatMap(_.env).flatMap(environments.get)
+    lineage.lastOfRun(jobId).flatMap(_.env).flatMap(environments.get)
 
   // --- data types (kiara_api.py:578) -------------------------------------
   def listDataTypeNames: Seq[String] = TypeMap.toSpark.keys.toSeq.sorted
@@ -1119,7 +1085,7 @@ class GraftApi(val spark: SparkSession, root: String) {
     require(data.exists(id), s"no such value: $ref")
     val dir = data.path(id)
     val schema = data.load(spark, id).schema.simpleString
-    val producedBy = lineage.records.filter(_.step == id).lastOption.map(_.run)
+    val producedBy = lineage.producer(id)
     val als = aliases.list.collect { case (a, v) if v == id => a }
     val meta = metadata.forRef("value", id).map(m => s"${m.key}=${m.value}")
     ValueInfo(id, schema, ParquetMeta.dirRowCount(dir),

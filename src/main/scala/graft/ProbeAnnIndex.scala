@@ -64,13 +64,12 @@ object ProbeAnnIndex {
     val (q3Rows, q3S) = timed(
       Similarity.queryIndex(Similarity.readIndex(spark, root), e, queries,
         k, nprobe).count())
-    println(
-      s"""{"metric":"ann_index_probe","dir":"$dir","n_base":$nBase,""" +
-      s""""n_incr":$nIncr,"build_write_s":$buildS,"open_s":$openS,""" +
-      s""""query1_s":$q1S,"query2_s":$q2S,"append_s":$appendS,""" +
-      s""""q_rows":$q1Rows,"q_rows2":$q2Rows,"versions":$v2,""" +
-      s""""codes_rows":$nCodes,"delete_s":$delS,"query3_s":$q3S,""" +
-      s""""q_rows3":$q3Rows,"k":$k,"nprobe":$nprobe}""")
+    println(graft.registries.Jsonl.line("metric" -> "ann_index_probe", "dir" -> dir,
+      "n_base" -> nBase, "n_incr" -> nIncr, "build_write_s" -> buildS, "open_s" -> openS,
+      "query1_s" -> q1S, "query2_s" -> q2S, "append_s" -> appendS,
+      "q_rows" -> q1Rows, "q_rows2" -> q2Rows, "versions" -> v2,
+      "codes_rows" -> nCodes, "delete_s" -> delS, "query3_s" -> q3S,
+      "q_rows3" -> q3Rows, "k" -> k, "nprobe" -> nprobe))
     spark.stop()
   }
 }

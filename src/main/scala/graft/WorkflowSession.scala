@@ -69,7 +69,6 @@ final class WorkflowSession private[graft] (api: GraftApi, val name: String,
   private var steps = Vector.empty[OpStep]
   private var inputRefs = Map.empty[String, String]
   private var outputs: Option[Pipeline.Result] = None
-  private var processSeq = 0L
   // in-memory state cache: stateId -> (steps, inputs); insertion-ordered
   // history like the reference's workflow_history
   private val stateCache =
@@ -186,8 +185,9 @@ final class WorkflowSession private[graft] (api: GraftApi, val name: String,
       s"can't process workflow '$name', inputs not set: ${missing.mkString(", ")}")
     val loaded = inputRefs.map { case (f, ref) => f -> api.getValue(ref) }
     val pSteps = steps.map(st => OpRegistry.step(st.name, st.op, st.input))
-    processSeq += 1
-    val runId = s"wfs-$name-$processSeq"
+    // from the root's one run-id sequence: a rebuilt session (getWorkflow
+    // on a fresh instance) never re-issues an id already in the log
+    val runId = s"wfs-$name-${api.lineage.nextRun()}"
     val res = Pipeline.run(pSteps, loaded)
     api.lineage.recordRun(runId, res.lineage)
     outputs = Some(res)

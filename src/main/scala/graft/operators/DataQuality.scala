@@ -485,9 +485,10 @@ object DataQuality {
     * caught the float form on a count-ratio half-boundary). */
   def tCloseness(df: DataFrame, quasi: Seq[String], sensitive: String,
                  t: Double = 0.2): DataFrame = {
+    import graft.Caches._
     val grid = df.groupBy((quasi :+ sensitive).map(col): _*)
       .agg(count(lit(1)).as("n"))
-      .persist() // four consumers: class sizes, global dist, total, cell join
+      .persistTracked() // four consumers: class sizes, global dist, total, cell join
     val cls = grid.groupBy(quasi.map(col): _*).agg(sum("n").as("class_size"))
     val glob = grid.groupBy(col(sensitive)).agg(sum("n").as("g"))
     val tot = grid.agg(sum("n").as("total"))
@@ -594,9 +595,10 @@ object DataQuality {
     * float work is the final per-cell (o−e)²/e and its tiny sum
     * (round(,2/,4) per the float-aggregate oracle rule). */
   def chi2Independence(df: DataFrame, colA: String, colB: String): DataFrame = {
+    import graft.Caches._
     val obs = df.groupBy(col(colA).as("r"), col(colB).as("c"))
       .agg(count(lit(1)).as("o"))
-      .persist() // four consumers: marginals ×2, total, cell join
+      .persistTracked() // four consumers: marginals ×2, total, cell join
     val rowT = obs.groupBy("r").agg(sum("o").as("rt"))
     val colT = obs.groupBy("c").agg(sum("o").as("ct"))
     val tot = obs.agg(sum("o").as("n"))

@@ -252,8 +252,9 @@ object Similarity {
   // the old 1024 ceiling). Gate-scale c (≈22 at sf0.01) stays literal,
   // so every oracle plan is unchanged; values are identical either way
   // (parity specs). Env knob for cluster tuning/probes.
-  private[graft] val literalCentroidCeiling =
-    sys.env.get("SPARK_GRAFT_CENTROID_CEILING").map(_.toInt).getOrElse(128)
+  def centroidCeilingFrom(env: Map[String, String]): Long =
+    graft.Sessions.knob(env, "SPARK_GRAFT_CENTROID_CEILING", 128, min = 0)
+  private[graft] val literalCentroidCeiling: Long = centroidCeilingFrom(sys.env)
 
   /** The codebook as a broadcastable dimension: (ci, cemb, cnorm,
     * cnorm2). Norms are computed driver-side with the same fold the

@@ -1,6 +1,8 @@
 package graft.registries
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.plans.{OpRegistry, Pipeline}
@@ -148,12 +150,22 @@ object LineageRegistry {
     * (kiara registries/environment: jobs reference runtime snapshots). */
   final case class StepNode(run: String, step: String, inputs: Seq[String],
                             schema: String, env: Option[String] = None)
+
+  // one run-id sequence per root, JVM-wide, keyed by normalized path
+  private val sequences = new ConcurrentHashMap[String, AtomicLong]()
+
+  /** The number that ends a run id: `job-N`, `batch-<name>-N`,
+    * `<opId>-run-N`, `wfs-<name>-N`. */
+  private def runNumber(id: String): Option[Long] =
+    id.substring(id.lastIndexOf('-') + 1).toLongOption
 }
 
 /** Job/lineage registry (kiara registries/jobs/, models/module/jobs.py):
-  * append-only JSONL of executed steps with inputs and output schemas. */
+  * append-only JSONL of executed steps with inputs and output schemas —
+  * the one job table of a context root. Each lookup parses the whole log,
+  * so every writer's appends are seen. */
 class LineageRegistry(root: String, bus: EventBus = new EventBus) {
-  import LineageRegistry.StepNode
+  import LineageRegistry._
   private val log = new RegistryFile.Log(Paths.get(s"$root/lineage.jsonl"))
   Files.createDirectories(Paths.get(root))
 
@@ -176,14 +188,34 @@ class LineageRegistry(root: String, bus: EventBus = new EventBus) {
   /** Append an already-serialized record line (archive import path). */
   def appendRaw(line: String): Unit = log.append(line)
 
-  // --- provenance graph traversal (kiara_api.py:243
-  //     retrieve_augmented_value_lineage) ---------------------------------
-
   /** All records, parsed (the writer is `line` above). */
   def records: Seq[StepNode] = log.objects.flatMap { o =>
     for (r <- Jsonl.text(o, "run"); s <- Jsonl.text(o, "step")) yield StepNode(r, s,
       Jsonl.texts(o, "inputs"), Jsonl.text(o, "schema").getOrElse(""), Jsonl.text(o, "env"))
   }
+
+  /** The last record of one run — a job's record. */
+  def lastOfRun(runId: String): Option[StepNode] = records.findLast(_.run == runId)
+
+  /** The run that last produced a value. */
+  def producer(value: String): Option[String] = records.findLast(_.step == value).map(_.run)
+
+  /** The recorded job ids (`job-` runs), sorted, each with its last record. */
+  def jobs: Seq[(String, StepNode)] = records.filter(_.run.startsWith("job-"))
+    .groupMapReduce(_.run)(identity)((_, last) => last).toSeq.sortBy(_._1)
+
+  /** The next number of this root's one run-id sequence, shared by every
+    * instance in the JVM. It never falls behind a number in the log, nor
+    * one in the comment store: a failed queued job leaves no record, but
+    * its comment must not pass to a new job of the same id. */
+  def nextRun(): Long = {
+    val used = (records.map(_.run) ++ new CommentStore(root).list.map(_._1)).flatMap(runNumber)
+    sequences.computeIfAbsent(Paths.get(root).toAbsolutePath.normalize.toString, _ => new AtomicLong)
+      .updateAndGet(n => n.max(used.maxOption.getOrElse(0L)) + 1)
+  }
+
+  // --- provenance graph traversal (kiara_api.py:243
+  //     retrieve_augmented_value_lineage) ---------------------------------
 
   /** Upstream provenance closure of a value: its producing step, the
     * steps that produced ITS inputs, and so on to the pipeline leaves —

@@ -144,9 +144,9 @@ private[graft] object Jsonl {
       .collect { case e if e.getValue.isTextual => e.getKey -> e.getValue.textValue }
 
   /** An object of `fields` in the order given. Values: String, Boolean,
-    * Int, Long, a Seq (an array of its elements), a JsonNode (nested
-    * as is), a RawValue (JSON text embedded verbatim), or an Option
-    * (None omits the field). */
+    * Int, Long, Double, a Seq (an array of its elements), a JsonNode
+    * (nested as is), a RawValue (JSON text embedded verbatim), or an
+    * Option (None omits the field). */
   def obj(fields: (String, Any)*): ObjectNode = {
     val o = nodes.objectNode()
     fields.foreach {
@@ -163,6 +163,7 @@ private[graft] object Jsonl {
     case b: Boolean   => nodes.booleanNode(b)
     case i: Int       => nodes.numberNode(i)
     case l: Long      => nodes.numberNode(l)
+    case d: Double    => nodes.numberNode(d)
     case r: RawValue  => nodes.rawValueNode(r)
     case xs: Seq[_]   => val a = nodes.arrayNode(); xs.foreach(x => a.add(node(x))); a
     case other => throw new IllegalArgumentException(s"no JSON form for ${other.getClass}")

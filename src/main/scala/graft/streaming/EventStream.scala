@@ -81,6 +81,10 @@ object EventStream {
         else None
       }
 
+  /** A stateful face's shuffle width: `SPARK_GRAFT_STATE_PARTITIONS`, default 8. */
+  def statePartitionsFrom(env: Map[String, String]): Long =
+    graft.Sessions.knob(env, "SPARK_GRAFT_STATE_PARTITIONS", 8, min = 1)
+
   /** Clone a session for a STATEFUL face: shuffle width sized to state
     * cardinality (one state store per shuffle partition — with the batch
     * default of 32 the per-store bookkeeping, not the data, dominates at
@@ -90,8 +94,7 @@ object EventStream {
   private def statefulSession(spark0: SparkSession,
       shape: StateShape = StateShape.ScanHeavy): SparkSession = {
     val s = spark0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "8"))
+    s.conf.set("spark.sql.shuffle.partitions", statePartitionsFrom(sys.env).toString)
     resolveProvider(shape, sys.env.toMap).foreach(
       s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
     s

@@ -42,6 +42,17 @@ class CachesSpec extends SparkTestBase {
     assert(pinnedIds.subsetOf(base0))
   }
 
+  // the contingency grids of the chi-square and t-closeness checks
+  for (key <- Seq("dq_chi2", "dq_tcloseness"))
+    test(s"release() covers the $key grid too") {
+      Caches.release()
+      val base0 = pinnedIds
+      SparkEntry.queries(key)(spark, sfDir).collect()
+      assert(Caches.trackedCount > 0, s"$key should track its persisted grid")
+      Caches.release()
+      assert(pinnedIds.subsetOf(base0))
+    }
+
   test("double release and releasing an already-unpersisted table are no-ops") {
     import Caches._
     Caches.release()

@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Broadcasting, Fanout}
+import graft.operators.{Broadcasting, Fanout, Similarity}
+import graft.streaming.EventStream
 
 /** Runner-session guards. Knob parsing is checked through the pure
   * `Map`-taking parsers, so no process env is set and no second session
@@ -14,7 +15,10 @@ class SessionsSpec extends AnyFunSuite {
     ("SPARK_GRAFT_CPUS", env => Sessions.cpusFrom(env).toLong,
       Runtime.getRuntime.availableProcessors.toLong),
     ("SPARK_GRAFT_BROADCAST_CAP", Broadcasting.capFrom, 64L * 1024 * 1024),
-    ("SPARK_GRAFT_FANOUT_CAP", Fanout.capFrom, 1024L * 1024 * 1024))
+    ("SPARK_GRAFT_FANOUT_CAP", Fanout.capFrom, 1024L * 1024 * 1024),
+    ("SPARK_GRAFT_CENTROID_CEILING", Similarity.centroidCeilingFrom, 128L),
+    ("SPARK_GRAFT_STATE_PARTITIONS", EventStream.statePartitionsFrom, 8L),
+    ("SPARK_GRAFT_BENCH_CHUNK", env => Bench.chunkFrom(env).toLong, 90L))
 
   for ((name, parse, default) <- parsers) {
     test(s"$name: missing takes the default, a number parses") {
