@@ -2,13 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
 /** Dumps formatted physical plans for the headline queries so the scale
   * properties (pushdown, broadcast, codegen spans, shuffle count) can be
   * audited: runMain graft.PlanAudit <sfDir> <outFile> [key ...]. Listed
   * keys replace the built-in [[audited]] list (before/after plan
-  * evidence for an optimization). Iterative-loop operators materialize
-  * eagerly at construction, so their dump shows only the final readout
-  * plan.
+  * evidence for an optimization). Each key's header carries its
+  * optimized plan's [[exprNodes]] count as `expr_nodes=N`.
+  * Iterative-loop operators materialize eagerly at construction, so
+  * their dump shows only the final readout plan.
   */
 object PlanAudit {
   val audited: Seq[String] = Seq(
@@ -253,13 +256,15 @@ object PlanAudit {
     // + phrase-domain score join + TakeOrdered), heaps (row-local
     // points, one moment agg); stream_hll_distinct excluded (streaming)
     "text_keyphrase", "text_heaps",
-    // phash (one codegen'd map stage over the sampled slice), share
+    // phash (one codegen'd map stage over the sampled slice: one native
+    // DHash call per row, about 30 expression nodes), share
     // (fact fold + broadcast dims + domain windows), reconcile (ONE
     // full-outer co-shuffle + scalar counters)
     "mm_phash", "q36_share", "dq_reconcile",
     // r14: banded near-dup — expect the 4-chunk explode + ONE equi-join
     // on (k, chunk) with NO cartesian, the persisted signature scan on
-    // both sides, and codegen'd conv/xor/bit_count verification
+    // both sides (built by the native DHash kernel), and codegen'd
+    // conv/xor/bit_count verification
     "mm_near_dup",
     // causal impact (one day fold, everything else domain-sized),
     // substitutes (bounded pair domain + restricted basket self-join);
@@ -356,6 +361,15 @@ object PlanAudit {
     // domain-sized sketch table collects eagerly at construction, so
     // only the trivial driver-built result frame would be explained
 
+  /** Expression nodes in a plan: every node of every operator's
+    * expressions, subquery plans included. Spark analyses, optimizes
+    * and code-generates this tree again on every run, so a per-cell
+    * expression fan-out shows here and not in task time. */
+  def exprNodes(plan: LogicalPlan): Int =
+    plan.collectWithSubqueries { case p =>
+      p.expressions.map(_.collect { case e => e }.size).sum
+    }.sum
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/tmp/plans.txt"
@@ -367,7 +381,8 @@ object PlanAudit {
     val sb = new StringBuilder
     keys.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"\n================ $name ================\n")
+      val nodes = exprNodes(df.queryExecution.optimizedPlan)
+      sb.append(s"\n================ $name expr_nodes=$nodes ================\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }

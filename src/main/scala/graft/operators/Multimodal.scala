@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.DHash
 
 /** Multimodal column handling: media payloads ride as opaque `binary`
   * columns with typed metadata structs alongside. Metadata decode is a
@@ -55,9 +56,11 @@ object Multimodal {
     * byte offsets, each row's adjacent-cell comparisons yield 64 bits,
     * and the bit string is the hash — identical payloads collide,
     * locally-perturbed payloads stay within small Hamming distance.
-    * All arithmetic is integer (hex-parse + integer stride), so the
-    * hash is engine-replayable byte-for-byte; everything is one
-    * codegen'd map stage over the sampled slice. */
+    * The hash is one native kernel call per row
+    * ([[org.apache.spark.sql.graftext.DHash]], integer stride over the
+    * UTF-8 bytes), so it replays byte-for-byte in the oracle's hex/
+    * substr SQL; everything is one codegen'd map stage over the
+    * sampled slice. Texts under 72 bytes and NULL texts are skipped. */
   def pHash(docs: DataFrame, sampleMod: Long = 20L): DataFrame =
     pHashUnsorted(docs, sampleMod).orderBy("doc_id")
 
@@ -66,21 +69,12 @@ object Multimodal {
     * pay a global range-shuffle of the full signature table before the
     * persist (the sort exists only for mm_phash's deterministic gate
     * output). */
-  private def pHashUnsorted(docs: DataFrame, sampleMod: Long = 20L): DataFrame = {
-    import org.apache.spark.sql.Column
-    val base = docs.filter(col("doc_id") % sampleMod === 0)
-      .select(col("doc_id"), hex(col("text")).as("hx"),
-        octet_length(col("text")).cast("long").as("nb"))
-      .filter(col("nb") >= 72)
-    def px(i: Int): Column =
-      conv(col("hx").substr(
-        expr(s"CAST((((nb - 1) * $i) DIV 71) * 2 + 1 AS INT)"), lit(2)),
-        16, 10).cast("int")
-    val bits: Seq[Column] = (0 until 8).flatMap(r => (0 until 8).map(c =>
-      when(px(r * 9 + c) > px(r * 9 + c + 1), lit("1")).otherwise(lit("0"))))
-    base.select(col("doc_id"), col("nb").as("n_bytes"),
-      concat(bits: _*).as("phash"))
-  }
+  private def pHashUnsorted(docs: DataFrame, sampleMod: Long = 20L): DataFrame =
+    docs.filter(col("doc_id") % sampleMod === 0)
+      .select(col("doc_id"), col("text"),
+        octet_length(col("text")).cast("long").as("n_bytes"))
+      .filter(col("n_bytes") >= 72)
+      .select(col("doc_id"), col("n_bytes"), DHash.dhash(col("text")).as("phash"))
 
   /** Media near-duplicate pairs via BANDED perceptual hashes — the
     * image-dedup step of a multimodal curation pipeline (retrieve →
@@ -93,9 +87,9 @@ object Multimodal {
     * hamming over the remaining few verifies (per-chunk base-2 conv →
     * xor → bit_count, codegen'd). The signature table is persisted:
     * the banding self-join would otherwise recompute the pHash subtree
-    * twice (the r8 lesson). Fully engine-replayable: pHash is hex/
-    * integer arithmetic, banding is substring equality, hamming is
-    * positional bit comparison. */
+    * twice (the r8 lesson). Fully engine-replayable: pHash is the
+    * native integer-stride dHash kernel, banding is substring equality,
+    * hamming is positional bit comparison. */
   def nearDupPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     // 4 bands of 16 bits guarantee recall only for hamming <= 3 (a pair
     // differing in 4+ bits can touch all four chunks); a larger threshold

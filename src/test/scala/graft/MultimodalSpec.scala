@@ -1,6 +1,9 @@
 package graft
 
 import graft.operators.{ImageHeader, Multimodal}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.DHash
 
 class MultimodalSpec extends SparkTestBase {
   import spark.implicits._
@@ -84,6 +87,62 @@ class MultimodalSpec extends SparkTestBase {
     assert(out(20L) == out(40L), "identical payloads must collide")
     val ham = out(20L).zip(out(60L)).count { case (a, b) => a != b }
     assert(ham > 0 && ham <= 16, s"one-char edit moved $ham of 64 bits")
+  }
+
+  /** The column formula the native DHash kernel replaced, kept here as
+    * the reference: 72 hex-parsed strided "pixels", 64 `when` cells.
+    * (doc_id, text) in, (doc_id, n_bytes, phash) out, no row filter. */
+  private def referenceDHash(docs: DataFrame): DataFrame = {
+    def px(i: Int): Column =
+      conv(col("hx").substr(
+        expr(s"CAST((((nb - 1) * $i) DIV 71) * 2 + 1 AS INT)"), lit(2)),
+        16, 10).cast("int")
+    val bits = (0 until 8).flatMap(r => (0 until 8).map(c =>
+      when(px(r * 9 + c) > px(r * 9 + c + 1), lit("1")).otherwise(lit("0"))))
+    docs.select(col("doc_id"), hex(col("text")).as("hx"),
+        octet_length(col("text")).cast("long").as("nb"))
+      .select(col("doc_id"), col("nb").as("n_bytes"), concat(bits: _*).as("phash"))
+  }
+
+  test("pHash: the native kernel equals the replaced column formula, codegen'd and interpreted") {
+    val ascii = "the quick brown fox jumps over the lazy dog and keeps running " * 3
+    // multibyte UTF-8: 2-, 3- and 4-byte characters, so the byte stride
+    // the grid samples differs from the character stride
+    val multi = "naïve café über straße 東京 こんにちは 🙂🚀 Ωμέγα résumé " * 2
+    val exact72 = ("0123456789abcdefghijklmnopqrstuvwxyz" * 2).take(72)
+    val long = (0 until 20000).map(i => ((i * 7919) % 94 + 33).toChar).mkString
+    val short71 = exact72.take(71)
+    assert(multi.getBytes("UTF-8").length != multi.length)
+    assert(exact72.getBytes("UTF-8").length == 72 && short71.getBytes("UTF-8").length == 71)
+    val docs = Seq[(Long, String)]((20L, ascii), (40L, multi), (60L, exact72),
+      (80L, long), (100L, short71), (120L, null), (140L, "é"), (160L, ""), (7L, ascii))
+      .toDF("doc_id", "text")
+    // pHash keeps the sampled docs of 72 bytes or more
+    val reference = referenceDHash(docs)
+    val expected = reference.filter($"doc_id" % 20 === 0 && $"n_bytes" >= 72)
+      .orderBy("doc_id").collect().toSeq
+    assert(expected.map(_.getLong(0)) == Seq(20L, 40L, 60L, 80L))
+    // the kernel alone matches the formula on every text, NULL and empty too
+    val allExpected = reference.select($"doc_id", $"phash").collect().toSeq
+    def check(session: SparkSession): Unit = {
+      // an RDD-backed frame, so the optimizer cannot fold the projection
+      // into a local relation (that would run only `eval`)
+      val d = session.createDataFrame(docs.rdd, docs.schema)
+      val rows = Multimodal.pHash(d).collect().toSeq
+      assert(rows == expected)
+      assert(d.select(col("doc_id"), DHash.dhash(col("text"))).collect().toSeq == allExpected)
+    }
+    check(spark)
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    check(interpreted)
+  }
+
+  test("mm_phash plans one kernel call, not a per-cell expression fan-out") {
+    val plan = SparkEntry.queries("mm_phash")(spark, sfDir).queryExecution.optimizedPlan
+    val nodes = PlanAudit.exprNodes(plan)
+    assert(nodes <= 50, s"mm_phash optimized plan holds $nodes expression nodes")
   }
 
   test("nearDupPairs: banded pHash recalls planted near-twins, exact docs at 0, far docs absent") {
