@@ -71,6 +71,17 @@ object Export {
     p.toFile.deleteOnExit()
     p
   }
+
+  /** Delete `p` and everything under it, deepest first; a missing path
+    * is a no-op. `deleteOnExit` skips non-empty dirs, so a temp dir
+    * that gets filled must be removed this way. */
+  def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(p)
+    // materialize BEFORE deleting (the Snapshots.vacuum rule)
+    val all = try s.iterator.asScala.toList finally s.close()
+    all.reverse.foreach(Files.deleteIfExists)
+  }
 }
 
 /** create_from conversion graph (create_from.py:56): registered

@@ -122,6 +122,72 @@ class EventsSpec extends SparkTestBase {
     assert(e4.getMessage.contains("no bucket files"), e4.getMessage)
   }
 
+  test("replay keys leave no checkpoint or _stage_ dir behind") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def ls(p: Path): Seq[Path] =
+      try { val s = Files.list(p); try s.iterator.asScala.toList finally s.close() }
+      catch { case _: java.io.IOException => Nil } // another process removed it
+    // every graft_* temp dir and its children
+    def tree(): Set[Path] = ls(tmp)
+      .filter(p => p.getFileName.toString.startsWith("graft_") && Files.isDirectory(p))
+      .flatMap(d => d +: ls(d)).toSet
+    // a fresh copy of the events table, so the stager runs here instead
+    // of handing back the dirs an earlier test staged
+    val sf = graft.sources.Export.tempDir("graft_replay_sf_")
+    Files.copy(Paths.get(sfDir, "events.parquet"), sf.resolve("events.parquet"))
+    try {
+      val before = tree()
+      for (_ <- 1 to 2; key <- Seq("stream_dedup_replay", "stream_sessionize_wm"))
+        assert(SparkEntry.queries(key)(spark, sf.toString).collect().nonEmpty, key)
+      val left = (tree() -- before).map(_.getFileName.toString)
+        .filter(n => n.contains("_ck_") || n.startsWith("_stage_"))
+      assert(left.isEmpty, s"replay runs left temp dirs behind: $left")
+    } finally graft.sources.Export.deleteTree(sf)
+  }
+
+  test("maxFilesPerTrigger and setLastModified each occur in one place under streaming/") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/streaming")
+    assert(Files.isDirectory(root), s"run from the repo root (cwd: ${Paths.get("").toAbsolutePath})")
+    val files = {
+      val s = Files.walk(root)
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+    }
+    for (token <- Seq("maxFilesPerTrigger", "setLastModified")) {
+      val hits = for {
+        f <- files
+        (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+        if line.contains(token)
+      } yield s"${root.relativize(f)}:${i + 1}"
+      assert(hits.size == 1,
+        s"$token: stage through EventStream.stage and stream through EventStream.replay: $hits")
+    }
+  }
+
+  test("stream_upsert equals one global latest-wins cdcMerge of the whole change feed") {
+    import org.apache.spark.sql.functions.{unix_micros, when}
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+    val feed = Tables.t(spark, sfDir, "events")
+      .select(col("user_id"),
+        (unix_micros(col("ts")) - lit(1704067200000000L)).as("seq"),
+        when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
+        col("event_type").as("last_type"), col("value").as("last_value"))
+    val empty = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("user_id", LongType), StructField("last_type", StringType),
+        StructField("last_value", DoubleType))))
+    val global = graft.operators.Maintenance
+      .cdcMerge(empty, feed, "user_id", "seq", "op", Seq("last_type", "last_value"))
+      .orderBy("user_id").collect().toSeq
+    val streamed = graft.streaming.EventStream
+      .upsertedProfiles(spark, s"$sfDir/events.parquet").collect().toSeq
+    assert(streamed.nonEmpty && streamed == global)
+    // the feed's deletes reach the result: some user's last change is an 'error'
+    assert(global.size < feed.select("user_id").distinct().count())
+  }
+
   test("streaming sessionization (flatMapGroupsWithState) matches batch") {
     val batch = Events.sessionStats(Tables.t(spark, sfDir, "events"))
       .select("user_id", "n_sessions", "n_events").collect().toSeq
