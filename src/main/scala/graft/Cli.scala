@@ -57,21 +57,229 @@ object Cli {
   /** Optional `[rows]` CLI argument: a non-numeric value is a usage
     * error (IllegalArgumentException like every other malformed verb),
     * not a raw NumberFormatException out of `.toInt`. */
-  private def rowsArg(rest: List[String]): Int =
+  private[graft] def rowsArg(rest: List[String]): Int =
     rest.headOption.map { s =>
       scala.util.Try(s.toInt).getOrElse(throw new IllegalArgumentException(
         s"expected a row count, got: $s"))
     }.getOrElse(20)
+
+  private[graft] def query(name: String): SparkEntry.Query = SparkEntry.queries.getOrElse(name,
+    throw new IllegalArgumentException(s"unknown query: $name (see `queries` for the list)"))
+
+  private def metadataTable(items: Seq[graft.registries.MetadataRegistry.MetadataItem],
+                            none: String): String =
+    if (items.isEmpty) none
+    else items.map(m => f"${m.refType}%-6s ${m.refId}%-18s ${m.key}%-20s ${m.value}").mkString("\n")
+
+  private def stepLines(steps: Seq[graft.registries.WorkflowRegistry.OpStep]): String =
+    steps.map(s => f"  ${s.name}%-20s op=${s.op}%-24s input=${s.input}").mkString("\n")
+
+  private def stages(s: GraftApi.PipelineStructure): String =
+    s.stages.map(_.mkString("[", " ", "]")).mkString(" -> ")
+
+  /** The root-first verbs (`verb <root> words...`, matched on `verb ::
+    * words`): each runs on the root's one live context (GraftContexts.at). */
+  private def onRoot(spark: SparkSession, root: String): PartialFunction[List[String], String] = {
+    lazy val api = GraftContexts.at(spark, root)
+    lazy val verbs: PartialFunction[List[String], String] = {
+      // value info record (kiara_api.py:944)
+      case "value" :: "info" :: ref :: Nil =>
+        val i = api.valueInfo(ref)
+        s"id:       ${i.id}\nschema:   ${i.schema}\nrows:     ${i.rows}\n" +
+          s"bytes:    ${i.sizeBytes}\nproduced: ${i.producedBy.getOrElse("-")}\n" +
+          s"aliases:  ${if (i.aliases.isEmpty) "-" else i.aliases.mkString(", ")}\n" +
+          s"metadata: ${if (i.metadata.isEmpty) "-" else i.metadata.mkString(", ")}"
+      // value-metadata registry (kiara metadata list/add/explain,
+      // reference registries/metadata/__init__.py:94,203,233,309)
+      case "metadata" :: "list" :: Nil =>
+        metadataTable(api.findMetadataItems(), "no metadata items")
+      case "metadata" :: "add" :: ref :: key :: value :: rest
+          if rest.isEmpty || rest == List("--job") =>
+        val refType = if (rest.nonEmpty) "job" else "value"
+        val h = api.registerMetadata(ref, key, value, refType)
+        s"attached: $key -> $ref ($refType), item hash $h"
+      case "metadata" :: "find" :: keyGlob :: Nil =>
+        metadataTable(api.findMetadataItems(keyGlob), "no matching metadata items")
+      case "metadata" :: "explain" :: hash :: Nil =>
+        val m = api.metadataItemWithHash(hash).getOrElse(
+          throw new IllegalArgumentException(s"no metadata item with hash: $hash"))
+        s"hash:  ${m.hash}\nkey:   ${m.key}\nvalue: ${m.value}\n" +
+          s"ref:   ${m.refType} ${m.refId}"
+      // one job's full record incl. the environment that ran it (kiara
+      // jobs explain; environment per registries/environment/__init__.py)
+      case "jobs" :: "explain" :: jobId :: Nil =>
+        val j = api.jobInfo(jobId)
+        val env = api.jobEnvironment(jobId)
+        s"job:       ${j.jobId}\nstate:     ${j.state}\n" +
+          s"operation: ${j.operation}\ninputs:    ${j.inputs.mkString(", ")}\n" +
+          s"schema:    ${j.outputSchema}\n" +
+          s"comment:   ${j.comment.getOrElse("-")}\n" +
+          (env match {
+            case None => "environment: (not recorded)"
+            case Some(e) => s"environment: ${e.cid}\n" +
+              e.fields.map { case (k, v) => f"  $k%-30s $v" }.mkString("\n")
+          })
+      // rendered job-info table (kiara's jobs CLI): StepRecord + state +
+      // comment in one pass, first comment line only (empty-safe)
+      case "jobs" :: "list" :: Nil =>
+        val infos = api.jobsInfo
+        if (infos.isEmpty) "no jobs recorded"
+        else infos.map { j =>
+          val comment = j.comment
+            .flatMap(_.linesIterator.nextOption())
+            .filter(_.nonEmpty)
+            .map(first => s"  # $first").getOrElse("")
+          f"${j.jobId}%-12s ${j.state}%-8s ${j.operation}%-24s " +
+            s"inputs=${j.inputs.mkString(",")}$comment"
+        }.mkString("\n")
+      // run an operation on a stored value (kiara's primary verb,
+      // reference interfaces/cli/run.py): records the job + lineage,
+      // optionally saves the output under an alias (`--save`), prints a
+      // bounded rendering of the result
+      // batch mode (kiara `kiara run pipeline.yaml`, python_api/batch.py):
+      // the whole pipeline lives in a json spec file
+      case "run" :: "--batch" :: spec :: Nil =>
+        val (runId, saved) = api.runBatch(spec)
+        s"batch run: $runId\n" + (
+          if (saved.isEmpty) "(no save targets)"
+          else saved.map { case (step, alias, vid) =>
+            f"  $step%-20s -> alias '$alias' ($vid)" }.mkString("\n"))
+      // configured-module run (kiara `run <module_type> key=value ...`,
+      // base_api.py:2956 run_manifest): instantiate with per-call config
+      case "run" :: "--manifest" :: moduleType :: valueRef :: cfg =>
+        val config = cfg.map { kv =>
+          val i = kv.indexOf('=')
+          require(i > 0, s"manifest config must be key=value, got: $kv")
+          kv.substring(0, i) -> kv.substring(i + 1)
+        }.toMap
+        val (jobId, out) = api.runManifest(moduleType, config, valueRef)
+        s"job: $jobId (manifest $moduleType)\n" + Render.prettyPrint(out, 10)
+      case "run" :: operation :: valueRef :: rest =>
+        val (jobId, out) = api.runJob(operation, valueRef)
+        val saved = rest match {
+          case "--save" :: alias :: Nil =>
+            api.storeValue(s"$jobId-out", out, Some(alias))
+            s"\nsaved: $jobId-out (alias: $alias)"
+          case Nil => ""
+          case other => throw new IllegalArgumentException(
+            s"run: unexpected args ${other.mkString(" ")} (only --save <alias>)")
+        }
+        s"job: $jobId\n" + Render.prettyPrint(out, 10) + saved
+      // pipeline structure surface (kiara pipeline list / explain,
+      // reference interfaces/cli/pipeline/commands.py:30,100): graft
+      // pipelines are the registry's named step-sequences
+      case "pipeline" :: "list" :: filters =>
+        val names = api.workflows.list
+          .filter(n => filters.forall(f => n.toLowerCase.contains(f.toLowerCase)))
+        if (names.isEmpty) "no pipelines registered"
+        else names.map { n =>
+          f"$n%-24s ${api.workflows.describe(n).size}%2d steps"
+        }.mkString("\n")
+      case "pipeline" :: "explain" :: name :: Nil =>
+        val steps = api.workflows.describe(name)
+        s"pipeline: $name\nsteps:\n" + stepLines(steps)
+      // pipelines as first-class operations (kiara register_pipeline,
+      // base_api.py:1277; catalog :1085-:1220)
+      case "pipeline" :: "register" :: spec :: rest =>
+        val opId = rest match {
+          case "--id" :: id :: Nil => api.registerPipelineFile(spec, Some(id))
+          case Nil                 => api.registerPipelineFile(spec)
+          case other => throw new IllegalArgumentException(
+            s"pipeline register: unexpected args ${other.mkString(" ")} (only --id <opId>)")
+        }
+        val s = api.getPipelineStructure(opId)
+        s"pipeline registered: $opId (${s.steps.size} steps, " +
+          s"inputs ${s.inputFields.mkString("+")}, output ${s.outputField})"
+      case "pipeline" :: "ops" :: filters =>
+        val ids = api.listPipelineIds(filters: _*)
+        if (ids.isEmpty) "no pipeline operations registered"
+        else ids.map { id =>
+          val st = api.getPipelineStructure(id)
+          f"$id%-32s ${st.steps.size}%2d steps  in=${st.inputFields.mkString("+")}  out=${st.outputField}"
+        }.mkString("\n")
+      case "pipeline" :: "structure" :: opId :: Nil =>
+        val s = api.getPipelineStructure(opId)
+        s"pipeline operation: ${s.operationId}\n" +
+          s"inputs: ${s.inputFields.mkString(", ")}\noutput: ${s.outputField}\n" +
+          s"stages: ${stages(s)}\nsteps:\n" + stepLines(s.steps)
+      case "pipeline" :: "info" :: opId :: Nil =>
+        val i = api.pipelineInfo(opId)
+        s"pipeline operation: ${i.structure.operationId}\n" +
+          s"doc: ${i.doc}\narity: ${i.arity}\npersisted: ${i.persisted}\n" +
+          s"stages: ${stages(i.structure)}"
+      // workflow registry surface (kiara workflow list / explain,
+      // reference interfaces/cli/workflow/commands.py)
+      case "workflow" :: "list" :: Nil =>
+        val infos = api.workflowsInfo
+        if (infos.isEmpty) "no workflows registered"
+        else infos.map { i =>
+          val kind = if (i.persisted) "persisted" else "in-memory"
+          val als = if (i.aliases.isEmpty) "" else s"  aka ${i.aliases.mkString(",")}"
+          val snaps = if (i.savedStates == 0) "" else s"  ${i.savedStates} snapshot(s)"
+          f"${i.name}%-24s ${i.steps.size}%2d steps  $kind$als$snaps"
+        }.mkString("\n")
+      case "workflow" :: "explain" :: name :: Nil =>
+        val i = api.workflowInfo(name)
+        val kind = if (i.persisted) "persisted" else "in-memory"
+        val head = s"workflow: ${i.name} ($kind)" +
+          (if (i.aliases.isEmpty) "" else s"\naliases: ${i.aliases.mkString(", ")}") +
+          (if (i.inputFields.isEmpty) "" else s"\ninputs: ${i.inputFields.mkString(", ")}") +
+          (if (i.savedStates == 0) ""
+           else s"\nsnapshots: ${i.savedStates} (latest ${i.lastStateId.getOrElse("-")})")
+        head + "\nsteps:\n" + stepLines(i.steps)
+      // register an alias over a persisted workflow (base_api.py:3366 family)
+      case "workflow" :: "alias" :: alias :: wf :: Nil =>
+        api.setWorkflowAlias(alias, wf)
+        s"workflow alias set: $alias -> $wf"
+      // load + pretty-print a stored value (kiara data load,
+      // reference interfaces/cli/data/commands.py:531)
+      // ::-path sub-value query (kiara query_value, base_api.py:1449)
+      case "data" :: "query" :: path :: rest if rest.size <= 1 =>
+        api.queryValue(path) match {
+          case df: org.apache.spark.sql.DataFrame =>
+            Render.prettyPrint(df, rowsArg(rest))
+          case m: Map[_, _] => m.asInstanceOf[Map[String, String]].toSeq.sorted
+            .map { case (k, v) => f"$k%-12s $v" }.mkString("\n")
+          case other => other.toString
+        }
+      case "data" :: "load" :: ref :: rest if rest.size <= 1 =>
+        val rows = rowsArg(rest)
+        Render.prettyPrint(api.getValue(ref), rows)
+      // value detail record (kiara data explain, commands.py:215 — same
+      // info record the `value <root> info` verb renders)
+      case "data" :: "explain" :: ref :: Nil =>
+        verbs(List("value", "info", ref))
+      // apply a registered operation to a stored value (kiara data
+      // filter, commands.py:699): records job + lineage like `run`
+      case "data" :: "filter" :: ref :: operation :: rest =>
+        verbs("run" :: operation :: ref :: rest)
+      // single-value import/export (kiara data import/export,
+      // commands.py:361,312) over the Convert/Export format dispatch
+      case "data" :: "import" :: id :: format :: path :: Nil =>
+        val df = api.importValue(id, format, path)
+        s"imported: $id (${df.count()} rows from $path)"
+      case "data" :: "export" :: ref :: format :: path :: Nil =>
+        api.exportValue(ref, format, path)
+        s"exported: $ref -> $path ($format)"
+      // stored-value listing over a context root (kiara data list,
+      // reference interfaces/cli/data/commands.py): id, rows, aliases
+      case "data" :: "list" :: globs if globs.size <= 1 =>
+        val ids = api.findValues(globs.headOption.getOrElse("*"))
+        if (ids.isEmpty) "no values stored"
+        else ids.zip(api.valuesInfo(ids)).map { case (id, i) =>
+          f"$id%-24s ${i.rows}%10d rows" +
+            (if (i.aliases.isEmpty) "" else s"  aliases: ${i.aliases.mkString(", ")}")
+        }.mkString("\n")
+    }
+    verbs
+  }
 
   def run(spark: SparkSession, args: Array[String]): String = args.toList match {
     case "queries" :: Nil =>
       SparkEntry.queries.keys.toSeq.sorted.mkString("\n")
     case "query" :: name :: sfDir :: rest =>
       val rows = rowsArg(rest)
-      val fn = SparkEntry.queries.getOrElse(name,
-        throw new IllegalArgumentException(
-          s"unknown query: $name (see `queries` for the list)"))
-      Render.prettyPrint(fn(spark, sfDir), rows)
+      Render.prettyPrint(query(name)(spark, sfDir), rows)
     case "tables" :: sfDir :: Nil =>
       Tables.names.map(t => f"$t%-12s ${Tables.t(spark, sfDir, t).count()}%d rows").mkString("\n")
     case "profile" :: sfDir :: table :: cols if cols.nonEmpty =>
@@ -158,11 +366,10 @@ object Cli {
           s"archive register: unexpected args ${other.mkString(" ")} " +
             "(only --name <name>, --writable)")
       }
-      val api = new GraftApi(spark, root)
-      val n = api.registerArchive(dir, name, allowWriteAccess = writable)
+      val n = GraftContexts.at(spark, root).registerArchive(dir, name, allowWriteAccess = writable)
       s"archive registered: $n -> $dir (${if (writable) "writable" else "read-only"})"
     case "archive" :: "mounts" :: root :: Nil =>
-      val ms = new GraftApi(spark, root).listRegisteredArchives
+      val ms = GraftContexts.at(spark, root).listRegisteredArchives
       if (ms.isEmpty) "no archives registered"
       else ms.map { case (n, d, w) =>
         f"$n%-20s ${if (w) "rw" else "ro"}  $d"
@@ -170,235 +377,19 @@ object Cli {
     case "archive" :: "meta" :: dir :: key :: value :: Nil =>
       graft.registries.Archive.setArchiveMetadata(dir, key, value)
       s"archive metadata set: $key=$value"
-    // value + context info records (kiara_api.py:944,529)
-    case "value" :: root :: "info" :: ref :: Nil =>
-      val i = new GraftApi(spark, root).valueInfo(ref)
-      s"id:       ${i.id}\nschema:   ${i.schema}\nrows:     ${i.rows}\n" +
-        s"bytes:    ${i.sizeBytes}\nproduced: ${i.producedBy.getOrElse("-")}\n" +
-        s"aliases:  ${if (i.aliases.isEmpty) "-" else i.aliases.mkString(", ")}\n" +
-        s"metadata: ${if (i.metadata.isEmpty) "-" else i.metadata.mkString(", ")}"
-    // value-metadata registry (kiara metadata list/add/explain,
-    // reference registries/metadata/__init__.py:94,203,233,309)
-    case "metadata" :: root :: "list" :: Nil =>
-      val items = new GraftApi(spark, root).findMetadataItems()
-      if (items.isEmpty) "no metadata items"
-      else items.map(m =>
-        f"${m.refType}%-6s ${m.refId}%-18s ${m.key}%-20s ${m.value}").mkString("\n")
-    case "metadata" :: root :: "add" :: ref :: key :: value :: rest
-        if rest.isEmpty || rest == List("--job") =>
-      val refType = if (rest.nonEmpty) "job" else "value"
-      val h = new GraftApi(spark, root).registerMetadata(ref, key, value, refType)
-      s"attached: $key -> $ref ($refType), item hash $h"
-    case "metadata" :: root :: "find" :: keyGlob :: Nil =>
-      val items = new GraftApi(spark, root).findMetadataItems(keyGlob)
-      if (items.isEmpty) "no matching metadata items"
-      else items.map(m =>
-        f"${m.refType}%-6s ${m.refId}%-18s ${m.key}%-20s ${m.value}").mkString("\n")
-    case "metadata" :: root :: "explain" :: hash :: Nil =>
-      val m = new GraftApi(spark, root).metadataItemWithHash(hash).getOrElse(
-        throw new IllegalArgumentException(s"no metadata item with hash: $hash"))
-      s"hash:  ${m.hash}\nkey:   ${m.key}\nvalue: ${m.value}\n" +
-        s"ref:   ${m.refType} ${m.refId}"
-    // one job's full record incl. the environment that ran it (kiara
-    // jobs explain; environment per registries/environment/__init__.py)
-    case "jobs" :: root :: "explain" :: jobId :: Nil =>
-      val api = new GraftApi(spark, root)
-      val j = api.jobInfo(jobId)
-      val env = api.jobEnvironment(jobId)
-      s"job:       ${j.jobId}\nstate:     ${j.state}\n" +
-        s"operation: ${j.operation}\ninputs:    ${j.inputs.mkString(", ")}\n" +
-        s"schema:    ${j.outputSchema}\n" +
-        s"comment:   ${j.comment.getOrElse("-")}\n" +
-        (env match {
-          case None => "environment: (not recorded)"
-          case Some(e) => s"environment: ${e.cid}\n" +
-            e.fields.map { case (k, v) => f"  $k%-30s $v" }.mkString("\n")
-        })
-    // rendered job-info table (kiara's jobs CLI): StepRecord + state +
-    // comment in one pass, first comment line only (empty-safe)
-    case "jobs" :: root :: "list" :: Nil =>
-      val infos = new GraftApi(spark, root).jobsInfo
-      if (infos.isEmpty) "no jobs recorded"
-      else infos.map { j =>
-        val comment = j.comment
-          .flatMap(_.linesIterator.nextOption())
-          .filter(_.nonEmpty)
-          .map(first => s"  # $first").getOrElse("")
-        f"${j.jobId}%-12s ${j.state}%-8s ${j.operation}%-24s " +
-          s"inputs=${j.inputs.mkString(",")}$comment"
-      }.mkString("\n")
     case "context" :: baseRoot :: "info" :: Nil =>
       val i = new GraftContexts(spark, baseRoot).currentContext.contextInfo
       s"root:       ${i.root}\nvalues:     ${i.values}\naliases:    ${i.aliases}\n" +
         s"jobs:       ${i.jobs}\nworkflows:  ${i.workflows}\noperations: ${i.operations}"
-    // run an operation on a stored value (kiara's primary verb,
-    // reference interfaces/cli/run.py): records the job + lineage,
-    // optionally saves the output under an alias (`--save`), prints a
-    // bounded rendering of the result
-    // batch mode (kiara `kiara run pipeline.yaml`, python_api/batch.py):
-    // the whole pipeline lives in a json spec file
-    case "run" :: root :: "--batch" :: spec :: Nil =>
-      val api = new GraftApi(spark, root)
-      val (runId, saved) = api.runBatch(spec)
-      s"batch run: $runId\n" + (
-        if (saved.isEmpty) "(no save targets)"
-        else saved.map { case (step, alias, vid) =>
-          f"  $step%-20s -> alias '$alias' ($vid)" }.mkString("\n"))
-    // configured-module run (kiara `run <module_type> key=value ...`,
-    // base_api.py:2956 run_manifest): instantiate with per-call config
-    case "run" :: root :: "--manifest" :: moduleType :: valueRef :: cfg =>
-      val config = cfg.map { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"manifest config must be key=value, got: $kv")
-        kv.substring(0, i) -> kv.substring(i + 1)
-      }.toMap
-      val (jobId, out) = new GraftApi(spark, root)
-        .runManifest(moduleType, config, valueRef)
-      s"job: $jobId (manifest $moduleType)\n" + Render.prettyPrint(out, 10)
-    case "run" :: root :: operation :: valueRef :: rest =>
-      val api = new GraftApi(spark, root)
-      graft.plans.Builtins.ensureRegistered()
-      val (jobId, out) = api.runJob(operation, valueRef)
-      val saved = rest match {
-        case "--save" :: alias :: Nil =>
-          api.storeValue(s"$jobId-out", out, Some(alias))
-          s"\nsaved: $jobId-out (alias: $alias)"
-        case Nil => ""
-        case other => throw new IllegalArgumentException(
-          s"run: unexpected args ${other.mkString(" ")} (only --save <alias>)")
-      }
-      s"job: $jobId\n" + Render.prettyPrint(out, 10) + saved
-    // pipeline structure surface (kiara pipeline list / explain,
-    // reference interfaces/cli/pipeline/commands.py:30,100): graft
-    // pipelines are the registry's named step-sequences
-    case "pipeline" :: root :: "list" :: filters =>
-      val api = new GraftApi(spark, root)
-      val names = api.workflows.list
-        .filter(n => filters.forall(f => n.toLowerCase.contains(f.toLowerCase)))
-      if (names.isEmpty) "no pipelines registered"
-      else names.map { n =>
-        f"$n%-24s ${api.workflows.describe(n).size}%2d steps"
-      }.mkString("\n")
-    case "pipeline" :: root :: "explain" :: name :: Nil =>
-      val steps = new GraftApi(spark, root).workflows.describe(name)
-      s"pipeline: $name\nsteps:\n" + steps.map(s =>
-        f"  ${s.name}%-20s op=${s.op}%-24s input=${s.input}").mkString("\n")
-    // pipelines as first-class operations (kiara register_pipeline,
-    // base_api.py:1277; catalog :1085-:1220)
-    case "pipeline" :: root :: "register" :: spec :: rest =>
-      val api = new GraftApi(spark, root)
-      val opId = rest match {
-        case "--id" :: id :: Nil => api.registerPipelineFile(spec, Some(id))
-        case Nil                 => api.registerPipelineFile(spec)
-        case other => throw new IllegalArgumentException(
-          s"pipeline register: unexpected args ${other.mkString(" ")} (only --id <opId>)")
-      }
-      val s = api.getPipelineStructure(opId)
-      s"pipeline registered: $opId (${s.steps.size} steps, " +
-        s"inputs ${s.inputFields.mkString("+")}, output ${s.outputField})"
-    case "pipeline" :: root :: "ops" :: filters =>
-      val api = new GraftApi(spark, root)
-      val ids = api.listPipelineIds(filters: _*)
-      if (ids.isEmpty) "no pipeline operations registered"
-      else ids.map { id =>
-        val st = api.getPipelineStructure(id)
-        f"$id%-32s ${st.steps.size}%2d steps  in=${st.inputFields.mkString("+")}  out=${st.outputField}"
-      }.mkString("\n")
-    case "pipeline" :: root :: "structure" :: opId :: Nil =>
-      val s = new GraftApi(spark, root).getPipelineStructure(opId)
-      s"pipeline operation: ${s.operationId}\n" +
-        s"inputs: ${s.inputFields.mkString(", ")}\noutput: ${s.outputField}\n" +
-        s"stages: ${s.stages.map(_.mkString("[", " ", "]")).mkString(" -> ")}\nsteps:\n" +
-        s.steps.map(st =>
-          f"  ${st.name}%-20s op=${st.op}%-24s input=${st.input}").mkString("\n")
-    case "pipeline" :: root :: "info" :: opId :: Nil =>
-      val api = new GraftApi(spark, root)
-      val i = api.pipelineInfo(opId)
-      s"pipeline operation: ${i.structure.operationId}\n" +
-        s"doc: ${i.doc}\narity: ${i.arity}\npersisted: ${i.persisted}\n" +
-        s"stages: ${i.structure.stages.map(_.mkString("[", " ", "]")).mkString(" -> ")}"
-    // workflow registry surface (kiara workflow list / explain,
-    // reference interfaces/cli/workflow/commands.py)
-    case "workflow" :: root :: "list" :: Nil =>
-      val api = new GraftApi(spark, root)
-      val infos = api.workflowsInfo
-      if (infos.isEmpty) "no workflows registered"
-      else infos.map { i =>
-        val kind = if (i.persisted) "persisted" else "in-memory"
-        val als = if (i.aliases.isEmpty) "" else s"  aka ${i.aliases.mkString(",")}"
-        val snaps = if (i.savedStates == 0) "" else s"  ${i.savedStates} snapshot(s)"
-        f"${i.name}%-24s ${i.steps.size}%2d steps  $kind$als$snaps"
-      }.mkString("\n")
-    case "workflow" :: root :: "explain" :: name :: Nil =>
-      val i = new GraftApi(spark, root).workflowInfo(name)
-      val kind = if (i.persisted) "persisted" else "in-memory"
-      val head = s"workflow: ${i.name} ($kind)" +
-        (if (i.aliases.isEmpty) "" else s"\naliases: ${i.aliases.mkString(", ")}") +
-        (if (i.inputFields.isEmpty) "" else s"\ninputs: ${i.inputFields.mkString(", ")}") +
-        (if (i.savedStates == 0) ""
-         else s"\nsnapshots: ${i.savedStates} (latest ${i.lastStateId.getOrElse("-")})")
-      head + "\nsteps:\n" + i.steps.map(s =>
-        f"  ${s.name}%-20s op=${s.op}%-24s input=${s.input}").mkString("\n")
-    // register an alias over a persisted workflow (base_api.py:3366 family)
-    case "workflow" :: root :: "alias" :: alias :: wf :: Nil =>
-      new GraftApi(spark, root).setWorkflowAlias(alias, wf)
-      s"workflow alias set: $alias -> $wf"
-    // load + pretty-print a stored value (kiara data load,
-    // reference interfaces/cli/data/commands.py:531)
-    // ::-path sub-value query (kiara query_value, base_api.py:1449)
-    case "data" :: root :: "query" :: path :: rest if rest.size <= 1 =>
-      new GraftApi(spark, root).queryValue(path) match {
-        case df: org.apache.spark.sql.DataFrame =>
-          Render.prettyPrint(df, rowsArg(rest))
-        case m: Map[_, _] => m.asInstanceOf[Map[String, String]].toSeq.sorted
-          .map { case (k, v) => f"$k%-12s $v" }.mkString("\n")
-        case other => other.toString
-      }
-    case "data" :: root :: "load" :: ref :: rest if rest.size <= 1 =>
-      val rows = rowsArg(rest)
-      Render.prettyPrint(new GraftApi(spark, root).getValue(ref), rows)
-    // value detail record (kiara data explain, commands.py:215 — same
-    // info record the `value <root> info` verb renders)
-    case "data" :: root :: "explain" :: ref :: Nil =>
-      run(spark, Array("value", root, "info", ref))
-    // apply a registered operation to a stored value (kiara data
-    // filter, commands.py:699): records job + lineage like `run`
-    case "data" :: root :: "filter" :: ref :: operation :: rest =>
-      run(spark, Array("run", root, operation, ref) ++ rest)
-    // single-value import/export (kiara data import/export,
-    // commands.py:361,312) over the Convert/Export format dispatch
-    case "data" :: root :: "import" :: id :: format :: path :: Nil =>
-      val api = new GraftApi(spark, root)
-      val df = api.importValue(id, format, path)
-      s"imported: $id (${df.count()} rows from $path)"
-    case "data" :: root :: "export" :: ref :: format :: path :: Nil =>
-      new GraftApi(spark, root).exportValue(ref, format, path)
-      s"exported: $ref -> $path ($format)"
     // archive round-trip (kiara archive export/import,
     // reference interfaces/cli/archive/commands.py:46,82)
     case "archive" :: "export" :: root :: targetDir :: refs =>
-      val ids = new GraftApi(spark, root).exportArchive(targetDir, refs)
+      val ids = GraftContexts.at(spark, root).exportArchive(targetDir, refs)
       s"exported archive: $targetDir (${ids.size} values: ${ids.sorted.mkString(", ")})"
     case "archive" :: "import" :: root :: sourceDir :: rest
         if rest.isEmpty || rest == List("--no-aliases") =>
-      val ids = new GraftApi(spark, root)
-        .importArchive(sourceDir, noAliases = rest.nonEmpty)
+      val ids = GraftContexts.at(spark, root).importArchive(sourceDir, noAliases = rest.nonEmpty)
       s"imported archive: ${ids.size} values: ${ids.sorted.mkString(", ")}"
-    // stored-value listing over a context root (kiara data list,
-    // reference interfaces/cli/data/commands.py): id, rows, aliases
-    case "data" :: root :: "list" :: globs if globs.size <= 1 =>
-      val api = new GraftApi(spark, root)
-      val ids = api.findValues(globs.headOption.getOrElse("*"))
-      if (ids.isEmpty) "no values stored"
-      else {
-        val byValue = api.findAliases().groupBy(_._2)
-        ids.map { id =>
-          val i = api.valueInfo(id)
-          val als = byValue.getOrElse(id, Seq.empty).map(_._1)
-          f"$id%-24s ${i.rows}%10d rows" +
-            (if (als.isEmpty) "" else s"  aliases: ${als.mkString(", ")}")
-        }.mkString("\n")
-      }
     // data-type catalog (kiara type list,
     // reference interfaces/cli/type/commands.py)
     case "type" :: "list" :: Nil =>
@@ -482,7 +473,7 @@ object Cli {
         else throw new IllegalArgumentException(
           s"render pipeline: neither '$a' nor '$c' is a renderer target " +
             s"(available: ${targets.toSeq.sorted.mkString(", ")})")
-      val steps = new GraftApi(spark, root).workflows.describe(name)
+      val steps = GraftContexts.at(spark, root).workflows.describe(name)
       Render.pipeline(name, steps.map(s => (s.name, s.op, s.input)), target)
     // archive renderer (kiara ArchiveRendererHtml,
     // reference renderers/included_renderers/archive.py:55): the
@@ -503,7 +494,7 @@ object Cli {
         else if (c == "script") (a, b)
         else throw new IllegalArgumentException(
           s"render job: unknown target (expected 'script' first or last, got '$a' ... '$c')")
-      val j = new GraftApi(spark, root).jobInfo(id)
+      val j = GraftContexts.at(spark, root).jobInfo(id)
       if (j.inputs.isEmpty) throw new IllegalArgumentException(
         s"job $id has no recorded input to replay")
       Render.jobScript(id, j.operation, j.inputs.head)
@@ -514,11 +505,11 @@ object Cli {
         case "--template" :: t :: more => (Some(t), more)
         case other                     => (None, other)
       }
-      val fn = SparkEntry.queries.getOrElse(name,
-        throw new IllegalArgumentException(
-          s"unknown query: $name (see `queries` for the list)"))
+      val fn = query(name)
       graft.plans.Builtins.ensureRegistered() // value-renderer fall-through
       Render.as(target, fn(spark, sfDir), rowsArg(rowsRest), tpl)
+    case verb :: root :: words if onRoot(spark, root).isDefinedAt(verb :: words) =>
+      onRoot(spark, root)(verb :: words)
     case other =>
       throw new IllegalArgumentException(
         s"usage: queries | query <name> <sfDir> [rows] | tables <sfDir> | " +

@@ -77,6 +77,7 @@ object GraftApi {
     "registerPipeline" -> "register a pipeline definition as a first-class operation (callable as a step of other pipelines)",
     "registerPipelineFile" -> "register a pipeline operation from a JSON spec file",
     "registerPipelines" -> "register every given spec file; returns path -> operation id",
+    "registerPersistedPipelines" -> "re-register every pipeline persisted under this root, bound to this context",
     "listPipelineIds" -> "operation ids registered from pipeline definitions (optionally filtered)",
     "getPipelineStructure" -> "steps, free inputs, output and stages of a pipeline operation",
     "pipelineInfo" -> "augmented record of one pipeline operation",
@@ -301,10 +302,7 @@ class GraftApi(val spark: SparkSession, root: String) {
   // the caller's session plans small global sorts in one partition
   org.apache.spark.sql.graftext.SmallSort.install(spark)
 
-  // fresh-JVM contract for registered pipelines: every persisted
-  // definition re-registers into OpRegistry under its stored id, so
-  // runJob/pipeline steps resolve it exactly as in the registering JVM
-  pipelines.list.foreach(id => registerPipelineOp(id, pipelines.describe(id)))
+  registerPersistedPipelines()
 
   // --- operations (kiara_api.py:679,709,770) ------------------------------
   def listOperationIds: Seq[String] = OpRegistry.list
@@ -589,6 +587,12 @@ class GraftApi(val spark: SparkSession, root: String) {
       case _ => () // unreachable (require above)
     }
   }
+
+  /** Every pipeline persisted under this root re-registers into
+    * OpRegistry under its stored id, bound to this context, from one read
+    * (run by the constructor and by every [[GraftContexts.at]] lookup). */
+  def registerPersistedPipelines(): Unit =
+    pipelines.all.foreach { case (id, steps) => registerPipelineOp(id, steps) }
 
   /** register_pipeline (base_api.py:1277): register a pipeline DEFINITION
     * as a first-class operation — runnable via runJob/queueJob and
@@ -1080,24 +1084,35 @@ class GraftApi(val spark: SparkSession, root: String) {
     * and the filesystem only — the schema is the one Spark wrote into the
     * footer ([[DataRegistry.load]]), so inspecting a value runs no Spark
     * job and never scans its data pages, whatever its size. */
-  def valueInfo(ref: String): ValueInfo = {
-    val id = aliases.resolve(ref).getOrElse(ref)
-    require(data.exists(id), s"no such value: $ref")
-    val dir = data.path(id)
-    val schema = data.load(spark, id).schema.simpleString
-    val producedBy = lineage.producer(id)
-    val als = aliases.list.collect { case (a, v) if v == id => a }
-    val meta = metadata.forRef("value", id).map(m => s"${m.key}=${m.value}")
-    ValueInfo(id, schema, ParquetMeta.dirRowCount(dir),
-      ParquetMeta.dirSizeBytes(dir), producedBy, als, meta)
-  }
+  def valueInfo(ref: String): ValueInfo = valuesInfo(Seq(ref)).head
+
+  /** Info records of `refs` (all values when empty), from one read each
+    * of the lineage log, alias table and metadata log. */
   def valuesInfo(refs: Seq[String] = Seq.empty): Seq[ValueInfo] =
-    (if (refs.nonEmpty) refs else listValueIds).map(valueInfo)
+    infos(if (refs.nonEmpty) refs else listValueIds, aliases.list)
 
   /** retrieve_aliases_info (kiara_api.py:997): the matching aliases'
     * target values, each augmented to a full ValueInfo record. */
-  def aliasesInfo(aliasGlob: String = "*"): Seq[(String, ValueInfo)] =
-    aliases.find(aliasGlob).map { case (a, vid) => a -> valueInfo(vid) }
+  def aliasesInfo(aliasGlob: String = "*"): Seq[(String, ValueInfo)] = {
+    val all = aliases.list
+    val found = all.filter { case (a, _) => DataRegistry.globMatch(aliasGlob, a) }
+    found.map(_._1).zip(infos(found.map(_._2), all))
+  }
+
+  private def infos(refs: Seq[String], aliasList: Seq[(String, String)]): Seq[ValueInfo] = {
+    val target = aliasList.toMap
+    val producers = lineage.producers
+    val aliasesOf = aliasList.groupMap(_._2)(_._1)
+    val metaOf = metadata.find(refType = Some("value")).groupMap(_.refId)(m => s"${m.key}=${m.value}")
+    refs.map { ref =>
+      val id = target.getOrElse(ref, ref)
+      require(data.exists(id), s"no such value: $ref")
+      val dir = data.path(id)
+      ValueInfo(id, data.load(spark, id).schema.simpleString, ParquetMeta.dirRowCount(dir),
+        ParquetMeta.dirSizeBytes(dir), producers.get(id), aliasesOf.getOrElse(id, Seq.empty),
+        metaOf.getOrElse(id, Seq.empty))
+    }
+  }
 
   /** retrieve_data_types_info: kiara type name → Spark SQL type. */
   def dataTypesInfo: Seq[(String, String)] =

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import graft.registries.RegistryFile
@@ -19,18 +20,16 @@ class GraftContexts(spark: SparkSession, baseRoot: String) {
   private val activeFile = base.resolve("active_context")
   Files.createDirectories(base)
 
-  private val apis = scala.collection.concurrent.TrieMap[String, GraftApi]()
-
   private def validate(name: String): String =
     graft.registries.Names.validate("context name", name)
 
   /** Create (or return existing) context `name`. */
-  def createContext(name: String): GraftApi = context(validate(name))
+  def createContext(name: String): GraftApi = context(name)
 
   /** The GraftApi rooted at context `name` (created on first use —
     * kiara's get_context(create=True) behavior). */
   def context(name: String): GraftApi =
-    apis.getOrElseUpdate(validate(name), new GraftApi(spark, s"$baseRoot/${validate(name)}"))
+    GraftContexts.at(spark, s"$baseRoot/${validate(name)}")
 
   /** All context names under the base root. */
   def listContextNames: Seq[String] = {
@@ -70,4 +69,24 @@ class GraftContexts(spark: SparkSession, baseRoot: String) {
   /** list_all_job_record_ids (kiara_api.py): cross-context job catalog. */
   def listAllJobRecordIds: Seq[String] =
     listContextNames.flatMap(n => context(n).listJobRecordIds.map(id => s"$n:$id"))
+}
+
+/** One live context per root for the JVM, as kiara keeps one context
+  * object per context: keyed by the normalized absolute root (the
+  * [[RegistryFile.lockFor]] key), so `root` and `root/.` share one
+  * instance, its event bus, queued jobs and workflow sessions. */
+object GraftContexts {
+  private val live = new ConcurrentHashMap[String, GraftApi]()
+
+  /** The live GraftApi at `root`, built anew only when there is none, when
+    * it was built on another SparkSession, or when the root dir is gone.
+    * Every lookup re-registers the root's persisted pipelines. */
+  def at(spark: SparkSession, root: String): GraftApi = {
+    val dir = Paths.get(root).toAbsolutePath.normalize
+    val api = live.compute(dir.toString, (_, api) =>
+      if (api != null && (api.spark eq spark) && Files.isDirectory(dir)) api
+      else new GraftApi(spark, root))
+    api.registerPersistedPipelines()
+    api
+  }
 }

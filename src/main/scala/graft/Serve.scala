@@ -100,9 +100,8 @@ object Serve {
       case "query" =>
         val a = args(req)
         require(a.size >= 2, "query needs args [name, sfDir, rows?]")
-        val rows = if (a.size >= 3) a(2).toInt else 20
-        val fn = SparkEntry.queries.getOrElse(a.head,
-          throw new IllegalArgumentException(s"unknown query: ${a.head}"))
+        val rows = Cli.rowsArg(a.drop(2).toList)
+        val fn = Cli.query(a.head)
         // bounded slice as JSON rows — never more than `rows` rows
         // materialize, whatever the query's result size; Spark's own row
         // JSON is embedded verbatim, not re-parsed

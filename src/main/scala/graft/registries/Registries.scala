@@ -57,7 +57,7 @@ object DataRegistry {
   final case class Matcher(idGlob: Option[String] = None, hasColumn: Option[String] = None)
 
   /** Shell-glob → anchored regex (`*` any run, `?` one char). */
-  private[registries] def globMatch(glob: String, s: String): Boolean = {
+  private[graft] def globMatch(glob: String, s: String): Boolean = {
     val rx = glob.flatMap {
       case '*' => ".*"
       case '?' => "."
@@ -197,8 +197,8 @@ class LineageRegistry(root: String, bus: EventBus = new EventBus) {
   /** The last record of one run — a job's record. */
   def lastOfRun(runId: String): Option[StepNode] = records.findLast(_.run == runId)
 
-  /** The run that last produced a value. */
-  def producer(value: String): Option[String] = records.findLast(_.step == value).map(_.run)
+  /** Each value's producing run: the run of its last record. */
+  def producers: Map[String, String] = records.map(n => n.step -> n.run).toMap
 
   /** The recorded job ids (`job-` runs), sorted, each with its last record. */
   def jobs: Seq[(String, StepNode)] = records.filter(_.run.startsWith("job-"))
@@ -404,6 +404,8 @@ class PipelineRegistry(root: String, bus: EventBus = new EventBus) {
     bus.fire(RegistryEvents.WorkflowStored(opId, persisted = true))
   }
 
+  /** Every definition, sorted by operation id, from one read. */
+  def all: Seq[(String, Seq[OpStep])] = readAll().toSeq.sortBy(_._1)
   def list: Seq[String] = readAll().keys.toSeq.sorted
   def contains(opId: String): Boolean = readAll().contains(opId)
   def describe(opId: String): Seq[OpStep] =

@@ -66,15 +66,21 @@ object Export {
   def orc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
 
+  // every dir tempDir made; one hook removes them whole when the JVM
+  // exits, skipping any it cannot (`deleteOnExit` skips non-empty dirs)
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  sys.addShutdownHook(made.forEach(p =>
+    try deleteTree(p) catch { case scala.util.control.NonFatal(_) => () }))
+
+  /** A new dir under `java.io.tmpdir`, deleted with its contents at exit. */
   def tempDir(prefix: String): Path = {
     val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
+    made.add(p)
     p
   }
 
   /** Delete `p` and everything under it, deepest first; a missing path
-    * is a no-op. `deleteOnExit` skips non-empty dirs, so a temp dir
-    * that gets filled must be removed this way. */
+    * is a no-op. */
   def deleteTree(p: Path): Unit = if (Files.exists(p)) {
     import scala.jdk.CollectionConverters._
     val s = Files.walk(p)

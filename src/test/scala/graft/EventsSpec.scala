@@ -864,7 +864,7 @@ class EventsSpec extends SparkTestBase {
   test("slidingCounts: every event lands in exactly two hourly-advancing windows") {
     // the streaming source expects a FILE like the testdata layout, so
     // write one part and move it into place
-    val dir = java.nio.file.Files.createTempDirectory("slide_").toString
+    val dir = graft.sources.Export.tempDir("slide_").toString
     Seq((1L, 1L, Timestamp.valueOf("2024-01-01 10:30:00"), "a", 1.0),
       (2L, 1L, Timestamp.valueOf("2024-01-01 11:30:00"), "a", 1.0))
       .toDF("event_id", "user_id", "ts", "event_type", "value")
@@ -984,7 +984,7 @@ class EventsSpec extends SparkTestBase {
   }
 
   test("funnelStages: stage anchors respect at-or-after ordering") {
-    val dir = java.nio.file.Files.createTempDirectory("sfun_").toString
+    val dir = graft.sources.Export.tempDir("sfun_").toString
     Seq(
       // u1: full journey
       (11L, 1L, Timestamp.valueOf("2024-01-01 10:00:00"), "view", 1.0),
@@ -1010,7 +1010,7 @@ class EventsSpec extends SparkTestBase {
   }
 
   test("hourlyDistinctHll: drained stream equals the batch HLL bit-for-bit") {
-    val dir = java.nio.file.Files.createTempDirectory("shll_").toString
+    val dir = graft.sources.Export.tempDir("shll_").toString
     val rows = (1L to 40L).map(u =>
       (u, u % 7, Timestamp.valueOf(f"2024-01-01 ${10 + (u % 2)}%02d:00:00"),
         "view", 1.0))

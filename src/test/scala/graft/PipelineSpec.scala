@@ -41,7 +41,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("workflow registry re-runs a named pipeline and records lineage") {
-    val root = java.nio.file.Files.createTempDirectory("graft_wf_").toString
+    val root = graft.sources.Export.tempDir("graft_wf_").toString
     val lin = new LineageRegistry(root)
     val wf = new WorkflowRegistry(root, lin)
     wf.register("counts", steps)
@@ -52,7 +52,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("persisted workflow survives a fresh registry on the same root") {
-    val root = java.nio.file.Files.createTempDirectory("graft_wfp_").toString
+    val root = graft.sources.Export.tempDir("graft_wfp_").toString
     val lin = new LineageRegistry(root)
     val wf = new WorkflowRegistry(root, lin)
     OpRegistry.register("wf_filter_heavy", df => df.filter(col("l_quantity") > 40))
@@ -87,7 +87,7 @@ class PipelineSpec extends SparkTestBase {
     assert(e3.getMessage.contains("two inputs"))
     // a persisted workflow with a binary join step survives a fresh
     // registry and runs (kiara connect_steps wiring, '+'-encoded)
-    val root = java.nio.file.Files.createTempDirectory("graft_wf2in_").toString
+    val root = graft.sources.Export.tempDir("graft_wf2in_").toString
     val wf = new WorkflowRegistry(root, new LineageRegistry(root))
     OpRegistry.register("wf2_orders_oct",
       df => df.filter(col("o_orderdate") >= "1995-01-01"))

@@ -53,6 +53,71 @@ class ServeSpec extends SparkTestBase {
     assert(err.contains(""""stdout":""""") && err.contains("usage"))
   }
 
+  test("cli requests on one root share its one live context") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import graft.registries.{Jsonl, RegistryEvents, WorkflowRegistry}
+    val root = graft.sources.Export.tempDir("graft_serve_live_").toString
+    val api = GraftContexts.at(spark, root)
+    assert(GraftContexts.at(spark, root + "/.") eq api)
+    api.storeValue("corpus", Seq((1L, 5L), (2L, 90L)).toDF("id", "qty"), Some("cv"))
+    graft.plans.OpRegistry.register("serve_live_id", df => df)
+    api.workflows.registerOps("nightly",
+      Seq(WorkflowRegistry.OpStep("s1", "serve_live_id", "in")))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[RegistryEvents.Event]()
+    api.onRegistryEvent(seen.add(_))
+    val s = session
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def cli(args: String*): String = {
+      val o = json.readTree(s.handle(Jsonl.line("endpoint" -> "cli", "args" -> args)))
+      assert(o.path("stderr").asText("") == "", s"$args: ${o.path("stderr").asText("")}")
+      o.path("stdout").asText("")
+    }
+    (1 to 8).foreach(i => assert(cli("metadata", root, "add", "corpus", s"k$i", s"v$i")
+      .startsWith(s"attached: k$i -> corpus")))
+    (1 to 4).foreach(i => assert(cli("workflow", root, "alias", s"wa$i", "nightly")
+      == s"workflow alias set: wa$i -> nightly"))
+    (1 to 3).foreach(_ => assert(cli("data", root, "list").contains("aliases: cv")))
+    (1 to 2).foreach(_ => assert(cli("jobs", root, "list") == "no jobs recorded"))
+    // the listener on the live instance saw every write the requests made
+    val events = seen.asScala.toSeq
+    assert(events.collect { case m: RegistryEvents.MetadataStored => m.key } ==
+      (1 to 8).map(i => s"k$i"))
+    assert(events.collect { case RegistryEvents.WorkflowStored(n, true) => n } ==
+      (1 to 4).map(i => s"wa$i"))
+    assert(GraftContexts.at(spark, root) eq api)
+    // a pipeline persisted through a separate instance resolves on the
+    // next lookup, and runs bound to the live instance: its inner run is
+    // recorded on the live bus
+    new GraftApi(spark, root).registerPipeline("serve_live",
+      Seq(WorkflowRegistry.OpStep("p1", "serve_live_id", "t")))
+    assert(cli("pipeline", root, "ops").contains("pipeline.serve_live"))
+    assert(cli("run", root, "pipeline.serve_live", "cv").contains("| qty"))
+    assert(seen.asScala.exists {
+      case RegistryEvents.JobRecordStored(run, _, _) => run.startsWith("pipeline.serve_live-run-")
+      case _ => false
+    })
+    // a deleted root gets a new context: empty, as a fresh root is
+    graft.sources.Export.deleteTree(Paths.get(root))
+    assert(cli("data", root, "list") == "no values stored")
+    assert(s.requestsServed == 20)
+    val rebuilt = GraftContexts.at(spark, root)
+    assert(rebuilt ne api)
+    // another SparkSession gets its own instance
+    val other = spark.newSession()
+    val onOther = GraftContexts.at(other, root)
+    assert((onOther ne rebuilt) && (onOther.spark eq other))
+    assert(GraftContexts.at(other, root) eq onOther)
+  }
+
+  test("Cli and Serve construct no GraftApi: they look contexts up") {
+    val dir = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(dir), s"run from the repo root (cwd: ${Paths.get("").toAbsolutePath})")
+    val hits = Seq("Cli.scala", "Serve.scala")
+      .filter(f => Files.readString(dir.resolve(f)).contains("new GraftApi"))
+    assert(hits.isEmpty, s"take contexts from GraftContexts.at, not a new GraftApi: $hits")
+  }
+
   test("stream loop serves many requests and ends cleanly on shutdown") {
     val in = new ByteArrayInputStream(
       Seq("""{"endpoint":"ping"}""",
@@ -128,6 +193,9 @@ class ServeSpec extends SparkTestBase {
     // args that are not an array
     val notArray = response("""{"endpoint":"cli","args":"x"}""")
     assert(field(notArray, "stderr").contains("'args' must be a JSON array"))
+    // a row limit that is not a number: Cli's usage error, not Java's
+    val rows = response(s"""{"endpoint":"query","args":["q1_agg","$sfDir","x"]}""")
+    assert(field(rows, "error") == "expected a row count, got: x")
     assert(!s.isStopped)
     assert(s.handle("""{"endpoint":"ping"}""") == """{"endpoint":"ping","result":"pong"}""")
   }

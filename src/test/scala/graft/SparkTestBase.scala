@@ -13,7 +13,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+        graft.sources.Export.tempDir("graft_wh_").toString)
       .config("spark.sql.autoBroadcastJoinThreshold", "-1") // let bucketed SMJ show
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -13,7 +13,7 @@ class TablesSpec extends SparkTestBase {
   import spark.implicits._
 
   test("normalizeInts widens top-level int32 columns to long at load") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_int32_").toString
+    val dir = graft.sources.Export.tempDir("graft_int32_").toString
     Seq((1, "a", 2L)).toDF("k32", "name", "k64")
       .write.mode("overwrite").parquet(s"$dir/nation.parquet")
     val df = Tables.t(spark, dir, "nation")
