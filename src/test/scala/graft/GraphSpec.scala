@@ -182,4 +182,41 @@ class GraphSpec extends SparkTestBase {
     assert(out.toSeq == Seq((1L, 3L, 2L, 2L, 2L, 1.0),
       (2L, 4L, 2L, 2L, 2L, 1.0)))
   }
+
+  test("shared-edge operators pin their outputs on one messy edge list") {
+    // reversed duplicates (2,1) and (11,10), parallel (3,4)×2, one
+    // self-loop (5,5)
+    val raw = Seq((1L, 2L), (2L, 1L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 4L),
+      (4L, 5L), (5L, 6L), (4L, 6L), (6L, 7L), (5L, 5L), (7L, 8L), (2L, 4L),
+      (10L, 11L), (11L, 10L))
+    val uv = raw.toDF("u", "v")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("(", ",", ")")).mkString(" ")
+    // outputs recorded before the operators shared one edge set, one
+    // frame per operator. LPA oscillates on this
+    // graph (synchronous rounds), and kCore, degreeStats, clusteringCoeff
+    // and triangleCounts keep the self-loop and the parallel edge in
+    // their degree folds: the pins hold that edge multiset too
+    val want = Seq(
+      rows(Graph.labelPropagation(raw.toDF("src", "dst"), iters = 5)) ->
+        "(1,2) (2,1) (3,1) (4,2) (5,1) (6,1) (7,2) (8,4) (10,11) (11,10)",
+      rows(Graph.adamicAdar(uv)) ->
+        ("(1,4,2,1.8205) (6,8,1,1.4427) (4,7,1,0.9102) (5,7,1,0.9102) " +
+          "(2,5,1,0.7213) (2,6,1,0.7213) (3,5,1,0.7213) (3,6,1,0.7213)"),
+      rows(Graph.jaccardNeighbors(uv)) ->
+        ("(5,6,3,4,3,0.75) (4,5,3,4,4,0.6) (1,4,2,2,4,0.5) (2,3,2,3,3,0.5) " +
+          "(6,8,1,3,1,0.3333) (1,2,1,2,3,0.25) (1,3,1,2,3,0.25) " +
+          "(2,6,1,3,3,0.2) (3,6,1,3,3,0.2) (4,7,1,4,2,0.2) (5,7,1,4,2,0.2) " +
+          "(2,4,1,3,4,0.1667) (2,5,1,3,4,0.1667) (3,4,1,3,4,0.1667) " +
+          "(3,5,1,3,4,0.1667) (4,6,1,4,3,0.1667)"),
+      rows(Graph.kCore(uv, k = 2)) -> "(1,2) (2,3) (3,3) (4,4) (5,4) (6,2)",
+      rows(Graph.kCore(uv, k = 3)) -> "",
+      rows(Graph.degreeStats(uv)) -> "(10,15,5,3.0,0.6053)",
+      rows(Graph.clusteringCoeff(uv)) ->
+        ("(1,3,2,0.6667) (2,4,4,0.6667) (3,4,4,0.6667) (5,4,3,0.5) " +
+          "(4,5,4,0.4) (6,3,1,0.3333) (7,2,0,0.0) (10,2,0,0.0) (11,2,0,0.0)"),
+      rows(Graph.triangleCounts(uv)) -> "(1,2) (2,4) (3,4) (4,4) (5,3) (6,1)",
+      rows(Graph.wccSizes(uv)) -> "(2,1) (8,1)")
+    want.foreach { case (got, exp) => assert(got == exp) }
+  }
 }
