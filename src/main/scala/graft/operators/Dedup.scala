@@ -547,17 +547,13 @@ object Dedup {
     * Input: (doc_a, doc_b) pair rows. Output: (doc_id, cluster_id) where
     * cluster_id is the minimum doc_id in the component. */
   def clusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-    val rawEdges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val rawEdges = Graph.adjacency(
+        pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
       .distinct()
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // near-dup pair sets are a sliver of the corpus (LSH candidates);
-    // size the iterative joins to the graph, not to the session default —
-    // per-iteration scheduling overhead dominates otherwise
-    val nEdges = rawEdges.count()
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (nEdges / 100000L).toInt + 1))
+    // size the iterative joins to the graph, not to the session default
+    val parts = Graph.graphParts(rawEdges)
     val edges = rawEdges.repartition(parts, col("dst"))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // localCheckpoint (eager) truncates lineage every round, so each

@@ -1740,7 +1740,7 @@ object Events {
     *
     * Scale shape: one user fold, [[graft.operators.Rank.ntileExact]]'s
     * two-level scan for the decile (NO user-count-sized window), then
-    * tile-domain folds and a triangular broadcast cumulative join.
+    * tile-domain folds and a running-sum window over the tile rows.
     * All counts are exact BIGINTs; the two ratios are identical scalar
     * IEEE trees (empty-arm tiles → NULL, guarded on both sides). */
   def upliftQini(events: DataFrame, buckets: Int = 10): DataFrame = {
@@ -1756,13 +1756,11 @@ object Events {
         sum(lit(1L) - col("tr")).as("n_c"),
         sum(col("tr") * col("conv")).as("y_t"),
         sum((lit(1L) - col("tr")) * col("conv")).as("y_c"))
-    val cum = per.as("a")
-      .join(broadcast(per.as("p")), col("p.tile") <= col("a.tile"))
-      .groupBy(col("a.tile").as("tile"))
-      .agg(max(col("a.n_t")).as("n_t"), max(col("a.n_c")).as("n_c"),
-        max(col("a.y_t")).as("y_t"), max(col("a.y_c")).as("y_c"),
-        sum(col("p.n_t")).as("cnt_t"), sum(col("p.n_c")).as("cnt_c"),
-        sum(col("p.y_t")).as("cy_t"), sum(col("p.y_c")).as("cy_c"))
+    val upTo = Window.orderBy("tile") // bounded: at most `buckets` tile rows
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val cum = per.select(col("*"),
+      sum("n_t").over(upTo).as("cnt_t"), sum("n_c").over(upTo).as("cnt_c"),
+      sum("y_t").over(upTo).as("cy_t"), sum("y_c").over(upTo).as("cy_c"))
     val uplift = when(col("n_t") > 0L && col("n_c") > 0L,
       Num.pround(col("y_t").cast("double") / col("n_t").cast("double")
         - col("y_c").cast("double") / col("n_c").cast("double"), 4))

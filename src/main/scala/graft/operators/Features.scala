@@ -379,10 +379,12 @@ object Features {
     * Scale shape: the decile comes from [[Rank.ntileExact]]'s
     * two-level scan (score-bucket cells — NO corpus-sized
     * single-partition window); per-tile folds are bucket-domain-sized
-    * and the cumulative step is a triangular broadcast join over
-    * `buckets` rows. Every count is an exact integer, so the final
-    * ratios are deterministic scalar IEEE on any engine. */
+    * and the cumulative sums and totals are running and whole-frame
+    * windows over those `buckets` rows. Every count is an exact
+    * integer, so the final ratios are deterministic scalar IEEE on any
+    * engine. */
   def gainsChart(docs: DataFrame, buckets: Int = 10): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val labeled = docs.filter(col("lang").isNotNull)
       .select(col("doc_id"), col("n_chars"),
         (col("lang") === "en").as("pos"))
@@ -391,13 +393,12 @@ object Features {
     val per = tiled.groupBy("tile")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("pos"), 1L).otherwise(0L)).as("n_pos"))
-    val cum = per.as("a")
-      .join(broadcast(per.as("p")), col("p.tile") <= col("a.tile"))
-      .groupBy(col("a.tile").as("tile"))
-      .agg(max(col("a.n_docs")).as("n_docs"), max(col("a.n_pos")).as("n_pos"),
-        sum(col("p.n_docs")).as("cum_docs"), sum(col("p.n_pos")).as("cum_pos"))
-    val tot = per.agg(sum("n_docs").as("tn"), sum("n_pos").as("tp"))
-    cum.crossJoin(broadcast(tot)) // bounded: 1 row
+    val upTo = Window.orderBy("tile") // bounded: at most `buckets` tile rows
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val all = upTo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    per.select(col("tile"), col("n_docs"), col("n_pos"),
+        sum("n_docs").over(upTo).as("cum_docs"), sum("n_pos").over(upTo).as("cum_pos"),
+        sum("n_docs").over(all).as("tn"), sum("n_pos").over(all).as("tp"))
       .select(col("tile"), col("n_docs"), col("n_pos"),
         Num.pround(col("cum_pos").cast("double") / col("tp").cast("double"), 4)
           .as("cum_gain"),

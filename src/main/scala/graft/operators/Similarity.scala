@@ -888,12 +888,74 @@ object Similarity {
       .orderBy("threshold")
   }
 
+  /** One Lloyd run: the persisted (vec_id, emb) base, the seeds as
+    * (vec_id, center), and the centers before and after each of `iters`
+    * mean steps (`iters + 1` entries, seeds first). [[kMeans]] and
+    * [[kMeansVerified]] are two readouts of the same run. */
+  private case class Lloyd(base: DataFrame, seeds: Seq[(Long, Array[Double])],
+      rounds: Seq[Array[Array[Double]]])
+
+  /** |x − c|² per row, folded as (x·x − 2·x·c) + c·c: the grouping the
+    * sim_kmeans seed oracle replays. */
+  private def dist2(c: Array[Double]): Column =
+    dot(col("emb"), col("emb")) - lit(2.0) * dot(col("emb"), array(c.map(lit): _*)) +
+      lit(c.map(x => x * x).sum)
+
+  /** One score 2·x·c − c·c per center: the argmax is the L2 argmin. */
+  private def scoresOf(cents: Array[Array[Double]]): Column =
+    array(cents.map { c =>
+      lit(2.0) * dot(col("emb"), array(c.map(lit): _*)) - lit(c.map(x => x * x).sum)
+    }: _*)
+
+  /** `base` plus its center scores `__s` and its argmax center `cid`. */
+  private def assigned(base: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    base.withColumn("__s", scoresOf(cents))
+      .withColumn("cid", expr("array_position(__s, array_max(__s)) - 1").cast("int"))
+
+  private def lloyd(corpus: DataFrame, k: Int, iters: Int): Lloyd = {
+    val base = corpus
+      .select(col("vec_id").cast("long").as("vec_id"),
+        col("embedding").cast("array<double>").as("emb"))
+      .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // deterministic FARTHEST-POINT init (Gonzalez k-center, the
+    // derandomized k-means++): seed with the smallest vec_id, then k−1
+    // times take the point maximizing its min distance to the chosen
+    // centers (vec_id breaks exact ties). A hash sample can drop two
+    // seeds in one true cluster and leave another uncovered — a local
+    // optimum Lloyd cannot escape; farthest-point provably covers every
+    // well-separated cluster. Each pick is one corpus scan over the
+    // PERSISTED base + a 1-row TakeOrdered collect.
+    def pick1(df: DataFrame): (Long, Array[Double]) = {
+      val r = df.select(col("vec_id"), col("emb")).collect().head
+      (r.getLong(0), r.getSeq[Double](1).toArray)
+    }
+    val seeds = scala.collection.mutable.ArrayBuffer(
+      pick1(base.orderBy("vec_id").limit(1)))
+    while (seeds.length < k)
+      seeds += pick1(base
+        .withColumn("__d2", seeds.map(s => dist2(s._2)).reduce(least(_, _)))
+        .orderBy(col("__d2").desc, col("vec_id")).limit(1))
+    // one mean step: assign, then average each center's cells; an empty
+    // cluster keeps its previous center
+    val rounds = (1 to iters).scanLeft(seeds.map(_._2).toArray) { (cents, _) =>
+      val means = assigned(base, cents)
+        .select(col("cid"), posexplode(col("emb")).as(Seq("pos", "v")))
+        .groupBy("cid", "pos").agg(avg("v").as("m"))
+        .collect() // bounded: k × dim doubles
+        .groupBy(_.getInt(0))
+        .map { case (cid, rows) =>
+          cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray }
+      cents.indices.map(i => means.getOrElse(i, cents(i))).toArray
+    }
+    Lloyd(base, seeds.toSeq, rounds)
+  }
+
   /** Lloyd k-means over the embedding corpus — true iterative
     * refinement, unlike [[ivfTopK]]'s one-shot hash-stride centroids
     * (which exist to BUCKET, not to model): k-means is the clustering
     * readout itself (corpus structure, semdedup-style pruning regions,
     * topic-ish groupings over embeddings). Init = deterministic
-    * farthest-point (Gonzalez k-center — see the inline note); each
+    * farthest-point (Gonzalez k-center — see [[lloyd]]); each
     * iteration assigns by the argmin-L2 expansion (argmax of
     * 2·x·c − |c|², codegen'd DotProduct against broadcast centroid
     * literals) and recomputes means; empty clusters keep their
@@ -906,60 +968,11 @@ object Similarity {
     * (the dedup_clusters rule). Iterative float → registered rows-only;
     * the spec recovers PLANTED clusters exactly. */
   def kMeans(corpus: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
-    import org.apache.spark.sql.Row
-    val base = corpus
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // deterministic FARTHEST-POINT init (Gonzalez k-center, the
-    // derandomized k-means++): seed with the smallest vec_id, then k−1
-    // times take the point maximizing its min distance to the chosen
-    // centers (vec_id breaks exact ties). A hash sample can drop two
-    // seeds in one true cluster and leave another uncovered — a local
-    // optimum Lloyd cannot escape; farthest-point provably covers every
-    // well-separated cluster. Each pick is one corpus scan over the
-    // PERSISTED base + a 1-row TakeOrdered collect.
-    def vecOf(df: DataFrame): Array[Double] =
-      df.select(col("emb")).collect().map((r: Row) => r.getSeq[Double](0).toArray).head
-    val picked = scala.collection.mutable.ArrayBuffer(
-      vecOf(base.orderBy("vec_id").limit(1)))
-    while (picked.length < k) {
-      val minD2 = picked.map { c =>
-        val cl = array(c.map(lit): _*)
-        dot(col("emb"), col("emb")) - lit(2.0) * dot(col("emb"), cl) +
-          lit(c.map(x => x * x).sum)
-      }.reduce(least(_, _))
-      picked += vecOf(base.withColumn("__d2", minD2)
-        .orderBy(col("__d2").desc, col("vec_id")).limit(1))
-    }
-    var cents: Array[Array[Double]] = picked.toArray
-    def withAssignment(): DataFrame = {
-      val scores = array(cents.map { c =>
-        val cl = array(c.map(lit): _*)
-        lit(2.0) * dot(col("emb"), cl) - lit(c.map(x => x * x).sum)
-      }: _*)
-      base.withColumn("__s", scores)
-        .withColumn("cid",
-          expr("array_position(__s, array_max(__s)) - 1").cast("int"))
-        .drop("__s")
-    }
-    for (_ <- 1 to iters) {
-      val means = withAssignment()
-        .select(col("cid"), posexplode(col("emb")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos").agg(avg("v").as("m"))
-        .collect() // bounded: k × dim doubles
-        .groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray }
-      cents = cents.indices.map(i => means.getOrElse(i, cents(i))).toArray
-    }
+    val run = lloyd(corpus, k, iters)
     // readout: sizes + within-cluster inertia against the final centers
-    val centNorm2 = cents.map(c => c.map(x => x * x).sum)
-    val dist2 = array(cents.zipWithIndex.map { case (c, i) =>
-      val cl = array(c.map(lit): _*)
-      dot(col("emb"), col("emb")) - lit(2.0) * dot(col("emb"), cl) + lit(centNorm2(i))
-    }: _*)
-    withAssignment()
-      .withColumn("d2", element_at(dist2, col("cid") + 1))
+    val cents = run.rounds.last
+    assigned(run.base, cents)
+      .withColumn("d2", element_at(array(cents.map(dist2): _*), col("cid") + 1))
       .groupBy(col("cid").cast("long").as("cluster_id"))
       .agg(count(lit(1)).as("n_vecs"), round(sum("d2"), 2).as("inertia"))
       .orderBy("cluster_id")
@@ -990,66 +1003,23 @@ object Similarity {
   def kMeansVerified(corpus: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val base = corpus
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("emb"))
-      .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def pick1(df: DataFrame): (Long, Array[Double]) = {
-      val r = df.select(col("vec_id"), col("emb")).collect().head
-      (r.getLong(0), r.getSeq[Double](1).toArray)
-    }
-    val picked = scala.collection.mutable.ArrayBuffer(
-      pick1(base.orderBy("vec_id").limit(1)))
-    while (picked.length < k) {
-      val minD2 = picked.map { case (_, c) =>
-        val cl = array(c.map(lit): _*)
-        dot(col("emb"), col("emb")) - lit(2.0) * dot(col("emb"), cl) +
-          lit(c.map(x => x * x).sum)
-      }.reduce(least(_, _))
-      picked += pick1(base.withColumn("__d2", minD2)
-        .orderBy(col("__d2").desc, col("vec_id")).limit(1))
-    }
-    def scoresOf(cents: Array[Array[Double]]): Column =
-      array(cents.map { c =>
-        val cl = array(c.map(lit): _*)
-        lit(2.0) * dot(col("emb"), cl) - lit(c.map(x => x * x).sum)
-      }: _*)
-    def assigned(cents: Array[Array[Double]]): DataFrame =
-      base.withColumn("__s", scoresOf(cents))
-        .withColumn("cid",
-          expr("array_position(__s, array_max(__s)) - 1").cast("int"))
+    val Lloyd(base, seeds, rounds) = lloyd(corpus, k, iters)
     // J_t = Σ|x|² − Σ max-score (d2 = |x|² − score); Σ|x|² folds once
     val sxx = base.agg(sum(dot(col("emb"), col("emb")))).head.getDouble(0)
-    def inertiaOf(cents: Array[Array[Double]]): Double =
-      sxx - base.agg(sum(array_max(scoresOf(cents)))).head.getDouble(0)
-    var cents: Array[Array[Double]] = picked.map(_._2).toArray
-    val js = scala.collection.mutable.ArrayBuffer(inertiaOf(cents))
-    for (_ <- 1 to iters) {
-      val means = assigned(cents)
-        .select(col("cid"), posexplode(col("emb")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos").agg(avg("v").as("m"))
-        .collect() // bounded: k × dim doubles
-        .groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray }
-      cents = cents.indices.map(i => means.getOrElse(i, cents(i))).toArray
-      js += inertiaOf(cents)
-    }
+    val js = rounds.map(cents =>
+      sxx - base.agg(sum(array_max(scoresOf(cents)))).head.getDouble(0))
     val monotone = (1 until js.length).forall(i =>
       js(i) <= js(i - 1) + 1e-6 * math.max(1.0, math.abs(js(i - 1))))
-    val violations = assigned(cents)
+    val violations = assigned(base, rounds.last)
       .filter(element_at(col("__s"), col("cid") + 1) < array_max(col("__s")))
       .count()
     val nTotal = base.count()
     val mu = base.select(posexplode(col("emb")).as(Seq("pos", "v")))
       .groupBy("pos").agg(avg("v").as("m"))
       .collect().sortBy(_.getInt(0)).map(_.getDouble(1)) // bounded: dim
-    val muL = array(mu.map(lit): _*)
-    val jSingle = base.agg(sum(dot(col("emb"), col("emb"))
-      - lit(2.0) * dot(col("emb"), muL) + lit(mu.map(x => x * x).sum)))
-      .head.getDouble(0)
+    val jSingle = base.agg(sum(dist2(mu))).head.getDouble(0)
     val leSingle = js.last <= jSingle + 1e-6 * math.max(1.0, math.abs(jSingle))
-    picked.toSeq.zipWithIndex.map { case ((vid, _), i) =>
+    seeds.zipWithIndex.map { case ((vid, _), i) =>
       (i.toLong, vid, nTotal, if (monotone) 1L else 0L,
         if (violations == 0L) 1L else 0L, if (leSingle) 1L else 0L)
     }.toDF("cluster_id", "seed_vec_id", "n_total",

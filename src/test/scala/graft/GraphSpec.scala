@@ -127,6 +127,20 @@ class GraphSpec extends SparkTestBase {
     assert(out.toSeq == (1L to 5L).map((_, 4L)).toSeq)
   }
 
+  test("kCore fails loudly when a pendant chain outlasts maxIters") {
+    // triangle 1-2-3 plus the tail 3-4-…-19: at k=2 each round peels
+    // only the tail's current end, so 16 peels + 1 stable round = 17
+    // rounds: past the dozen at which persisted rounds' nested plan
+    // text exhausts the driver heap
+    val tail = (3L until 19L).map(a => (a, a + 1))
+    val edges = (Seq((1L, 2L), (2L, 3L), (1L, 3L)) ++ tail).toDF("u", "v")
+    val e = intercept[IllegalStateException](Graph.kCore(edges, k = 2, maxIters = 16))
+    assert(e.getMessage.contains("16 rounds") && e.getMessage.contains("raise maxIters"))
+    val out = Graph.kCore(edges, k = 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(out.toSeq == Seq((1L, 2L), (2L, 2L), (3L, 2L)))
+  }
+
   test("degreeStats: the 3-path is perfectly disassortative (r = −1)") {
     // P3: every edge joins a degree-1 leaf to the degree-2 center
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
