@@ -474,6 +474,40 @@ class SimilaritySpec extends SparkTestBase {
     assert(pqLit.nonEmpty && pqLit == pqDist)
   }
 
+  test("an under-filled hash-stride sample falls back to the smallest ids (pinned rows)") {
+    // every vec_id here has an ODD md5 stride hash, so no even stride
+    // step ever hits: the pq codebook (step 128/32 = 4), the IVF
+    // centroids (step 128/8 = 16) and the IVF-PQ residual codebook
+    // (step 4) all draw from the smallest-id fallback
+    def strideHash(id: Long): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(s"c$id".getBytes("UTF-8"))
+        .take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
+    val ids = Iterator.from(0).map(_.toLong).filter(strideHash(_) % 2 == 1).take(128).toSeq
+    // unclustered vectors and the narrowest probe/refine settings, so
+    // the rows depend on which vectors the samples took
+    val r = new scala.util.Random(83)
+    val rows = ids.map(id => (id, Array.fill(16)(r.nextGaussian().toFloat)))
+    val e = spark.createDataFrame(rows).toDF("vec_id", "embedding")
+    val hash = conv(substring(md5(concat(lit("c"), col("vec_id").cast("string"))), 1, 8), 16, 10)
+    assert(e.filter(pmod(hash.cast("long"), lit(2L)) === 0).count() == 0)
+    val q = Seq(ids(0), ids(64))
+    val qs = e.filter(col("vec_id").isin(q: _*))
+    def rows4(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2), x.getLong(3))).toSeq
+    val pq = rows4(Similarity.pqTopK(e, qs, 3, refine = 1))
+    val ivf = rows4(Similarity.ivfTopK(e, 3, numCentroids = 8, nprobe = 1)
+      .filter(col("vec_id").isin(q: _*)))
+    val ivfPq = rows4(Similarity.ivfPqTopK(e, qs, 3, numCentroids = 8, nprobe = 1,
+      refine = 1))
+    assert(q == Seq(0L, 122L))
+    assert(pq == Seq((0L, 187L, 0.5905, 1L), (0L, 154L, 0.5313, 2L), (0L, 132L, 0.3347, 3L),
+      (122L, 93L, 0.6915, 1L), (122L, 227L, 0.6381, 2L), (122L, 163L, 0.5672, 3L)))
+    assert(ivf == Seq((0L, 187L, 0.5905, 1L), (0L, 114L, 0.5377, 2L), (0L, 154L, 0.5313, 3L),
+      (122L, 6L, 0.5481, 1L), (122L, 60L, 0.4973, 2L), (122L, 138L, 0.416, 3L)))
+    assert(ivfPq == Seq((0L, 187L, 0.5905, 1L), (0L, 126L, 0.4483, 2L), (0L, 92L, 0.3815, 3L),
+      (122L, 93L, 0.6915, 1L), (122L, 227L, 0.6381, 2L), (122L, 112L, 0.5865, 3L)))
+  }
+
   test("embedding near-dup pairs: intra-cluster only at a high threshold") {
     val r = new scala.util.Random(11)
     val dim = 64
