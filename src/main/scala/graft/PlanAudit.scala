@@ -249,9 +249,9 @@ object PlanAudit {
     // stream_funnel is excluded like the other streaming keys
     "feat_woe", "feat_user_profile",
     // priority SLA + temporal audit (each one fact⋈fact equi-join +
-    // domain fold); ivfpq (probe join over the byte-code index +
-    // candidate re-rank — index build collects eagerly like sim_ivf)
-    "rel_priority_sla", "dq_temporal", "sim_ivfpq_topk",
+    // domain fold); ivfpq and pq (ADC scan over the byte-code index +
+    // candidate re-rank — the codebook collects eagerly like sim_ivf)
+    "rel_priority_sla", "dq_temporal", "sim_ivfpq_topk", "sim_pq_topk",
     // keyphrase (one persisted phrase explode feeding word/phrase folds
     // + phrase-domain score join + TakeOrdered), heaps (row-local
     // points, one moment agg); stream_hll_distinct excluded (streaming)

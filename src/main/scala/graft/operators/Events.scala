@@ -713,7 +713,7 @@ object Events {
     * shuffle, user-dimension-sized); the ranked cumulative sum is
     * [[Rank.rankedCumSum]]'s two-level scan — activity-bucket cells
     * (−(n DIV 16), ascending cells ⇔ descending activity), bounded
-    * per-cell sorts, triangular-join prefix over the bucket grid — so
+    * per-cell sorts, running-sum prefix over the bucket grid — so
     * no single task ever sees the whole user dimension; the tier
     * lookup joins a tiers-sized literal frame against exactly |tiers|
     * ranks. */
@@ -777,10 +777,10 @@ object Events {
     * dimension-sized aggregate to session bounds — and the sweep's
     * running sum is a two-level prefix scan CHUNKED BY DAY (the
     * [[watermarkAudit]] shape): the cumulative-delta window runs
-    * partitioned by day (bounded sorts), and the cross-day carry is a
-    * triangular join over the DAY-TOTAL table (calendar-bounded, so
-    * broadcastable at any event volume — and being a join, not a
-    * window, the whole plan runs with zero unpartitioned windows).
+    * partitioned by day (bounded sorts), and the cross-day carry is
+    * [[Rank.exclusivePrefix]]'s running sum over the DAY-TOTAL table
+    * (calendar-bounded, so broadcastable at any event volume; no
+    * window over data rows is unpartitioned).
     * Ties can't straddle a chunk boundary (equal t ⇒ equal day), so
     * the peer-group RANGE semantics survive the split: distributed
     * scan ≡ the oracle's one sequential window. */
@@ -794,15 +794,13 @@ object Events {
         struct((col("e") + 1L).as("t"), lit(-1L).as("d")))).as("x"))
       .select(col("x.t").as("t"), col("x.d").as("d"))
       .withColumn("day", date_format(timestamp_micros(col("t")), "yyyy-MM-dd"))
+      .withColumn("__grp", lit(1L))
       .persistTracked() // session-dimension-sized; day totals + sweep both read it
-    val dayTotals = deltas.groupBy("day").agg(sum("d").as("dsum"))
-    // carry into each day = Σ of ALL prior days' deltas (triangular
-    // join over the day domain — days with no transitions have no
-    // deltas and contribute 0 by absence)
-    val carry = dayTotals.as("a")
-      .join(broadcast(dayTotals.as("p")), col("p.day") < col("a.day"), "left")
-      .groupBy(col("a.day").as("day"))
-      .agg(coalesce(sum(col("p.dsum")), lit(0L)).as("carry"))
+    // carry into each day = Σ of ALL prior days' deltas (days with no
+    // transitions have no deltas and contribute 0 by absence)
+    val carry = Rank.exclusivePrefix(deltas.groupBy(col("__grp"), col("day").as("__cell"))
+        .agg(sum("d").as("dsum")), "dsum" -> "carry")
+      .select(col("__cell").as("day"), col("carry"))
     val inDay = Window.partitionBy("day").orderBy(col("t"), col("d"))
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     deltas.join(broadcast(carry), "day")

@@ -15,12 +15,11 @@ import graft.Caches._
   * per-cell counts, compute each cell's prefix offset, broadcast the
   * offsets back, and row_number WITHIN each cell — global_rank =
   * cell_offset + local_rank is exact while every shuffle stays
-  * value-partitioned. The cell-grid prefix itself is a TRIANGULAR
-  * BROADCAST JOIN (Σ over strictly-smaller cells), not a window: the
-  * grid is value-domain-bounded (price cells, day cells, count
-  * buckets), so cells² stays trivially small and the whole plan runs
-  * with ZERO unpartitioned windows — `WindowExec: No Partition
-  * Defined` never fires.
+  * value-partitioned. The cell-grid prefix itself is one exclusive
+  * running-sum window over the CELL TABLE ([[exclusivePrefix]]; Σ over
+  * strictly-smaller cells): the grid is value-domain-bounded (price
+  * cells, day cells, count buckets), and no window over data rows is
+  * unpartitioned — `WindowExec: No Partition Defined` never fires.
   *
   * Correctness contract: `cell` must be monotone NON-DECREASING along
   * `order` (rows in a smaller cell sort strictly before rows in a
@@ -28,21 +27,21 @@ import graft.Caches._
   * the same contract the single-window form needs for determinism. */
 object Rank {
 
-  /** Per-cell exclusive prefix offsets of (count, measure) plus the
-    * 1-row grand total — both built from ONE cell-domain-sized count
-    * table (persisted: it is tiny and read twice). */
-  private def offsets(tagged: DataFrame,
-      measure: Column): (DataFrame, DataFrame) = {
-    val counts = tagged.groupBy("__cell")
-      .agg(count(lit(1)).as("__cnt"), sum(measure).as("__msum"))
-      .persistTracked()
-    val off = counts.as("a")
-      .join(broadcast(counts.as("p")), col("p.__cell") < col("a.__cell"), "left")
-      .groupBy(col("a.__cell").as("__cell"))
-      .agg(coalesce(sum(col("p.__cnt")), lit(0L)).as("__off"),
-        coalesce(sum(col("p.__msum")), lit(0L)).as("__moff"))
-    val tot = counts.agg(sum("__cnt").as("__n_total"))
-    (off, tot)
+  /** Exclusive running sums over a cell table (one row per (__grp,
+    * __cell)): for each (column, out) pair, `out` = Σ column over the
+    * strictly smaller cells of the same __grp, 0 for the first cell.
+    * One running-sum window partitioned by __grp over a
+    * value-domain-bounded table. Ungrouped callers tag a constant
+    * __grp, as [[ntileExact]] does, BEFORE their persist: a constant
+    * the optimizer can see is folded out of the partition spec. Every
+    * summed column is BIGINT, so the prefix is exact whatever the
+    * summation order. */
+  private[operators] def exclusivePrefix(cells: DataFrame,
+      sums: (String, String)*): DataFrame = {
+    val before = Window.partitionBy("__grp").orderBy("__cell") // bounded: the cell table
+      .rowsBetween(Window.unboundedPreceding, -1)
+    cells.select(col("*") +: sums.map { case (c, out) =>
+      coalesce(sum(c).over(before), lit(0L)).as(out) }: _*)
   }
 
   /** Adds `rkName` = exact global row_number along `order` and
@@ -54,14 +53,18 @@ object Rank {
     // persist the tagged input: the offsets aggregate AND the main
     // join both read it, and CHAINED rank passes (the RFM triple)
     // would otherwise replay each other's full plans multiplicatively
-    val tagged = df.withColumn("__cell", cell).persistTracked()
-    val (off, _) = offsets(tagged, measure)
+    val tagged = df.withColumn("__grp", lit(1L)).withColumn("__cell", cell)
+      .persistTracked()
+    val off = exclusivePrefix(tagged.groupBy("__grp", "__cell")
+        .agg(count(lit(1)).as("__cnt"), sum(measure).as("__msum")),
+      "__cnt" -> "__off", "__msum" -> "__moff")
+      .drop("__cnt", "__msum")
     val wIn = Window.partitionBy("__cell").orderBy(order: _*)
-    tagged.join(broadcast(off), Seq("__cell"))
+    tagged.join(broadcast(off), Seq("__grp", "__cell"))
       .withColumn(rkName, col("__off") + row_number().over(wIn))
       .withColumn(cumName, col("__moff") + sum(measure).over(
         wIn.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("__cell", "__off", "__moff")
+      .drop("__grp", "__cell", "__off", "__moff")
   }
 
   /** Adds `outName` = exact NTILE(`b`) along `order` — bit-identical
@@ -82,18 +85,13 @@ object Rank {
       order: Seq[Column], b: Int, outName: String): DataFrame = {
     val tagged = df.withColumn("__grp", grp).withColumn("__cell", cell)
       .persistTracked() // see rankedCumSum
-    val counts = tagged.groupBy("__grp", "__cell")
-      .agg(count(lit(1)).as("__cnt")).persistTracked()
-    val off = counts.as("a")
-      .join(broadcast(counts.as("p")),
-        col("p.__grp") === col("a.__grp") && col("p.__cell") < col("a.__cell"),
-        "left")
-      .groupBy(col("a.__grp").as("__grp"), col("a.__cell").as("__cell"))
-      .agg(coalesce(sum(col("p.__cnt")), lit(0L)).as("__off"))
-    val tot = counts.groupBy("__grp").agg(sum("__cnt").as("__n_total"))
+    val off = exclusivePrefix(tagged.groupBy("__grp", "__cell")
+        .agg(count(lit(1)).as("__cnt")), "__cnt" -> "__off")
+      .withColumn("__n_total", sum("__cnt").over(
+        Window.partitionBy("__grp"))) // bounded: the cell table
+      .drop("__cnt")
     val wIn = Window.partitionBy("__grp", "__cell").orderBy(order: _*)
     tagged.join(broadcast(off), Seq("__grp", "__cell"))
-      .join(broadcast(tot), Seq("__grp"))
       .withColumn("__rk", col("__off") + row_number().over(wIn))
       .withColumn("__big", expr(s"__n_total DIV $b"))
       .withColumn("__rem", expr(s"__n_total % $b"))

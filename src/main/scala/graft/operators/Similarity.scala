@@ -146,76 +146,102 @@ object Similarity {
     * one-byte codes per vector (64-dim float32 → 8 bytes, 32×), each
     * code naming the nearest codeword of that subspace's codebook.
     * Codebooks come from the IVF-style deterministic hash-stride sample
-    * (bounded collect: m·codebookSize·(dim/m) doubles); encoding is
-    * argmin-L2 via the 2·x·c − |c|² expansion (argmax of dot-based
-    * scores — the array_position idiom, row-local, one map stage).
-    * Queries (a bounded broadcast set) score against the RECONSTRUCTED
-    * codewords — flatten(codeword(code_j)) rebuilt row-locally from
-    * broadcast literals, so approximate scoring scans only the
+    * ([[strideSample]], bounded collect: m·codebookSize·(dim/m)
+    * doubles); encoding and reconstruction are [[pqCodes]] and
+    * [[pqRecon]]. Queries (a bounded broadcast set) score against the
+    * RECONSTRUCTED codewords, so approximate scoring scans only the
     * byte-code index — then the top `k·refine` candidates per query are
-    * re-ranked with TRUE embeddings (standard ADC + re-rank). Shuffle =
-    * the candidate top-k only; nothing all-pairs, nothing float stored.
+    * re-ranked with TRUE embeddings ([[refineExact]], standard ADC +
+    * re-rank). Shuffle = the candidate top-k only; nothing all-pairs,
+    * nothing float stored.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, m: Int = 8,
              codebookSize: Int = 32, refine: Int = 8): DataFrame = {
-    import org.apache.spark.sql.Row
-    val dim = corpus.select(size(col("embedding"))).head.getInt(0)
-    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val d0 = dim / m
-    val n = corpus.count()
-    val step = math.max(1L, n / codebookSize)
-    def firstK(df: DataFrame): Array[Array[Double]] = df
-      .orderBy("vec_id").limit(codebookSize)
-      .select(col("embedding").cast("array<double>"))
-      .collect().map((r: Row) => r.getSeq[Double](0).toArray)
-    val sampled = firstK(corpus.filter(strideHit(col("vec_id"), step)))
-    val sample: Array[Array[Double]] =
-      if (sampled.length >= math.max(1, (codebookSize + 1) / 2)) sampled
-      else firstK(corpus)
-    // codebook[j][t] = subspace-j slice of sample vector t
-    val cb: Array[Array[Array[Double]]] =
-      Array.tabulate(sample.length)(t => sample(t).grouped(d0).toArray).transpose
-    // row-local encoding: per subspace, argmin-L2 over the codewords
-    def codeExpr(j: Int): Column = {
-      val sub = expr(s"CAST(slice(embedding, ${j * d0 + 1}, $d0) AS array<double>)")
-      val scores = array(cb(j).map { cw =>
-        val cwLit = array(cw.map(lit): _*)
-        dot(sub, cwLit) * 2.0 - lit(cw.map(x => x * x).sum)
-      }: _*)
-      (array_position(scores, array_max(scores)) - 1).cast("tinyint")
-    }
+    val cb = pqCodebook(strideSample(corpus, "embedding", codebookSize,
+      coarse(corpus).n, (codebookSize + 1) / 2), m)
     val codes = corpus
-      .select(col("vec_id"), array((0 until m).map(codeExpr): _*).as("codes"))
+      .select(col("vec_id"), pqCodes(cb, col("embedding").cast("array<double>")).as("codes"))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the compressed index is the only thing the approximate pass scans:
-    // reconstruct each vector from its codewords row-locally
-    val recon = flatten(array((0 until m).map { j =>
-      val cbLit = array(cb(j).map(cw => array(cw.map(lit): _*)): _*)
-      element_at(cbLit, element_at(col("codes"), j + 1).cast("int") + 1)
-    }: _*))
-    val q = withNorm(
-      queries.select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qemb")),
-      "qemb", "qnorm")
+    val q = queryVectors(queries)
     val approx = codes
-      .select(col("vec_id").as("nid"), recon.as("remb"))
+      .select(col("vec_id").as("nid"), pqRecon(cb, col("codes")).as("remb"))
       .crossJoin(broadcast(q))
       .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), col("qemb"), col("qnorm"),
+      .select(col("qid"), col("nid"),
         (dot(col("qemb"), col("remb")) /
-          (col("qnorm") * sqrt(dot(col("remb"), col("remb"))))).as("asim"))
-    val cands = rankTopK(
-      approx.select(col("qid"), col("nid"), col("asim").as("sim")), k * refine)
+          (col("qnorm") * sqrt(dot(col("remb"), col("remb"))))).as("sim"))
+    refineExact(approx, k * refine, corpus, q, k)
+  }
+
+  /** The bounded query set as (qid, qemb double[], qnorm). */
+  private def queryVectors(queries: DataFrame): DataFrame = withNorm(
+    queries.select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qemb")),
+    "qemb", "qnorm")
+
+  /** Re-rank EXACTLY: the top `kRefine` (qid, nid) of an approximate
+    * (qid, nid, sim) stream score again against the true embeddings —
+    * candidates only, never the full corpus — and the top `k` of those
+    * are the answer. `q` carries (qid, qemb, qnorm). */
+  private def refineExact(approx: DataFrame, kRefine: Int, corpus: DataFrame,
+      q: DataFrame, k: Int): DataFrame = {
+    val cands = rankTopK(approx, kRefine)
       .select(col("vec_id").as("qid"), col("neighbor_id").as("nid"))
-    // exact re-rank touches candidates only
     val c = withNorm(corpus.select(col("vec_id").as("nid"),
       col("embedding").as("nemb")), "nemb", "nnorm")
-    val exact = cands
-      .join(c, "nid")
-      .join(broadcast(q), "qid")
+    val exact = cands.join(c, "nid")
+      .join(broadcast(q.select(col("qid"), col("qemb"), col("qnorm"))), "qid")
       .select(col("qid"), col("nid"),
         cosinePrenormed(dot(col("qemb"), col("nemb")), col("qnorm"), col("nnorm")).as("sim"))
     rankTopK(exact, k)
   }
+
+  /** Up to `k` rows of `column` (as doubles) from the deterministic
+    * id-HASH stride over vec_id (step n/k; robust to sparse/structured
+    * vec_ids), smallest ids first — a total order under the limit per
+    * the repo's determinism rule. Falls back to the `k` smallest ids
+    * unless the stride kept at least `minKeep` rows: accepting a
+    * handful (e.g. 5 of 100 centroids) would silently gut recall. Each
+    * caller keeps its own threshold; the oracles replay them. */
+  private def strideSample(df: DataFrame, column: String, k: Int, n: Long,
+      minKeep: Int): Array[Array[Double]] = {
+    def firstK(d: DataFrame): Array[Array[Double]] = d
+      .orderBy("vec_id").limit(k)
+      .select(col(column).cast("array<double>"))
+      .collect().map(_.getSeq[Double](0).toArray)
+    val sampled = firstK(df.filter(strideHit(col("vec_id"), math.max(1L, n / k))))
+    if (sampled.length >= math.max(1, minKeep)) sampled else firstK(df)
+  }
+
+  /** PQ codebook from a sample: codebook(j)(t) = the subspace-j slice
+    * of sample vector t. The dimension comes from the sample itself. */
+  private def pqCodebook(sample: Array[Array[Double]],
+      m: Int): Array[Array[Array[Double]]] = {
+    val dim = sample.head.length
+    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
+    sample.map(_.grouped(dim / m).toArray).transpose
+  }
+
+  /** PQ encoder, row-local: per subspace j, the argmax of
+    * 2·⟨x_j, cw⟩ − |cw|² over the codewords (≡ argmin-L2; the
+    * array_position idiom, one map stage) as a tinyint code. */
+  private def pqCodes(cb: Array[Array[Array[Double]]], vec: Column): Column = {
+    val d0 = cb.head.head.length
+    array(cb.indices.map { j =>
+      val sub = slice(vec, j * d0 + 1, d0)
+      val scores = array(cb(j).map { cw =>
+        dot(sub, array(cw.map(lit): _*)) * 2.0 - lit(cw.map(x => x * x).sum)
+      }: _*)
+      (array_position(scores, array_max(scores)) - 1).cast("tinyint")
+    }: _*)
+  }
+
+  /** PQ reconstruction, row-local: each vector rebuilt from its
+    * codewords, flatten(codeword_j(code_j)) over broadcast literals. */
+  private def pqRecon(cb: Array[Array[Array[Double]]], codes: Column): Column =
+    flatten(array(cb.indices.map { j =>
+      val cbLit = array(cb(j).map(cw => array(cw.map(lit): _*)): _*)
+      element_at(cbLit, element_at(codes, j + 1).cast("int") + 1)
+    }: _*))
 
   /** Embedding-cosine near-duplicate pairs: LSH-bucketed candidates
     * filtered to cosine ≥ threshold, each unordered pair once (qid < nid).
@@ -230,14 +256,6 @@ object Similarity {
         Num.pround(col("sim"), 4).as("sim"))
       .orderBy(col("sim").desc, col("vec_a"), col("vec_b"))
 
-  /** IVF (inverted-file) ANN — the coarse-quantizer alternative to
-    * hyperplane LSH. Centroids are a deterministic sample of the corpus
-    * (every N/numCentroids-th vector by vec_id rank); each vector is
-    * assigned to its single nearest centroid (the inverted lists), and a
-    * query probes its `nprobe` nearest centroids' lists. The centroid set
-    * is O(√N) by construction, so collecting it to the driver for
-    * broadcast is bounded (32k centroids × 64 dims ≈ 8 MB at 1B vectors).
-    * Shuffles on centroid_id only — list sizes, not all-pairs. */
   /** Expression-tree ceiling for inlining a codebook as literals: a
     * c-wide literal centroid array costs O(c·dim) Catalyst nodes PER
     * CONSUMER — fine at gate scale (c = O(√N) ≈ hundreds), but past a
@@ -245,16 +263,28 @@ object Similarity {
     * trees fall out of whole-stage codegen (the r11 LshCanon lesson).
     * Above the ceiling the codebook travels as a broadcast DataFrame
     * instead ([[topCentroidSlices]]'s distributed strategy). */
-  // Default 128, MEASURED r15 (ProbeAnnIndex, build_write_s literal vs
+  // 128, MEASURED r15 (ProbeAnnIndex, build_write_s literal vs
   // distributed): c=140 → 7.8 vs 9.3 s (literal wins small), c=243 →
   // 29.5 vs 11.0 s (2.7×), c=775 → 910 vs 21 s (42× — the giant literal
   // projection had fallen out of codegen and ran INTERPRETED long before
   // the old 1024 ceiling). Gate-scale c (≈22 at sf0.01) stays literal,
   // so every oracle plan is unchanged; values are identical either way
-  // (parity specs). Env knob for cluster tuning/probes.
-  def centroidCeilingFrom(env: Map[String, String]): Long =
-    graft.Sessions.knob(env, "SPARK_GRAFT_CENTROID_CEILING", 128, min = 0)
-  private[graft] val literalCentroidCeiling: Long = centroidCeilingFrom(sys.env)
+  // (parity specs).
+  private val LiteralCentroidCeiling = 128
+
+  /** The one strategy decision, from the centroid count: true when the
+    * coarse codebook is too wide to inline as literals. */
+  private def distributedFor(cents: Array[Array[Double]]): Boolean =
+    cents.length > LiteralCentroidCeiling
+
+  /** The family's one sizing job: the corpus row count `n` (every
+    * stride step derives from it) and the coarse centroid count `c`,
+    * `numCentroids` when given, else max(4, √n). */
+  private final case class Coarse(n: Long, c: Int)
+  private def coarse(corpus: DataFrame, numCentroids: Int = -1): Coarse = {
+    val n = corpus.count()
+    Coarse(n, if (numCentroids > 0) numCentroids else math.max(4, math.sqrt(n.toDouble).toInt))
+  }
 
   /** The codebook as a broadcastable dimension: (ci, cemb, cnorm,
     * cnorm2). Norms are computed driver-side with the same fold the
@@ -271,12 +301,12 @@ object Similarity {
   /** Per-vector top-`nprobe` centroid slice `__top` = sorted array of
     * struct(ns = −cosine, ci), shared by IVF assignment (entry 1 ⇔
     * first-max with (−s, ci) tie-break) and probing (the whole slice).
-    * Two physical strategies, value-identical (parity spec):
-    *  - literal (c ≤ [[literalCentroidCeiling]]): codebook inlined as a
-    *    literal array — zero shuffle, scores computed in the row
-    *    projection;
-    *  - distributed (c above the ceiling): codebook broadcast as a
-    *    DataFrame; the (vector × centroid) scored stream is pruned by
+    * Two physical strategies, value-identical (parity spec), chosen by
+    * [[distributedFor]]:
+    *  - literal: codebook inlined as a literal array — zero shuffle,
+    *    scores computed in the row projection;
+    *  - distributed: codebook broadcast as a DataFrame; the
+    *    (vector × centroid) scored stream is pruned by
     *    [[org.apache.spark.sql.graftext.GroupTopK]]'s bounded map-side
     *    heaps (at most nprobe rows per vector per partition shuffle),
     *    folded to the slice, and joined back on `keyCol`. No
@@ -294,7 +324,7 @@ object Similarity {
         (s, i) => struct((-s).as("ns"), i.as("ci")))), lit(1), lit(nprobe)))
     } else {
       val cdf = centroidFrame(df.sparkSession, cents)
-      // the scored stream does c ≥ 1024 dots PER INPUT ROW, so its
+      // the scored stream does c > 128 dots PER INPUT ROW, so its
       // parallelism must track the session, not the scan (a 300 MB
       // probe corpus reads as ~3 input splits — the x600 probe ran the
       // c=1095 crossJoin on 3 of 32 cores before this): hash-repartition
@@ -317,39 +347,29 @@ object Similarity {
       df.join(slices, keyCol)
     }
 
+  /** IVF (inverted-file) ANN — the coarse-quantizer alternative to
+    * hyperplane LSH. Centroids are a deterministic sample of the corpus
+    * ([[strideSample]]); each vector is assigned to its single nearest
+    * centroid (the inverted lists), and a query probes its `nprobe`
+    * nearest centroids' lists. The centroid set is O(√N) by
+    * construction, so collecting it to the driver for broadcast is
+    * bounded (32k centroids × 64 dims ≈ 8 MB at 1B vectors). Shuffles
+    * on centroid_id only — list sizes, not all-pairs. */
   def ivfTopK(corpus: DataFrame, k: Int, numCentroids: Int = -1,
-      nprobe: Int = 4): DataFrame = {
-    val n = corpus.count()
-    val c = if (numCentroids > 0) numCentroids else math.max(4, math.sqrt(n.toDouble).toInt)
-    ivfTopKImpl(corpus, k, c, nprobe, n, distributed = c > literalCentroidCeiling)
-  }
+      nprobe: Int = 4): DataFrame =
+    ivfTopKFromScored(ivfScoredSlices(corpus, numCentroids, nprobe), k, nprobe)
 
-  private[graft] def ivfTopKImpl(corpus: DataFrame, k: Int, c: Int,
-      nprobe: Int, n: Long, distributed: Boolean): DataFrame =
-    ivfTopKFromScored(ivfScoredSlices(corpus, c, nprobe, n, distributed), k, nprobe)
-
-  /** The expensive half of [[ivfTopKImpl]] — centroid selection + the
+  /** The expensive half of [[ivfTopK]] — centroid selection + the
     * corpus × c scoring pass that keeps each row's top-`nprobe`
     * (ns, ci) slice, persisted. Split out (r16) so [[nprobeSweep]] can
     * score ONCE at max(nprobes) and serve every arm from prefixes of
     * the same slice instead of re-running the scan per arm. */
-  private[graft] def ivfScoredSlices(corpus: DataFrame, c: Int,
-      nprobe: Int, n: Long, distributed: Boolean): DataFrame = {
-    import org.apache.spark.sql.Row
-    val step = math.max(1L, n / c)
-    // deterministic id-HASH stride (robust to sparse/structured vec_ids),
-    // with a total order under the limit per the repo's determinism rule;
-    // fall back to the smallest ids if the hash stride under-samples
-    def firstK(df: DataFrame): Array[Array[Double]] = df
-      .orderBy("vec_id").limit(c)
-      .select(col("embedding").cast("array<double>"))
-      .collect().map((r: Row) => r.getSeq[Double](0).toArray)
-    val sampled = firstK(corpus.filter(strideHit(col("vec_id"), step)))
+  private def ivfScoredSlices(corpus: DataFrame, numCentroids: Int,
+      nprobe: Int): DataFrame = {
+    val Coarse(n, c) = coarse(corpus, numCentroids)
     // fall back to the smallest ids unless the hash stride produced at
-    // least half the requested centroids — accepting a handful (e.g. 5 of
-    // 100) would silently gut recall
-    val cents: Array[Array[Double]] =
-      if (sampled.length >= math.max(1, (c + 1) / 2)) sampled else firstK(corpus)
+    // least half the requested centroids
+    val cents = strideSample(corpus, "embedding", c, n, (c + 1) / 2)
     // Persist only the per-row TOP-nprobe (ns, ci) slice, never the full
     // c-wide score array: c = O(√N), so a cached score array per row is
     // O(N^1.5) storage bytes — the r11 x300 probe found exactly that
@@ -360,7 +380,7 @@ object Similarity {
     // array_position, same tie-break, so the DuckDB oracle is
     // unchanged), probes are the whole slice.
     topCentroidSlices(withNorm(corpus, "embedding", "norm"),
-      "vec_id", "embedding", "norm", cents, nprobe, distributed)
+      "vec_id", "embedding", "norm", cents, nprobe, distributedFor(cents))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
@@ -369,7 +389,7 @@ object Similarity {
     * built at nprobe' ≥ nprobe this is exactly the top-nprobe set
     * (the slice is sorted by (ns, ci)), so an arm served from a wider
     * shared slice equals the arm run standalone. */
-  private[graft] def ivfTopKFromScored(scored: DataFrame, k: Int,
+  private def ivfTopKFromScored(scored: DataFrame, k: Int,
       nprobe: Int): DataFrame = {
     val indexed = scored.select(col("vec_id"), col("embedding"), col("norm"),
       element_at(col("__top"), 1).getField("ci").cast("int").as("centroid_id"))
@@ -478,20 +498,9 @@ object Similarity {
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       numCentroids: Int = -1, nprobe: Int = 4, m: Int = 8,
-      codebookSize: Int = 32, refine: Int = 8): DataFrame = {
-    val n = corpus.count()
-    val c = if (numCentroids > 0) numCentroids
-      else math.max(4, math.sqrt(n.toDouble).toInt)
-    ivfPqTopKImpl(corpus, queries, k, c, nprobe, m, codebookSize, refine, n,
-      distributed = c > literalCentroidCeiling)
-  }
-
-  private[graft] def ivfPqTopKImpl(corpus: DataFrame, queries: DataFrame,
-      k: Int, c: Int, nprobe: Int, m: Int, codebookSize: Int, refine: Int,
-      n: Long, distributed: Boolean): DataFrame = {
-    val idx = buildIvfPqIndexImpl(corpus, c, m, codebookSize, n, distributed)
-    queryIndex(idx, corpus, queries, k, nprobe, refine)
-  }
+      codebookSize: Int = 32, refine: Int = 8): DataFrame =
+    queryIndex(buildIvfPqIndex(corpus, numCentroids, m, codebookSize),
+      corpus, queries, k, nprobe, refine)
 
   /** A FROZEN IVF-PQ model: the driver-trained coarse centroids and
     * per-subspace residual codebooks — everything [[encodeAgainst]]
@@ -500,24 +509,18 @@ object Similarity {
     * as one small parquet and broadcasts/inlines exactly like the
     * inline faces' literals. */
   final case class IvfPqModel(cents: Array[Array[Double]],
-      cb: Array[Array[Array[Double]]]) {
-    def dim: Int = cents.head.length
-    def m: Int = cb.length
-    def codebookSize: Int = cb.head.length
-    def subDim: Int = dim / m
-    def distributed: Boolean = cents.length > literalCentroidCeiling
-  }
+      cb: Array[Array[Array[Double]]])
 
   /** A built index: the frozen model + the (vec_id, centroid_id, codes)
     * table — the 4+m bytes/vector artifact a serving pipeline stores. */
   final case class IvfPqIndex(model: IvfPqModel, codes: DataFrame)
 
   /** Assigned-centroid vector/|c|² lookup for rows carrying
-    * `centroid_id`: literal element_at below the ceiling, broadcast
-    * dimension join above it — the same doubles either way
-    * (centroidFrame computes the norms with the identical driver-side
-    * fold the literals use). */
-  private def withCentVec(cents: Array[Array[Double]], distributed: Boolean)
+    * `centroid_id`: literal element_at, or (distributed) a broadcast
+    * dimension join — the same doubles either way (centroidFrame
+    * computes the norms with the identical driver-side fold the
+    * literals use). */
+  private[graft] def withCentVec(cents: Array[Array[Double]], distributed: Boolean)
       (df: DataFrame): DataFrame =
     if (!distributed) {
       val centsLit = array(cents.map(cw => array(cw.map(lit): _*)): _*)
@@ -532,8 +535,9 @@ object Similarity {
   /** Coarse assignment + residual of each vector against the FROZEN
     * centroids — entry 1 of the shared top-slice (first-max with
     * (−s, ci) tie-break ⇔ the oracle's row_number ORDER BY s DESC, ci). */
-  private def residualsFor(cents: Array[Array[Double]], distributed: Boolean,
-      vectors: DataFrame): DataFrame =
+  private def residualsFor(cents: Array[Array[Double]],
+      vectors: DataFrame): DataFrame = {
+    val distributed = distributedFor(cents)
     withCentVec(cents, distributed)(
       topCentroidSlices(withNorm(vectors, "embedding", "norm"),
         "vec_id", "embedding", "norm", cents, 1, distributed)
@@ -542,22 +546,12 @@ object Similarity {
       .select(col("vec_id"), col("centroid_id"),
         zip_with(col("embedding").cast("array<double>"), col("__cemb"),
           (a, b) => a - b).as("resid"))
-
-  /** PQ-encode a residual table against the FROZEN codebooks: per
-    * subspace, the argmax of 2·⟨r_j, cw⟩ − |cw|² (≡ nearest codeword). */
-  private def codesFor(model: IvfPqModel, resDf: DataFrame): DataFrame = {
-    val d0 = model.subDim
-    def codeExpr(j: Int): Column = {
-      val sub = expr(s"slice(resid, ${j * d0 + 1}, $d0)")
-      val scores = array(model.cb(j).map { cw =>
-        val cwLit = array(cw.map(lit): _*)
-        dot(sub, cwLit) * 2.0 - lit(cw.map(x => x * x).sum)
-      }: _*)
-      (array_position(scores, array_max(scores)) - 1).cast("tinyint")
-    }
-    resDf.select(col("vec_id"), col("centroid_id"),
-      array((0 until model.m).map(codeExpr): _*).as("codes"))
   }
+
+  /** PQ-encode a residual table against the FROZEN codebooks. */
+  private def codesFor(model: IvfPqModel, resDf: DataFrame): DataFrame =
+    resDf.select(col("vec_id"), col("centroid_id"),
+      pqCodes(model.cb, col("resid")).as("codes"))
 
   /** Encode NEW vectors against a frozen model — the incremental-append
     * path (today's crawl joins the index without a rebuild): coarse
@@ -565,57 +559,27 @@ object Similarity {
     * so this is exactly the build-time encode arithmetic re-run on the
     * increment; no training, no collect beyond the model already held. */
   def encodeAgainst(model: IvfPqModel, vectors: DataFrame): DataFrame =
-    codesFor(model, residualsFor(model.cents, model.distributed, vectors))
+    codesFor(model, residualsFor(model.cents, vectors))
 
   def buildIvfPqIndex(corpus: DataFrame, numCentroids: Int = -1,
       m: Int = 8, codebookSize: Int = 32): IvfPqIndex = {
-    val n = corpus.count()
-    val c = if (numCentroids > 0) numCentroids
-      else math.max(4, math.sqrt(n.toDouble).toInt)
-    buildIvfPqIndexImpl(corpus, c, m, codebookSize, n,
-      distributed = c > literalCentroidCeiling)
-  }
-
-  private[graft] def buildIvfPqIndexImpl(corpus: DataFrame, c: Int, m: Int,
-      codebookSize: Int, n: Long, distributed: Boolean): IvfPqIndex = {
-    import org.apache.spark.sql.Row
-    val dim = corpus.select(size(col("embedding"))).head.getInt(0)
-    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val d0 = dim / m
-    def firstK(df: DataFrame, kk: Int, emb: String): Array[Array[Double]] = df
-      .orderBy("vec_id").limit(kk)
-      .select(col(emb).cast("array<double>"))
-      .collect().map((r: Row) => r.getSeq[Double](0).toArray)
+    val Coarse(n, c) = coarse(corpus, numCentroids)
     // train the coarse quantizer on a bounded hash-stride sample, the
     // FAISS recipe: raw sampled VECTORS as centroids leave any cluster
     // the sample missed with huge residuals the PQ codebook cannot
     // encode (measured: recall 0.74 → 1.0 on the planted-cluster spec);
     // Gonzalez + Lloyd on the driver-side sample covers every
     // well-separated region. Sample is 8c (≥512) vectors — the TRAINING
-    // collect stays O(√N)-bounded; the ASSIGNMENT side's former
-    // expression-tree ceiling (c-wide literals) is gone since r12:
-    // above literalCentroidCeiling every centroid lookup runs through
-    // the broadcast dimension join (topCentroidSlices / withCentVec).
+    // collect stays O(√N)-bounded; above the literal ceiling every
+    // centroid lookup runs through the broadcast dimension join
+    // (topCentroidSlices / withCentVec).
     val sampleSize = math.max(8 * c, 512)
-    val stepS = math.max(1L, n / sampleSize)
-    val tsample = firstK(corpus.filter(
-      strideHit(col("vec_id"), stepS)), sampleSize, "embedding")
-    val train = if (tsample.length >= math.max(1, (sampleSize + 1) / 4)) tsample
-      else firstK(corpus, sampleSize, "embedding")
+    val train = strideSample(corpus, "embedding", sampleSize, n, (sampleSize + 1) / 4)
     val cents = trainCoarse(train, math.min(c, train.length), 5)
-    val resDf = residualsFor(cents, distributed, corpus)
+    val resDf = residualsFor(cents, corpus)
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stepR = math.max(1L, n / codebookSize)
-    def residSample(df: DataFrame): Array[Array[Double]] = df
-      .orderBy("vec_id").limit(codebookSize)
-      .select(col("resid")).collect()
-      .map((r: Row) => r.getSeq[Double](0).toArray)
-    val rs = residSample(
-      resDf.filter(strideHit(col("vec_id"), stepR)))
-    val rsample = if (rs.length >= math.max(1, (codebookSize + 1) / 2)) rs
-      else residSample(resDf)
-    val cb: Array[Array[Array[Double]]] =
-      Array.tabulate(rsample.length)(t => rsample(t).grouped(d0).toArray).transpose
+    val cb = pqCodebook(
+      strideSample(resDf, "resid", codebookSize, n, (codebookSize + 1) / 2), m)
     val model = IvfPqModel(cents, cb)
     val codes = codesFor(model, resDf)
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -637,21 +601,16 @@ object Similarity {
   def queryIndex(index: IvfPqIndex, corpus: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int = 4, refine: Int = 8): DataFrame = {
     val model = index.model
-    val m = model.m
-    val q0 = topCentroidSlices(
-      withNorm(queries.select(col("vec_id").as("qid"),
-        col("embedding").cast("array<double>").as("qemb")), "qemb", "qnorm"),
-      "qid", "qemb", "qnorm", model.cents, nprobe, model.distributed)
+    val distributed = distributedFor(model.cents)
+    val q0 = topCentroidSlices(queryVectors(queries),
+      "qid", "qemb", "qnorm", model.cents, nprobe, distributed)
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probed = q0.select(col("qid"), col("qemb"), col("qnorm"),
       explode(col("__top")).as("p"))
       .select(col("qid"), col("qemb"), col("qnorm"),
         col("p.ci").as("centroid_id"))
-    val rrec = flatten(array((0 until m).map { j =>
-      val cbLit = array(model.cb(j).map(cw => array(cw.map(lit): _*)): _*)
-      element_at(cbLit, element_at(col("codes"), j + 1).cast("int") + 1)
-    }: _*))
-    val cand = withCentVec(model.cents, model.distributed)(
+    val rrec = pqRecon(model.cb, col("codes"))
+    val cand = withCentVec(model.cents, distributed)(
       index.codes.join(broadcast(probed), "centroid_id"))
       .filter(col("qid") =!= col("vec_id"))
       .withColumn("__cdot", dot(col("__cemb"), rrec))
@@ -660,16 +619,7 @@ object Similarity {
           / (col("qnorm") * sqrt(col("__cnorm2")
             + lit(2.0) * col("__cdot") + dot(rrec, rrec)))).as("sim"))
       .groupBy("qid", "nid").agg(max("sim").as("sim"))
-    val cands = rankTopK(cand, k * refine)
-      .select(col("vec_id").as("qid"), col("neighbor_id").as("nid"))
-    val cfull = withNorm(corpus.select(col("vec_id").as("nid"),
-      col("embedding").as("nemb")), "nemb", "nnorm")
-    val exact = cands.join(cfull, "nid")
-      .join(broadcast(q0.select(col("qid"), col("qemb"), col("qnorm"))), "qid")
-      .select(col("qid"), col("nid"),
-        cosinePrenormed(dot(col("qemb"), col("nemb")),
-          col("qnorm"), col("nnorm")).as("sim"))
-    rankTopK(exact, k)
+    refineExact(cand, k * refine, corpus, q0, k)
   }
 
   // ---- index persistence (r15: build once / serve many) -----------------
@@ -768,10 +718,7 @@ object Similarity {
     // top-p probes of a top-max slice are the standalone top-p probes),
     // so the sweep stops re-counting, re-sampling centroids and
     // re-scoring the corpus once per arm. Identical arms, one scan.
-    val n = corpus.count()
-    val c = math.max(4, math.sqrt(n.toDouble).toInt)
-    val scored = ivfScoredSlices(corpus, c, nprobes.max, n,
-      distributed = c > literalCentroidCeiling)
+    val scored = ivfScoredSlices(corpus, -1, nprobes.max)
     nprobes.map { p =>
       val arm = ivfTopKFromScored(scored, k, nprobe = p)
         .join(qIds, "vec_id")

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Broadcasting, Fanout, Similarity}
+import graft.operators.{Broadcasting, Fanout}
 import graft.streaming.EventStream
 
 /** Runner-session guards. Knob parsing is checked through the pure
@@ -16,7 +16,6 @@ class SessionsSpec extends AnyFunSuite {
       Runtime.getRuntime.availableProcessors.toLong),
     ("SPARK_GRAFT_BROADCAST_CAP", Broadcasting.capFrom, 64L * 1024 * 1024),
     ("SPARK_GRAFT_FANOUT_CAP", Fanout.capFrom, 1024L * 1024 * 1024),
-    ("SPARK_GRAFT_CENTROID_CEILING", Similarity.centroidCeilingFrom, 128L),
     ("SPARK_GRAFT_STATE_PARTITIONS", EventStream.statePartitionsFrom, 8L),
     ("SPARK_GRAFT_BENCH_CHUNK", env => Bench.chunkFrom(env).toLong, 90L))
 

@@ -448,10 +448,13 @@ class SimilaritySpec extends SparkTestBase {
 
   test("distributed-codebook assignment is value-identical to the literal path (IVF + IVF-PQ)") {
     // the r12 escape for the c-wide literal expression ceiling: above
-    // literalCentroidCeiling the codebook broadcasts as a DataFrame and
-    // GroupTopK prunes the (vector × centroid) stream. Forcing the
-    // distributed path at small c must reproduce the literal path's
-    // rows EXACTLY (same arithmetic, same (−s, ci) tie-break).
+    // 128 centroids the codebook broadcasts as a DataFrame and GroupTopK
+    // prunes the (vector × centroid) stream. topCentroidSlices (IVF
+    // scoring, IVF-PQ assignment and query probing) and withCentVec
+    // (IVF-PQ residuals and ADC scoring) are the only two functions
+    // whose plans differ between the strategies; forced either way at
+    // small c they must give EXACTLY the same values (same arithmetic,
+    // same (−s, ci) tie-break), over corpus and query frames alike.
     val r = new scala.util.Random(7)
     val dim = 64
     val rows = (0 until 12).flatMap { c =>
@@ -460,18 +463,34 @@ class SimilaritySpec extends SparkTestBase {
         center.map(x => (x + 0.15 * r.nextGaussian()).toFloat)))
     }
     val e = spark.createDataFrame(rows).toDF("vec_id", "embedding")
-    val n = e.count()
-    def rows4(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2), x.getLong(3))).toSeq
-    val ivfLit = rows4(Similarity.ivfTopKImpl(e, 5, 16, 4, n, distributed = false))
-    val ivfDist = rows4(Similarity.ivfTopKImpl(e, 5, 16, 4, n, distributed = true))
-    assert(ivfLit.nonEmpty && ivfLit == ivfDist)
-    val qs = e.filter(col("vec_id") % 40 === 0)
-    val pqLit = rows4(Similarity.ivfPqTopKImpl(e, qs, 5, 16, 4, 8, 32, 8, n,
-      distributed = false))
-    val pqDist = rows4(Similarity.ivfPqTopKImpl(e, qs, 5, 16, 4, 8, 32, 8, n,
-      distributed = true))
-    assert(pqLit.nonEmpty && pqLit == pqDist)
+    val cents = rows.filter(_._1 % 15 == 0).map(_._2.map(_.toDouble)).toArray
+    assert(cents.length == 16)
+    def normed(key: String, emb: String, norm: String, df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id").as(key), col("embedding").cast("array<double>").as(emb))
+        .withColumn(norm, sqrt(Similarity.dot(col(emb), col(emb))))
+    val frames = Seq(
+      ("vec_id", "embedding", "norm", normed("vec_id", "embedding", "norm", e)),
+      ("qid", "qemb", "qnorm", normed("qid", "qemb", "qnorm", e.filter(col("vec_id") % 40 === 0))))
+    for ((key, emb, norm, df) <- frames; nprobe <- Seq(1, 4)) {
+      def slices(distributed: Boolean) = Similarity.topCentroidSlices(df, key, emb, norm,
+          cents, nprobe, distributed)
+        .select(col(key), col("__top")).collect()
+        .map(x => x.getLong(0) -> x.getSeq[org.apache.spark.sql.Row](1)
+          .map(t => (t.getDouble(0), t.getInt(1)))).toMap
+      val literal = slices(distributed = false)
+      assert(literal.size == df.count() && literal.values.forall(_.length == nprobe))
+      assert(literal == slices(distributed = true), s"$key frame, nprobe $nprobe")
+      // the centroid lookup, over the assignment the slices give
+      val assigned = df.join(spark.createDataFrame(literal.toSeq.map { case (id, top) =>
+        (id, top.head._2) }).toDF(key, "centroid_id"), key)
+      def lookup(distributed: Boolean) = Similarity.withCentVec(cents, distributed)(assigned)
+        .select(col(key), col("centroid_id"), col("__cemb"), col("__cnorm2")).collect()
+        .map(x => (x.getLong(0), x.getInt(1), x.getSeq[Double](2), x.getDouble(3)))
+        .sortBy(_._1).toSeq
+      val litVec = lookup(distributed = false)
+      assert(litVec.length == literal.size)
+      assert(litVec == lookup(distributed = true), s"$key frame, nprobe $nprobe")
+    }
   }
 
   test("an under-filled hash-stride sample falls back to the smallest ids (pinned rows)") {
