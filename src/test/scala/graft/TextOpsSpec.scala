@@ -739,4 +739,40 @@ class TextOpsSpec extends SparkTestBase {
     assert((r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
       r.getLong(4), r.getDouble(5)) == (("s1", 3L, 2L, 1L, 2L, 0.3333)))
   }
+
+  test("shingle builders at 0, 1, k-1, k and k+1 tokens: pinned operator outputs") {
+    import graft.operators.{Dedup, Mixture}
+    // token counts 0..4: every size below, at and above k = 3 (k-gram
+    // string set, gram-hash set) and k = 2 (bigram and uni+bigram streams)
+    val docs = Seq((1L, "!!"), (2L, "a"), (3L, "a b"), (4L, "a b c"), (5L, "a b c d"))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().toSeq.map(_.toSeq)
+    def r(xs: Any*): Seq[Any] = xs
+    // bigram stream
+    assert(rows(TextOps.topBigrams(docs)) ==
+      Seq(r("a b", 3L), r("b c", 2L), r("c d", 1L)))
+    assert(rows(TextOps.bigramCrossEntropy(docs)) ==
+      Seq(r(3L, 1L, 0.0), r(4L, 2L, 0.0), r(5L, 3L, 0.0)))
+    // uni+bigram stream
+    assert(rows(TextOps.hashedLinearScore(docs, spark)) ==
+      Seq(r(2L, 1L, 0.5544), r(3L, 3L, 0.5872), r(4L, 5L, 0.5607), r(5L, 7L, 0.511)))
+    assert(rows(TextOps.pmiCollocations(docs, minCount = 1)) ==
+      Seq(r("c d", 1L, 2L, 1L, 2.1203), r("b c", 2L, 3L, 2L, 1.7148),
+        r("a b", 3L, 4L, 3L, 1.4271)))
+    assert(rows(Mixture.dsirSelect(docs, col("doc_id") <= 3L, keep = 0.5)) ==
+      Seq(r(2L, 1L, -0.5079, true), r(3L, 3L, -0.6295, true), r(4L, 5L, -0.8159, false),
+        r(5L, 7L, -0.78, false)))
+    // k-gram string set
+    assert(rows(Dedup.sortedNeighborhood(docs, window = 4, threshold = 0.0,
+      blockToks = 1, k = 3)) == Seq(r(4L, 5L, 0.5)))
+    // gram-hash set
+    assert(rows(TextOps.repetitionRatio(docs)) ==
+      Seq(r(4L, 1L, 1L, 0.0), r(5L, 2L, 2L, 0.0)))
+    assert(rows(TextOps.contamination(docs, docs.filter(col("doc_id") === 4L))) ==
+      Seq(r(4L, 1L, 1L, 1.0), r(5L, 2L, 1L, 0.5)))
+    assert(rows(Dedup.prefixJaccardPairs(docs, threshold = 0.4)) == Seq(r(4L, 5L, 0.5)))
+    assert(rows(Dedup.containmentPairs(docs, threshold = 0.4)) ==
+      Seq(r(4L, 5L, 1.0), r(5L, 4L, 0.5)))
+  }
 }
