@@ -356,7 +356,13 @@ object PlanAudit {
     // r15: stored-index ANN serving — expect the codes scan broadcast-
     // joined to the probed queries (no quantizer training subtree, no
     // cartesian; the build side runs eagerly before the returned plan)
-    "sim_index_persist")
+    "sim_index_persist",
+    // the shingle toolkit's remaining consumers: exact verification of
+    // the banded candidates (self-join and batch-vs-corpus: the tokenized
+    // frames join both pair sides), decontamination (gram-hash explode +
+    // broadcast benchmark set + one per-doc fold), DSIR (one persisted
+    // uni+bigram explode feeding both bucket LMs + broadcast scoring)
+    "dedup_minhash_verified", "dedup_incremental", "text_decontam", "mix_dsir")
     // evt_audience_overlap is excluded like dedup_clusters: its
     // domain-sized sketch table collects eagerly at construction, so
     // only the trivial driver-built result frame would be explained

@@ -61,9 +61,8 @@ object Basket {
       .join(broadcast(singles.select(col("brand").as("brand_b"), col("cnt").as("cnt_b"))), Seq("brand_b"))
       .crossJoin(broadcast(nOrders)) // bounded: 1 row
       .select(col("brand_a"), col("brand_b"), col("support"),
-        (floor(col("support").cast("double") * col("n_orders")
-            / (col("cnt_a").cast("double") * col("cnt_b")) * 10000.0 + 0.5)
-          / 10000.0).as("lift"))
+        Num.pround(col("support").cast("double") * col("n_orders")
+          / (col("cnt_a").cast("double") * col("cnt_b")), 4).as("lift"))
       .orderBy("brand_a", "brand_b")
   }
 

@@ -87,7 +87,7 @@ object DataQuality {
     sized.select(quasi.map(col) ++ Seq(
         col("class_size"),
         (col("class_size") >= k).as("meets_k"),
-        (floor(lit(1.0) / col("class_size") * 10000.0 + 0.5) / 10000.0).as("reid_risk")): _*)
+        Num.pround(lit(1.0) / col("class_size"), 4).as("reid_risk")): _*)
       .orderBy(quasi.map(col): _*)
   }
 
@@ -168,7 +168,7 @@ object DataQuality {
     * once on the driver; observed shares use the portable
     * floor-round so both engines agree bit-for-bit. */
   def benfordAudit(df: DataFrame, valueCol: String): DataFrame = {
-    val expected = (1 to 9).map(d => math.floor(math.log10(1.0 + 1.0 / d) * 10000.0 + 0.5) / 10000.0)
+    val expected = (1 to 9).map(d => Num.pround(math.log10(1.0 + 1.0 / d), 4))
     val counts = df.filter(col(valueCol) >= 1.0)
       .select(substring(floor(col(valueCol)).cast("long").cast("string"), 1, 1)
         .cast("long").as("digit"))
@@ -445,8 +445,8 @@ object DataQuality {
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("prev_id") > col("event_id"), 1L).otherwise(0L)).as("n_inversions"))
       .select(col("event_type"), col("n_events"), col("n_inversions"),
-        (floor(col("n_inversions").cast("double") / col("n_events").cast("double")
-          * 10000.0 + 0.5) / 10000.0).as("inversion_rate"))
+        Num.pround(col("n_inversions").cast("double") / col("n_events").cast("double"), 4)
+          .as("inversion_rate"))
       .orderBy("event_type")
   }
 
@@ -662,7 +662,6 @@ object DataQuality {
         "(bucket or filter the column first, or raise maxGridRows)")
     val n = grid.map(_._2).sum
     val nD = n.toDouble
-    def pround4(x: Double) = math.floor(x * 10000.0 + 0.5) / 10000.0
     // Σ n·ln(n) over a count family, key-sorted for determinism
     def sLogS(m: Map[String, Long]): Double =
       m.toSeq.sortBy(_._1).map { case (_, c) =>
@@ -705,7 +704,7 @@ object DataQuality {
       val uXY = (hx - (sy - sxy) / nD) / hx // U(X|Y): Y explaining H(X)
       val uYX = (hy - (sx - sxy) / nD) / hy
       (cols(i), cols(j), r.toLong, c.toLong, n,
-        pround4(vCorr), pround4(uXY), pround4(uYX))
+        Num.pround(vCorr, 4), Num.pround(uXY, 4), Num.pround(uYX, 4))
     }
     import spark.implicits._
     rows.toDF("col_x", "col_y", "levels_x", "levels_y", "n_rows",

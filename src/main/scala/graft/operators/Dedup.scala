@@ -56,14 +56,7 @@ object Dedup {
         posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
           .as(Seq("pos", "line")))
       .withColumn("f", md5(col("line")))
-    // persist the SMALL table (duplicated fingerprints only) so the
-    // flagging join cannot re-run the corpus scan+explode behind it —
-    // the same self-join rule as the LSH signature tables (CLAUDE.md)
-    val dup = lines
-      .groupBy("f").agg(countDistinct("doc_id").as("nd"))
-      .filter(col("nd") >= minDocs)
-      .select(col("f"), lit(1).as("__dup"))
-      .persistTracked()
+    val dup = TextOps.sharedKeys(lines, "f", minDocs).withColumn("__dup", lit(1))
     lines.join(dup, Seq("f"), "left")
       .groupBy("doc_id")
       .agg(
@@ -107,9 +100,7 @@ object Dedup {
     // expensive-per-row map; fan the narrow input out of the
     // single-row-group scan before it (signatures are per-doc — row
     // placement cannot change them)
-    Fanout.bySmallInput(docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= shingleK)
+    tokenizedFanned(docs, shingleK)
       .select(col("doc_id"),
         org.apache.spark.sql.graftext.Shingles
           .minhashSig(col("toks"), shingleK, NumHashes).as("sig"))
@@ -171,16 +162,10 @@ object Dedup {
   def minhashCandidatesPortable(docs: DataFrame, shingleK: Int = 3,
       slots: Int = 32, bands: Int = 8): DataFrame = {
     val rpb = slots / bands
-    val gramExpr = (0 until shingleK).map(o => s"toks[i+$o]")
-      .mkString("concat_ws(' ', ", ", ", ")")
     // r17 (guide §2.5): fan out of the single-row-group scan before the
     // tokenize/gram explode (per-doc derivation; placement-independent)
-    val grams = Fanout.bySmallInput(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= shingleK)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        s"transform(sequence(0, size(toks) - $shingleK), i -> $gramExpr)"))).as("g"))
+    val grams = tokenizedFanned(docs, shingleK)
+      .select(col("doc_id"), explode(TextOps.gramSet("toks", shingleK)).as("g"))
     // WIDE signature: all `slots` minima in ONE aggregate pass over the
     // gram table (32 conditional-min columns), instead of exploding
     // grams × slots into a (doc, slot)-keyed shuffle — one shuffle on
@@ -239,17 +224,9 @@ object Dedup {
     * oracle is brute-force all-pairs exact Jaccard: a hash match proves
     * both properties end-to-end on the corpus. */
   def minhashVerified(docs: DataFrame, threshold: Double, shingleK: Int = 3): DataFrame = {
-    val toks = Fanout.bySmallInput(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= shingleK)
-    val cands = minhashCandidates(docs, shingleK).select("doc_a", "doc_b")
-    cands
-      .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), "doc_a")
-      .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), ngramJaccard(shingleK).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .orderBy("doc_a", "doc_b")
+    val toks = tokenizedFanned(docs, shingleK)
+    exactVerified(minhashCandidates(docs, shingleK).select("doc_a", "doc_b"),
+      "doc_a", toks, "doc_b", toks, threshold, shingleK)
   }
 
   /** INCREMENTAL near-dup detection: a NEW batch of documents checked
@@ -271,17 +248,29 @@ object Dedup {
     val b = bandedSigs(minhashSignatures(corpus, shingleK))
       .select(col("band"), col("bhash"), col("doc_id").as("doc_old"))
     val cands = a.join(b, Seq("band", "bhash")).select("doc_new", "doc_old").distinct()
-    def toks(df: DataFrame) = Fanout.bySmallInput(
-        df.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= shingleK)
-    cands
-      .join(toks(newDocs).select(col("doc_id").as("doc_new"), col("toks").as("toks_a")), "doc_new")
-      .join(toks(corpus).select(col("doc_id").as("doc_old"), col("toks").as("toks_b")), "doc_old")
-      .select(col("doc_new"), col("doc_old"), ngramJaccard(shingleK).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .orderBy("doc_new", "doc_old")
+    exactVerified(cands, "doc_new", tokenizedFanned(newDocs, shingleK),
+      "doc_old", tokenizedFanned(corpus, shingleK), threshold, shingleK)
   }
+
+  /** The (doc_id, toks) frame of docs with at least `k` tokens, fanned
+    * out of the single-row-group scan first (r17, guide §2.5: the
+    * per-doc map work is expensive and placement-independent). */
+  private def tokenizedFanned(docs: DataFrame, k: Int): DataFrame =
+    TextOps.tokenized(
+      Fanout.bySmallInput(docs.select(col("doc_id"), col("text")), col("doc_id")), k, "doc_id")
+
+  /** Exact verification of candidate pairs: the `ida` and `idb` id
+    * columns of `cands` join their sides' tokenized frames, and the pairs
+    * whose exact k-gram Jaccard reaches `threshold` are kept, ordered by
+    * both ids. */
+  private def exactVerified(cands: DataFrame, ida: String, toksA: DataFrame,
+      idb: String, toksB: DataFrame, threshold: Double, k: Int): DataFrame =
+    cands
+      .join(toksA.select(col("doc_id").as(ida), col("toks").as("toks_a")), ida)
+      .join(toksB.select(col("doc_id").as(idb), col("toks").as("toks_b")), idb)
+      .select(col(ida), col(idb), ngramJaccard(k).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+      .orderBy(ida, idb)
 
   // ---- SimHash ----------------------------------------------------------
 
@@ -300,8 +289,7 @@ object Dedup {
     * hashes.) */
   def simhash(docs: DataFrame): DataFrame =
     // r17 (guide §2.5): per-doc map — fan out of the 1-task scan
-    Fanout.bySmallInput(docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
+    tokenizedFanned(docs, 0)
       .filter(size(col("toks")) > 0) // match the exploded form: tokenless docs emit no row
       .select(col("doc_id"),
         org.apache.spark.sql.graftext.SimHash.simhash(col("toks")).as("simhash"))
@@ -422,7 +410,7 @@ object Dedup {
     docs
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
       .select(col("doc_id"),
-        conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long").as("h"))
+        TextOps.bridgeHash(col("tok")).as("h"))
       .groupBy("doc_id")
       .agg(org.apache.spark.sql.graftext.SimHashAgg.simhashAgg(col("h")).as("simhash"))
 
@@ -469,12 +457,9 @@ object Dedup {
     // r17 (guide §2.5): fan out of the 1-task scan before tokenize +
     // the 16-slot md5 signature explode (ProfileKey: tmax 2914 ms vs
     // tmed 56 ms on the slot-signature stage)
-    val t0 = Fanout.bySmallInput(docs
+    val t0 = tokenizedFanned(docs
       .filter(pmod(col("doc_id"), lit(11)) === 0 ||
-        pmod(col("doc_id"), lit(5)) === 0 || pmod(col("doc_id"), lit(5)) === 1)
-      .select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"),
-        graft.operators.TextOps.tokens(col("text")).as("toks"))
+        pmod(col("doc_id"), lit(5)) === 0 || pmod(col("doc_id"), lit(5)) === 1), 3)
     val twins = t0
       .filter(pmod(col("doc_id"), lit(11)) === 0 && size(col("toks")) >= 12)
       .select((col("doc_id") + lit(1000000L)).as("doc_id"),
@@ -483,10 +468,7 @@ object Dedup {
         expr("slice(toks, 1, size(toks) - " +
           "(1 + (size(toks) * (1 + pmod(doc_id, 7))) div 20))").as("toks"))
     val grams = t0.union(twins)
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        "transform(sequence(0, size(toks) - 3), " +
-          "i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))"))).as("g"))
+      .select(col("doc_id"), explode(TextOps.gramSet("toks", 3)).as("g"))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sig = grams
       .select(col("doc_id"), explode(expr(
@@ -719,11 +701,8 @@ object Dedup {
     * every doc's full (cf, gram-string) array in a collect_list
     * aggregate and shuffled it, several× the corpus bytes of spill. */
   def prefixJaccardPairs(docs: DataFrame, threshold: Double = 0.7, k: Int = 3): DataFrame = {
-    val sh = docs
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"), array_distinct(
-        org.apache.spark.sql.graftext.Shingles.winnowFps(col("toks"), k, 1)).as("sh"))
+    val sh = TextOps.tokenized(docs, k, "doc_id")
+      .select(col("doc_id"), TextOps.gramHashSet(col("toks"), k).as("sh"))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val posting = sh.select(col("doc_id"), size(col("sh")).as("n"),
       explode(col("sh")).as("s"))
@@ -747,7 +726,7 @@ object Dedup {
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("jaccard", setJaccard("sh_a", "sh_b"))
+      .withColumn("jaccard", setJaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy("doc_a", "doc_b")
@@ -779,12 +758,10 @@ object Dedup {
     // shingle sets are built ONCE per document, before pairing — the
     // interpreted shingle HOF otherwise re-runs per candidate pair SIDE
     // (2 × window × N evaluations instead of N)
-    val toks = docs
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k)
+    val toks = TextOps.tokenized(docs, k, "doc_id")
       .withColumn("block", concat_ws(" ", slice(col("toks"), 1, blockToks)))
       .withColumn("skey", concat_ws(" ", slice(col("toks"), 1, keyToks)))
-      .withColumn("sh", expr(shingleSetSql("toks", k)))
+      .withColumn("sh", TextOps.gramSet("toks", k))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("block").orderBy("skey", "doc_id")
     val nbrs = array((1 to window).map(i =>
@@ -798,7 +775,7 @@ object Dedup {
         least(col("doc_id"), col("nbr.id")).as("doc_a"),
         greatest(col("doc_id"), col("nbr.id")).as("doc_b"),
         col("sh").as("sh_b"), col("nbr.sh").as("sh_a"))
-      .withColumn("jaccard", setJaccard("sh_a", "sh_b"))
+      .withColumn("jaccard", setJaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy("doc_a", "doc_b")
@@ -811,22 +788,13 @@ object Dedup {
     * Portable rounding: jaccard is a small-integer ratio, exactly the
     * value class where Spark and DuckDB round() disagree (see Num). */
   def ngramJaccard(k: Int = 3): Column =
-    setJaccard(shingleSetSql("toks_a", k), shingleSetSql("toks_b", k))
+    setJaccard(TextOps.gramSet("toks_a", k), TextOps.gramSet("toks_b", k))
 
-  /** SQL for the distinct k-shingle set of a token-array column — the
-    * ONE definition every jaccard consumer shares (sorted-neighborhood,
-    * prefix join, the verification kernel); the DuckDB oracles mirror
-    * this exact formulation. */
-  private[operators] def shingleSetSql(toksCol: String, k: Int): String =
-    s"array_distinct(transform(sequence(0, size($toksCol) - $k), i -> concat_ws(' ', slice($toksCol, i + 1, $k))))"
-
-  /** Portable floor-rounded Jaccard of two set-SQL fragments (see Num:
+  /** Portable floor-rounded Jaccard of two set columns (see Num:
     * round() disagrees across engines on half-boundaries for per-row
     * float projections; small-integer ratios hit them). */
-  private[operators] def setJaccard(aSql: String, bSql: String): Column = {
-    val ratio = s"cast(size(array_intersect($aSql, $bSql)) as double) / size(array_union($aSql, $bSql))"
-    expr(s"cast(floor(($ratio) * 10000.0 + 0.5) as double) / 10000.0")
-  }
+  private def setJaccard(a: Column, b: Column): Column =
+    Num.pround(size(array_intersect(a, b)).cast("double") / size(array_union(a, b)), 4)
 
   // ---- Cross-source overlap matrix --------------------------------------
 
@@ -846,11 +814,8 @@ object Dedup {
     * gram table feeds both join sides and the per-source counts, so it
     * is persisted (the self-join rule). */
   def sourceOverlap(docs: DataFrame, k: Int = 3): DataFrame = {
-    val grams = docs
-      .select(col("source"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(col("source"), explode(
-        org.apache.spark.sql.graftext.Shingles.winnowFps(col("toks"), k, 1)).as("gram"))
+    val grams = TextOps.tokenized(docs, k, "source")
+      .select(col("source"), explode(TextOps.gramHashSet(col("toks"), k)).as("gram"))
       .distinct()
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = grams.groupBy("source").agg(count(lit(1)).as("n"))
@@ -909,12 +874,8 @@ object Dedup {
     // the tokenize/shingle projection — the single-row-group scan put
     // the whole posting build AND the broadcast-join pair explosion on
     // one task (ProfileKey: tmax 2481 ms vs tmed 32 ms)
-    val posting0 = Fanout.bySmallInput(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"), array_distinct(
-        org.apache.spark.sql.graftext.Shingles.winnowFps(col("toks"), k, 1)).as("sh"))
+    val posting0 = tokenizedFanned(docs, k)
+      .select(col("doc_id"), TextOps.gramHashSet(col("toks"), k).as("sh"))
       .select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("s"))
     // df-cap: one aggregate on the gram key (same partitioning the
     // self-join needs anyway), anti-joining the hot grams out; n stays
@@ -932,8 +893,7 @@ object Dedup {
       .join(cached.select(col("doc_id").as("doc_b"), col("s")), "s")
       .filter(col("doc_a") =!= col("doc_b"))
       .groupBy("doc_a", "doc_b", "n_a").agg(count(lit(1)).as("shared"))
-      .withColumn("containment", expr(
-        "cast(floor(cast(shared as double) / n_a * 10000.0 + 0.5) as double) / 10000.0"))
+      .withColumn("containment", Num.pround(col("shared").cast("double") / col("n_a"), 4))
       .filter(col("containment") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("containment"))
       .orderBy("doc_a", "doc_b")
@@ -1008,8 +968,7 @@ object Dedup {
       // token CLOSES its chunk, so chunk_id counts strictly-preceding
       // boundary tokens (exclusive prefix sum)
       .withColumn("b",
-        (conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long")
-          % divisor === 0).cast("long"))
+        (TextOps.bridgeHash(col("tok")) % divisor === 0).cast("long"))
       .withColumn("chunk_id", coalesce(sum(col("b")).over(w), lit(0L)))
       .groupBy(col("doc_id"), col("chunk_id"))
       .agg(

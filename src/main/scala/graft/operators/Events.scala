@@ -265,8 +265,7 @@ object Events {
       .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
     pairs
       .withColumn("n_from", sum(col("n")).over(Window.partitionBy("from_type")))
-      .withColumn("p", expr(
-        "cast(floor(cast(n as double) / n_from * 10000.0 + 0.5) as double) / 10000.0"))
+      .withColumn("p", Num.pround(col("n").cast("double") / col("n_from"), 4))
       .select(col("from_type"), col("to_type"), col("n"), col("n_from"), col("p"))
       .orderBy("from_type", "to_type")
   }
@@ -604,8 +603,8 @@ object Events {
       df.agg(count(lit(1)).as("n_users")).select(lit(name).as("stage"), col("n_users"))
         .crossJoin(broadcast(n1)) // bounded: 1 row
         .select(col("stage"), col("n_users"),
-          (floor(col("n_users").cast("double") / col("n1").cast("double")
-            * 10000.0 + 0.5) / 10000.0).as("conv_rate"))
+          Num.pround(col("n_users").cast("double") / col("n1").cast("double"), 4)
+            .as("conv_rate"))
     stage("1_signup", s1)
       .unionByName(stage("2_click_48h", s2))
       .unionByName(stage("3_purchase_48h", s3))
@@ -698,8 +697,7 @@ object Events {
     dau.join(mau, "day")
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("dau"), col("mau"),
-        expr("cast(floor(cast(dau as double) / mau * 10000.0 + 0.5) as double) / 10000.0")
-          .as("stickiness"))
+        Num.pround(col("dau").cast("double") / col("mau"), 4).as("stickiness"))
       .orderBy("day")
   }
 
@@ -954,23 +952,22 @@ object Events {
       .collect() // bounded: day-dimension, see scaladoc
       .map(r => (r.getString(0), r.getLong(1)))
     require(daily.length >= 2, s"holt needs >= 2 days, got ${daily.length}")
-    def pround4(x: Double): Double = math.floor(x * 10000.0 + 0.5) / 10000.0
     val xs = daily.map(_._2.toDouble)
     var s = xs(0)
     var b = xs(1) - xs(0)
     val fits = Array.newBuilder[(String, String, Long, Double)]
-    fits += ((daily(0)._1, "fit", daily(0)._2, pround4(xs(0))))
+    fits += ((daily(0)._1, "fit", daily(0)._2, Num.pround(xs(0), 4)))
     for (t <- 1 until daily.length) {
       val yhat = s + b // one-step-ahead prediction made at t−1
       val sNew = alpha * xs(t) + (1 - alpha) * (s + b)
       b = beta * (sNew - s) + (1 - beta) * b
       s = sNew
-      fits += ((daily(t)._1, "fit", daily(t)._2, pround4(yhat)))
+      fits += ((daily(t)._1, "fit", daily(t)._2, Num.pround(yhat, 4)))
     }
     val lastDay = java.time.LocalDate.parse(daily.last._1)
     val fc = (1 to horizon).map { h =>
       (lastDay.plusDays(h.toLong).toString, "forecast", 0L,
-        pround4(s + h.toDouble * b))
+        Num.pround(s + h.toDouble * b, 4))
     }
     import spark.implicits._
     (fits.result().toSeq ++ fc)
@@ -1008,7 +1005,6 @@ object Events {
       .collect() // bounded: day-dimension, see scaladoc
       .map(r => (r.getString(0), r.getLong(1)))
     require(daily.length >= 2, s"holtWinters needs >= 2 days, got ${daily.length}")
-    def pround4(x: Double): Double = math.floor(x * 10000.0 + 0.5) / 10000.0
     // 1970-01-05 was a Monday: epochDay 4 — dow 0 = Monday, portable
     def dowOf(day: String): Int =
       (((java.time.LocalDate.parse(day).toEpochDay - 4L) % 7L + 7L) % 7L).toInt
@@ -1040,18 +1036,18 @@ object Events {
     var b = zs(1) - zs(0)
     val fits = Array.newBuilder[(String, String, Long, Double)]
     fits += ((daily(0)._1, "fit", daily(0)._2,
-      pround4(zs(0) + idx(dowOf(daily(0)._1)))))
+      Num.pround(zs(0) + idx(dowOf(daily(0)._1)), 4)))
     for (t <- 1 until daily.length) {
       val yhat = (s + b) + idx(dowOf(daily(t)._1))
       val sNew = alpha * zs(t) + (1 - alpha) * (s + b)
       b = beta * (sNew - s) + (1 - beta) * b
       s = sNew
-      fits += ((daily(t)._1, "fit", daily(t)._2, pround4(yhat)))
+      fits += ((daily(t)._1, "fit", daily(t)._2, Num.pround(yhat, 4)))
     }
     val lastDay = java.time.LocalDate.parse(daily.last._1)
     val fc = (1 to horizon).map { h =>
       val d = lastDay.plusDays(h.toLong).toString
-      (d, "forecast", 0L, pround4((s + h.toDouble * b) + idx(dowOf(d))))
+      (d, "forecast", 0L, Num.pround((s + h.toDouble * b) + idx(dowOf(d)), 4))
     }
     import spark.implicits._
     (fits.result().toSeq ++ fc)
@@ -1098,7 +1094,6 @@ object Events {
       s = sNew
     }
     val trainMean = train.sum.toDouble / nT.toDouble
-    def pround4(x: Double) = math.floor(x * 10000.0 + 0.5) / 10000.0
     def score(yhat: Int => Double): (Double, Double, Double) = {
       var (ae, se, pe) = (0.0, 0.0, 0.0)
       for (h <- 1 to horizon) { // ascending-h: the oracle's frame order
@@ -1109,7 +1104,7 @@ object Events {
         pe += math.abs(e) / y
       }
       val hD = horizon.toDouble
-      (pround4(ae / hD), pround4(math.sqrt(se / hD)), pround4(pe / hD))
+      (Num.pround(ae / hD, 4), Num.pround(math.sqrt(se / hD), 4), Num.pround(pe / hD, 4))
     }
     val rows = Seq(
       ("holt", score(h => s + h.toDouble * b)),
@@ -1156,7 +1151,7 @@ object Events {
       val ni = math.round(ThetaSketchAgg.intersectEstimate(sa, sb))
       val nu = math.round(ThetaSketchAgg.unionEstimate(sa, sb))
       (ta, tb, na, nb, ni, nu,
-        math.floor(ni.toDouble / nu.toDouble * 10000.0 + 0.5) / 10000.0)
+        Num.pround(ni.toDouble / nu.toDouble, 4))
     }
     import spark.implicits._
     rows.toSeq.toDF("type_a", "type_b", "n_a", "n_b", "n_overlap", "n_union", "jaccard")

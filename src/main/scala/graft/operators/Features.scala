@@ -500,9 +500,9 @@ object Features {
     }
     val brier = sq.toDouble / (nD * (dD * dD))
     val unc = (np.toDouble / nD) * (1.0 - np.toDouble / nD)
-    def pround4(x: Double) = math.floor(x * 10000.0 + 0.5) / 10000.0
     import spark.implicits._
-    Seq((n, np, pround4(brier), pround4(rel), pround4(res), pround4(unc)))
+    Seq((n, np, Num.pround(brier, 4), Num.pround(rel, 4), Num.pround(res, 4),
+      Num.pround(unc, 4)))
       .toDF("n_docs", "n_pos", "brier", "reliability", "resolution",
         "uncertainty")
   }

@@ -227,6 +227,9 @@ object Graph {
     * oriented source, one closing equi-join on (b, c) — every one an
     * equi-join on a key, no all-pairs anywhere. The oriented edge table
     * is persisted (self-join rule).
+    *
+    * Precondition: unique u < v edges with no self-loops; a repeated
+    * edge or a self-loop is counted as given and skews the counts.
     */
   def triangleCounts(edgesUV: DataFrame): DataFrame = {
     val edges = edgesUV.select(col("u"), col("v"))
@@ -262,7 +265,10 @@ object Graph {
     * an equi-join); the degree table is one fold over the edge list;
     * the combine join runs on the node domain. cc is portable-rounded
     * BEFORE the ranking so a final-ulp diff can't reorder the top-N
-    * cut (node id breaks exact ties). */
+    * cut (node id breaks exact ties).
+    *
+    * Precondition: unique u < v edges with no self-loops (see
+    * [[triangleCounts]]). */
   def clusteringCoeff(edgesUV: DataFrame, topN: Int = 20): DataFrame = {
     val edges = edgesUV.select(col("u"), col("v"))
       .persistTracked(StorageLevel.MEMORY_AND_DISK) // feeds deg AND the triangle join tree
@@ -335,12 +341,14 @@ object Graph {
     * (the dedup_clusters rule): a persisted round would print the
     * previous round's cached plan once per reference in its own plan
     * text, which grows geometrically and exhausts the driver heap
-    * within a dozen rounds. An unconverged exit throws.
+    * within a dozen rounds. An unconverged exit throws. Parallel edges
+    * and self-loops in the input do not count toward a node's degree.
     *
     * Iterative fixpoint → registered rows-only; the spec peels a
     * planted clique-plus-tail by hand. */
   def kCore(edgesUV: DataFrame, k: Int = 3, maxIters: Int = 30): DataFrame = {
-    val edges0 = undirected(edgesUV, "u", "v")
+    // a self-loop is no neighbour: dropping it adds no exchange
+    val edges0 = undirected(edgesUV, "u", "v").filter(col("u") =!= col("v"))
       .persistTracked(StorageLevel.MEMORY_AND_DISK)
     var edges = edges0
     var n = edges.count()
@@ -416,7 +424,10 @@ object Graph {
     * joins it twice (equi-joins on each endpoint); r derives from ONE
     * associative moment aggregate over the directed edges (the
     * elasticity convention — double moments, identical
-    * left-associative algebra in the oracle). */
+    * left-associative algebra in the oracle).
+    *
+    * Precondition: unique u < v edges with no self-loops; a self-loop
+    * counts two degree units. */
   def degreeStats(edgesUV: DataFrame): DataFrame = {
     val edges = edgesUV.select(col("u"), col("v"))
       .persistTracked(StorageLevel.MEMORY_AND_DISK) // adjacency + edge count

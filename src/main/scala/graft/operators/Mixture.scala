@@ -129,7 +129,7 @@ object Mixture {
     // this projection — persist it so the corpus is scanned ONCE (the
     // persisted table is 3 longs/doc, not the text)
     val scored = docs.select(col("doc_id"),
-      size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
+      TextOps.tokenCount(col("text")).as("n_tokens"),
       size(array_distinct(TextOps.tokens(col("text")))).cast("long").as("n_distinct"))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val byScore = scored.groupBy("n_distinct").agg(sum("n_tokens").as("score_tokens"))
@@ -202,8 +202,7 @@ object Mixture {
   def epochPlan(docs: DataFrame, groupCol: String, weight: Column,
                 budgetTokens: Long, maxEpochs: Double = 4.0): DataFrame = {
     val perGroup = docs
-      .select(col(groupCol), size(array_remove(split(lower(col("text")), "[^a-z0-9]+"), ""))
-        .cast("long").as("n_tokens"))
+      .select(col(groupCol), TextOps.tokenCount(col("text")).as("n_tokens"))
       .groupBy(groupCol).agg(sum("n_tokens").as("group_tokens"))
       .withColumn("weight", weight)
     val target = lit(budgetTokens.toDouble) * col("weight")
@@ -256,21 +255,14 @@ object Mixture {
     * the oracle can replay everything. */
   def dsirSelect(docs: DataFrame, isTarget: Column, buckets: Int = 4096,
                  keep: Double = 0.2): DataFrame = {
-    import graft.operators.TextOps
     // r17 (guide §2.5): fan out of the 1-task scan before the gram
     // explode + md5 (ProfileKey tmax 923 ms vs tmed 44 ms); doc_id-keyed
     // so each doc's grams fold in identical order for the llr sum
-    val grams = graft.operators.Fanout.bySmallInput(
-        docs.select(col("doc_id"), isTarget.as("is_t"), col("text")), col("doc_id"))
-      .select(col("doc_id"), col("is_t"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 1)
-      .select(col("doc_id"), col("is_t"), explode(concat(col("toks"), expr(
-        "case when size(toks) >= 2 then " +
-          "transform(sequence(0, size(toks)-2), i -> concat(toks[i], ' ', toks[i+1])) " +
-          "else array() end"))).as("gram"))
-      .select(col("doc_id"), col("is_t"),
-        (conv(substring(md5(col("gram")), 1, 8), 16, 10).cast("long") % buckets)
-          .as("bucket"))
+    val grams = TextOps.tokenized(Fanout.bySmallInput(
+        docs.select(col("doc_id"), isTarget.as("is_t"), col("text")), col("doc_id")),
+        1, "doc_id", "is_t")
+      .select(col("doc_id"), col("is_t"), explode(TextOps.uniBigrams("toks")).as("gram"))
+      .select(col("doc_id"), col("is_t"), (TextOps.bridgeHash(col("gram")) % buckets).as("bucket"))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val lm = grams.groupBy("bucket").agg(
       count(lit(1)).as("n_r"),
@@ -323,7 +315,7 @@ object Mixture {
     * the PERSISTED score projection, and the readout is a 4-row agg. */
   def curriculumPhases(docs: DataFrame): DataFrame = {
     val scored = docs.select(col("doc_id"),
-        size(TextOps.tokens(col("text"))).cast("long").as("difficulty"))
+        TextOps.tokenCount(col("text")).as("difficulty"))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cuts = scored.agg(
       expr("percentile(difficulty, 0.25)").as("q1"),
@@ -395,7 +387,7 @@ object Mixture {
     * exact BIGINTs throughout. */
   def effectiveTokens(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = size(TextOps.tokens(col("text"))).cast("long")
+    val toks = TextOps.tokenCount(col("text"))
     val fp = md5(lower(regexp_replace(col("text"), "\\s+", " ")))
     val flagged = docs
       .select(col("source"), col("doc_id"), toks.as("n_toks"), fp.as("fp"))

@@ -183,8 +183,8 @@ object Monitor {
       .select(col("event_type"), col("n"),
         round(col("med0"), 4).as("med"), round(col("mad0"), 4).as("mad"),
         col("n_outliers"),
-        (floor(col("n_outliers").cast("double") / col("n").cast("double")
-          * 10000.0 + 0.5) / 10000.0).as("outlier_rate"))
+        Num.pround(col("n_outliers").cast("double") / col("n").cast("double"), 4)
+          .as("outlier_rate"))
       .orderBy("event_type")
   }
 

@@ -103,4 +103,10 @@ object Num {
     val f = math.pow(10, dp)
     floor(c * f + 0.5).cast("double") / f
   }
+
+  /** The driver-side twin of the Column form: the identical IEEE ops. */
+  def pround(x: Double, dp: Int): Double = {
+    val f = math.pow(10, dp)
+    math.floor(x * f + 0.5) / f
+  }
 }

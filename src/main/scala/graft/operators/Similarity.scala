@@ -1238,12 +1238,9 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("neighbor_id"), col("rank"))
     // four consumers (corpus postings, query postings, both id sides) —
     // persist or the scan+fingerprint subtree runs four times
-    val sets = Fanout.bySmallInput(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), array_distinct(
-        org.apache.spark.sql.graftext.Shingles.winnowFps(col("toks"), 3, 1)).as("fps"))
+    val sets = TextOps.tokenized(Fanout.bySmallInput(
+        docs.select(col("doc_id"), col("text")), col("doc_id")), 3, "doc_id")
+      .select(col("doc_id"), TextOps.gramHashSet(col("toks"), 3).as("fps"))
       .select(col("doc_id"), col("fps"), size(col("fps")).cast("long").as("n"))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val qpost = sets.filter(col("doc_id") < nQueries)
@@ -1253,9 +1250,8 @@ object Similarity {
     val inter = cpost.join(broadcast(qpost), Seq("g"))
       .filter(col("qid") =!= col("nid"))
       .groupBy("qid", "nid", "n_a", "n_b").agg(count(lit(1)).as("shared"))
-      .select(col("qid"), col("nid"), expr(
-        "cast(floor((cast(shared as double) / (n_a + n_b - shared)) * 10000.0 + 0.5)" +
-          " as double) / 10000.0").as("sim"))
+      .select(col("qid"), col("nid"), Num.pround(
+        col("shared").cast("double") / (col("n_a") + col("n_b") - col("shared")), 4).as("sim"))
     val idFrame = sets.select(col("doc_id").as("nid"))
       .crossJoin(broadcast(sets.filter(col("doc_id") < nQueries)
         .select(col("doc_id").as("qid"))))

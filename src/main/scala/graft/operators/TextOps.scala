@@ -36,6 +36,62 @@ object TextOps {
   def tokens(c: Column): Column =
     array_remove(split(lower(c), "[^a-z0-9]+"), "")
 
+  /** Token count of `c` as a BIGINT (the width the oracles compare). */
+  def tokenCount(c: Column): Column = size(tokens(c)).cast("long")
+
+  // ---- Shingle toolkit: one home per building block of the text family.
+  // Resemblance and containment are two readouts of one shingle set
+  // (Broder 1997); every dedup, overlap, decontamination, LM-score and
+  // mixing key derives its grams here.
+
+  /** The tokenized-doc frame: the `keys` columns plus `toks` =
+    * tokens(text), keeping docs with at least `minToks` tokens;
+    * `minToks` <= 0 keeps every row, null text included. A caller that
+    * fans out of a single-row-group scan composes `Fanout.bySmallInput`
+    * on its input first. */
+  private[graft] def tokenized(docs: DataFrame, minToks: Int, keys: String*): DataFrame = {
+    val t = docs.select(keys.map(col) :+ tokens(col("text")).as("toks"): _*)
+    if (minToks > 0) t.filter(size(col("toks")) >= minToks) else t
+  }
+
+  /** The space-joined k-token grams of the token-array column `toks`, in
+    * position order; empty when it holds fewer than k tokens (Spark's
+    * `sequence(0, -1)` counts down, so the guard lives here, not in the
+    * callers). */
+  private[graft] def grams(toks: String, k: Int): Column = {
+    val gram = (0 until k).map(o => if (o == 0) s"$toks[i]" else s"$toks[i+$o]")
+      .mkString("concat(", ", ' ', ", ")")
+    expr(s"case when size($toks) >= $k then " +
+      s"transform(sequence(0, size($toks) - $k), i -> $gram) else array() end")
+  }
+
+  /** The distinct k-gram strings of `toks`, first occurrence kept. */
+  private[graft] def gramSet(toks: String, k: Int): Column = array_distinct(grams(toks, k))
+
+  /** Every unigram, then every bigram, of `toks` (the hashed-feature
+    * extractor's gram stream). */
+  private[graft] def uniBigrams(toks: String): Column = concat(col(toks), grams(toks, 2))
+
+  /** The distinct k-gram xxhash64 fingerprints of `toks`, first occurrence
+    * kept; empty under k tokens (the native WinnowFps kernel at w = 1). */
+  private[graft] def gramHashSet(toks: Column, k: Int): Column =
+    org.apache.spark.sql.graftext.Shingles.winnowFps(toks, k, 1)
+
+  /** The portable md5 bridge hash of a gram or token:
+    * `conv(substring(md5(x),1,8),16,10)` in Spark ≡ DuckDB
+    * `('0x'||substr(md5(x),1,8))::BIGINT`. */
+  private[graft] def bridgeHash(c: Column): Column =
+    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
+
+  /** The `key` values of `rows` that occur in at least `minDocs` distinct
+    * docs, persisted: the set is small next to `rows`, and the flagging
+    * join must not re-run the explode behind it. */
+  private[graft] def sharedKeys(rows: DataFrame, key: String, minDocs: Int): DataFrame =
+    rows.groupBy(key).agg(countDistinct(col("doc_id")).as("nd"))
+      .filter(col("nd") >= minDocs)
+      .select(col(key))
+      .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
   /** Unicode NFC canonicalization (native codegen'd expression): composed
     * and decomposed spellings of the same text become byte-identical, so
     * downstream fingerprints/dedup agree. Run BEFORE md5/minhash on any
@@ -45,7 +101,7 @@ object TextOps {
 
   /** Token count per document. */
   def withTokenCount(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.withColumn("n_tokens", size(tokens(col(textCol))).cast("long"))
+    df.withColumn("n_tokens", tokenCount(col(textCol)))
 
   /** doc_id → n_tokens, deterministic order. */
   def tokenCounts(docs: DataFrame): DataFrame =
@@ -62,7 +118,7 @@ object TextOps {
     * disagree across engines on half-boundaries of small rationals). */
   def fertilityByLang(docs: DataFrame): DataFrame =
     docs.select(col("lang"), bpeTokenCount(col("text")).as("bpe"),
-        size(tokens(col("text"))).cast("long").as("words"))
+        tokenCount(col("text")).as("words"))
       .groupBy("lang")
       .agg(sum("bpe").as("n_bpe"), sum("words").as("n_words"))
       .withColumn("fertility",
@@ -110,12 +166,8 @@ object TextOps {
 
   /** Top-k bigrams corpus-wide: one explode + one shuffle (the groupBy). */
   def topBigrams(docs: DataFrame, k: Int = 50): DataFrame =
-    docs
-      .select(tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(explode(expr(
-        "zip_with(slice(toks, 1, size(toks) - 1), slice(toks, 2, size(toks) - 1)," +
-          " (a, b) -> concat(a, ' ', b))")).as("bigram"))
+    tokenized(docs, 2)
+      .select(explode(grams("toks", 2)).as("bigram"))
       .groupBy("bigram")
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("bigram"))
@@ -140,8 +192,7 @@ object TextOps {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
-        expr("cast(floor(tf * ln(cast(n_docs as double) / df) * 10000.0 + 0.5) as double) / 10000.0")
-          .as("tfidf"),
+        Num.pround(expr("tf * ln(cast(n_docs as double) / df)"), 4).as("tfidf"),
         col("rank").cast("long").as("rank"))
       .orderBy("doc_id", "rank")
   }
@@ -189,9 +240,7 @@ object TextOps {
     * to the interpreted HOF chain it replaced — k-gram hash, window min,
     * first-occurrence distinct). */
   def winnowFingerprints(docs: DataFrame, k: Int = 5, w: Int = 4): DataFrame =
-    docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k + w - 1)
+    tokenized(docs, k + w - 1, "doc_id")
       .select(col("doc_id"),
         org.apache.spark.sql.graftext.Shingles.winnowFps(col("toks"), k, w).as("fps"))
 
@@ -213,9 +262,7 @@ object TextOps {
   def winnowPortableStats(docs: DataFrame, k: Int = 5, w: Int = 4): DataFrame = {
     val wspec = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
-    val tok = docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k + w - 1)
+    val tok = tokenized(docs, k + w - 1, "doc_id")
       .select(col("doc_id"), size(col("toks")).as("n"),
         posexplode(col("toks")).as(Seq("pos", "tok")))
     // gram at 0-based pos p covers tokens p .. p+k-1 (k-1 leads, one sort)
@@ -224,7 +271,7 @@ object TextOps {
       .withColumn("gram", concat_ws(" ", gramCols: _*))
       .filter(col("pos") <= col("n") - k)
       .select(col("doc_id"), col("n"), col("pos"),
-        conv(substring(md5(col("gram")), 1, 8), 16, 10).cast("long").as("h"))
+        bridgeHash(col("gram")).as("h"))
     // winnow: min gram hash in each w-window of gram positions
     gram
       .withColumn("fp", min(col("h")).over(wspec.rowsBetween(0, w - 1)))
@@ -332,13 +379,10 @@ object TextOps {
     * eval-suite-sized by definition and broadcast. No crossJoin, no
     * all-pairs anything. */
   def contamination(docs: DataFrame, benchmark: DataFrame, k: Int = 3): DataFrame = {
-    def grams(df: DataFrame): DataFrame = df
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"), explode(
-        org.apache.spark.sql.graftext.Shingles.winnowFps(col("toks"), k, 1)).as("gram"))
-    val bench = grams(benchmark).select("gram").distinct()
-    grams(docs)
+    def hashes(df: DataFrame): DataFrame = tokenized(df, k, "doc_id")
+      .select(col("doc_id"), explode(gramHashSet(col("toks"), k)).as("gram"))
+    val bench = hashes(benchmark).select("gram").distinct()
+    hashes(docs)
       .join(broadcast(bench.withColumn("__hit", lit(1L))), Seq("gram"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"),
@@ -407,7 +451,7 @@ object TextOps {
     * engine-portable by construction. */
   def gopherRules(docs: DataFrame): DataFrame = {
     val lowered = lower(col("text"))
-    val nWords = size(tokens(col("text"))).cast("long")
+    val nWords = tokenCount(col("text"))
     val alnumChars = length(regexp_replace(lowered, "[^a-z0-9]", "")).cast("long")
     val symbols = regexp_count(col("text"), lit("#|\\.\\.\\.")).cast("long")
     val stopHits = regexp_count(lowered, lit("\\b(the|and|of|to|in|a|is|that)\\b")).cast("long")
@@ -441,12 +485,8 @@ object TextOps {
     * Scoring is two equi-joins (bigram, then head) — shuffles on model
     * keys, never a crossJoin. */
   def bigramCrossEntropy(docs: DataFrame): DataFrame = {
-    val bi = docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(toks)-2), i -> concat(toks[i], ' ', toks[i+1]))"))
-        .as("bigram"))
+    val bi = tokenized(docs, 2, "doc_id")
+      .select(col("doc_id"), explode(grams("toks", 2)).as("bigram"))
     val c12 = bi
       .withColumn("w1", split(col("bigram"), " ").getItem(0))
       .groupBy("bigram", "w1").agg(count(lit(1)).as("c12"))
@@ -490,23 +530,16 @@ object TextOps {
   def hashedLinearScore(docs: DataFrame, spark: org.apache.spark.sql.SparkSession,
                         buckets: Int = 4096): DataFrame = {
     // both gram families assemble ROW-LOCALLY before one explode, so the
-    // corpus is scanned once, not once per family; the bigram transform
-    // is guarded (sequence(0,-1) counts DOWN — the ANSI phantom-index
-    // trap) so single-token docs contribute their unigram only
+    // corpus is scanned once, not once per family; single-token docs
+    // contribute their unigram only
     // r17 (guide §2.5): fan out of the 1-task scan before the gram
     // explode + md5 (ProfileKey tmax 1152 ms vs tmed 40 ms). Keyed by
     // doc_id, each doc's grams stay in ONE partition in explode order,
     // so the per-doc float sum folds in the identical order.
-    val grams = Fanout.bySmallInput(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 1)
-      .select(col("doc_id"), explode(concat(col("toks"), expr(
-        "case when size(toks) >= 2 then " +
-          "transform(sequence(0, size(toks)-2), i -> concat(toks[i], ' ', toks[i+1])) " +
-          "else array() end"))).as("gram"))
-      .withColumn("bucket",
-        conv(substring(md5(col("gram")), 1, 8), 16, 10).cast("long") % buckets)
+    val grams = tokenized(Fanout.bySmallInput(
+        docs.select(col("doc_id"), col("text")), col("doc_id")), 1, "doc_id")
+      .select(col("doc_id"), explode(uniBigrams("toks")).as("gram"))
+      .withColumn("bucket", bridgeHash(col("gram")) % buckets)
     val weights = spark.range(buckets).select(col("id").as("bucket"),
       (conv(substring(md5(concat(lit("w"), col("id"))), 1, 8), 16, 10).cast("double")
         / 4294967296.0 - 0.5).as("w"))
@@ -534,12 +567,7 @@ object TextOps {
     * (pmi desc, bigram) is a unique total order. */
   def pmiCollocations(docs: DataFrame, minCount: Int = 5,
       topK: Int = 30): DataFrame = {
-    val grams = docs.select(tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 1)
-      .select(explode(concat(col("toks"), expr(
-        "case when size(toks) >= 2 then " +
-          "transform(sequence(0, size(toks)-2), i -> concat(toks[i], ' ', toks[i+1])) " +
-          "else array() end"))).as("gram"))
+    val grams = tokenized(docs, 1).select(explode(uniBigrams("toks")).as("gram"))
     val counts = grams.groupBy("gram").agg(count(lit(1)).as("c"))
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val uni = counts.filter(!col("gram").contains(" "))
@@ -590,7 +618,7 @@ object TextOps {
         while (!d.finished()) total += d.deflate(buf)
         d.end()
         val ratio = if (bytes.isEmpty) 0.0
-          else math.floor(total.toDouble / bytes.length * 10000.0 + 0.5) / 10000.0
+          else Num.pround(total.toDouble / bytes.length, 4)
         (id, bytes.length.toLong, total, ratio)
       })
       .toDF("doc_id", "n_bytes", "n_compressed", "ratio")
@@ -694,13 +722,10 @@ object TextOps {
     * native WinnowFps(w=1) kernel): a pure map stage with NO explode and
     * NO shuffle, the scale-correct shape for a per-doc metric. */
   def repetitionRatio(docs: DataFrame, k: Int = 3): DataFrame =
-    docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k)
+    tokenized(docs, k, "doc_id")
       .select(col("doc_id"),
         (size(col("toks")) - (k - 1)).cast("long").as("n_ngrams"),
-        size(org.apache.spark.sql.graftext.Shingles.winnowFps(col("toks"), k, 1))
-          .cast("long").as("n_distinct"))
+        size(gramHashSet(col("toks"), k)).cast("long").as("n_distinct"))
       .withColumn("rep_ratio",
         Num.pround(lit(1.0) - col("n_distinct").cast("double") / col("n_ngrams"), 4))
       .orderBy("doc_id")
@@ -726,7 +751,7 @@ object TextOps {
     val w = Window.partitionBy("shard").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     docs
-      .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("n_tokens"))
+      .select(col("doc_id"), tokenCount(col("text")).as("n_tokens"))
       .filter(col("n_tokens") > 0)
       .withColumn("shard", pmod(col("doc_id"), lit(shards.toLong)))
       .withColumn("start_tok", coalesce(sum("n_tokens").over(w), lit(0L)))
@@ -772,8 +797,7 @@ object TextOps {
     require(chunkTokens > 0 && overlap >= 0 && overlap < chunkTokens,
       s"bad chunk params chunk=$chunkTokens overlap=$overlap")
     val stride = chunkTokens - overlap
-    docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
+    tokenized(docs, 0, "doc_id")
       .withColumn("n_tokens", size(col("toks")).cast("long"))
       .filter(col("n_tokens") > 0)
       .withColumn("n_chunks",
@@ -1011,20 +1035,13 @@ object TextOps {
     import org.apache.spark.sql.graftext.Shingles
     // r17 (guide §2.5): fan out of the 1-task single-row-group scan
     // before the tokenize + window-hash posexplode
-    val toksD = Fanout.bySmallInput(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k)
+    val toksD = tokenized(Fanout.bySmallInput(
+        docs.select(col("doc_id"), col("text")), col("doc_id")), k, "doc_id")
     val pos = toksD
       .select(col("doc_id"),
         posexplode(Shingles.gramHashes(col("toks"), k)).as(Seq("pos", "h")))
-    // the duplicated-gram set is the only thing aggregated corpus-wide;
-    // persist it so the flagging join can't re-run the explode behind it
-    val dup = pos.groupBy("h").agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= minDocs)
-      .select(col("h"))
-      .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shared = pos.join(dup, Seq("h"), "leftsemi")
+    // the duplicated-gram set is the only thing aggregated corpus-wide
+    val shared = pos.join(sharedKeys(pos, "h", minDocs), Seq("h"), "leftsemi")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
     val runs = shared
@@ -1062,17 +1079,14 @@ object TextOps {
   def scrubSharedSpans(docs: DataFrame, k: Int = 10, minDocs: Int = 2,
                        minRun: Int = 1): DataFrame = {
     import org.apache.spark.sql.graftext.Shingles
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // r17 (guide §2.5): fan out of the 1-task scan (see sharedSpans)
-    val toksD = Fanout.bySmallInput(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val withWin = toksD.filter(size(col("toks")) >= k)
+    val fanned = Fanout.bySmallInput(
+      docs.select(col("doc_id"), col("text")), col("doc_id"))
+    val toksD = tokenized(fanned, 0, "doc_id")
+    val withWin = tokenized(fanned, k, "doc_id")
     val pos = withWin.select(col("doc_id"),
       posexplode(Shingles.gramHashes(col("toks"), k)).as(Seq("pos", "h")))
-    val dup = pos.groupBy("h").agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= minDocs).select(col("h")).persistTracked(mem)
-    val shared = pos.join(dup, Seq("h"), "leftsemi")
+    val shared = pos.join(sharedKeys(pos, "h", minDocs), Seq("h"), "leftsemi")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
     val covered = shared
@@ -1083,7 +1097,7 @@ object TextOps {
       .filter(col("run") >= minRun)
       .select(col("doc_id"), explode(sequence(col("start"), col("end"))).as("tpos"))
       .distinct()
-      .persistTracked(mem)
+      .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val affected = covered.select(col("doc_id")).distinct()
     val rebuilt = withWin.join(affected, Seq("doc_id"), "leftsemi")
       .select(col("doc_id"), posexplode(col("toks")).as(Seq("tpos", "tok")))
@@ -1237,7 +1251,7 @@ object TextOps {
     * final (lang × band)-domain aggregate. */
   def readability(docs: DataFrame): DataFrame = {
     val txt = col("text")
-    val words = size(tokens(txt)).cast("long")
+    val words = tokenCount(txt)
     val sentences = greatest(regexp_count(txt, lit("[.!?]+")).cast("long"), lit(1L))
     val syllables = regexp_count(lower(txt), lit("[aeiouy]+")).cast("long")
     val wordsNz = nullif(words.cast("double"), lit(0.0))

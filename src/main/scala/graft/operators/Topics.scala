@@ -139,7 +139,7 @@ object Topics {
     // (iterative distributed float, no cross-engine twin).
     val toks = graft.operators.Sizing.byEstimate(
       docs.select(col("doc_id"),
-        array_remove(split(lower(col("text")), "[^a-z0-9]+"), "").as("words")),
+        TextOps.tokens(col("text")).as("words")),
       targetBytes = 32L * 1024 * 1024)
     val cv = new CountVectorizer()
       .setInputCol("words").setOutputCol("features")
@@ -187,7 +187,7 @@ object Topics {
     // (iterative distributed float, no cross-engine twin).
     val toks = graft.operators.Sizing.byEstimate(
       docs.select(col("doc_id"),
-        array_remove(split(lower(col("text")), "[^a-z0-9]+"), "").as("words")),
+        TextOps.tokens(col("text")).as("words")),
       targetBytes = 32L * 1024 * 1024)
     val cv = new CountVectorizer()
       .setInputCol("words").setOutputCol("features")

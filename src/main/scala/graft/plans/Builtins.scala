@@ -41,7 +41,7 @@ object Builtins {
       df => df.withColumn("ctext", TextOps.clean(col("text"))),
       doc = "scrub urls/emails/control chars from `text` into `ctext`")
     OpRegistry.register("text.token_count",
-      df => df.withColumn("n_tokens", size(TextOps.tokens(col("text"))).cast("long")),
+      df => df.withColumn("n_tokens", TextOps.tokenCount(col("text"))),
       doc = "whitespace/punct token count of `text` as `n_tokens`")
     OpRegistry.register("text.quality",
       df => TextOps.qualityScores(df),

@@ -147,7 +147,7 @@ object Suite {
       Pipeline.Step("cleaned", Seq("documents"),
         in => in("documents").withColumn("ctext", TextOps.clean(col("text")))),
       Pipeline.Step("scored", Seq("cleaned"),
-        in => in("cleaned").withColumn("n_tokens", size(TextOps.tokens(col("ctext"))).cast("long"))),
+        in => in("cleaned").withColumn("n_tokens", TextOps.tokenCount(col("ctext")))),
       Pipeline.Step("kept", Seq("scored"),
         in => in("scored").filter(col("n_tokens") >= 20)),
       Pipeline.Step("deduped", Seq("kept"),
@@ -437,7 +437,7 @@ object Suite {
   def pipelineCurate(s: SparkSession, dir: String): DataFrame = {
     val cleaned = t(s, dir, "documents")
       .withColumn("ctext", TextOps.clean(col("text")))
-      .withColumn("n_toks", size(TextOps.tokens(col("ctext"))).cast("long"))
+      .withColumn("n_toks", TextOps.tokenCount(col("ctext")))
     val gated = cleaned
       .filter(col("n_toks") >= 10)
       .withColumn("fp", md5(graft.operators.Dedup.normalized(col("ctext"))))
@@ -669,12 +669,11 @@ object Suite {
     * the SQL-checkable verification kernel used on LSH candidates. */
   def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val a = d.filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id").as("doc_a"), TextOps.tokens(col("text")).as("toks_a"))
-    val b = d.select((col("doc_id") - 1).as("doc_a"), col("doc_id").as("doc_b"),
-      TextOps.tokens(col("text")).as("toks_b"))
+    val a = TextOps.tokenized(d.filter(col("doc_id") % 5 === 0), 3, "doc_id")
+      .select(col("doc_id").as("doc_a"), col("toks").as("toks_a"))
+    val b = TextOps.tokenized(d, 3, "doc_id")
+      .select((col("doc_id") - 1).as("doc_a"), col("doc_id").as("doc_b"), col("toks").as("toks_b"))
     a.join(b, "doc_a")
-      .filter(size(col("toks_a")) >= 3 && size(col("toks_b")) >= 3)
       .select(col("doc_a"), col("doc_b"), Dedup.ngramJaccard(3).as("jaccard"))
       .orderBy("doc_a")
   }
@@ -1868,13 +1867,9 @@ object Suite {
     import org.apache.spark.sql.expressions.Window
     // r17 (guide §2.5): the bigram explode ran on ONE task off the
     // single-row-group scan (ProfileKey tmax 1716 ms vs tmed 51 ms)
-    val toksD = graft.operators.Fanout.bySmallInput(
-        t(s, dir, "documents").select(col("doc_id"), col("text")), col("doc_id"))
-      .select(TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-    val grams = toksD.select(explode(expr(
-        "transform(sequence(0, size(toks)-2), i -> concat(toks[i], ' ', toks[i+1]))"))
-        .as("term"))
+    val grams = TextOps.tokenized(graft.operators.Fanout.bySmallInput(
+        t(s, dir, "documents").select(col("doc_id"), col("text")), col("doc_id")), 2)
+      .select(explode(TextOps.grams("toks", 2)).as("term"))
       .persistTracked() // feeds both the sketch fold and the exact probe counts
     val grid = CountMin.sketch(grams, "term")
     val exact = grams.groupBy("term").agg(count(lit(1)).as("n_true"))

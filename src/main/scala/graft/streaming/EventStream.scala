@@ -501,22 +501,13 @@ object EventStream {
     * oracle-checkable — the strongest check a streaming sketch can
     * carry. Probes: user_ids 0,10,…,90 (present at every SF). */
   def cmsStream(spark: SparkSession, path: String, d: Int = 3, w: Int = 64): DataFrame = {
-    val depths = explode(array((0 until d).map(lit): _*)).as("depth")
-    val bucketOf = (term: org.apache.spark.sql.Column, depth: org.apache.spark.sql.Column) =>
-      conv(substring(md5(concat(depth.cast("string"), lit("|"), term)), 1, 8),
-        16, 10).cast("long") % w
     val grid = runToMemory(spark,
-      source(spark, path)
-        .select(col("user_id").cast("string").as("term"), depths)
-        .select(col("depth"), bucketOf(col("term"), col("depth")).as("bucket"))
-        .groupBy("depth", "bucket").agg(count(lit(1)).as("cnt")),
+      graft.operators.CountMin.sketch(
+        source(spark, path).select(col("user_id").cast("string").as("term")), "term", d, w),
       "complete")
     import spark.implicits._
     val probes = (0 until 10).map(i => (i * 10).toString).toDF("term")
-    probes.select(col("term"), explode(array((0 until d).map(lit): _*)).as("depth"))
-      .withColumn("bucket", bucketOf(col("term"), col("depth")))
-      .join(broadcast(grid), Seq("depth", "bucket"))
-      .groupBy("term").agg(min("cnt").as("n_est"))
+    graft.operators.CountMin.estimate(grid, probes, d, w)
       .select(col("term").cast("long").as("user_id"), col("n_est"))
       .orderBy("user_id")
   }

@@ -208,9 +208,10 @@ class GraphSpec extends SparkTestBase {
       df.collect().map(_.toSeq.mkString("(", ",", ")")).mkString(" ")
     // outputs recorded before the operators shared one edge set, one
     // frame per operator. LPA oscillates on this
-    // graph (synchronous rounds), and kCore, degreeStats, clusteringCoeff
-    // and triangleCounts keep the self-loop and the parallel edge in
-    // their degree folds: the pins hold that edge multiset too
+    // graph (synchronous rounds); kCore drops the self-loop and the
+    // parallel edge, while degreeStats, clusteringCoeff and
+    // triangleCounts keep both in their degree folds (their precondition
+    // is unique u < v edges): the pins hold that edge multiset too
     val want = Seq(
       rows(Graph.labelPropagation(raw.toDF("src", "dst"), iters = 5)) ->
         "(1,2) (2,1) (3,1) (4,2) (5,1) (6,1) (7,2) (8,4) (10,11) (11,10)",
@@ -223,7 +224,8 @@ class GraphSpec extends SparkTestBase {
           "(2,6,1,3,3,0.2) (3,6,1,3,3,0.2) (4,7,1,4,2,0.2) (5,7,1,4,2,0.2) " +
           "(2,4,1,3,4,0.1667) (2,5,1,3,4,0.1667) (3,4,1,3,4,0.1667) " +
           "(3,5,1,3,4,0.1667) (4,6,1,4,3,0.1667)"),
-      rows(Graph.kCore(uv, k = 2)) -> "(1,2) (2,3) (3,3) (4,4) (5,4) (6,2)",
+      // node 5's distinct neighbours are 4 and 6 (its self-loop is none)
+      rows(Graph.kCore(uv, k = 2)) -> "(1,2) (2,3) (3,3) (4,4) (5,2) (6,2)",
       rows(Graph.kCore(uv, k = 3)) -> "",
       rows(Graph.degreeStats(uv)) -> "(10,15,5,3.0,0.6053)",
       rows(Graph.clusteringCoeff(uv)) ->

@@ -775,4 +775,41 @@ class TextOpsSpec extends SparkTestBase {
     assert(rows(Dedup.containmentPairs(docs, threshold = 0.4)) ==
       Seq(r(4L, 5L, 1.0), r(5L, 4L, 0.5)))
   }
+
+  test("gram builders return empty below k tokens and every gram at or above it") {
+    val toks = Seq(Seq.empty[String], Seq("a"), Seq("a", "b"), Seq("a", "b", "c"),
+      Seq("a", "b", "c", "a", "b", "c")).toDF("toks")
+    val out = toks.select(TextOps.grams("toks", 3), TextOps.gramSet("toks", 3),
+        TextOps.uniBigrams("toks"), size(TextOps.gramHashSet(col("toks"), 3)))
+      .collect().map(r => (r.getSeq[String](0), r.getSeq[String](1), r.getSeq[String](2),
+        r.getInt(3)))
+    assert(out.toSeq == Seq(
+      (Nil, Nil, Nil, 0),
+      (Nil, Nil, Seq("a"), 0),
+      (Nil, Nil, Seq("a", "b", "a b"), 0),
+      (Seq("a b c"), Seq("a b c"), Seq("a", "b", "c", "a b", "b c"), 1),
+      (Seq("a b c", "b c a", "c a b", "a b c"), Seq("a b c", "b c a", "c a b"),
+        Seq("a", "b", "c", "a", "b", "c", "a b", "b c", "c a", "a b", "b c"), 3)))
+  }
+
+  test("the tokenizer, the gram builder and the gram-hash set each have one home under operators/") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(root), s"run from the repo root (cwd: ${Paths.get("").toAbsolutePath})")
+    val lines = {
+      val s = Files.walk(root)
+      val files = try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+      for (f <- files; (line, i) <- Files.readAllLines(f).asScala.zipWithIndex)
+        yield (s"${root.relativize(f)}:${i + 1}", line)
+    }
+    def hits(p: String => Boolean) = lines.collect { case (at, line) if p(line) => at }
+    val tokenizer = hits(_.contains("\"[^a-z0-9]+\""))
+    assert(tokenizer.size == 1, s"tokenize through TextOps.tokens: $tokenizer")
+    val gramSeq = hits(_.contains("sequence(0, size("))
+    assert(gramSeq.size <= 1, s"build grams through TextOps.grams: $gramSeq")
+    val hashSet = hits(l => "winnowFps\\(.*,\\s*1\\)".r.findFirstIn(l).nonEmpty)
+    assert(hashSet.size == 1 && hashSet.forall(_.startsWith("TextOps.scala:")),
+      s"hash gram sets through TextOps.gramHashSet: $hashSet")
+  }
 }
