@@ -3,13 +3,18 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Dumps formatted physical plans for the headline queries so the scale
   * properties (pushdown, broadcast, codegen spans, shuffle count) can be
   * audited: runMain graft.PlanAudit <sfDir> <outFile> [key ...]. Listed
   * keys replace the built-in [[audited]] list (before/after plan
   * evidence for an optimization). Each key's header carries its
-  * optimized plan's [[exprNodes]] count as `expr_nodes=N`.
+  * optimized plan's [[exprNodes]] count as `expr_nodes=N`, the shuffle
+  * width it planned at as `width=N` and its physical plan's
+  * [[exchanges]] count as `exchanges=M`.
   * Iterative-loop operators materialize eagerly at construction, so
   * their dump shows only the final readout plan.
   */
@@ -376,19 +381,31 @@ object PlanAudit {
       p.expressions.map(_.collect { case e => e }.size).sum
     }.sum
 
+  /** Shuffle exchanges in a physical plan, subquery plans included
+    * (an adaptive plan is counted through its current physical plan). */
+  def exchanges(plan: SparkPlan): Int =
+    plan.collectWithSubqueries {
+      case e: ShuffleExchangeExec => 1
+      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    }.sum
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/tmp/plans.txt"
     val keys = if (args.length > 2) args.drop(2).toSeq else audited
     val unknown = keys.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
-    // plan text depends on the partition count: audit at a fixed width
+    // plan text depends on the partition count: audit at a fixed cap
+    // (each key plans at Sizing.width under it)
     val spark = Sessions.create(8)
     val sb = new StringBuilder
     keys.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val nodes = exprNodes(df.queryExecution.optimizedPlan)
-      sb.append(s"\n================ $name expr_nodes=$nodes ================\n")
+      val qe = df.queryExecution
+      val nodes = exprNodes(qe.optimizedPlan)
+      val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+      sb.append(s"\n================ $name expr_nodes=$nodes width=$width " +
+        s"exchanges=${exchanges(qe.executedPlan)} ================\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }

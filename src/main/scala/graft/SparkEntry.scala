@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftext.SmallSort
+import org.apache.spark.sql.graftext.{QuerySession, SmallSort}
+import graft.operators.Sizing
 import graft.queries.{Relational, Suite}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the component each
@@ -383,12 +384,16 @@ object SparkEntry {
     "stream_enrich" -> (Suite.streamEnrich _)
   )
 
-  /** The driver contract: every [[raw]] query, each first installing
-    * [[SmallSort]] on the session it is handed (idempotently), so a
-    * caller's own session plans small presentation sorts without the
-    * range exchange's sampling job. */
+  /** The driver contract: every [[raw]] query, run on its own
+    * [[QuerySession]] clone of the caller's session. The clone plans
+    * every shuffle at [[Sizing.width]], one partition per 100k exact
+    * input rows capped at the caller's width, so a small input pays no
+    * per-task cost for empty partitions; and it carries [[SmallSort]],
+    * so small presentation sorts skip the range exchange's sampling job.
+    * The caller's session is left as it was. */
   val queries: Map[String, Query] = raw.map { case (key, fn) =>
-    key -> { (spark: SparkSession, dir: String) => SmallSort.install(spark); fn(spark, dir) }
+    key -> { (spark: SparkSession, dir: String) =>
+      fn(QuerySession.at(spark, Sizing.width(spark, dir)), dir) }
   }
 
   /** dHash oracle, generated: 72 strided hex-parsed "pixels", 64

@@ -15,7 +15,8 @@ object Sessions {
 
   /** Harness session: shuffle width from `SPARK_GRAFT_SHUFFLE` (scale
     * probes size it with the data, like a real cluster), otherwise
-    * `cpus`. */
+    * `cpus`. `SparkEntry.queries` keys plan at most this wide: each
+    * sizes its own width from its input rows (`Sizing.width`). */
   def create(cpus: Int, master: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)

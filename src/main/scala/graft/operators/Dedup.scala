@@ -100,10 +100,13 @@ object Dedup {
     // expensive-per-row map; fan the narrow input out of the
     // single-row-group scan before it (signatures are per-doc — row
     // placement cannot change them)
-    tokenizedFanned(docs, shingleK)
-      .select(col("doc_id"),
-        org.apache.spark.sql.graftext.Shingles
-          .minhashSig(col("toks"), shingleK, NumHashes).as("sig"))
+    signaturesOf(tokenizedFanned(docs, shingleK), shingleK)
+
+  /** The signature of each row of a tokenized (doc_id, toks) frame. */
+  private def signaturesOf(toks: DataFrame, shingleK: Int): DataFrame =
+    toks.select(col("doc_id"),
+      org.apache.spark.sql.graftext.Shingles
+        .minhashSig(col("toks"), shingleK, NumHashes).as("sig"))
 
   /** Banded (band, band_hash) keys from a PERSISTED signature table —
     * shared by the self-join (minhashCandidates) and the incremental
@@ -122,13 +125,17 @@ object Dedup {
   /** Candidate near-dup pairs via banded LSH: explode each signature into
     * (band, band_hash) keys, equi-join on the key, estimate Jaccard from
     * full-signature agreement. No crossJoin anywhere. */
-  def minhashCandidates(docs: DataFrame, shingleK: Int = 3): DataFrame = {
+  def minhashCandidates(docs: DataFrame, shingleK: Int = 3): DataFrame =
+    candidatesOf(minhashSignatures(docs, shingleK))
+
+  /** [[minhashCandidates]] from a signature table. */
+  private def candidatesOf(signatures: DataFrame): DataFrame = {
     // Persist the signature table: the band self-join references it on both
     // sides, and without materialization Spark recomputes the whole
     // shingle+minhash subtree twice. Signatures are tiny relative to the
     // corpus (NumHashes longs per doc), so this is the 100 TB play too
     // (there you'd checkpoint them to storage).
-    val sigs = minhashSignatures(docs, shingleK)
+    val sigs = signatures
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = bandedSigs(sigs)
     val a = banded.select(col("band"), col("bhash"), col("doc_id").as("doc_a"), col("sig").as("sig_a"))
@@ -224,8 +231,11 @@ object Dedup {
     * oracle is brute-force all-pairs exact Jaccard: a hash match proves
     * both properties end-to-end on the corpus. */
   def minhashVerified(docs: DataFrame, threshold: Double, shingleK: Int = 3): DataFrame = {
+    // one persisted tokenized frame feeds the signatures and both sides
+    // of the verify join, so the documents are scanned and tokenized once
     val toks = tokenizedFanned(docs, shingleK)
-    exactVerified(minhashCandidates(docs, shingleK).select("doc_a", "doc_b"),
+      .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    exactVerified(candidatesOf(signaturesOf(toks, shingleK)).select("doc_a", "doc_b"),
       "doc_a", toks, "doc_b", toks, threshold, shingleK)
   }
 

@@ -60,12 +60,12 @@ object Graph {
   }
 
   /** The shuffle width of a graph loop, sized to the graph rather than
-    * the session default: one partition per 100k rows of `edges` (which
-    * this counts), at most the default parallelism. At spec scale the
+    * the session default: one partition per [[Sizing.RowsPerPartition]]
+    * rows of `edges` (which this counts), at most the default parallelism. At spec scale the
     * loops are scheduler-bound otherwise. */
   private[operators] def graphParts(edges: DataFrame): Int =
     math.max(1, math.min(edges.sparkSession.sparkContext.defaultParallelism,
-      (edges.count() / 100000L).toInt + 1))
+      (edges.count() / Sizing.RowsPerPartition).toInt + 1))
 
   /** Fixed-iteration PageRank: rank = (1-d)/N + d * sum(in-contrib).
     * `edges` is a directed (src, dst) table; parallel edges are collapsed

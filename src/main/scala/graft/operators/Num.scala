@@ -14,6 +14,38 @@ import org.apache.spark.sql.functions._
   * can be off by a constant factor, which moves file sizes — never
   * correctness. */
 object Sizing {
+  /** Input rows one shuffle partition plans for: a query's shuffle
+    * width ([[width]]) and a graph's (`Graph.graphParts`) grow by one
+    * partition per this many rows. */
+  val RowsPerPartition = 100000L
+
+  // Metadata memo, like `Tables.schemaOf`: footer row counts of an
+  // immutable testdata dir, read once per dir per JVM. Not result
+  // caching; a stale count could only move a shuffle width.
+  private val inputRowsMemo = scala.collection.concurrent.TrieMap[String, Long]()
+
+  /** Exact input rows under `dir`: the sum of the footer row counts of
+    * its [[graft.Tables.names]] tables. A table may be one parquet file
+    * (the testdata) or a parquet dir (anything Spark wrote); a missing
+    * table counts 0. */
+  def inputRows(dir: String): Long = inputRowsMemo.getOrElseUpdate(dir,
+    graft.Tables.names.map { name =>
+      val path = s"$dir/$name.parquet"
+      val f = new java.io.File(path)
+      if (f.isDirectory) graft.registries.ParquetMeta.dirRowCount(path)
+      else if (f.isFile) graft.registries.ParquetMeta.rowCount(path)
+      else 0L
+    }.sum)
+
+  /** The shuffle width of a query over `dir`: one partition per
+    * [[RowsPerPartition]] input rows, never wider than the caller's
+    * `spark.sql.shuffle.partitions`. */
+  def width(spark: org.apache.spark.sql.SparkSession, dir: String): Int =
+    width(spark.conf.get("spark.sql.shuffle.partitions").toLong, inputRows(dir))
+
+  def width(cap: Long, rows: Long): Int =
+    math.min(cap, rows / RowsPerPartition + 1).toInt
+
   /** The size gate shared by [[Broadcasting]], [[Fanout]] and the
     * `SmallSort` planner strategy: does the optimizer's estimate fit
     * `capBytes`? Compared in BigInt, because join/unknown-leaf

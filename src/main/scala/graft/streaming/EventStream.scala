@@ -82,20 +82,23 @@ object EventStream {
         else None
       }
 
-  /** A stateful face's shuffle width: `SPARK_GRAFT_STATE_PARTITIONS`, default 8. */
-  def statePartitionsFrom(env: Map[String, String]): Long =
-    graft.Sessions.knob(env, "SPARK_GRAFT_STATE_PARTITIONS", 8, min = 1)
+  /** A stateful face's shuffle width: `SPARK_GRAFT_STATE_PARTITIONS`,
+    * else `default`. */
+  def statePartitionsFrom(env: Map[String, String], default: Long): Long =
+    graft.Sessions.knob(env, "SPARK_GRAFT_STATE_PARTITIONS", default, min = 1)
 
-  /** Clone a session for a STATEFUL face: shuffle width sized to state
-    * cardinality (one state store per shuffle partition — with the batch
-    * default of 32 the per-store bookkeeping, not the data, dominates at
-    * gate SFs; `SPARK_GRAFT_STATE_PARTITIONS` overrides for clusters
-    * where store count must track key cardinality) + the state-store
-    * provider resolved per face shape ([[resolveProvider]]). */
+  /** A fresh session for a STATEFUL face: one state store per shuffle
+    * partition, at the width of the session it is handed (a
+    * `SparkEntry.queries` session is already sized from its input rows,
+    * so at gate SFs the per-store bookkeeping does not outweigh the
+    * data; `SPARK_GRAFT_STATE_PARTITIONS` overrides for clusters where
+    * store count must track key cardinality) + the state-store provider
+    * resolved per face shape ([[resolveProvider]]). */
   private def statefulSession(spark0: SparkSession,
       shape: StateShape = StateShape.ScanHeavy): SparkSession = {
     val s = spark0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", statePartitionsFrom(sys.env).toString)
+    s.conf.set("spark.sql.shuffle.partitions", statePartitionsFrom(sys.env,
+      spark0.conf.get("spark.sql.shuffle.partitions").toLong).toString)
     resolveProvider(shape, sys.env.toMap).foreach(
       s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
     s

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, Lower, StringSplit}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -496,5 +500,41 @@ class DedupSpec extends SparkTestBase {
     assert(ch.head._4 == 0L, "first chunk starts at pos 0")
     // start positions are the running token counts (spans are contiguous)
     assert(ch.map(_._4).toSeq == ch.map(_._3).scanLeft(0L)(_ + _).init.toSeq)
+  }
+
+  /** Projections that tokenize (`split(lower(...))`) in a plan, each
+    * persisted frame's plan counted once however often it is read. */
+  private def tokenizings(plan: LogicalPlan): Int = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def tokenizes(e: Expression): Boolean =
+      e.exists { case StringSplit(Lower(_), _, _) => true; case _ => false }
+    def cached(m: InMemoryRelation): Int =
+      if (seen.add(m.cacheBuilder)) physical(m.cacheBuilder.cachedPlan) else 0
+    def physical(p: SparkPlan): Int = p.collectWithSubqueries {
+      case pr: ProjectExec if pr.projectList.exists(tokenizes) => 1
+      case s: InMemoryTableScanExec => cached(s.relation)
+    }.sum
+    plan.collectWithSubqueries {
+      case pr: Project if pr.projectList.exists(tokenizes) => 1
+      case m: InMemoryRelation => cached(m)
+    }.sum
+  }
+
+  // three before one tokenized frame fed the signatures and both sides
+  // of the verify join
+  test("minhashVerified scans and tokenizes the documents once") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val df = Dedup.minhashVerified(Tables.t(s, sfDir, "documents"), threshold = 0.8)
+      assert(tokenizings(df.queryExecution.optimizedPlan) == 1,
+        df.queryExecution.optimizedPlan.treeString)
+      val (_, jobs) = jobsDuring(df.collect())
+      // the tokenized frame is persisted lazily: no job is added to the
+      // two (the range sort's sampling job and the result) it took
+      // when each join side tokenized on its own
+      assert(jobs <= 2, s"$jobs jobs")
+    } finally Caches.release()
   }
 }

@@ -16,7 +16,7 @@ class SessionsSpec extends AnyFunSuite {
       Runtime.getRuntime.availableProcessors.toLong),
     ("SPARK_GRAFT_BROADCAST_CAP", Broadcasting.capFrom, 64L * 1024 * 1024),
     ("SPARK_GRAFT_FANOUT_CAP", Fanout.capFrom, 1024L * 1024 * 1024),
-    ("SPARK_GRAFT_STATE_PARTITIONS", EventStream.statePartitionsFrom, 8L),
+    ("SPARK_GRAFT_STATE_PARTITIONS", env => EventStream.statePartitionsFrom(env, 3L), 3L),
     ("SPARK_GRAFT_BENCH_CHUNK", env => Bench.chunkFrom(env).toLong, 90L))
 
   for ((name, parse, default) <- parsers) {

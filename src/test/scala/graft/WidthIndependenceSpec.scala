@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftext.SmallSort
+import org.apache.spark.sql.graftext.QuerySession
 
 /** A query's rows do not depend on the shuffle width it plans at: each
   * key below returns the same canonical (sorted) rows at one shuffle
@@ -9,7 +9,8 @@ import org.apache.spark.sql.graftext.SmallSort
   * workload, the two stateful streaming replays, a sampling key and
   * the iterative graph key — the shapes where a width could leak into
   * a result through a partition-local order, a per-partition state
-  * store or a float fold. */
+  * store or a float fold. Each run is the raw query on a
+  * [[QuerySession]] clone at that width. */
 class WidthIndependenceSpec extends SparkTestBase {
 
   private val keys = Seq(
@@ -17,19 +18,17 @@ class WidthIndependenceSpec extends SparkTestBase {
     "text_pii", "mm_phash", "graph_triangles",
     "stream_sessionize", "stream_dedup_replay", "sample_group", "graph_pagerank")
 
-  /** A session state of the shared test session at `width` shuffle
-    * partitions, AQE off (the runner sessions' setting, under which no
-    * exchange is coalesced back to a narrower width). */
-  private def at(width: Int): SparkSession = {
+  // AQE off (the runner sessions' setting), so no exchange is
+  // coalesced back to a narrower width
+  private lazy val caller: SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", width.toLong)
-    SmallSort.install(s)
     s
   }
 
   private def rows(width: Int, key: String): Seq[String] =
-    try SparkEntry.raw(key)(at(width), sfDir).collect().map(_.toString).toSeq.sorted
+    try SparkEntry.raw(key)(QuerySession.at(caller, width), sfDir)
+      .collect().map(_.toString).toSeq.sorted
     finally Caches.release()
 
   for (key <- keys) test(s"$key returns the same rows at shuffle width 1 and 4") {
