@@ -406,7 +406,7 @@ object PlanAudit {
       val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
       sb.append(s"\n================ $name expr_nodes=$nodes width=$width " +
         s"exchanges=${exchanges(qe.executedPlan)} ================\n")
-      sb.append(df.queryExecution.explainString(
+      sb.append(qe.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }
     Files.writeString(Paths.get(out), sb.toString)

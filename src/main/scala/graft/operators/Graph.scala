@@ -61,8 +61,8 @@ object Graph {
 
   /** The shuffle width of a graph loop, sized to the graph rather than
     * the session default: one partition per [[Sizing.RowsPerPartition]]
-    * rows of `edges` (which this counts), at most the default parallelism. At spec scale the
-    * loops are scheduler-bound otherwise. */
+    * rows of `edges` (which this counts), at most the default
+    * parallelism. At spec scale the loops are scheduler-bound otherwise. */
   private[operators] def graphParts(edges: DataFrame): Int =
     math.max(1, math.min(edges.sparkSession.sparkContext.defaultParallelism,
       (edges.count() / Sizing.RowsPerPartition).toInt + 1))

@@ -37,12 +37,12 @@ object Sizing {
       else 0L
     }.sum)
 
-  /** The shuffle width of a query over `dir`: one partition per
-    * [[RowsPerPartition]] input rows, never wider than the caller's
-    * `spark.sql.shuffle.partitions`. */
+  /** The shuffle width of a query over `dir`: [[width]] of its
+    * [[inputRows]] under the caller's `spark.sql.shuffle.partitions`. */
   def width(spark: org.apache.spark.sql.SparkSession, dir: String): Int =
     width(spark.conf.get("spark.sql.shuffle.partitions").toLong, inputRows(dir))
 
+  /** One partition per [[RowsPerPartition]] rows, never wider than `cap`. */
   def width(cap: Long, rows: Long): Int =
     math.min(cap, rows / RowsPerPartition + 1).toInt
 

@@ -11,13 +11,34 @@ import org.apache.spark.sql.{classic, SparkSession}
   * writing a result keeps it), temp views, extra strategies and
   * `QueryExecutionListener`s. Streaming listeners live on a session's
   * `streams` manager, which a clone does not copy, so the caller's are
-  * added to the clone; a caller with none leaves the clone's manager
-  * unbuilt (each built manager puts one listener bus on the
-  * SparkContext for good). The caller's session is never changed. */
+  * added to the clone. Each built manager puts one listener bus on the
+  * SparkContext for good, so the clone's is built only for a caller
+  * with streaming listeners or by a streaming query the key starts.
+  * The caller's session is never changed.
+  *
+  * Artifact isolation: an isolated session's tasks run in an executor
+  * session state of its own, keyed by the session's id and holding its
+  * own class loader, and Spark's codegen cache is keyed by class
+  * loader. So every clone of an isolated caller (Spark's default) would
+  * compile each of its generated classes again: graph_triangles paid 43
+  * compilations on every warm run. Isolation is fixed when a session's
+  * artifact manager is built, which `cloneSession()` does from the
+  * parent's conf; so the query session is cloned from an intermediate
+  * clone with isolation off, and its tasks share the executors' default
+  * state and codegen cache from run to run. A caller that added jars to
+  * its session keeps their classes: its query session is cloned from it
+  * directly. */
 object QuerySession {
   def at(spark: SparkSession, width: Int): SparkSession = {
     val caller = spark.asInstanceOf[classic.SparkSession]
-    val s = caller.cloneSession()
+    val parent =
+      if (caller.sessionState.artifactManager.getAddedJars.nonEmpty) caller
+      else {
+        val shared = caller.cloneSession()
+        shared.conf.set("spark.sql.artifact.isolation.enabled", "false")
+        shared
+      }
+    val s = parent.cloneSession()
     s.conf.set("spark.sql.shuffle.partitions", width.toLong)
     SmallSort.install(s)
     caller.streams.listListeners().foreach(l => s.streams.addListener(l))

@@ -105,4 +105,34 @@ class QuerySessionSpec extends SparkTestBase {
       assert(added("stream_window") == 2)
     } finally caller.streams.removeListener(listener)
   }
+
+  test("a warm rerun compiles no generated class again") {
+    // each query session is a new session; an artifact-isolated one
+    // would run its tasks under a class loader of its own, which
+    // Spark's codegen cache is keyed by
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.enabled", "false")
+    val compilations = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def run(key: String): Long = {
+      val n0 = compilations.getCount
+      try SparkEntry.queries(key)(caller, sfDir).collect() finally Caches.release()
+      compilations.getCount - n0
+    }
+    for (key <- Seq("q1_agg", "dq_anova")) {
+      run(key)
+      assert(run(key) == 0L, key)
+    }
+  }
+
+  test("a caller's session jars stay visible to its query session") {
+    val caller = spark.newSession()
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    def queryIsolation: String =
+      SparkEntry.queries("q1_agg")(caller, sfDir).sparkSession.conf.get(isolation)
+    assert(queryIsolation == "false")
+    val jar = Files.createTempFile("graft_artifact_", ".jar")
+    new java.util.jar.JarOutputStream(Files.newOutputStream(jar)).close()
+    caller.addArtifact(jar.toString)
+    assert(queryIsolation == "true")
+  }
 }
