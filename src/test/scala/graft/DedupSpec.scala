@@ -521,8 +521,6 @@ class DedupSpec extends SparkTestBase {
     }.sum
   }
 
-  // three before one tokenized frame fed the signatures and both sides
-  // of the verify join
   test("minhashVerified scans and tokenizes the documents once") {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
@@ -531,9 +529,7 @@ class DedupSpec extends SparkTestBase {
       assert(tokenizings(df.queryExecution.optimizedPlan) == 1,
         df.queryExecution.optimizedPlan.treeString)
       val (_, jobs) = jobsDuring(df.collect())
-      // the tokenized frame is persisted lazily: no job is added to the
-      // two (the range sort's sampling job and the result) it took
-      // when each join side tokenized on its own
+      // the persist is lazy: the range sort's sampling job and the result
       assert(jobs <= 2, s"$jobs jobs")
     } finally Caches.release()
   }

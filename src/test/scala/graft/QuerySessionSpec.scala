@@ -31,7 +31,7 @@ class QuerySessionSpec extends SparkTestBase {
     val each = Tables.names.map(n => ParquetMeta.rowCount(s"$sfDir/$n.parquet"))
     assert(Sizing.inputRows(sfDir) == each.sum)
     // a Spark-written table is a dir of part-files; absent tables count 0
-    val dir = Files.createTempDirectory("graft_rows_")
+    val dir = graft.sources.Export.tempDir("graft_rows_")
     spark.range(7).repartition(3).write.parquet(s"$dir/orders.parquet")
     Files.copy(Paths.get(s"$sfDir/region.parquet"), dir.resolve("region.parquet"))
     assert(Sizing.inputRows(dir.toString) == 7L + ParquetMeta.rowCount(s"$sfDir/region.parquet"))
@@ -130,7 +130,7 @@ class QuerySessionSpec extends SparkTestBase {
     def queryIsolation: String =
       SparkEntry.queries("q1_agg")(caller, sfDir).sparkSession.conf.get(isolation)
     assert(queryIsolation == "false")
-    val jar = Files.createTempFile("graft_artifact_", ".jar")
+    val jar = graft.sources.Export.tempDir("graft_artifact_").resolve("empty.jar")
     new java.util.jar.JarOutputStream(Files.newOutputStream(jar)).close()
     caller.addArtifact(jar.toString)
     assert(queryIsolation == "true")
