@@ -384,14 +384,13 @@ object SparkEntry {
     "stream_enrich" -> (Suite.streamEnrich _)
   )
 
-  /** The driver contract: every [[raw]] query, run on its own
-    * [[QuerySession]] clone of the caller's session. The clone plans
-    * every shuffle at [[Sizing.width]], one partition per
-    * [[Sizing.RowsPerPartition]] exact input rows capped at the caller's
-    * width, so a small input pays no per-task cost for empty
-    * partitions; and it carries [[SmallSort]],
-    * so small presentation sorts skip the range exchange's sampling job.
-    * The caller's session is left as it was. */
+  /** Every [[raw]] query, run on its own [[QuerySession]] clone of the
+    * caller's session. The clone plans every shuffle at [[Sizing.width]],
+    * one partition per [[Sizing.RowsPerPartition]] exact input rows
+    * capped at the caller's width, so a small input pays no per-task
+    * cost for empty partitions; and it carries [[SmallSort]], so small
+    * presentation sorts skip the range exchange's sampling job. The
+    * caller's session is left as it was. */
   val queries: Map[String, Query] = raw.map { case (key, fn) =>
     key -> { (spark: SparkSession, dir: String) =>
       fn(QuerySession.at(spark, Sizing.width(spark, dir)), dir) }
