@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftext.{QuerySession, SmallSort}
-import graft.operators.Sizing
 import graft.queries.{Relational, Suite}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the component each
@@ -385,15 +384,15 @@ object SparkEntry {
   )
 
   /** Every [[raw]] query, run on its own [[QuerySession]] clone of the
-    * caller's session. The clone plans every shuffle at [[Sizing.width]],
-    * one partition per [[Sizing.RowsPerPartition]] exact input rows
-    * capped at the caller's width, so a small input pays no per-task
-    * cost for empty partitions; and it carries [[SmallSort]], so small
-    * presentation sorts skip the range exchange's sampling job. The
-    * caller's session is left as it was. */
+    * caller's session ([[QuerySession.sized]]). The clone plans every
+    * shuffle at one partition per `Sizing.RowsPerPartition` exact input
+    * rows, capped at the caller's width, so a small input pays no
+    * per-task cost for empty partitions; and it carries [[SmallSort]],
+    * so small presentation sorts skip the range exchange's sampling
+    * job. The caller's session is left as it was. */
   val queries: Map[String, Query] = raw.map { case (key, fn) =>
     key -> { (spark: SparkSession, dir: String) =>
-      fn(QuerySession.at(spark, Sizing.width(spark, dir)), dir) }
+      QuerySession.sized(spark, dir)(fn(_, dir)) }
   }
 
   /** dHash oracle, generated: 72 strided hex-parsed "pixels", 64

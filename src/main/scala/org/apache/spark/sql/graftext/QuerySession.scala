@@ -1,6 +1,13 @@
 package org.apache.spark.sql.graftext
 
+import java.util.UUID
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{classic, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+import graft.operators.Sizing
 
 /** The session one query runs on: a clone of the caller's session
   * (`cloneSession()` is `private[sql]`, hence this package) planning its
@@ -11,10 +18,12 @@ import org.apache.spark.sql.{classic, SparkSession}
   * writing a result keeps it), temp views, extra strategies and
   * `QueryExecutionListener`s. Streaming listeners live on a session's
   * `streams` manager, which a clone does not copy, so the caller's are
-  * added to the clone. Each built manager puts one listener bus on the
-  * SparkContext for good, so the clone's is built only for a caller
-  * with streaming listeners or by a streaming query the key starts.
-  * The caller's session is never changed.
+  * added to the clone. The caller's session is never changed.
+  *
+  * Every built `streams` manager puts one listener bus on the
+  * SparkContext, which Spark never removes and which every later
+  * streaming event is delivered to; [[BusRelease]] removes the clone's
+  * once the query is done and its streaming queries have ended.
   *
   * Artifact isolation: an isolated session's tasks run in an executor
   * session state of its own, keyed by the session's id and holding its
@@ -25,23 +34,52 @@ import org.apache.spark.sql.{classic, SparkSession}
   * artifact manager is built, which `cloneSession()` does from the
   * parent's conf; so the query session is cloned from an intermediate
   * clone with isolation off, and its tasks share the executors' default
-  * state and codegen cache from run to run. A caller that added jars to
-  * its session keeps their classes: its query session is cloned from it
-  * directly. */
+  * state and codegen cache from run to run. */
 object QuerySession {
-  def at(spark: SparkSession, width: Int): SparkSession = {
+  /** `body` on a query session for the input under `dir`, planned at
+    * [[Sizing.width]]: one partition per [[Sizing.RowsPerPartition]]
+    * exact input rows, capped at the caller's width. */
+  def sized[T](spark: SparkSession, dir: String)(body: SparkSession => T): T =
+    run(spark, Sizing.width(spark, dir))(body)
+
+  /** `body` on a query session planned at `width` partitions. */
+  def run[T](spark: SparkSession, width: Int)(body: SparkSession => T): T = {
     val caller = spark.asInstanceOf[classic.SparkSession]
-    val parent =
-      if (caller.sessionState.artifactManager.getAddedJars.nonEmpty) caller
-      else {
-        val shared = caller.cloneSession()
-        shared.conf.set("spark.sql.artifact.isolation.enabled", "false")
-        shared
-      }
-    val s = parent.cloneSession()
+    val shared = caller.cloneSession()
+    shared.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    val s = shared.cloneSession()
     s.conf.set("spark.sql.shuffle.partitions", width.toLong)
     SmallSort.install(s)
     caller.streams.listListeners().foreach(l => s.streams.addListener(l))
-    s
+    val release = new BusRelease(s.sparkContext)
+    s.streams.addListener(release)
+    try body(s) finally release.done()
+  }
+
+  /** Removes the listener bus of the `streams` manager it listens on
+    * from the SparkContext once [[done]] has been called and every
+    * streaming query started on that manager has terminated. It counts
+    * queries by run id, and the terminated event reaches it after the
+    * query's progress events, so every listener on the manager has seen
+    * them by then. */
+  private final class BusRelease(sc: SparkContext) extends StreamingQueryListener {
+    private val running = scala.collection.mutable.Set[UUID]()
+    private var finished = false
+
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      synchronized { running += e.runId }
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      synchronized { running -= e.runId; releaseIfIdle() }
+
+    def done(): Unit = synchronized { finished = true; releaseIfIdle() }
+
+    private def releaseIfIdle(): Unit =
+      if (finished && running.isEmpty) {
+        val live = sc.listenerBus
+        live.findListenersByClass[StreamingQueryListenerBus]()
+          .filter(_.listeners.contains(this))
+          .foreach(live.removeListener)
+      }
   }
 }

@@ -27,7 +27,7 @@ class WidthIndependenceSpec extends SparkTestBase {
   }
 
   private def rows(width: Int, key: String): Seq[String] =
-    try SparkEntry.raw(key)(QuerySession.at(caller, width), sfDir)
+    try QuerySession.run(caller, width)(SparkEntry.raw(key)(_, sfDir))
       .collect().map(_.toString).toSeq.sorted
     finally Caches.release()
 
