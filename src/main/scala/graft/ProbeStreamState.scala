@@ -2,6 +2,7 @@ package graft
 
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftext.QuerySession
 
 /** Scale-probe main for streaming STATE-STORE behavior: replays the
   * events corpus as a time-ordered multi-batch stream, so the watermark
@@ -13,6 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[graft.streaming.EventStream.dedupWithinWatermarkReplay]]),
   * `leftjoin` ([[graft.streaming.EventStream.purchaseClickLeftJoinReplay]])
   * and `sessionize` ([[graft.streaming.EventStream.sessionStatsExpiring]]).
+  *
+  * Each leg runs on the query session a `SparkEntry.queries` key over
+  * the same dir would get, so the faces plan as many state stores as
+  * they do there.
   *
   * Usage: ProbeStreamState <sfDir> [nFiles] [dedup|leftjoin|sessionize]
   * Prints one JSON line per leg (cold, then warm) with the verdict
@@ -42,7 +47,7 @@ object ProbeStreamState {
     val spark = Sessions.create(Sessions.cpus)
     for (leg <- Seq("cold", "warm")) {
       val t0 = System.nanoTime()
-      val row = verdict(spark).head()
+      val row = QuerySession.sized(spark, dir)(verdict(_).head())
       val sec = (System.nanoTime() - t0) / 1e9
       println(graft.registries.Jsonl.line(
         Seq("probe" -> probe, "leg" -> leg, "dir" -> dir, "nFiles" -> nFiles) ++
