@@ -232,7 +232,11 @@ object Dedup {
     * both properties end-to-end on the corpus. */
   def minhashVerified(docs: DataFrame, threshold: Double, shingleK: Int = 3): DataFrame = {
     // one persisted tokenized frame feeds the signatures and both sides
-    // of the verify join, so the documents are scanned and tokenized once
+    // of the verify join, so the documents are scanned and tokenized
+    // once. The cost: it holds every document of at least shingleK
+    // tokens as (doc_id, toks), about the corpus text itself, in memory
+    // (spilling to disk) until the run's caches are released, where the
+    // signature table alone is NumHashes longs per doc
     val toks = tokenizedFanned(docs, shingleK)
       .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     exactVerified(candidatesOf(signaturesOf(toks, shingleK)).select("doc_a", "doc_b"),
